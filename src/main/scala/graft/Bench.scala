@@ -98,7 +98,9 @@ object Bench {
       // warmup traffic must not pollute the class metrics
       org.apache.spark.graft.ListenerBridge.drain(spark)
       inB.set(0L); shB.set(0L); spB.set(0L)
-      val gc0 = gcMillis()
+      // GC time INSIDE the timed runs only: the harness's own forced
+      // System.gc() between runs must not count toward the query's gc_ms
+      var gcMs = 0L
       var leftoverPersisted = 0
       val timed = (1 to 2).map { _ =>
         spark.catalog.clearCache() // timed runs must rebuild query-owned caches
@@ -117,9 +119,12 @@ object Bench {
         leftoverPersisted = math.max(leftoverPersisted, leftovers.size)
         leftovers.values.foreach(_.unpersist(blocking = true))
         System.gc()
+        val gc0 = gcMillis()
         val t0 = System.nanoTime()
         run()
-        (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
+        gcMs += gcMillis() - gc0
+        wall
       }
       org.apache.spark.graft.ListenerBridge.drain(spark)
       if (!failed) {
@@ -129,7 +134,7 @@ object Bench {
         queryClasses.putIfAbsent(name, cls)
         queryDiag.putIfAbsent(name, QueryDiag(cls,
           inB.get / 2 / 1048576.0, shB.get / 2 / 1048576.0,
-          spB.get / 2 / 1048576.0, gcMillis() - gc0, leftoverPersisted))
+          spB.get / 2 / 1048576.0, gcMs, leftoverPersisted))
         ()
       }
       // a failed query must not fold its time-to-failure into the JSON as

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.ConnectedComponents
-import graft.queries.Dedup
+import graft.queries.{Dedup, TrainPrep}
 
 /** The LLM-corpus curation pipeline as ONE runnable job — the
   * training-data operators (builder brief) composed the way a real corpus
@@ -133,9 +133,7 @@ object CorpusMain {
         // q128's survivorship: per cluster keep the longest doc (ties to
         // the smaller id) — map-side max_by, one row per cluster shuffled
         val qual = keepExact.select(col("doc_id").as("id"),
-          when(length(trim(col("text"))) === 0, lit(0L))
-            .otherwise(size(split(lower(trim(col("text"))), "\\s+")).cast("long"))
-            .as("n_tok"))
+          size(TrainPrep.rawToks(col("text"))).cast("long").as("n_tok"))
         val canon = comp.join(qual, Seq("id"))
           .groupBy("cluster_id")
           .agg(max_by(col("id"), struct(col("n_tok"), -col("id"))).as("keep"))
@@ -171,11 +169,9 @@ object CorpusMain {
       }
 
     // 3. quality gate: q31's signals as a filter
-    val toks = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-      .otherwise(split(lower(trim(col("text"))), "\\s+"))
-    val stopwords = array(Seq("the", "a", "of", "and", "to", "in", "is", "it").map(lit): _*)
+    val stopwords = array(TrainPrep.Stop.map(lit): _*)
     val quality = paraGated
-      .withColumn("w", toks)
+      .withColumn("w", TrainPrep.rawToks(col("text")))
       .withColumn("n_tokens", size(col("w")).cast("long"))
       .withColumn("stop_ratio",
         size(filter(col("w"), t => array_contains(stopwords, t))).cast("double") /
@@ -210,10 +206,8 @@ object CorpusMain {
     // shared span is exactly what a training run should not see 6×. One
     // (doc, gram) aggregate feeds the df count AND the join-back (its one
     // shuffle is reused); the drop list is checkpointed before release.
-    val gramToks = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-      .otherwise(split(lower(trim(col("text"))), "\\s+"))
     val grams3 = {
-      val t = gramToks
+      val t = TrainPrep.rawToks(col("text"))
       when(size(t) < 3, array().cast("array<string>"))
         .otherwise(zip_with(
           zip_with(
@@ -260,7 +254,7 @@ object CorpusMain {
 
     // 5. content-independent split (q73's buckets), attached BEFORE
     // decontamination so the heldout set is defined when train is probed
-    val bucket = graft.queries.TrainPrep.splitBucket(col("doc_id"))
+    val bucket = TrainPrep.splitBucket(col("doc_id"))
     val withSplit = gated.withColumn("split",
       when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test"))
 
@@ -275,7 +269,7 @@ object CorpusMain {
       else {
         val ng = withSplit
           .select(col("doc_id"), col("split"),
-            graft.queries.TrainPrep.hashedNgrams8(col("text")).as("ng"))
+            TrainPrep.hashedNgrams8(col("text")).as("ng"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val held = ng.filter(col("split") =!= "train")
           .select(explode(col("ng")).as("h")).distinct()
@@ -370,7 +364,7 @@ object CorpusMain {
     // over the CURATED set, not the input): the next mix/resample decision
     // (q90's quotas) reads this. Computed while the final stage is still
     // cache-backed, so it costs one aggregation, not a pipeline re-run.
-    val mix = graft.queries.TrainPrep.domainMix(curated)
+    val mix = TrainPrep.domainMix(curated)
     mix.write.mode("overwrite").parquet(args(1) + "_mix")
     val mixRows = mix.limit(5).collect() // tiny; collected before release()
     release()

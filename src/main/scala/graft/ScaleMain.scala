@@ -62,7 +62,7 @@ object ScaleMain {
     // per table at the 100x tier). Output content is identical: keys
     // shift by copy*1e9, document tokens get the same c<copy> prefix.
     val copies = spark.range(factor).select(col("id").as("__copy"))
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
+    val stop = graft.queries.TrainPrep.Stop
     keyCols.foreach { case (t, keys) =>
       val df = spark.read.parquet(s"$src/$t.parquet")
       val shifted = keys.foldLeft(df.crossJoin(broadcast(copies))) { (acc, k) =>

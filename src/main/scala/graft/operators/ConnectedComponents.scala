@@ -53,24 +53,15 @@ object ConnectedComponents {
     * cluster_id = the minimum node id in the component. The result is
     * persisted (its own cache, all internals released); the caller
     * unpersists it when done. */
-  /** RESULT-NEUTRAL A/B toggle: `SPARK_GRAFT_CC=legacy` restores the
-    * pre-r19 loop internals (row-converting lineage cut, unpartitioned
-    * edge cache) so both arms run from one build at matched in-run
-    * controls. Labels are identical either way — only plan shape moves. */
-  private def legacy: Boolean = sys.env.get("SPARK_GRAFT_CC").contains("legacy")
-
   def components(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
     // small-plan view of a persisted DF: downstream rounds read its RDD,
-    // not its (growing) logical plan. r19: the cut is a LogicalRDD over
-    // the plan's own InternalRows (PlanUtil.cutLineage) — the old
-    // createDataFrame(df.rdd, schema) form paid an InternalRow→Row→
+    // not its (growing) logical plan. The cut is a LogicalRDD over the
+    // plan's own InternalRows (PlanUtil.cutLineage) — a
+    // createDataFrame(df.rdd, schema) cut pays an InternalRow→Row→
     // InternalRow round-trip of the whole table per round per consumer
-    // (41 task-s of q279's cold profile), and erased the partitioning the
+    // (41 task-s of q279's cold profile), and erases the partitioning the
     // edge-set optimization below depends on.
-    def cut(df: DataFrame): DataFrame =
-      if (legacy) spark.createDataFrame(df.rdd, df.schema)
-      else org.apache.spark.sql.graft.PlanUtil.cutLineage(df)
+    def cut(df: DataFrame): DataFrame = org.apache.spark.sql.graft.PlanUtil.cutLineage(df)
 
     // exact Σ cluster_id of a persisted round — the monotone convergence
     // statistic (None on an empty label table; equal Nones terminate)
@@ -92,13 +83,11 @@ object ConnectedComponents {
     // exchange-free). Skew note: a partition holds whole src groups, but
     // group sizes are bounded by the callers' bucket caps (LshBucketCap
     // and friends), the same bound the per-round aggregation relies on.
-    val sym0 = {
-      val s0 = e.select(col("src"), col("dst"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      (if (legacy) s0 else s0.repartition(col("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val sym0 = e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val sym = cut(sym0)
 
     // seed at min(id, min neighbor) — round 1's hop result computed from

@@ -32,19 +32,17 @@ object Dedup {
   // --- MinHash parameters: k permutations (a*h + b) mod p over 31-bit token
   // hashes; 4 bands × 4 rows. Constants generated deterministically below and
   // interpolated into BOTH the Spark expressions and the oracle SQL.
-  private val P = 2147483647L // 2^31 - 1 (products stay < 2^62)
-  private val K = 16
+  private[queries] val P = 2147483647L // 2^31 - 1 (products stay < 2^62)
+  private[queries] val K = 16
   private val BANDS = 4
   private val ROWS = K / BANDS
-  private val AB: Seq[(Long, Long)] = (0 until K).map { i =>
+  private[queries] val AB: Seq[(Long, Long)] = (0 until K).map { i =>
     val a = (1103515245L * (i + 1)) % (P - 1) + 1
     val b = (12345L + 1000000007L * i) % P
     (a, b)
   }
 
-  private def toks(c: Column): Column =
-    when(length(trim(c)) === 0, array().cast("array<string>"))
-      .otherwise(array_distinct(split(lower(trim(c)), "\\s+")))
+  private def toks(c: Column): Column = array_distinct(TrainPrep.rawToks(c))
 
   /** q175's degree-assortativity Pearson r x 1e4, shared VERBATIM with the
     * oracle (the q148 formula over exact BIGINT power sums; degenerate
@@ -266,25 +264,15 @@ object Dedup {
     * lockstep on the window construction. */
   private val SpanW = 12
   private def spanWindows(docs: DataFrame): DataFrame = {
-    // r18 (optimization): the 12-token window hash as ONE native pass
-    // (TextHashes.hashed_ngrams_seq) instead of 11 chained zip_with string
-    // concats + an interpreted md5 transform per window — bit-parity incl.
-    // positions pinned in TextHashesSpec; SPARK_GRAFT_NGRAMS=hof restores
-    // the HOF form for A/B (result-identical)
-    def hashes(w: Column): Column =
-      if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof")) {
-        def grams(c: Column): Column =
-          (2 to SpanW).foldLeft(slice(c, lit(1), size(c) - (SpanW - 1))) { (acc, k) =>
-            zip_with(acc, slice(c, lit(k), size(c) - (SpanW - 1)),
-              (a, b) => concat(a, lit(" "), b))
-          }
-        transform(grams(w), g => tokHash(g))
-      } else org.apache.spark.sql.graft.TextHashes.hashed_ngrams_seq(w, SpanW, P)
+    // the 12-token window hash as ONE native pass
+    // (TextHashes.hashed_ngrams_seq) — bit-parity incl. positions with the
+    // chained zip_with concat + tokHash form pinned in TextHashesSpec
     docs
       .withColumn("w", TrainPrep.rawToks(col("text")))
       .filter(size(col("w")) >= SpanW)
       .select(col("doc_id"),
-        posexplode(hashes(col("w"))).as(Seq("pos0", "h")))
+        posexplode(org.apache.spark.sql.graft.TextHashes.hashed_ngrams_seq(
+          col("w"), SpanW, P)).as(Seq("pos0", "h")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("h"))
   }
 
@@ -335,57 +323,14 @@ object Dedup {
     * fail-loud pid guard (see [[paraDups]]' scaladoc). Un-checkpointed:
     * callers pin it once before multi-consumer use.
     *
-    * Two result-identical physical forms (both oracle-pinned at 3 SFs):
-    * the default SINGLE-PASS form (one documents scan, per-row branch)
-    * and the r17 DUAL-SCAN form (two rlike-filtered branches) behind
-    * `SPARK_GRAFT_PARA_SCAN=dual` — a DIAGNOSTIC A/B toggle kept because
-    * the r18 100x tier read the paragraph family slower after the
-    * single-pass rewrite on a cross-round comparison the host-calib
-    * lessons (r14/r16) say not to trust without an adjacent-run control;
-    * the toggle makes the A/B one env var on one host. */
-  private[graft] def paraRelation(docs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_PARA_SCAN").contains("dual"))
-      paraRelationDual(docs)
-    else paraRelationSingle(docs)
-
-  /** The r17 dual-scan form: two filtered branches, each its own scan —
-    * simpler per-row work, twice the input I/O. See [[paraRelation]]. */
-  private[graft] def paraRelationDual(docs: DataFrame): DataFrame = {
-    val hasSep = col("text").rlike(ParaSepRe)
-    val bounded = docs.filter(hasSep)
-      .select(col("doc_id"),
-        posexplode(filter(
-          transform(split(col("text"), ParaSepRe),
-            p => regexp_replace(lower(trim(p)), "\\s+", " ")),
-          p => length(p) > 0)).as(Seq("pi", "text")))
-      .select(col("doc_id"), col("pi").cast("long").as("pi"), col("text"))
-    val blocks = docs.filter(!hasSep)
-      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("w"))
-      .withColumn("n", size(col("w")))
-      .filter(col("n") > 0)
-      .withColumn("pi", explode(sequence(lit(0L), expr(s"(n + ${ParaW - 1}) div $ParaW") - 1)))
-      .select(col("doc_id"), col("pi"),
-        concat_ws(" ", expr(s"slice(w, CAST(pi * $ParaW + 1 AS INT), $ParaW)")).as("text"))
-    val guard = coalesce(
-      assert_true(col("pi") < ParaIdScale &&
-        col("doc_id").between(0L, MaxParaDocId - 1),
-        concat(lit("paragraph id out of range: doc_id="),
-          col("doc_id").cast("string"), lit(" pi="), col("pi").cast("string"))
-      ).cast("long"), lit(0L))
-    bounded.unionByName(blocks)
-      .select(col("doc_id").as("src_doc"),
-        (col("doc_id") * ParaIdScale + col("pi") + guard).as("doc_id"),
-        col("text"))
-  }
-
-  /** The single-pass form (r18): one projection computes a per-row array
+    * Single pass: one projection computes a per-row array
     * — the normalized paragraph list for boundary docs, the raw token
     * list for block-fallback docs — one generator explodes the paragraph
     * indexes, and the text projection branches per paragraph row. `arr`
     * is a generator-child attribute, evaluated once per DOC row
     * (Generate is a projection-collapse barrier — the q310 chunk-lambda
     * recompute cannot happen here). */
-  private[graft] def paraRelationSingle(docs: DataFrame): DataFrame = {
+  private[graft] def paraRelation(docs: DataFrame): DataFrame = {
     val hasSep = col("text").rlike(ParaSepRe)
     docs
       .select(col("doc_id"), hasSep.as("sep"),
@@ -428,18 +373,11 @@ object Dedup {
     * would collide with a scale-tier base doc_id >= 1e6 — identically in
     * both engines, invisible to the oracle gate). */
   private[graft] def paraBoundaryCorpus(docs: DataFrame): DataFrame = {
-    // r18 (optimization): the chunk rebuild is ONE native pass
-    // (TextHashes.chunk_join) — the old indexed-transform lambda re-read
-    // the inlined token array per chunk after projection collapse
-    // (O(tokens·chunks) re-tokenization per doc; q310 read 320 s at the
-    // 100x tier). Bit-parity pinned in TextHashesSpec;
-    // SPARK_GRAFT_PARA_CHUNK=hof restores the HOF form for A/B.
-    val chunked =
-      if (sys.env.get("SPARK_GRAFT_PARA_CHUNK").contains("hof"))
-        expr("concat_ws('\\n\\n', transform(" +
-          "sequence(0, CAST((size(w) + 9) div 10 AS INT) - 1), " +
-          "i -> concat_ws(' ', slice(w, i * 10 + 1, 10))))")
-      else org.apache.spark.sql.graft.TextHashes.chunk_join(col("w"), 10, "\n\n")
+    // the chunk rebuild is ONE native pass (TextHashes.chunk_join) — an
+    // indexed-transform lambda re-reads the inlined token array per chunk
+    // after projection collapse (O(tokens·chunks) re-tokenization per
+    // doc). Bit-parity with that HOF form pinned in TextHashesSpec.
+    val chunked = org.apache.spark.sql.graft.TextHashes.chunk_join(col("w"), 10, "\n\n")
     val base = docs
       .withColumn("w", TrainPrep.rawToks(col("text")))
       .withColumn("text",
@@ -698,12 +636,10 @@ object Dedup {
     * the MinHash item set: unigram token sets are not discriminating on a
     * small vocabulary (nearly all docs collide), shingles make Jaccard ≈ 0
     * for unrelated docs. */
-  private def hashedDocsOf(docs: DataFrame): DataFrame =
+  private[queries] def hashedDocsOf(docs: DataFrame): DataFrame =
     docs
       // raw (non-distinct) token sequence — shingles need word order
-      .select(col("doc_id"),
-        when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-          .otherwise(split(lower(trim(col("text"))), "\\s+")).as("t"))
+      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
       .select(col("doc_id"), shingles3(col("t")).as("w"))
       .withColumn("h", transform(col("w"), t => tokHash(t)))
 
@@ -744,51 +680,23 @@ object Dedup {
     * multiplicity — so we fold the deduped `hs`, which is also smaller.)
     */
   def minhashBase(docs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_MINHASH").contains("hof")) minhashBaseHof(docs)
-    else {
-      // r18 (optimization): the per-doc shingle→md5→distinct→sort→K-min
-      // chain as ONE native codegen'd pass (TextHashes.minhash_shingles —
-      // bit-parity with the HOF form pinned in TextHashesSpec; every LSH
-      // oracle unchanged). The empty/short-doc gate moves BEFORE the
-      // expensive projection as size(t) >= 3 — equivalent to the old
-      // size(w) > 0 (shingles3 is empty iff under 3 tokens; NULL sizes
-      // drop in both forms) and pushdown-safe, where a filter on the
-      // computed column would re-evaluate the expression below the
-      // projection (the q37 collapse lesson). hs/sz/sig extract in one
-      // Project whose subexpression elimination evaluates the struct once.
-      val t = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-        .otherwise(split(lower(trim(col("text"))), "\\s+"))
-      docs
-        .select(col("doc_id"), t.as("t"))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"),
-          org.apache.spark.sql.graft.TextHashes
-            .minhash_shingles(col("t"), AB.map(_._1), AB.map(_._2), P).as("m"))
-        .select(col("doc_id"), col("m.hs").as("hs"),
-          size(col("m.hs")).as("sz"), col("m.sig").as("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** The pre-r18 HOF form, kept for the bit-parity spec and as the
-    * `SPARK_GRAFT_MINHASH=hof` A/B toggle (result-identical by the spec's
-    * pin — never needed for Verify/oracle runs). */
-  private[graft] def minhashBaseHof(docs: DataFrame): DataFrame = {
-    val consts = array(AB.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    val sigArr = aggregate(
-      col("hs"),
-      array_repeat(lit(P), K),
-      (acc, x) => zip_with(acc, consts, (m, c) =>
-        least(m, (c.getField("a") * x + c.getField("b")) % lit(P))))
-    hashedDocsOf(docs)
-      .filter(size(col("w")) > 0) // empty shingle sets would fold to NULL sigs
-      // hs sorted ascending: the verify joins use the codegen'd two-pointer
-      // sorted_intersect_size, whose contract is sorted duplicate-free input
-      .select(col("doc_id"), array_sort(array_distinct(col("h"))).as("hs"))
-      .select(col("doc_id"), col("hs"), size(col("hs")).as("sz"), sigArr.as("sig"))
+    // the per-doc shingle→md5→distinct→sort→K-min chain as ONE native
+    // codegen'd pass (TextHashes.minhash_shingles — bit-parity with the
+    // HOF form pinned in TextHashesSpec). The empty/short-doc gate sits
+    // BEFORE the expensive projection as size(t) >= 3 (shingles3 is empty
+    // iff under 3 tokens; NULL sizes drop) and is pushdown-safe, where a
+    // filter on the computed column would re-evaluate the expression below
+    // the projection (the q37 collapse lesson). hs/sz/sig extract in one
+    // Project whose subexpression elimination evaluates the struct once.
+    docs
+      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"),
+        org.apache.spark.sql.graft.TextHashes
+          .minhash_shingles(col("t"), AB.map(_._1), AB.map(_._2), P).as("m"))
+      .select(col("doc_id"), col("m.hs").as("hs"),
+        size(col("m.hs")).as("sz"), col("m.sig").as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** LSH candidate generation + Jaccard verify over a [[minhashBase]] table.
     * Linear at scale: ONE shuffle groups band members into bucket arrays
@@ -835,23 +743,6 @@ object Dedup {
       .cast("binary"))
   }
 
-  /** DIAGNOSTIC toggle for bench isolation ONLY: `SPARK_GRAFT_LSH_TIER=off`
-    * reverts the tiered cap to the flat cap (oversized buckets drop whole,
-    * no secondary-hash pass). This CHANGES RESULTS (q233's recovered
-    * recall) — never set it for Verify/oracle runs; it exists so the
-    * tier's two extra shuffles can be costed independently of AQE config
-    * and host load in an A/B matrix (VERDICT r9 #1). */
-  private def tierEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_LSH_TIER").contains("off")
-
-  /** RESULT-NEUTRAL diagnostic toggle: `SPARK_GRAFT_LSH_SCREEN=countjoin`
-    * reverts the mega-bucket screen from the r13 window-count form to the
-    * r12 count+join form. Both compute identical group sizes, so results
-    * are bit-identical either way — the toggle exists so the two screen
-    * shapes can be A/B'd at matched calibration (VERDICT r12 #1). */
-  private def screenViaWindow: Boolean =
-    !sys.env.get("SPARK_GRAFT_LSH_SCREEN").contains("countjoin")
-
   /** Attach each row's group size as column `cnt` — the mega-bucket
     * screen's sizing step, shared by every banded bucket build (LSH,
     * SimHash, RHP, frame digests). Default (r13): a WINDOW count over the
@@ -863,25 +754,9 @@ object Dedup {
     * group whose buffer (ExternalAppendOnlyUnsafeRowArray) SPILLS rather
     * than OOMs, and the downstream size filter still drops it before any
     * collect_list array forms — the DedupSpec 100k-member stress drives
-    * exactly this path. The count+join form stays reachable via
-    * [[screenViaWindow]] for A/B isolation.
-    *
-    * PRECONDITION — non-null keys: the window form counts a NULL key as
-    * its own group while the count+join fallback's inner equi-join drops
-    * NULL-keyed rows entirely, so "bit-identical A/B" holds ONLY for
-    * provably non-null keys. Every current caller satisfies it (band
-    * hashes are md5/xxhash of non-null columns; Multimodal's frame_sha
-    * is computed from a non-null binary payload) — a future caller with
-    * nullable keys must filter nulls first or the two screen modes
-    * silently diverge. */
+    * exactly this path. */
   private[graft] def withGroupCount(rows: DataFrame, keys: Seq[String]): DataFrame =
-    if (screenViaWindow)
-      rows.withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-    else {
-      val counts = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
-      rows.join(counts, keys)
-    }
+    rows.withColumn("cnt", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
 
   def lshCandidates(base: DataFrame, cap: Int): DataFrame = {
     // Mega-bucket screen: member arrays are collected ONLY for keys whose
@@ -892,7 +767,7 @@ object Dedup {
     // reducer even though the pair expansion itself was bounded. Sizing
     // (r13) is a WINDOW count over the same bucket-key shuffle the
     // collect needs anyway — see [[withGroupCount]] for the spill-safety
-    // argument and the count+join A/B toggle.
+    // argument.
     val bands = bandKeys(base)
     val keyed = withGroupCount(bands, Seq("bi", "bh"))
       .filter(col("cnt") >= 2)
@@ -912,8 +787,7 @@ object Dedup {
       .groupBy(col("bi"), col("bh"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .select(col("ds"))
-    val big0 = keyed.filter(col("cnt") > cap)
-    val bigRows = (if (tierEnabled) big0 else big0.limit(0))
+    val bigRows = keyed.filter(col("cnt") > cap)
       .select(col("bi"), col("bh"), col("doc_id"))
       .join(base.select(col("doc_id"), col("sig")), Seq("doc_id"))
       .select(col("bi"), col("bh"), col("doc_id"), bandHash2(col("bi")).as("bh2"))
@@ -1466,13 +1340,11 @@ object Dedup {
     // this bounded-sample form is the oracle for.
     "q83_containment" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val rawT = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-        .otherwise(split(lower(trim(col("text"))), "\\s+"))
       val host = hashedDocsOf(docs)
         .select(col("doc_id").as("d2"), array_sort(array_distinct(col("h"))).as("h2"))
         .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
       val snip = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("t", rawT)
+        .withColumn("t", TrainPrep.rawToks(col("text")))
         .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
         .select((col("doc_id") + lit(1000000L)).as("d1"),
           array_sort(array_distinct(transform(shingles3(col("ht")), x => tokHash(x)))).as("h1"))
@@ -1500,13 +1372,11 @@ object Dedup {
     // it — no probabilistic slack in the comparison.
     "q89_containment_lsh" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val rawT = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-        .otherwise(split(lower(trim(col("text"))), "\\s+"))
       val host = hashedDocsOf(docs)
         .select(col("doc_id").as("d2"), array_sort(array_distinct(col("h"))).as("h2"))
         .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
       val snip = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("t", rawT)
+        .withColumn("t", TrainPrep.rawToks(col("text")))
         .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
         .select((col("doc_id") + lit(1000000L)).as("d1"),
           array_sort(array_distinct(transform(shingles3(col("ht")), x => tokHash(x)))).as("h1"))
@@ -1565,24 +1435,18 @@ object Dedup {
       // deterministic in isolation and they share only the READ-ONLY
       // persisted base, which is materialized once BEFORE the fork so
       // the threads never race to compute cache blocks.
-      // SPARK_GRAFT_OVERLAP=off restores the sequential arm for A/B at
-      // matched in-run controls (result-identical by construction).
-      val overlap = !sys.env.get("SPARK_GRAFT_OVERLAP").contains("off")
       def chain(b: org.apache.spark.sql.DataFrame) =
         graft.operators.ConnectedComponents.components(
           lshPairs(b, LshBucketCap)
             .select(col("d1").as("src"), col("d2").as("dst")))
+      base.count()
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val fOld = Future(chain(base.filter(isOld)))
+      val fAll = Future(chain(base))
       val (compOld, compAll) =
-        if (!overlap) (chain(base.filter(isOld)), chain(base))
-        else {
-          base.count()
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val fOld = Future(chain(base.filter(isOld)))
-          val fAll = Future(chain(base))
-          (Await.result(fOld, Duration.Inf), Await.result(fAll, Duration.Inf))
-        }
+        (Await.result(fOld, Duration.Inf), Await.result(fAll, Duration.Inf))
       val so = splitByClusterKey(docs.filter(isOld), compOld)
         .select(col("doc_id"), col("cluster_key").as("old_key"),
           col("split").as("old_split"))
@@ -2207,15 +2071,10 @@ object Dedup {
           "transform(sequence(0, 63), j -> CASE WHEN " +
             "substring(md5(concat('rhp_', p, '_', j)), 1, 1) < '8' " +
             "THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"))
-      // r19: the 24-plane projection dot is the native codegen'd loop by
-      // default (the HOF fold paid a lambda dispatch per element ×24 planes
-      // per vector); `SPARK_GRAFT_VECMATH=hof` restores the HOF arm —
-      // bit-parity pinned in VectorMathSpec, q252's oracle unchanged.
-      val dotC =
-        if (sys.env.get("SPARK_GRAFT_VECMATH").contains("hof")) expr(
-          "aggregate(zip_with(embedding, comp, (x, y) -> x * y), " +
-            "CAST(0.0 AS DOUBLE), (a, v) -> a + v)")
-        else org.apache.spark.sql.graft.VectorMath.dot(col("embedding"), col("comp"))
+      // the 24-plane projection dot is the native codegen'd loop (a HOF
+      // fold pays a lambda dispatch per element ×24 planes per vector) —
+      // bit-parity with the fold pinned in VectorMathSpec
+      val dotC = org.apache.spark.sql.graft.VectorMath.dot(col("embedding"), col("comp"))
       val sig = e.join(broadcast(planes))
         .withColumn("dot", dotC)
         .groupBy("vec_id")

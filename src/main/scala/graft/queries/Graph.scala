@@ -60,9 +60,7 @@ object Graph {
       val comp = graft.operators.ConnectedComponents.components(
         pairs.select(col("d1").as("src"), col("d2").as("dst")))
       val qual = docs.select(col("doc_id").as("id"),
-        when(length(trim(col("text"))) === 0, lit(0L))
-          .otherwise(size(split(lower(trim(col("text"))), "\\s+")).cast("long"))
-          .as("n_tok"))
+        size(TrainPrep.rawToks(col("text"))).cast("long").as("n_tok"))
       val scored = comp.join(qual, Seq("id"))
       // canonical + size in ONE cluster-keyed window pass: the groupBy +
       // join-back form executed the tokenize subtree twice (once per

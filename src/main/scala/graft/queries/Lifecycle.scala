@@ -283,16 +283,13 @@ object Lifecycle {
     "q268_agg_state_distinct" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       withStateDir("graft-agg-distinct-") { stateDir =>
-        def toksOf(c: org.apache.spark.sql.Column) =
-          when(length(trim(c)) === 0, array().cast("array<string>"))
-            .otherwise(split(lower(trim(c)), "\\s+"))
         def slice(r: Int) = docs.filter(col("doc_id") % 3 === r)
-          .select(col("source"), explode(toksOf(col("text"))).as("term"))
+          .select(col("source"), explode(TrainPrep.rawToks(col("text"))).as("term"))
         AggState.buildDistinct(slice(0), Seq("source"), "term", stateDir)
         AggState.appendDistinct(slice(1), Seq("source"), "term", stateDir)
         AggState.appendDistinct(slice(2), Seq("source"), "term", stateDir)
         val exact = docs
-          .select(col("source"), explode(toksOf(col("text"))).as("term"))
+          .select(col("source"), explode(TrainPrep.rawToks(col("text"))).as("term"))
           .groupBy("source")
           .agg(countDistinct(col("term")).as("n_exact"))
         AggState.mergedDistinct(s, stateDir, Seq("source"))

@@ -78,9 +78,7 @@ object Multimodal {
     // sampled-frame count.
     "q191_frame_dedup" -> ((s: SparkSession, dir: String) => {
       val frames = Tables(s, dir, "documents")
-        .withColumn("w",
-          when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-            .otherwise(split(lower(trim(col("text"))), "\\s+")))
+        .withColumn("w", TrainPrep.rawToks(col("text")))
         .filter(size(col("w")) > 0)
         .withColumn("n_chunks", expr("CAST((size(w) + 15) div 16 AS BIGINT)"))
         .select(col("doc_id"), col("n_chunks"), col("w"),

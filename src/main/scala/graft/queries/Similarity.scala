@@ -35,25 +35,11 @@ object Similarity {
   private def normSql(a: String): String =
     s"sqrt(list_sum([$a[i]::DOUBLE * $a[i]::DOUBLE for i in range(1, len($a) + 1)]))"
 
-  /** Sequential-fold squared L2 — identical accumulation order to the
-    * oracle's list comprehension, so the raw double is bit-equal. Kept as
-    * the `SPARK_GRAFT_VECMATH=hof` A/B form and the VectorMathSpec parity
-    * anchor; the default is the native codegen'd loop (r19 — the HOF pays
-    * a lambda dispatch per element, |vectors|×|centroids| times in the
-    * assignment joins). */
-  private[graft] def l2HOF(a: Column, b: Column): Column = aggregate(
-    zip_with(a, b, (x, y) =>
-      (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-    lit(0.0), (acc, v) => acc + v)
-
-  private def vecNative: Boolean =
-    !sys.env.get("SPARK_GRAFT_VECMATH").contains("hof")
-
-  /** The hot squared-L2: native codegen'd loop, bit-parity with [[l2HOF]]
-    * pinned in VectorMathSpec. */
+  /** The hot squared-L2: native codegen'd loop whose double accumulation
+    * order matches the oracle's list comprehension (bit-parity with the
+    * sequential HOF fold pinned in VectorMathSpec). */
   private def l2(a: Column, b: Column): Column =
-    if (vecNative) org.apache.spark.sql.graft.VectorMath.l2sq(a, b)
-    else l2HOF(a, b)
+    org.apache.spark.sql.graft.VectorMath.l2sq(a, b)
 
   /** Nearest-centroid assignment under L2 (ties → lowest cid). `cent` must
     * be small — it is broadcast. The argmin is `min_by` over the struct
@@ -400,18 +386,9 @@ object Similarity {
         .select(col("vec_id").as("code"), col("embedding").as("cv"))
       val sub = e.select(col("vec_id"), col("embedding"))
         .withColumn("subspace", explode(array((0 until 4).map(i => lit(i)): _*)))
-      // native slice-L2 by default (r19); HOF form = the A/B arm
-      val l2 =
-        if (vecNative) org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-          col("embedding"), col("cv"),
-          (col("subspace") * 16 + 1).cast("int"), lit(16))
-        else aggregate(
-          zip_with(
-            slice(col("embedding"), col("subspace") * 16 + 1, lit(16)),
-            slice(col("cv"), col("subspace") * 16 + 1, lit(16)),
-            (a, b) => (a.cast("double") - b.cast("double")) *
-              (a.cast("double") - b.cast("double"))),
-          lit(0.0), (acc, x) => acc + x)
+      val l2 = org.apache.spark.sql.graft.VectorMath.slice_l2sq(
+        col("embedding"), col("cv"),
+        (col("subspace") * 16 + 1).cast("int"), lit(16))
       // per-(vector, subspace) argmin via min_by — map-side partial agg,
       // no |codebook|× window shuffle (see q40)
       sub.join(broadcast(cw))
@@ -820,17 +797,8 @@ object Similarity {
       val e = Tables(s, dir, "embeddings")
       val cw = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("code"), col("embedding").as("cv"))
-      // native slice-L2 by default (r19); the HOF form stays the A/B arm
-      def subL2(a: Column): Column =
-        if (vecNative) org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-          a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-        else aggregate(
-          zip_with(
-            slice(a, col("subspace") * 16 + 1, lit(16)),
-            slice(col("cv"), col("subspace") * 16 + 1, lit(16)),
-            (x, y) => (x.cast("double") - y.cast("double")) *
-              (x.cast("double") - y.cast("double"))),
-          lit(0.0), (acc, x) => acc + x)
+      def subL2(a: Column): Column = org.apache.spark.sql.graft.VectorMath.slice_l2sq(
+        a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
       val subspaces = explode(array((0 until 4).map(i => lit(i)): _*))
       // 1. encode the corpus: q76's per-subspace argmin (map-side min_by)
       val codes = e.select(col("vec_id"), col("embedding"))
@@ -945,7 +913,8 @@ object Similarity {
 
   // ADC top-32 shortlist → exact L2 re-rank → top-5 (q247). The exact
   // distance is the same sequential-fold list comprehension as q100's
-  // ground truth, so the raw doubles are bit-equal to l2HOF's.
+  // ground truth, so the raw doubles are bit-equal to the sequential HOF
+  // fold's (VectorMathSpec).
   private val q247Sql: String =
     s"""WITH $pqAdcCtes,
        |cand AS (SELECT qid, vec_id FROM a

@@ -2092,8 +2092,7 @@ object Stats {
   /** Whitespace token count of lowercased trimmed text, BIGINT (Spark side;
     * mirrors the `docToksSql` DuckDB form used across the corpus queries). */
   private def docToks: org.apache.spark.sql.Column =
-    when(length(trim(col("text"))) === 0, lit(0L))
-      .otherwise(size(split(lower(trim(col("text"))), "\\s+")).cast("long"))
+    size(TrainPrep.rawToks(col("text"))).cast("long")
 
   private val docToksSql =
     """CAST(CASE WHEN length(trim(text)) = 0 THEN 0

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextHashes
 import graft.Tables
+import TrainPrep.{Stop, rawToks}
 
 /** Text-analysis operators over the `documents` table — the training-data
   * pipeline surface (builder brief): token counting, quality scoring,
@@ -19,15 +20,13 @@ import graft.Tables
   */
 object Text {
 
-  /** q231/q232's distinct-3-gram hash list: native one-pass form by
-    * default (TextHashes.hashed_ngrams_uniq — dedupe at the GRAM-STRING
-    * level, exactly `transform(array_distinct(shingles3(t)), tokHash)`;
-    * hash-level dedupe would miscount a string collision), HOF form under
-    * `SPARK_GRAFT_NGRAMS=hof` for A/B. Parity pinned in TextHashesSpec. */
+  /** q231/q232's distinct-3-gram hash list in the native one-pass form
+    * (TextHashes.hashed_ngrams_uniq — dedupe at the GRAM-STRING level,
+    * exactly `transform(array_distinct(shingles3(t)), tokHash)`; hash-level
+    * dedupe would miscount a string collision). Parity pinned in
+    * TextHashesSpec. */
   private def gramHashes(t: Column): Column =
-    if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof"))
-      transform(Dedup.shingles3(t), g => Dedup.tokHash(g))
-    else TextHashes.hashed_ngrams_uniq(t, 3, 2147483647L)
+    TextHashes.hashed_ngrams_uniq(t, 3, 2147483647L)
 
   /** q109's per-(doc, query-term) BM25 partial score (k1 = 1.2, b = 0.75),
     * ×1e6 floor-integerized — shared VERBATIM between the Spark plan and
@@ -88,13 +87,6 @@ object Text {
       |        - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sents AS DOUBLE))
       |        - 84.6 * (CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE))) * 100.0) AS BIGINT) END""".stripMargin
 
-  /** Whitespace tokens of lowercased, trimmed text ([''] guarded to []). */
-  private def toks(c: Column): Column =
-    when(length(trim(c)) === 0, array().cast("array<string>"))
-      .otherwise(split(lower(trim(c)), "\\s+"))
-
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
-
   // language marker words for the stopword-hit language-ID heuristic
   private val langMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "is", "a", "to"),
@@ -116,7 +108,7 @@ object Text {
     * both the LM aggregation and the per-doc join, so it is persisted and
     * the small scored output is checkpointed eagerly before release. */
   def lmScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val w = toks(col("text"))
+    val w = rawToks(col("text"))
     val pairs = when(size(w) < 2, array().cast("array<struct<prev:string,nxt:string>>"))
       .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
         (a, b) => struct(a.as("prev"), b.as("nxt"))))
@@ -146,7 +138,7 @@ object Text {
     // ---- token counting --------------------------------------------------
     "q30_token_stats" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents")
-        .withColumn("w", toks(col("text")))
+        .withColumn("w", rawToks(col("text")))
         .select(
           col("doc_id"),
           size(col("w")).cast("long").as("n_tokens"),
@@ -161,11 +153,11 @@ object Text {
     // ---- quality scoring -------------------------------------------------
     "q31_quality_score" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents")
-        .withColumn("w", toks(col("text")))
+        .withColumn("w", rawToks(col("text")))
         .withColumn("n_tokens", size(col("w")).cast("long"))
         .withColumn("punct_count",
           (length(col("text")) - length(regexp_replace(col("text"), "[.,!?;:]", ""))).cast("long"))
-        .withColumn("stop_hits", hitCount(col("w"), stopwords))
+        .withColumn("stop_hits", hitCount(col("w"), Stop))
         .withColumn("stop_ratio",
           round(col("stop_hits").cast("double") / col("n_tokens").cast("double"), 4))
         // weights 0.4/0.6 (not 0.5/0.5): with a 4-dp stop_ratio, 0.6*d never
@@ -180,7 +172,7 @@ object Text {
 
     // ---- language ID (stopword-hit heuristic) ----------------------------
     "q32_langid" -> ((s: SparkSession, dir: String) => {
-      val base = Tables(s, dir, "documents").withColumn("w", toks(col("text")))
+      val base = Tables(s, dir, "documents").withColumn("w", rawToks(col("text")))
       val withHits = langMarkers.foldLeft(base) { case (df, (code, words)) =>
         df.withColumn(s"hits_$code", hitCount(col("w"), words))
       }
@@ -262,13 +254,12 @@ object Text {
     // with the oracle pinned by q80). Scale: one corpus scan, per-row
     // array math, one partial aggregation + one distinct-digest count.
     "q295_curation_funnel" -> ((s: SparkSession, dir: String) => {
-      val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
       val base = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
-        .withColumn("w", toks(col("text")))
+        .withColumn("w", rawToks(col("text")))
         .withColumn("n", size(col("w")).cast("long"))
         .withColumn("n_stop",
-          size(filter(col("w"), t => t.isin(stop: _*))).cast("long"))
+          size(filter(col("w"), t => t.isin(Stop: _*))).cast("long"))
         .withColumn("d", TextHashes.ngram_distincts(col("w")))
         .withColumn("g1", col("n") >= 10 &&
           col("n_stop").cast("double") /
@@ -293,7 +284,7 @@ object Text {
           .otherwise(round(
             lit(1.0) - distinct.cast("double") / total.cast("double"), 4))
       Tables(s, dir, "documents")
-        .withColumn("w", toks(col("text")))
+        .withColumn("w", rawToks(col("text")))
         .withColumn("n", size(col("w")).cast("long"))
         .withColumn("d", TextHashes.ngram_distincts(col("w")))
         .select(col("doc_id"),
@@ -344,7 +335,7 @@ object Text {
     // one row per prev over the second shuffle (no window sort; the q40
     // pattern, negating the count because strings can't be negated).
     "q87_bigram_lm" -> ((s: SparkSession, dir: String) => {
-      val w = toks(col("text"))
+      val w = rawToks(col("text"))
       val pairs = when(size(w) < 2, array().cast("array<struct<prev:string,nxt:string>>"))
         .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
           (a, b) => struct(a.as("prev"), b.as("nxt"))))
@@ -371,7 +362,7 @@ object Text {
     // math + one aggregation shuffle keyed by bucket.
     "q88_len_histogram" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents")
-        .withColumn("n", size(toks(col("text"))).cast("long"))
+        .withColumn("n", size(rawToks(col("text"))).cast("long"))
         .withColumn("bucket", least(expr("n div 10"), lit(12L)))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"),
@@ -408,7 +399,7 @@ object Text {
     // aggregation), not the corpus.
     "q92_zipf" -> ((s: SparkSession, dir: String) => {
       val tf = Tables(s, dir, "documents")
-        .select(explode(toks(col("text"))).as("term"))
+        .select(explode(rawToks(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("freq"))
       val fit = tf
         .withColumn("rank",
@@ -439,7 +430,7 @@ object Text {
     // constant size — no shuffle), purity = top/(top+second) in tie-free
     // integer basis points; hitless docs classify 'und' with full purity.
     "q97_lang_purity" -> ((s: SparkSession, dir: String) => {
-      val base0 = Tables(s, dir, "documents").withColumn("w", toks(col("text")))
+      val base0 = Tables(s, dir, "documents").withColumn("w", rawToks(col("text")))
       val base = langMarkers.foldLeft(base0) { case (df, (code, words)) =>
         df.withColumn(s"h_$code", hitCount(col("w"), words))
       }
@@ -471,7 +462,7 @@ object Text {
     // data. OOV rate in tie-free integer basis points.
     "q94_vocab_coverage" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
-      val toksOf = toks(col("text"))
+      val toksOf = rawToks(col("text"))
       val vocab = docs.select(explode(toksOf).as("term"))
         .groupBy("term").agg(count(lit(1)).as("freq"))
         .withColumn("rk", row_number().over(Window.orderBy(desc("freq"), asc("term"))))
@@ -525,7 +516,7 @@ object Text {
     // ---- 3-gram (word) shingles (shared slice+zip_with construction) -----
     "q34_shingles" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents")
-        .withColumn("w", toks(col("text")))
+        .withColumn("w", rawToks(col("text")))
         .withColumn("sh", Dedup.shingles3(col("w")))
         .select(
           col("doc_id"),
@@ -549,7 +540,7 @@ object Text {
     // (doc, term), then exactly summed per doc.
     "q109_bm25" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
       val tf = ex.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val dl = ex.groupBy("doc_id").agg(count(lit(1)).as("dl"))
       val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -579,7 +570,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val keys = Seq("doc_id", "term")
       def postings(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        d.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
           .withColumn("one", lit(1L))
       AggState.build(postings(docs.filter(col("doc_id") % 3 === 0)), keys, "one", stateDir)
       AggState.append(postings(docs.filter(col("doc_id") % 3 === 1)), keys, "one", stateDir)
@@ -614,7 +605,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val keys = Seq("doc_id", "term")
       def postings(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        d.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
           .withColumn("one", lit(1L))
       AggState.build(postings(docs.filter(col("doc_id") % 3 === 0)), keys, "one", stateDir)
       AggState.append(postings(docs.filter(col("doc_id") % 3 =!= 0)), keys, "one", stateDir)
@@ -642,7 +633,7 @@ object Text {
     // the final aggregation. HAVING n_terms_hit = |query| is the AND.
     "q110_search" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
       val tf = ex.groupBy("doc_id", "term").agg(count(lit(1)).as("n_occ"))
       val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val qterms = dfx.orderBy(col("df").desc, col("term")).limit(2).select("term")
@@ -667,7 +658,7 @@ object Text {
     // error report.
     "q111_kmv_distinct" -> ((s: SparkSession, dir: String) => {
       val exd = Tables(s, dir, "documents")
-        .select(col("lang"), explode(toks(col("text"))).as("term"))
+        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
         .distinct()
       val hashed = exd.select(col("lang"),
         expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
@@ -693,7 +684,7 @@ object Text {
     // All integer md5 arithmetic — both engines agree bit-for-bit.
     "q117_cms" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
-        .select(explode(toks(col("text"))).as("term"))
+        .select(explode(rawToks(col("text"))).as("term"))
       val rows = ex
         .withColumn("i", explode(array((0 to 3).map(lit): _*)))
         .withColumn("b", expr(
@@ -722,7 +713,7 @@ object Text {
     "q119_pmi" -> ((s: SparkSession, dir: String) => {
       val totals = Tables(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val exd = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
         .distinct()
       val dfx = exd.groupBy("term").agg(count(lit(1)).as("df"))
       val top = dfx.orderBy(col("df").desc, col("term")).limit(20)
@@ -754,7 +745,7 @@ object Text {
     // expression with the standard small-range linear-counting branch.
     "q126_hll" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
-        .select(col("lang"), explode(toks(col("text"))).as("term"))
+        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
       val h = ex.select(col("lang"),
         expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
       val regs = h
@@ -788,7 +779,7 @@ object Text {
       val w = Window.partitionBy("source").orderBy("key_e9", "doc_id")
       Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"),
-          size(toks(col("text"))).cast("long").as("w"))
+          size(rawToks(col("text"))).cast("long").as("w"))
         .filter(col("w") > 0)
         .withColumn("h", expr(
           "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT)"))
@@ -805,7 +796,7 @@ object Text {
     // function (LATERAL VIEW → GenerateExec): n-grams STREAM out of the
     // generator one row at a time instead of materializing per-row arrays
     // (the q34 expression form's allocation profile). Same tokenization
-    // semantics as toks(); oracle uses the array construction.
+    // semantics as rawToks(); oracle uses the array construction.
     "q146_ngram_udtf" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents").createOrReplaceTempView("q146_documents")
       s.sql("""
@@ -826,7 +817,7 @@ object Text {
     "q123_gini" -> ((s: SparkSession, dir: String) => {
       val st = Tables(s, dir, "documents")
         .groupBy("source")
-        .agg(sum(size(toks(col("text"))).cast("long")).as("x"))
+        .agg(sum(size(rawToks(col("text"))).cast("long")).as("x"))
       st.withColumn("i",
           row_number().over(Window.orderBy("x", "source")).cast("long"))
         .agg(count(lit(1)).as("n_sources"), sum("x").as("total_tokens"),
@@ -846,7 +837,7 @@ object Text {
     // exact BIGINT.
     "q156_jsd" -> ((s: SparkSession, dir: String) => {
       val tf = Tables(s, dir, "documents")
-        .select(col("source"), explode(toks(col("text"))).as("tok"))
+        .select(col("source"), explode(rawToks(col("text"))).as("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
       val vocab = tf.groupBy("tok").agg(sum("cnt").as("ccnt"))
         .orderBy(desc("ccnt"), asc("tok")).limit(50)
@@ -898,7 +889,7 @@ object Text {
     // is the materialized index, bucketed by term.
     "q184_phrase_search" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
-      val w = toks(col("text"))
+      val w = rawToks(col("text"))
       val post = docs
         .select(col("doc_id"), posexplode(w).as(Seq("pos0", "tok")))
         .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("tok"))
@@ -941,7 +932,7 @@ object Text {
     // which of those to run next.
     "q200_corpus_scorecard" -> ((s: SparkSession, dir: String) => {
       val agg = Tables(s, dir, "documents")
-        .withColumn("n_tok", size(toks(col("text"))).cast("long"))
+        .withColumn("n_tok", size(rawToks(col("text"))).cast("long"))
         .agg(count(lit(1)).as("n_docs"),
           sum("n_tok").as("n_tokens"),
           countDistinct(col("lang")).as("n_langs"),
@@ -973,7 +964,7 @@ object Text {
     "q190_hll_native" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.graft.Sketches.hll_regs
       val ex = Tables(s, dir, "documents")
-        .select(col("lang"), explode(toks(col("text"))).as("term"))
+        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
       val sketch = ex.select(col("lang"),
           expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
         .groupBy("lang").agg(hll_regs(col("h")).as("r"))
@@ -1000,7 +991,7 @@ object Text {
     // checkpointed and the cache released.
     "q185_naive_bayes" -> ((s: SparkSession, dir: String) => {
       val tok = Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("t"))
+        .select(col("doc_id"), col("lang"), explode(rawToks(col("text"))).as("t"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // top-50 by (df desc, t): orderBy+limit plans as a distributed
       // TakeOrderedAndProject (per-partition heaps) — the row_number-
@@ -1056,7 +1047,7 @@ object Text {
     // broadcast (q184's dynamic-query discipline).
     "q217_rrf" -> ((s: SparkSession, dir: String) => {
       val tf = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("t"))
+        .select(col("doc_id"), explode(rawToks(col("text"))).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
       val top = tf.groupBy("t").agg(sum("tf").as("n"))
         .orderBy(desc("n"), asc("t")).limit(1)
@@ -1083,7 +1074,7 @@ object Text {
     // (delta desc, term) via a window over the 50·|langs|-row grid.
     "q218_log_odds" -> ((s: SparkSession, dir: String) => {
       val tok = Tables(s, dir, "documents")
-        .select(col("lang"), explode(toks(col("text"))).as("t"))
+        .select(col("lang"), explode(rawToks(col("text"))).as("t"))
       val tc = tok.groupBy("t").agg(count(lit(1)).as("n"))
       val vocabRank = Window.orderBy(desc("n"), asc("t"))
       val vocab = tc.withColumn("rn", row_number().over(vocabRank))
@@ -1120,7 +1111,7 @@ object Text {
     // (q217's discipline).
     "q227_kwic" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("w"))
+        .select(col("doc_id"), rawToks(col("text")).as("w"))
       val tok = docs.select(col("doc_id"), col("w"),
         posexplode(col("w")).as(Seq("pos0", "t")))
         .withColumn("pos", col("pos0") + 1)
@@ -1151,9 +1142,8 @@ object Text {
         .filter(length(trim(col("text"))) > 0)
         .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
         .filter(size(col("t")) >= 3)
-        // r18 (optimization): one native pass builds the distinct-gram
-        // hash list (string-level dedupe — hash-level would miscount on
-        // a collision); parity pinned in TextHashesSpec, toggle = hof
+        // one native pass builds the distinct-gram hash list (string-level
+        // dedupe — hash-level would miscount on a collision)
         .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
       val firstCarrier = grams.groupBy("h").agg(min("doc_id").as("first_doc"))
       grams.join(firstCarrier, Seq("h"))
@@ -1207,7 +1197,7 @@ object Text {
     // can detect chunk-level drift without carrying the text.
     "q243_chunk_windows" -> ((s: SparkSession, dir: String) => {
       Tables(s, dir, "documents")
-        .select(col("doc_id"), toks(col("text")).as("w"))
+        .select(col("doc_id"), rawToks(col("text")).as("w"))
         .withColumn("n", size(col("w")).cast("long"))
         .filter(col("n") > 0)
         .withColumn("nc", expr("1 + (greatest(0, n - 64) + 47) DIV 48"))
@@ -1233,7 +1223,7 @@ object Text {
     // posting list), and the judgment aggregate is one keyed pass.
     "q261_retrieval_eval" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
       val tf = ex.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val dl = ex.groupBy("doc_id").agg(count(lit(1)).as("dl"))
       val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -1587,7 +1577,7 @@ object Text {
            |u AS (SELECT doc_id,
            |  CAST(len(w) AS BIGINT) AS n_tokens,
            |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS punct_count,
-           |  ${hitSql(stopwords)} AS stop_hits
+           |  ${hitSql(Stop)} AS stop_hits
            | FROM t)
            |SELECT doc_id, n_tokens, punct_count, stop_hits,
            | round(CAST(stop_hits AS DOUBLE) / CAST(n_tokens AS DOUBLE), 4) AS stop_ratio,

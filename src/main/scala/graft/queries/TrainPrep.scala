@@ -27,7 +27,6 @@ import graft.Tables
   */
 object TrainPrep {
 
-  /** Raw (order- and multiplicity-preserving) whitespace tokens. */
   /** q86's domain-mix report over an arbitrary documents DataFrame (also
     * the per-build composition report CorpusMain writes next to its curated
     * output). Shares in integer basis points ((x*10000) div total): ratios
@@ -54,9 +53,17 @@ object TrainPrep {
       .orderBy(desc("n_tokens"), asc("source"))
   }
 
+  /** The one guarded whitespace tokenizer: raw (order- and multiplicity-
+    * preserving) tokens of lowercased, trimmed text, blank text guarded
+    * to [] (split alone would yield ['']). */
   private[graft] def rawToks(c: Column): Column =
     when(length(trim(c)) === 0, array().cast("array<string>"))
       .otherwise(split(lower(trim(c)), "\\s+"))
+
+  /** The shared stopword list (quality gates, language heuristics, the
+    * q284-family stopword feature). Column callers use
+    * `array(Stop.map(lit): _*)`. */
+  private[graft] val Stop: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
   /** q73's content-independent split bucket (first 4 md5 hex digits of the
     * doc id, mod 100) — the train/val/test contract every decontamination
@@ -162,13 +169,12 @@ object TrainPrep {
     * spec; q284/q285/q286 keep their inline copies (their oracles mirror
     * the text verbatim). */
   private[graft] def trainFeatures(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
     docs
       .withColumn("w", rawToks(col("text")))
       .withColumn("x1i", size(col("w")).cast("long"))
       .filter(col("x1i") > 0)
       .withColumn("hits", size(filter(col("w"),
-        t => array_contains(array(stop.map(lit): _*), t))).cast("long"))
+        t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
       .select(col("x1i"), expr("(hits * 10000) div x1i").as("x2i"),
         when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
   }
@@ -208,25 +214,10 @@ object TrainPrep {
     * slice+zip_with (one walk per position), never indexed-transform
     * (which re-evaluates the child per index after projection collapse). */
   def hashedNgrams8(text: Column): Column =
-    if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof")) hashedNgrams8Hof(text)
-    // r18 (optimization): one native codegen'd pass — md5 digests token
-    // bytes directly, no gram string materializes, distinct folds in place
-    // (bit-parity incl. element ORDER pinned in TextHashesSpec; oracles
-    // unchanged)
-    else org.apache.spark.sql.graft.TextHashes.hashed_ngrams(
-      rawToks(text), 8, 2147483647L)
-
-  /** The pre-r18 HOF form, kept for the bit-parity spec and as the
-    * `SPARK_GRAFT_NGRAMS=hof` A/B toggle (result-identical by the spec's
-    * pin). */
-  private[graft] def hashedNgrams8Hof(text: Column): Column = {
-    def ngrams8(w: Column): Column =
-      when(size(w) < 8, array().cast("array<string>"))
-        .otherwise((2 to 8).foldLeft(slice(w, lit(1), size(w) - 7)) { (acc, k) =>
-          zip_with(acc, slice(w, lit(k), size(w) - 7), (a, b) => concat(a, lit(" "), b))
-        })
-    array_distinct(transform(ngrams8(rawToks(text)), g => Dedup.tokHash(g)))
-  }
+    // one native codegen'd pass — md5 digests token bytes directly, no
+    // gram string materializes, distinct folds in place (bit-parity incl.
+    // element ORDER with the HOF form pinned in TextHashesSpec)
+    org.apache.spark.sql.graft.TextHashes.hashed_ngrams(rawToks(text), 8, 2147483647L)
 
   val queries: Map[String, Q] = Map(
     // ---- TF-IDF: top salient term per document ---------------------------
@@ -488,13 +479,12 @@ object TrainPrep {
     // corpus passes total, not a re-executed pyramid. Features: token
     // count (x/100) and stopword basis points (x/10000); label lang='en'.
     "q284_train_classifier" -> ((s: SparkSession, dir: String) => {
-      val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
       val base = Tables(s, dir, "documents")
         .withColumn("w", rawToks(col("text")))
         .withColumn("x1i", size(col("w")).cast("long"))
         .filter(col("x1i") > 0)
         .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(stop.map(lit): _*), t))).cast("long"))
+          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
         .select(col("x1i"), expr("(hits * 10000) div x1i").as("x2i"),
           when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -565,13 +555,12 @@ object TrainPrep {
     // model's trajectory, and the output (final weights + third-pass
     // accuracy per source) is hash-checked per key.
     "q286_grouped_training" -> ((s: SparkSession, dir: String) => {
-      val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
       val base = Tables(s, dir, "documents")
         .withColumn("w", rawToks(col("text")))
         .withColumn("x1i", size(col("w")).cast("long"))
         .filter(col("x1i") > 0)
         .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(stop.map(lit): _*), t))).cast("long"))
+          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
         .select(col("source"), col("x1i"),
           expr("(hits * 10000) div x1i").as("x2i"),
           when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
@@ -615,7 +604,6 @@ object TrainPrep {
     // by the oracle's unrolled CTEs. One extra corpus pass over q284 (the
     // eval); the broadcast weight vector is the only cross-step state.
     "q285_train_eval" -> ((s: SparkSession, dir: String) => {
-      val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
       val bucket = splitBucket(col("doc_id"))
       val base = Tables(s, dir, "documents")
         .withColumn("bucket", bucket)
@@ -623,7 +611,7 @@ object TrainPrep {
         .withColumn("x1i", size(col("w")).cast("long"))
         .filter(col("x1i") > 0)
         .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(stop.map(lit): _*), t))).cast("long"))
+          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
         .select(col("bucket"), col("x1i"),
           expr("(hits * 10000) div x1i").as("x2i"),
           when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
@@ -1201,7 +1189,7 @@ object TrainPrep {
     * scores the exact feature stream the from-scratch query does. */
   private[graft] def dsirFeats(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val stop = array(Seq("the", "a", "of", "and", "to", "in", "is", "it").map(lit): _*)
+    val stop = array(Stop.map(lit): _*)
     val lab = docs
       .withColumn("w", rawToks(col("text")))
       .filter(size(col("w")) > 0)

@@ -33,12 +33,7 @@ import graft.queries.Dedup
   */
 object CorpusStream {
 
-  private def toks(c: Column): Column =
-    when(length(trim(c)) === 0, array().cast("array<string>"))
-      .otherwise(split(lower(trim(c)), "\\s+"))
-
-  private val stopwords =
-    array(Seq("the", "a", "of", "and", "to", "in", "is", "it").map(lit): _*)
+  private val stopwords = array(graft.queries.TrainPrep.Stop.map(lit): _*)
 
   // repetition fractions via the native one-pass NgramDistincts expression
   // (same gate as CorpusMain stage 4 / q80)
@@ -59,7 +54,7 @@ object CorpusStream {
       // execution (StreamingQueryProgress.observedMetrics) — no second
       // pass, the streaming analog of CorpusMain's staged funnel
       .observe("intake", count(lit(1)).as("n_in"))
-      .withColumn("w", toks(col("text")))
+      .withColumn("w", graft.queries.TrainPrep.rawToks(col("text")))
       .withColumn("n_tokens", size(col("w")).cast("long"))
       .filter(col("n_tokens") >= 10 &&
         size(filter(col("w"), t => array_contains(stopwords, t))).cast("double") /
@@ -465,7 +460,7 @@ object CorpusStream {
     * A 1-row trim ledger (paras in/dropped, tokens in/kept) appends to
     * `paraTable/trim_ledger` per batch — the PipeScaleMain per-wave
     * retention signal. Empty `paraTable` (the default) disables the
-    * stage — the A/B knob for measuring its cost.
+    * stage.
     *
     * `raceHook` is a test seam: invoked with "bloom"/"index" after each
     * optimistic compute, right before its lock window — specs mutate the
