@@ -36,9 +36,7 @@ object AggStateMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: AggStateMain build|append|retract|merged|optimize|publish|resolve|history|retire ...")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     def keysOf(s: String): Seq[String] =
       s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     args(0) match {

@@ -51,8 +51,7 @@ object AnalyticsMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: AnalyticsMain <sfDir> <outDir>")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     run(spark, args(0), args(1)).foreach { case (name, n) =>
       println(s"$name: $n rows")
     }

@@ -49,9 +49,7 @@ object AnnIndexMain {
     require(args.length >= 2 &&
         (Set("resolve", "history", "retire")(args(0)) || args.length >= 3),
       "usage: AnnIndexMain build|append|probe|remove|optimize|reindex|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB|k]")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     def emb(path: String) =
       spark.read.parquet(path).select(col("vec_id"), col("embedding"))
     args(0) match {

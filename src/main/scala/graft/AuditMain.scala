@@ -179,8 +179,7 @@ object AuditMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: AuditMain <inDir|baseUrl> <outDir> [asOfUtc]")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val asOf = args.lift(2).map(s => to_timestamp(lit(s))).getOrElse(current_timestamp())
     val report = run(spark, args(0), asOf)
     ReportSink.writeCsv(report, args(1))

@@ -53,40 +53,7 @@ object Bench {
     * timed run. */
   private def sweep(spark: SparkSession, dir: String,
       selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      warmupEach: Boolean): Seq[(String, Option[Double])] = {
-    // per-query resource capture (VERDICT r13 #2/#8): input + shuffle bytes
-    // drive the class assignment for per-class host normalization; spill,
-    // GC delta and leftover persisted-RDD count make a recurrence of the
-    // r12 in-sweep inflation diagnosable from the bench line alone.
-    val inB = new java.util.concurrent.atomic.AtomicLong()
-    val shB = new java.util.concurrent.atomic.AtomicLong()
-    val spB = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          inB.addAndGet(m.inputMetrics.bytesRead)
-          shB.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten)
-          spB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try sweepInner(spark, dir, selected, warmupEach, inB, shB, spB)
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).filter(_ > 0).sum
-  }
-
-  private def sweepInner(spark: SparkSession, dir: String,
-      selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      warmupEach: Boolean,
-      inB: java.util.concurrent.atomic.AtomicLong,
-      shB: java.util.concurrent.atomic.AtomicLong,
-      spB: java.util.concurrent.atomic.AtomicLong): Seq[(String, Option[Double])] =
+      warmupEach: Boolean): Seq[(String, Option[Double])] =
     selected.map { case (name, fn) =>
       var failed = false
       def run(): Unit =
@@ -95,52 +62,48 @@ object Bench {
           failed = true
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
       if (warmupEach) run() // steady-state warmup: codegen compile + JIT
-      // warmup traffic must not pollute the class metrics
-      org.apache.spark.graft.ListenerBridge.drain(spark)
-      inB.set(0L); shB.set(0L); spB.set(0L)
       // GC time INSIDE the timed runs only: the harness's own forced
       // System.gc() between runs must not count toward the query's gc_ms
       var gcMs = 0L
       var leftoverPersisted = 0
-      val timed = (1 to 2).map { _ =>
-        spark.catalog.clearCache() // timed runs must rebuild query-owned caches
-        // localCheckpoint blocks from earlier queries are only released when
-        // their RDD objects are garbage-collected and the ContextCleaner
-        // processes the reference queue. Left alone, ~15 checkpointing
-        // queries pile blocks into the unified memory manager until
-        // mid-sweep queries measure storage eviction + shuffle spill instead
-        // of their own plan (q102 read 100s in a 167-query sweep vs 3.6s
-        // clean; q37 read 33s in a 200-query sweep vs 2.7s). GC + cleaner
-        // alone proved insufficient at 200 queries — drop every leftover
-        // RDD-level persist eagerly (clearCache only covers Dataset-level
-        // caches; prior queries' checkpoint blocks are never re-read, so
-        // unpersisting them is safe).
-        val leftovers = spark.sparkContext.getPersistentRDDs
-        leftoverPersisted = math.max(leftoverPersisted, leftovers.size)
-        leftovers.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        run()
-        val wall = (System.nanoTime() - t0) / 1e9
-        gcMs += gcMillis() - gc0
-        wall
+      // per-query resource capture (VERDICT r13 #2/#8), warmup excluded:
+      // input + shuffle bytes drive the class assignment for per-class
+      // host normalization; spill, GC delta and leftover persisted-RDD
+      // count make a recurrence of the r12 in-sweep inflation diagnosable
+      // from the bench line alone
+      val (timed, m) = RunLedger.measure(spark) {
+        (1 to 2).map { _ =>
+          // timed runs must rebuild query-owned caches, and must not
+          // measure eviction of earlier queries' checkpoint blocks
+          leftoverPersisted = math.max(leftoverPersisted, RunLedger.resetCaches(spark))
+          val gc0 = gcMillis()
+          val t0 = System.nanoTime()
+          run()
+          val wall = (System.nanoTime() - t0) / 1e9
+          gcMs += gcMillis() - gc0
+          wall
+        }
       }
-      org.apache.spark.graft.ListenerBridge.drain(spark)
       if (!failed) {
         // bytes accumulate over BOTH timed runs — the class thresholds are
         // ratio-dominated, and the reported MBs are halved to per-run
-        val cls = classifyNamed(name, inB.get / 2, shB.get / 2)
+        val cls = classifyNamed(name, m.inputBytes / 2, m.shuffleBytes / 2)
         queryClasses.putIfAbsent(name, cls)
         queryDiag.putIfAbsent(name, QueryDiag(cls,
-          inB.get / 2 / 1048576.0, shB.get / 2 / 1048576.0,
-          spB.get / 2 / 1048576.0, gcMs, leftoverPersisted))
+          m.inputBytes / 2 / 1048576.0, m.shuffleBytes / 2 / 1048576.0,
+          m.spillBytes / 2 / 1048576.0, gcMs, leftoverPersisted))
         ()
       }
       // a failed query must not fold its time-to-failure into the JSON as
       // if it were a fast success — record it in "errors" instead
       name -> (if (failed) None else Some(timed.min))
     }
+
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).filter(_ > 0).sum
+  }
 
   private val calibSink = new java.util.concurrent.atomic.AtomicLong()
 
@@ -270,10 +233,7 @@ object Bench {
             fn(spark, dir).write.format("noop").mode("overwrite").save()
           if (warmup) run()
           cls -> (1 to 2).map { _ =>
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = true))
-            System.gc()
+            RunLedger.resetCaches(spark)
             val t0 = System.nanoTime(); run()
             (System.nanoTime() - t0) / 1e9
           }.min
@@ -788,11 +748,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // "both" (default) | "compacted" | "raw" — dev iteration can skip a side
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "both")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     Tables(spark, sfDir, "lineitem").count() // warmup
     // SPARK_GRAFT_ONLY=q101_pagerank,q102_triangles reruns a subset in the
     // same sweep harness — for isolating cross-query interactions that
@@ -803,7 +761,7 @@ object Bench {
 
     // host calibration BEFORE any sweep: untimed work hasn't heated the
     // JVM heap yet and the machine state is what the sweep will see
-    val calibThreads = scala.util.Try(cpus.trim.toInt).getOrElse(4)
+    val calibThreads = GraftSession.cpus
     val calib1 = calibrate(1)
     val calibN = calibrate(calibThreads)
     // per-class probes beside the integer one (VERDICT r13 #2) — same

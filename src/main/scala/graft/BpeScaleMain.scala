@@ -146,60 +146,44 @@ object BpeScaleMain {
     val roundsList = args.lift(2).getOrElse("3,8,16,32")
       .split(",").map(_.trim.toInt).toSeq
     val batchSize = args.lift(3).map(_.toInt).getOrElse(8)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
 
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          spillDisk.addAndGet(m.diskBytesSpilled); ()
-        }
-    })
-
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      spillDisk.set(0L)
+    // one RunLedger window per configuration, after a cache reset: the
+    // ledger drains the listener bus before zeroing and before reading, so
+    // no configuration's late task events land in the next row
+    def measured[A](body: => A): (A, RunLedger.Totals) = {
+      RunLedger.resetCaches(spark)
+      RunLedger.measure(spark)(body)
     }
+    def strs(xs: Seq[String]): String =
+      xs.map(RunLedger.jsonString).mkString("[", ",", "]")
 
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     roundsList.foreach { r =>
-      reset()
-      val t0 = System.nanoTime()
-      val (secs, merges, n0, nAfter) = greedy(spark, dir, r)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val l = s"""{"mode":"greedy","rounds":$r,"wall_sec":${jnum(wall)},""" +
-        s""""sec_per_round":${jnum(wall / r)},""" +
+      val ((secs, merges, n0, nAfter), m) = measured(greedy(spark, dir, r))
+      val l = s"""{"mode":"greedy","rounds":$r,"wall_sec":${jnum(m.wallSec)},""" +
+        s""""sec_per_round":${jnum(m.wallSec / r)},""" +
         s""""round_secs":[${secs.map(jnum).mkString(",")}],""" +
-        s""""spill_disk_mb":${jnum(spillDisk.get / 1048576.0)},""" +
+        s""""spill_disk_mb":${jnum(m.diskSpillBytes / 1048576.0)},""" +
         s""""n0":$n0,"n_after":$nAfter,""" +
-        s""""merges":[${merges.map("\"" + _ + "\"").mkString(",")}]}"""
+        s""""merges":${strs(merges)}}"""
       println(l); lines += l
     }
     if (batchSize >= 2) {
       val target = roundsList.max
-      reset()
-      val t0 = System.nanoTime()
-      val (secs, merges, n0, nAfter, passes) =
-        batched(spark, dir, target, batchSize)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val ((secs, merges, n0, nAfter, passes), m) =
+        measured(batched(spark, dir, target, batchSize))
       val l = s"""{"mode":"batched","rounds":$target,"per_pass":$batchSize,""" +
-        s""""passes":$passes,"wall_sec":${jnum(wall)},""" +
-        s""""sec_per_merge":${jnum(wall / target)},""" +
+        s""""passes":$passes,"wall_sec":${jnum(m.wallSec)},""" +
+        s""""sec_per_merge":${jnum(m.wallSec / target)},""" +
         s""""pass_secs":[${secs.map(jnum).mkString(",")}],""" +
-        s""""spill_disk_mb":${jnum(spillDisk.get / 1048576.0)},""" +
+        s""""spill_disk_mb":${jnum(m.diskSpillBytes / 1048576.0)},""" +
         s""""n0":$n0,"n_after":$nAfter,""" +
-        s""""merges":[${merges.map("\"" + _ + "\"").mkString(",")}]}"""
+        s""""merges":${strs(merges)}}"""
       println(l); lines += l
     }
-    lines += s"""{"metric":"bpe_scale","sf_dir":"$dir","calib_mt_sec":${
-      jnum(Bench.calibrate(scala.util.Try(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrElse(4)))}}"""
+    lines += s"""{"metric":"bpe_scale","sf_dir":${RunLedger.jsonString(dir)},"calib_mt_sec":${
+      jnum(Bench.calibrate(GraftSession.cpus))}}"""
     Files.write(Paths.get(out),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     println(s"wrote $out")

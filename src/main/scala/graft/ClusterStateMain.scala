@@ -30,9 +30,7 @@ object ClusterStateMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: ClusterStateMain build|append|clusters ...")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     // retention knobs trail each label-writing verb's positional args
     def retentionFrom(from: Int): ClusterState.Retention = {
       val d = ClusterState.Retention()

@@ -341,8 +341,7 @@ object CorpusMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: CorpusMain <sfDir> <outDir> [lmGateE6] [keep=longest] [decontam] [paradedup] [paraexact]")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val keepLongest = args.drop(2).contains("keep=longest")
     val decontam = args.drop(2).contains("decontam")
     val paraGate = args.drop(2).contains("paradedup")

@@ -35,9 +35,7 @@ object DedupIndexMain {
         (args(0) == "resolve" || args(0) == "history" ||
           args(0) == "retire" || args.length >= 3),
       "usage: DedupIndexMain build|append|probe|optimize|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB]")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     def docs(path: String) =
       spark.read.parquet(path).select(col("doc_id"), col("text"))
     args(0) match {

@@ -7,7 +7,7 @@ package graft
 object ExplainMain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.cli()
     spark.sparkContext.setLogLevel("ERROR")
     args.headOption match {
       case Some(name) =>
@@ -36,39 +36,15 @@ object ExplainMain {
         // to one row group shows up here as scan_tasks=1 — visible in one
         // run instead of an A/B probe (the round-8 1.40x investigation).
         locally {
-          import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-          import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-          // metrics live only on plan instances that actually RAN: the
-          // DataFrameWriter executes its own QueryExecution, so walking
-          // df.queryExecution after a write reads all-zero accumulators.
-          // Capture executed plans via listener (the PlanLintSpec pattern —
-          // also covers executions during query CONSTRUCTION).
-          val captured =
-            new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-          val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-            override def onSuccess(f: String,
-                qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-              captured.add(qe.executedPlan)
-            override def onFailure(f: String,
-                qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-          }
-          spark.listenerManager.register(listener)
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          // listener bus is async — drain it deterministically (a fixed
-          // stability poll undercounts whenever the terminal onSuccess
-          // lands late on a loaded host; the report's whole point is
-          // cross-round comparability)
-          if (!org.apache.spark.graft.ListenerBridge.drain(spark))
-            println("WARNING: listener bus not drained — report may undercount")
-          spark.listenerManager.unregister(listener)
-          def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-            case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-            case q: QueryStageExec        => p +: walk(q.plan)
-            case _                        => p +: p.children.flatMap(walk)
-          }
-          import scala.jdk.CollectionConverters._
-          val nodes = captured.asScala.toSeq.flatMap(walk)
+          import org.apache.spark.sql.execution.FileSourceScanExec
+          // metrics live only on plan instances that actually RAN (the
+          // writer executes its own QueryExecution) — walk the captured
+          // executed plans, which also cover executions during query
+          // CONSTRUCTION
+          val (_, plans) = RunLedger.executedPlans(spark)(
+            SparkEntry.queries(name)(spark, dir)
+              .write.format("noop").mode("overwrite").save())
+          val nodes = plans.flatMap(graft.operators.PlanLint.nodes)
           nodes.collect {
             case f: FileSourceScanExec =>
               val table = f.relation.location.rootPaths.headOption

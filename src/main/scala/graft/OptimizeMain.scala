@@ -84,9 +84,7 @@ object OptimizeMain {
     }
     val target = (if (rest.length >= 3) rest(2).toLong else 128L) << 20
     val sortKey = if (rest.length >= 4) Some(rest(3)) else None
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val results = run(spark, rest(0), rest(1), target, sortKey)
     results.foreach { case (t, s) =>
       println(f"$t%-12s files ${s.n_files_in}->${s.n_files_out}  " +

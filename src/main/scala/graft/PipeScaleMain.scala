@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -66,9 +64,7 @@ object PipeScaleMain {
     val workDir = args(1)
     val waves = args.lift(2).map(_.toInt).getOrElse(10)
     val optimizeEvery = args.lift(3).map(_.toInt).getOrElse(4)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
 
     rmTree(new java.io.File(workDir))
     new java.io.File(workDir).mkdirs()
@@ -79,17 +75,6 @@ object PipeScaleMain {
     val corpusDir = s"$workDir/corpus"
     val paraTable = s"$workDir/para"
     val ledgerPath = java.nio.file.Paths.get(s"$workDir/pipescale.jsonl")
-
-    // task-metric capture, drained per wave
-    val spillB = new AtomicLong(); val shB = new AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          spillB.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          shB.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-            m.shuffleWriteMetrics.bytesWritten); ()
-        }
-    })
 
     val docs = Tables(spark, sfDir, "documents")
       .select("doc_id", "text", "lang", "source")
@@ -103,7 +88,8 @@ object PipeScaleMain {
     val bloomBits = java.math.BigInteger.valueOf(
       math.max(graft.operators.AggState.BloomDefaultBits, totalDocs * 33L * 8L))
       .nextProbablePrime().longValueExact()
-    println(s"""{"metric":"pipescale_setup","sf":"$sfDir","docs":$totalDocs,""" +
+    val sf = RunLedger.jsonString(sfDir)
+    println(s"""{"metric":"pipescale_setup","sf":$sf,"docs":$totalDocs,""" +
       s""""bloom_bits":$bloomBits}""")
 
     def mb(b: Long): String = Bench.jnum(b / 1048576.0, 1)
@@ -135,21 +121,18 @@ object PipeScaleMain {
       val schema = spark.read.parquet(feedDir).schema
       val feed = spark.readStream.schema(schema).parquet(feedDir)
         .withColumn("ingest_ts", col("ingest_ts").cast("timestamp"))
-      org.apache.spark.graft.ListenerBridge.drain(spark)
-      spillB.set(0L); shB.set(0L)
       graft.operators.Generations.drainLockHoldMs()
-      val t0 = System.nanoTime()
-      val q = streaming.CorpusStream.curated(feed).writeStream
-        .option("checkpointLocation", s"$workDir/checkpoint")
-        .foreachBatch(streaming.CorpusStream.pipelineBatch(bloomTable,
-          indexTable, clusterDir, corpusDir, optimizeEvery,
-          bloomBits = bloomBits, paraTable = paraTable) _)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerBridge.drain(spark)
-      wallTotal += wall; spillTotal += spillB.get
+      val (_, m) = RunLedger.measure(spark) {
+        streaming.CorpusStream.curated(feed).writeStream
+          .option("checkpointLocation", s"$workDir/checkpoint")
+          .foreachBatch(streaming.CorpusStream.pipelineBatch(bloomTable,
+            indexTable, clusterDir, corpusDir, optimizeEvery,
+            bloomBits = bloomBits, paraTable = paraTable) _)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+      wallTotal += m.wallSec; spillTotal += m.spillBytes
       val locks = graft.operators.Generations.drainLockHoldMs()
       // key by the last TWO path segments: both standing tables' live
       // generations are named gen-N, table-qualifying disambiguates
@@ -157,7 +140,7 @@ object PipeScaleMain {
         val f = new java.io.File(p)
         val key = Option(f.getParentFile).map(_.getName + "/").getOrElse("") +
           f.getName
-        s""""$key":$ms""" }.mkString("{", ",", "}")
+        s"""${RunLedger.jsonString(key)}:$ms""" }.mkString("{", ",", "}")
       val corpusRows = scala.util.Try(
         spark.read.parquet(corpusDir).count()).getOrElse(0L)
       // standing-filter occupancy (AggState.bloomFill): the saturation
@@ -179,9 +162,9 @@ object PipeScaleMain {
       val (paraIn, paraDrop) = (paraInCum - paraInPrev, paraDropCum - paraDropPrev)
       paraInPrev = paraInCum; paraDropPrev = paraDropCum
       val line =
-        s"""{"metric":"pipescale_wave","sf":"$sfDir","wave":$w,""" +
-          s""""docs_in":$nIn,"wall_sec":${Bench.jnum(wall, 2)},""" +
-          s""""spill_mb":${mb(spillB.get)},"shuffle_mb":${mb(shB.get)},""" +
+        s"""{"metric":"pipescale_wave","sf":$sf,"wave":$w,""" +
+          s""""docs_in":$nIn,"wall_sec":${Bench.jnum(m.wallSec, 2)},""" +
+          s""""spill_mb":${mb(m.spillBytes)},"shuffle_mb":${mb(m.shuffleBytes)},""" +
           s""""lock_hold_ms":$lockJson,"corpus_rows":$corpusRows,""" +
           s""""corpus_mb":${mb(dirBytes(corpusDir))},""" +
           s""""index_mb":${mb(dirBytes(indexTable))},""" +
@@ -204,15 +187,14 @@ object PipeScaleMain {
     val corpusN = scala.util.Try(
       spark.read.parquet(corpusDir).count()).getOrElse(0L)
     val totalLine =
-      s"""{"metric":"pipescale_total","sf":"$sfDir","waves":$waves,""" +
+      s"""{"metric":"pipescale_total","sf":$sf,"waves":$waves,""" +
         s""""docs_in":$totalDocs,"corpus_docs":$corpusN,""" +
         s""""paras_in":$paraInPrev,"paras_trimmed":$paraDropPrev,""" +
         s""""dup_clusters":$clustersN,""" +
         s""""wall_sec":${Bench.jnum(wallTotal, 2)},""" +
         s""""wall_with_setup_sec":${Bench.jnum((System.nanoTime() - t0All) / 1e9, 2)},""" +
         s""""spill_mb":${mb(spillTotal)},""" +
-        s""""calib_mt_sec":${Bench.jnum(Bench.calibrate(scala.util.Try(
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrElse(4)))}}"""
+        s""""calib_mt_sec":${Bench.jnum(Bench.calibrate(GraftSession.cpus))}}"""
     println(totalLine)
     java.nio.file.Files.write(ledgerPath, (totalLine + "\n").getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,

@@ -57,9 +57,7 @@ object PipelineMain {
     val minNovelBp = args.lift(5).map(_.toLong).getOrElse(3000L)
     val bloomBits = args.lift(6).map(_.toLong)
       .getOrElse(graft.operators.AggState.BloomDefaultBits)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
 
     val schema = spark.read.parquet(inDir).schema
     val raw = spark.readStream.schema(schema).parquet(inDir)

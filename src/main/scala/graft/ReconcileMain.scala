@@ -59,8 +59,7 @@ object ReconcileMain {
       val Array(t, k) = args(3).split(":")
       Seq(t -> k)
     } else Seq("orders" -> "o_orderkey")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val reports = run(spark, args(0), args(1), args(2), keyed)
     reports.foreach { r =>
       println(s"[reconcile] ${r.tbl}: A=${r.n_rows_a} B=${r.n_rows_b} " +

@@ -193,31 +193,6 @@ object ScaleMain {
 
   def run(spark: SparkSession, dir: String, outPath: String,
       only: Option[Set[String]] = None): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val memSpill = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong()
-    // max per-task peak execution memory: the per-shard memory-bound
-    // evidence the q289 matrix exists for (spill says pressure happened;
-    // this says how big one task's unified-memory footprint actually got)
-    val peakTaskMem = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach { m =>
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-          peakTaskMem.getAndAccumulate(m.peakExecutionMemory, Math.max); ()
-        }
-    })
-    // lint the EXECUTED plans (localCheckpoint-ing queries return a
-    // LogicalRDD — the PlanLintSpec listener pattern sees the real work)
-    val lint = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        operators.PlanLint.audit(qe.executedPlan).foreach(x => lint.add(x.toString))
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
     // a typo'd subset name must fail loudly — silently dropping it yields
     // an empty smoke output that reads as a clean run
     only.foreach { names =>
@@ -227,30 +202,28 @@ object ScaleMain {
           s"(available: ${SmokeQueries.mkString(",")})")
     }
     val lines = SmokeQueries.filter(q => only.forall(_.contains(q))).map { name =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      memSpill.set(0L); diskSpill.set(0L); peakTaskMem.set(0L); lint.clear()
-      spark.listenerManager.register(ql)
-      val t0 = System.nanoTime()
-      val ok = scala.util.Try(
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()).isSuccess
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerBridge.drain(spark)
-      spark.listenerManager.unregister(ql)
-      import scala.jdk.CollectionConverters._
-      val findings = lint.asScala.toSeq.distinct
-      val l = s"""{"query":"$name","ok":$ok,"wall_sec":$wall,""" +
-        s""""spill_mem_bytes":${memSpill.get},"spill_disk_bytes":${diskSpill.get},""" +
-        s""""peak_task_mem_bytes":${peakTaskMem.get},""" +
-        s""""lint":[${findings.map(f => "\"" + f.replace("\"", "'") + "\"").mkString(",")}]}"""
+      RunLedger.resetCaches(spark)
+      // lint the EXECUTED plans (localCheckpoint-ing queries return a
+      // LogicalRDD — the captured plans see the real work)
+      val ((ok, m), plans) = RunLedger.executedPlans(spark) {
+        RunLedger.measure(spark)(scala.util.Try(
+          SparkEntry.queries(name)(spark, dir)
+            .write.format("noop").mode("overwrite").save()).isSuccess)
+      }
+      val findings = plans.flatMap(operators.PlanLint.audit).map(_.toString).distinct
+      // peak_task_mem_bytes is the max per-task peak execution memory: the
+      // per-shard memory-bound evidence the q289 matrix exists for (spill
+      // says pressure happened; this says how big one task's
+      // unified-memory footprint actually got)
+      val l = s"""{"query":"$name","ok":$ok,"wall_sec":${m.wallSec},""" +
+        s""""spill_mem_bytes":${m.memSpillBytes},"spill_disk_bytes":${m.diskSpillBytes},""" +
+        s""""peak_task_mem_bytes":${m.peakTaskMemBytes},""" +
+        s""""lint":[${findings.map(RunLedger.jsonString).mkString(",")}]}"""
       println(l)
       l
     }
-    val calib = Bench.calibrate(
-      scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrElse(4))
-    val all = lines :+ s"""{"calib_mt_sec":$calib,"sf_dir":"$dir"}"""
+    val calib = Bench.calibrate(GraftSession.cpus)
+    val all = lines :+ s"""{"calib_mt_sec":$calib,"sf_dir":${RunLedger.jsonString(dir)}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       all.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"wrote $outPath")
@@ -260,9 +233,7 @@ object ScaleMain {
     require(args.length >= 3,
       "usage: ScaleMain gen <srcSfDir> <outDir> [factor] [fixed-vocab] | " +
         "run <sfDir> <outJsonl> [q1,q2,...]")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     args(0) match {
       case "gen" => gen(spark, args(1), args(2),
         if (args.length >= 4) args(3).toInt else 10,

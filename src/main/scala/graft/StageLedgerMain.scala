@@ -4,14 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
-/** Per-PHYSICAL-STAGE resource ledger for ANY SparkEntry query — the
-  * general form of [[SpillProbeMain]] (which decomposes one specific
-  * pipeline by hand). When a tier run reports residual spill, this names
-  * the stage it lives in without rewriting the query as cumulative
-  * prefixes: `SparkListenerStageCompleted` carries the stage's aggregated
-  * task metrics plus the call-site name, so one run yields
+/** Per-PHYSICAL-STAGE resource ledger for ANY SparkEntry query. When a
+  * tier run reports residual spill, this names the stage it lives in
+  * without rewriting the query as cumulative prefixes (e.g.
+  * `q220_prefix_join` attributes the exact prefix join's spill to its
+  * verify join): [[RunLedger.measure]]'s stage rows carry each stage's
+  * aggregated task metrics plus the call-site name, so one run yields
   * (stage, wall, input, shuffle read/write, mem/disk spill) rows.
   *
   * ```
@@ -29,9 +27,7 @@ object StageLedgerMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: StageLedgerMain <queryName> <sfDir> <outJsonl>")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     run(spark, args(0), args(1), args(2))
   }
 
@@ -40,63 +36,31 @@ object StageLedgerMain {
       qname: String, dir: String, outPath: String): Unit = {
     val fn = SparkEntry.queries.getOrElse(qname,
       sys.error(s"unknown query: $qname"))
+    val (_, m) = RunLedger.measure(spark)(
+      fn(spark, dir).write.format("noop").mode("overwrite").save())
 
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        if (m != null) {
-          // first line of the call-site details = the user-code frame;
-          // minimal JSON-string escape (backslash, quote, control chars) so
-          // an odd call-site name can't produce an unparseable JSONL row
-          val name = si.name.take(120).flatMap {
-            case '\\' => "\\\\"
-            case '"' => "'"
-            case c if c < ' ' => " "
-            case c => c.toString
-          }
-          rows.add(
-            s"""{"stage":${si.stageId},"attempt":${si.attemptNumber},""" +
-              s""""name":"$name","tasks":${si.numTasks},""" +
-              s""""run_sec":${jnum(m.executorRunTime / 1000.0)},""" +
-              s""""input_mb":${jnum(m.inputMetrics.bytesRead / 1048576.0)},""" +
-              s""""sh_read_mb":${jnum(m.shuffleReadMetrics.totalBytesRead / 1048576.0)},""" +
-              s""""sh_write_mb":${jnum(m.shuffleWriteMetrics.bytesWritten / 1048576.0)},""" +
-              s""""spill_mem_mb":${jnum(m.memoryBytesSpilled / 1048576.0)},""" +
-              s""""spill_disk_mb":${jnum(m.diskBytesSpilled / 1048576.0)},""" +
-              s""""peak_mem_sum_mb":${jnum(m.peakExecutionMemory / 1048576.0)}}""")
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    val t0 = System.nanoTime()
-    val wall =
-      try {
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } finally {
-        org.apache.spark.graft.ListenerBridge.drain(spark)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-
-    import scala.jdk.CollectionConverters._
-    val lines = rows.asScala.toSeq.sortBy { l =>
-      val id = "\"stage\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt).getOrElse(-1)
-      id
+    def mb(b: Long): String = jnum(b / 1048576.0)
+    // first line of the call-site details = the user-code frame
+    val lines = m.stages.map { s =>
+      s"""{"stage":${s.stageId},"attempt":${s.attempt},""" +
+        s""""name":${RunLedger.jsonString(s.name.take(120))},"tasks":${s.tasks},""" +
+        s""""run_sec":${jnum(s.runMs / 1000.0)},""" +
+        s""""input_mb":${mb(s.inputBytes)},""" +
+        s""""sh_read_mb":${mb(s.shuffleReadBytes)},""" +
+        s""""sh_write_mb":${mb(s.shuffleWriteBytes)},""" +
+        s""""spill_mem_mb":${mb(s.memSpillBytes)},""" +
+        s""""spill_disk_mb":${mb(s.diskSpillBytes)},""" +
+        s""""peak_mem_sum_mb":${mb(s.peakMemSumBytes)}}"""
     }
     val all = lines :+
-      s"""{"query":"$qname","sf_dir":"$dir","wall_sec":${jnum(wall)},"n_stages":${lines.size}}"""
+      s"""{"query":${RunLedger.jsonString(qname)},"sf_dir":${RunLedger.jsonString(dir)},""" +
+        s""""wall_sec":${jnum(m.wallSec)},"n_stages":${lines.size}}"""
     Files.write(Paths.get(outPath),
       all.mkString("\n").getBytes(StandardCharsets.UTF_8))
     // console summary: the spilling stages, biggest first
-    val spillers = lines.filter(_.contains("\"spill_disk_mb\":") )
-      .map { l =>
-        val d = "\"spill_disk_mb\":([0-9.]+)".r.findFirstMatchIn(l).map(_.group(1).toDouble).getOrElse(0.0)
-        (d, l)
-      }.filter(_._1 > 0.0).sortBy(-_._1)
-    println(s"wrote $outPath (${lines.size} stages, wall ${jnum(wall)} s)")
+    val spillers = m.stages.zip(lines).filter(_._1.diskSpillBytes > 0)
+      .sortBy(-_._1.diskSpillBytes)
+    println(s"wrote $outPath (${lines.size} stages, wall ${jnum(m.wallSec)} s)")
     spillers.take(5).foreach { case (_, l) => println("SPILL " + l) }
     if (spillers.isEmpty) println("no stage spilled to disk")
   }

@@ -29,9 +29,7 @@ object StreamProfileMain {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val perBatch = args.lift(1).map(_.toInt).getOrElse(2000)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     import spark.implicits._
     implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -148,7 +146,7 @@ object StreamProfileMain {
     }
 
     val grid = (for {
-      p <- Seq(cpus.toInt, 8, 4, 1)
+      p <- Seq(GraftSession.cpus, 8, 4, 1)
       c <- Seq(false, true)
     } yield run(p, c)) :+ floor()
     grid.foreach { c =>

@@ -51,6 +51,19 @@ object Tables {
   * sized to cores rather than the 200 default).
   */
 object GraftSession {
+  private def cpusEnv: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The harness core count (SPARK_GRAFT_CPUS; 4 when unset or not a number). */
+  def cpus: Int = scala.util.Try(cpusEnv.trim.toInt).getOrElse(4)
+
+  /** The session every command-line main opens: `local[SPARK_GRAFT_CPUS]`,
+    * WARN logging. */
+  def cli(): SparkSession = {
+    val spark = builder(cpusEnv).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def builder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

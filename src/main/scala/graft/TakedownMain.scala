@@ -25,9 +25,7 @@ object TakedownMain {
     require(args.length >= 2,
       "usage: TakedownMain <pipeDir> <docIdsCsvOrParquet> [apply] [rebloom]")
     val pipeDir = args(0)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val ids =
       if (new java.io.File(args(1)).exists())
         spark.read.parquet(args(1)).select("doc_id")

@@ -22,9 +22,7 @@ object VacuumMain {
     val apply = args.drop(1).contains("apply")
     val retentionMs = args.drop(1).filterNot(_ == "apply").headOption
       .map(_.toLong * 60 * 60 * 1000).getOrElse(Vacuum.DefaultRetentionMs)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     val st = Vacuum.vacuum(spark, args(0), dryRun = !apply, retentionMs = retentionMs)
     println(s"committed=${st.n_committed} orphans=${st.n_orphans} " +
       s"orphan_bytes=${st.orphan_bytes} retained_young=${st.n_retained} " +

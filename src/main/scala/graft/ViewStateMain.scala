@@ -30,9 +30,7 @@ object ViewStateMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ViewStateMain build|appendLeft|appendRight|retractLeft|retractRight|merged|optimize|publish|resolve|history|retire ...")
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.cli()
     args(0) match {
       case "build" =>
         require(args.length >= 5,

@@ -40,15 +40,17 @@ object PlanLint {
 
   def audit(df: DataFrame): Seq[Finding] = audit(df.queryExecution.executedPlan)
 
+  /** Every node of `plan`, pre-order. AQE wraps subtrees in
+    * AdaptiveSparkPlanExec / QueryStageExec whose inner plans are not
+    * `children` — both are unwrapped so a collect sees the real tree. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => plan +: nodes(a.executedPlan)
+    case q: QueryStageExec        => plan +: nodes(q.plan)
+    case _                        => plan +: plan.children.flatMap(nodes)
+  }
+
   def audit(plan: SparkPlan): Seq[Finding] = {
-    // AQE wraps subtrees in AdaptiveSparkPlanExec / QueryStageExec whose
-    // children are not `children` — unwrap so collect sees the real tree
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec        => p +: walk(q.plan)
-      case _                        => p +: p.children.flatMap(walk)
-    }
-    val nodes = walk(plan)
+    val all = nodes(plan)
     def head(p: SparkPlan): String = p.simpleStringWithNodeId().take(120)
     // under AQE a consumer's child is a ShuffleQueryStageExec wrapping the
     // exchange, not the exchange itself — unwrap before identity checks
@@ -58,7 +60,7 @@ object PlanLint {
       case other                    => other
     }
 
-    nodes.flatMap {
+    all.flatMap {
       case c: CartesianProductExec =>
         Some(Finding("cartesian-product", head(c)))
       case j: BroadcastNestedLoopJoinExec =>
@@ -68,7 +70,7 @@ object PlanLint {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
         // only flag when real per-row work sits on top (sort/window);
         // a final single-partition exchange under a global agg is benign
-        val consumers = nodes.filter(_.children.exists(c => unwrap(c) eq e))
+        val consumers = all.filter(_.children.exists(c => unwrap(c) eq e))
         val hot = consumers.exists {
           case _: SortExec | _: WindowExec => true
           case _ => false
@@ -88,11 +90,6 @@ object PlanLint {
     * determined — callers must treat that as a FAILURE (fail-closed), or
     * an unverifiable allow-map entry silently becomes a trusted one. */
   def broadcastSideRows(plan: SparkPlan, probeLimit: Int): Seq[Option[Long]] = {
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec        => p +: walk(q.plan)
-      case _                        => p +: p.children.flatMap(walk)
-    }
     // codegen'd plans interpose InputAdapter/WholeStageCodegen between the
     // join and its broadcast exchange — transparent for this purpose
     def findExchange(p: SparkPlan): Option[BroadcastExchangeExec] = p match {
@@ -112,7 +109,7 @@ object PlanLint {
       case e: BroadcastExchangeExec                         => strip(e.child)
       case other                                            => other
     }
-    walk(plan).collect { case j: BroadcastNestedLoopJoinExec =>
+    nodes(plan).collect { case j: BroadcastNestedLoopJoinExec =>
       val side = j.buildSide match {
         case BuildLeft  => j.left
         case BuildRight => j.right

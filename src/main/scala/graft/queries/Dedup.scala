@@ -844,8 +844,8 @@ object Dedup {
     * the next shard starts.
     *
     * Why the verify is INSIDE the loop (r14): the stage-by-stage spill
-    * ledger (SpillProbeMain, 100x tier) attributed ALL of q220's ~4 GB
-    * spill to the verify join — the candidate pairs carry both docs'
+    * ledger (100x tier) attributed ALL of q220's ~4 GB spill to the
+    * verify join — the candidate pairs carry both docs'
     * full shingle-hash arrays through a sort-merge join, and that sort
     * is the memory cliff; candidate generation itself spills ZERO at
     * 100x. The r13 form sharded only candidate generation and verified
@@ -916,7 +916,7 @@ object Dedup {
   /** The prefix rows (doc_id, h, sz) both prefix-join forms start from:
     * global token frequencies, rarest-first rank per doc, first
     * |x| - ceil(0.7|x|) + 1 tokens kept (the AllPairs prefix bound). */
-  private[graft] def prefixRows(base: DataFrame): DataFrame = {
+  private def prefixRows(base: DataFrame): DataFrame = {
     val freq = base.select(explode(col("hs")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("cnt"))
     val tokens = base.select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
@@ -945,7 +945,7 @@ object Dedup {
     * AllPairs length prune (J >= 0.7 implies min(sz)/max(sz) >= 0.7, an
     * integer predicate) drops candidates BEFORE the intersect verify on
     * both paths; provably output-neutral. */
-  private[graft] def prefixCandidates(keyed: DataFrame): DataFrame = {
+  private def prefixCandidates(keyed: DataFrame): DataFrame = {
     val smallPairs = keyed.filter(col("cnt").between(2, PrefixBucketArrayMax))
       .groupBy("h")
       .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))

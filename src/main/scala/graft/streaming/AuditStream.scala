@@ -70,9 +70,7 @@ object AuditStream {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: AuditStream <baseUrl> <outDir> <checkpointDir> [asOfUtc]")
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.cli()
     val asOf = args.lift(3).map(s => to_timestamp(lit(s))).getOrElse(current_timestamp())
     val q = availableNow(spark, args(0), args(2), args(1), asOf,
       sys.env.get("GRAFT_TOKEN"))

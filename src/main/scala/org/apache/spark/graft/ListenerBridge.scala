@@ -2,9 +2,9 @@ package org.apache.spark.graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Accessor for the `private[spark]` listener-bus drain. ExplainMain's
-  * shuffle/scan report is built from listener-captured EXECUTED plans; the
-  * bus is async, so "poll until the capture count is stable for 100 ms"
+/** Accessor for the `private[spark]` listener-bus drain. graft.RunLedger's
+  * task totals and executed-plan captures are listener-fed; the bus is
+  * async, so "poll until the capture count is stable for 100 ms"
   * undercounts whenever the terminal event lands later than the poll
   * window (a loaded host trivially does this). `waitUntilEmpty` is the
   * deterministic contract — it returns only when every queued event has

@@ -120,66 +120,42 @@ class PlanLintSpec extends SparkSpec {
         .groupMapReduce(_._1)(_._2)(_ ++ _)
     // ~18 queries execute their pipeline during construction and return a
     // localCheckpoint — auditing only the returned frame would walk a
-    // trivial LogicalRDD scan and miss exactly the heaviest plans. A
-    // QueryExecutionListener captures every plan EXECUTED while fn() runs
+    // trivial LogicalRDD scan and miss exactly the heaviest plans.
+    // RunLedger.executedPlans captures every plan EXECUTED while fn() runs
     // (checkpoint jobs, eager counts) so those are audited too.
-    val captured =
-      new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        captured.add(qe.executedPlan)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    def drainListenerBus(): Unit = {
-      // the execution-listener bus is async: wait until the capture count
-      // is stable across two polls (bounded at 3 s)
-      val deadline = System.nanoTime() + 3000000000L
-      var prev = -1
-      while (prev != captured.size && System.nanoTime() < deadline) {
-        prev = captured.size; Thread.sleep(100)
-      }
-    }
     // The tiny-broadcast sign-off is CHECKED, not trusted: every tolerated
     // nested-loop-join must prove its broadcast side holds under this many
     // rows (metrics on executed plans, a bounded probe on lazy ones) — an
     // undeterminable count fails the sweep just like a fat side would.
     val BnljBound = 5000L
     val bad = scala.collection.mutable.ListBuffer[String]()
-    spark.listenerManager.register(listener)
-    try {
-      for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-        captured.clear()
-        val findings =
-          try {
-            val directPlan = fn(spark, dir).queryExecution.executedPlan
-            val direct = PlanLint.audit(directPlan)
-            drainListenerBus()
-            import scala.jdk.CollectionConverters._
-            val capturedPlans = captured.asScala.toSeq
-            if (allow.getOrElse(name, Set.empty).contains("nested-loop-join")) {
-              val sides = (directPlan +: capturedPlans)
-                .flatMap(PlanLint.broadcastSideRows(_, BnljBound.toInt))
-              sides.foreach {
-                case Some(n) if n > BnljBound =>
-                  bad += s"$name: allow-listed BNLJ broadcast side has >= $n rows (bound $BnljBound)"
-                case None =>
-                  bad += s"$name: allow-listed BNLJ broadcast side row count undeterminable"
-                case _ => ()
-              }
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+      val findings =
+        try {
+          val (directPlan, capturedPlans) = RunLedger.executedPlans(spark)(
+            fn(spark, dir).queryExecution.executedPlan)
+          val direct = PlanLint.audit(directPlan)
+          if (allow.getOrElse(name, Set.empty).contains("nested-loop-join")) {
+            val sides = (directPlan +: capturedPlans)
+              .flatMap(PlanLint.broadcastSideRows(_, BnljBound.toInt))
+            sides.foreach {
+              case Some(n) if n > BnljBound =>
+                bad += s"$name: allow-listed BNLJ broadcast side has >= $n rows (bound $BnljBound)"
+              case None =>
+                bad += s"$name: allow-listed BNLJ broadcast side row count undeterminable"
+              case _ => ()
             }
-            direct ++ capturedPlans.flatMap(PlanLint.audit)
-          } catch { case e: Exception => Seq(PlanLint.Finding("audit-error", e.toString.take(120))) }
-        val unexpected = findings.distinct
-          .filterNot(f => allow.getOrElse(name, Set.empty).contains(f.rule))
-        if (unexpected.nonEmpty) bad += s"$name: ${unexpected.mkString("; ")}"
-        // queries may persist/localCheckpoint during construction — drop all
-        // blocks so the sweep's memory stays flat (the bench-sweep lesson)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      }
-    } finally spark.listenerManager.unregister(listener)
+          }
+          direct ++ capturedPlans.flatMap(PlanLint.audit)
+        } catch { case e: Exception => Seq(PlanLint.Finding("audit-error", e.toString.take(120))) }
+      val unexpected = findings.distinct
+        .filterNot(f => allow.getOrElse(name, Set.empty).contains(f.rule))
+      if (unexpected.nonEmpty) bad += s"$name: ${unexpected.mkString("; ")}"
+      // queries may persist/localCheckpoint during construction — drop all
+      // blocks so the sweep's memory stays flat (the bench-sweep lesson)
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    }
     assert(bad.isEmpty, s"\n${bad.mkString("\n")}")
   }
 

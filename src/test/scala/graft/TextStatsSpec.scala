@@ -188,34 +188,10 @@ class TextStatsSpec extends SparkSpec {
   }
 
   test("q302 plan pin: no rank window — no row_number, no document-level WindowExec") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        captured.add(qe.executedPlan)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SparkEntry.queries("q302_ppl_cutoffs")(spark, dir).collect()
-      // async execution-listener bus: poll until the capture count settles
-      val deadline = System.nanoTime() + 3000000000L
-      var prev = -1
-      while (prev != captured.size && System.nanoTime() < deadline) {
-        prev = captured.size; Thread.sleep(100)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec        => p +: walk(q.plan)
-      case _                        => p +: p.children.flatMap(walk)
-    }
-    import scala.jdk.CollectionConverters._
-    val nodes = captured.asScala.toSeq.flatMap(walk)
+    val (_, captured) = RunLedger.executedPlans(spark)(
+      SparkEntry.queries("q302_ppl_cutoffs")(spark, dir).collect())
+    val nodes = captured.flatMap(graft.operators.PlanLint.nodes)
     assert(nodes.nonEmpty, "listener captured no executed plans")
     // the q298 weakness was a row_number window over every document of a
     // language — q302 must never rank documents, and every window it DOES
