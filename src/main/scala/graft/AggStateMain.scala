@@ -60,20 +60,11 @@ object AggStateMain {
       case "optimize" =>
         require(args.length >= 4, "optimize needs <stateDir> <outStateDir> <keysCsv> [targetMB]")
         val target = (if (args.length >= 5) args(4).toLong else 128L) << 20
-        // lock the SOURCE: a concurrent append after the rewrite's listing
-        // would vanish from the new generation (see Generations contract)
-        Generations.withWriterLock(args(1)) {
+        Generations.cliRewrite(args(1), args(2)) {
           AggState.optimize(spark, args(1), args(2), keysOf(args(3)), target)
-          Generations.recordSourceFingerprint(args(2), args(1))
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case "publish" =>
-        require(args.length >= 3, "publish needs <tableDir> <generationDir>")
-        Generations.withWriterLock(args(1)) {
-          Generations.publishChecked(args(1), args(2))
-        }
-        println(s"CURRENT of ${args(1)} -> ${args(2)}")
-      case c @ ("resolve" | "history" | "retire") =>
+      case c @ ("publish" | "resolve" | "history" | "retire") =>
         Generations.cliLineage(c, args)
       case other => sys.error(s"unknown command: $other")
     }

@@ -78,13 +78,7 @@ object AnnIndexMain {
         println(s"probe results -> ${args(3)}")
       case "remove" =>
         require(AnnIndex.exists(args(2)), s"no index at ${args(2)} — build first")
-        val ids =
-          if (new java.io.File(args(1)).exists())
-            spark.read.parquet(args(1)).select(col("vec_id"))
-          else {
-            import spark.implicits._
-            args(1).split(",").map(_.trim.toLong).toSeq.toDF("vec_id")
-          }
+        val ids = GraftSession.idsArg(spark, args(1), "vec_id")
         Generations.withWriterLock(args(2)) {
           AnnIndex.remove(ids, args(2))
         }
@@ -93,28 +87,16 @@ object AnnIndexMain {
         require(args.length >= 3, "reindex needs <indexDir> <outIndexDir> [k]")
         require(AnnIndex.exists(args(1)), s"no index at ${args(1)} — build first")
         val k = if (args.length >= 4) args(3).toInt else 8
-        // lock the SOURCE (the optimize discipline): an append landing
-        // after the live-vector read would vanish from the new generation
-        Generations.withWriterLock(args(1)) {
+        Generations.cliRewrite(args(1), args(2)) {
           AnnIndex.reindex(spark, args(1), args(2), k)
-          Generations.recordSourceFingerprint(args(2), args(1))
         }
         println(s"reindexed ${args(1)} -> ${args(2)} (k=$k quantizer retrained)")
       case "optimize" =>
         val target = (if (args.length >= 4) args(3).toLong else 128L) << 20
-        // lock the SOURCE: an append after the rewrite's listing would
-        // vanish from the new generation (Generations writer contract)
-        Generations.withWriterLock(args(1)) {
+        Generations.cliRewrite(args(1), args(2)) {
           AnnIndex.optimize(spark, args(1), args(2), target)
-          Generations.recordSourceFingerprint(args(2), args(1))
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case "publish" =>
-        require(AnnIndex.exists(args(2)), s"no index at ${args(2)} — nothing to publish")
-        Generations.withWriterLock(args(1)) {
-          Generations.publishChecked(args(1), args(2))
-        }
-        println(s"CURRENT of ${args(1)} -> ${args(2)}")
       case "fitstats" =>
         require(args.length >= 4, "fitstats needs <embParquet> <indexDir> <batchId>")
         require(AnnIndex.exists(args(2)), s"no index at ${args(2)} — build first")
@@ -129,7 +111,9 @@ object AnnIndexMain {
           led.write.mode("overwrite").parquet(args(2))
           println(s"fit ledger -> ${args(2)}")
         } else led.collect().foreach(r => println(r.mkString("\t")))
-      case c @ ("resolve" | "history" | "retire") =>
+      case c @ ("publish" | "resolve" | "history" | "retire") =>
+        if (c == "publish")
+          require(AnnIndex.exists(args(2)), s"no index at ${args(2)} — nothing to publish")
         Generations.cliLineage(c, args)
       case other => sys.error(s"unknown command: $other")
     }

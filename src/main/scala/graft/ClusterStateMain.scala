@@ -52,13 +52,7 @@ object ClusterStateMain {
         println(s"appended ${args(1)} -> ${args(2)}")
       case "remove" =>
         require(args.length >= 4, "remove needs <idsParquet|csv> <stateDir> <indexDir>")
-        val ids =
-          if (new java.io.File(args(1)).exists())
-            spark.read.parquet(args(1)).select(org.apache.spark.sql.functions.col("doc_id"))
-          else {
-            import spark.implicits._
-            args(1).split(",").map(_.trim.toLong).toSeq.toDF("doc_id")
-          }
+        val ids = GraftSession.idsArg(spark, args(1), "doc_id")
         Generations.withWriterLock(args(2)) {
           ClusterState.removeDocs(spark, ids, args(2), args(3), retentionFrom(4))
         }

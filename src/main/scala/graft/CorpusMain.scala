@@ -169,30 +169,18 @@ object CorpusMain {
       }
 
     // 3. quality gate: q31's signals as a filter
-    val stopwords = array(TrainPrep.Stop.map(lit): _*)
     val quality = paraGated
       .withColumn("w", TrainPrep.rawToks(col("text")))
-      .withColumn("n_tokens", size(col("w")).cast("long"))
-      .withColumn("stop_ratio",
-        size(filter(col("w"), t => array_contains(stopwords, t))).cast("double") /
-          greatest(col("n_tokens").cast("double"), lit(1.0)))
-      .filter(col("n_tokens") >= 10 && col("stop_ratio") >= 0.01)
-      .drop("n_tokens", "stop_ratio")
+      .filter(TrainPrep.tokenGate(col("w")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nQuality = quality.count()
     paraGated.unpersist() // == nearDeduped when the para gate is off
 
     // 4. repetition gate: q80's duplicate-fraction signals as a filter,
     // computed by the native one-pass NgramDistincts expression
-    def frac(total: org.apache.spark.sql.Column, distinct: org.apache.spark.sql.Column) =
-      when(total === 0, lit(0.0))
-        .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
-    val nTok = size(col("w")).cast("long")
-    val nd = org.apache.spark.sql.graft.TextHashes.ngram_distincts(col("w"))
     val deRepped = quality
-      .withColumn("d", nd)
-      .filter(!(frac(nTok, col("d.d_tok")) > 0.8 ||
-        frac(greatest(nTok - 2, lit(0L)), col("d.d_3g")) > 0.3))
+      .withColumn("d", org.apache.spark.sql.graft.TextHashes.ngram_distincts(col("w")))
+      .filter(TrainPrep.repetitionGate(col("w"), col("d")))
       .drop("w", "d")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nRep = deRepped.count()

@@ -60,33 +60,20 @@ object DedupIndexMain {
         // takedown: ids come as a parquet with a doc_id column, or inline
         // as a comma-separated id list for the operational one-off
         require(DedupIndex.exists(args(2)), s"no index at ${args(2)} — build first")
-        val ids =
-          if (new java.io.File(args(1)).exists())
-            spark.read.parquet(args(1)).select(col("doc_id"))
-          else {
-            import spark.implicits._
-            args(1).split(",").map(_.trim.toLong).toSeq.toDF("doc_id")
-          }
+        val ids = GraftSession.idsArg(spark, args(1), "doc_id")
         graft.operators.Generations.withWriterLock(args(2)) {
           DedupIndex.remove(ids, args(2))
         }
         println(s"tombstoned ${args(1)} in ${args(2)}")
       case "optimize" =>
         val target = (if (args.length >= 4) args(3).toLong else 128L) << 20
-        // lock the SOURCE: an append after the rewrite's listing would
-        // vanish from the new generation (Generations writer contract)
-        graft.operators.Generations.withWriterLock(args(1)) {
+        graft.operators.Generations.cliRewrite(args(1), args(2)) {
           DedupIndex.optimize(spark, args(1), args(2), target)
-          graft.operators.Generations.recordSourceFingerprint(args(2), args(1))
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case "publish" =>
-        require(DedupIndex.exists(args(2)), s"no index at ${args(2)} — nothing to publish")
-        graft.operators.Generations.withWriterLock(args(1)) {
-          graft.operators.Generations.publishChecked(args(1), args(2))
-        }
-        println(s"CURRENT of ${args(1)} -> ${args(2)}")
-      case c @ ("resolve" | "history" | "retire") =>
+      case c @ ("publish" | "resolve" | "history" | "retire") =>
+        if (c == "publish")
+          require(DedupIndex.exists(args(2)), s"no index at ${args(2)} — nothing to publish")
         graft.operators.Generations.cliLineage(c, args)
       case other => sys.error(s"unknown command: $other")
     }

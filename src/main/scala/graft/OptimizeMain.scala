@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.operators.Compaction
+import graft.operators.{Compaction, Generations}
 
 /** Table-maintenance OPTIMIZE as one runnable job:
   *
@@ -28,52 +28,59 @@ import graft.operators.Compaction
   * table's CURRENT at `<outDir>` ([[graft.operators.Generations]]) — and
   * only after EVERY table's rewrite validated, so a reader resolving
   * through the pointer can never land on a generation that failed its
-  * fingerprint check.
+  * fingerprint check. The rewrite holds `<inDir>`'s writer lock and the
+  * publish `<tableDir>`'s (`Generations.cliRewrite` / `cliPublish`).
   */
 object OptimizeMain {
 
   def run(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long, sortKey: Option[String] = None
-      ): Seq[(String, Compaction.CompactStats)] = {
-    val tables = Option(new java.io.File(inDir).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(f => f.getName.endsWith(".parquet"))
-      .map(_.getName.stripSuffix(".parquet")).sorted
-    tables.map { t =>
-      val path = s"$inDir/$t.parquet"
-      // one CLI sortKey over a directory of heterogeneous tables: apply it
-      // only to tables that actually carry the column (a footer-only schema
-      // read) — otherwise repartitionByRange on table 1 would fail the
-      // whole multi-table job; the rest compact unclustered
-      val schema = spark.read.parquet(path).schema
-      val cols = schema.fieldNames.toSet
-      // a comma in the key list means Z-ORDER clustering over those
-      // columns (multi-dimension data skipping); a single name is plain
-      // range clustering — either applies only where every column exists,
-      // and Z-order additionally only where every key is NUMERIC (zvalue's
-      // quantile bucketing precondition) — a non-qualifying table compacts
-      // unclustered instead of aborting the whole multi-table job
-      val keys = sortKey.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      val present = keys.nonEmpty && keys.forall(cols.contains)
-      val applicable = present && (keys.size == 1 || keys.forall(k =>
-        schema(k).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
-      val stats = Compaction.compact(spark, path,
-        s"$outDir/$t", targetFileBytes,
-        rowGroupBytes = math.max(1L << 20, targetFileBytes / 8),
-        sortKey = if (applicable && keys.size == 1) Some(keys.head) else None,
-        zorderKeys = if (applicable && keys.size > 1) keys else Nil)
-      t -> stats
-    } match { case results =>
-      // record the source fingerprint HERE, at validation time — not at
-      // publish time (r14 ADVICE: a publish-time recording captures any
-      // mutation that landed after validation INTO the fingerprint, making
-      // publishChecked's comparison near-vacuous). Recorded only when every
-      // table validated; publishChecked then compares validation-time state
-      // against publish-time state and refuses if the source moved between.
-      if (results.nonEmpty && results.forall(_._2.content_match))
-        graft.operators.Generations.recordSourceFingerprint(outDir, inDir)
-      results
+      ): Seq[(String, Compaction.CompactStats)] =
+    // the source fingerprint is recorded only when EVERY table validated;
+    // the checked publish then refuses if the source moved since validation
+    Generations.cliRewrite(inDir, outDir,
+        (rs: Seq[(String, Compaction.CompactStats)]) =>
+          rs.nonEmpty && rs.forall(_._2.content_match)) {
+      val tables = Option(new java.io.File(inDir).listFiles())
+        .map(_.toSeq).getOrElse(Seq.empty)
+        .filter(f => f.getName.endsWith(".parquet"))
+        .map(_.getName.stripSuffix(".parquet")).sorted
+      tables.map { t =>
+        val path = s"$inDir/$t.parquet"
+        // one CLI sortKey over a directory of heterogeneous tables: apply
+        // it only to tables that actually carry the column (a footer-only
+        // schema read) — otherwise repartitionByRange on table 1 would
+        // fail the whole multi-table job; the rest compact unclustered
+        val schema = spark.read.parquet(path).schema
+        val cols = schema.fieldNames.toSet
+        // a comma in the key list means Z-ORDER clustering over those
+        // columns (multi-dimension data skipping); a single name is plain
+        // range clustering — either applies only where every column
+        // exists, and Z-order additionally only where every key is NUMERIC
+        // (zvalue's quantile bucketing precondition) — a non-qualifying
+        // table compacts unclustered instead of aborting the whole job
+        val keys = sortKey.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+        val present = keys.nonEmpty && keys.forall(cols.contains)
+        val applicable = present && (keys.size == 1 || keys.forall(k =>
+          schema(k).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
+        t -> Compaction.compact(spark, path,
+          s"$outDir/$t", targetFileBytes,
+          rowGroupBytes = math.max(1L << 20, targetFileBytes / 8),
+          sortKey = if (applicable && keys.size == 1) Some(keys.head) else None,
+          zorderKeys = if (applicable && keys.size > 1) keys else Nil)
+      }
     }
+
+  /** `main`'s publish step: point `tableDir` (if given) at `outDir` only
+    * when every table validated. Returns the tables that failed. */
+  def publishValidated(results: Seq[(String, Compaction.CompactStats)],
+      outDir: String, tableDir: Option[String]): Seq[String] = {
+    val bad = results.filterNot(_._2.content_match).map(_._1)
+    if (bad.isEmpty) tableDir.foreach { tbl =>
+      Generations.cliPublish(tbl, outDir)
+      println(s"CURRENT of $tbl -> $outDir")
+    }
+    bad
   }
 
   def main(args: Array[String]): Unit = {
@@ -85,21 +92,15 @@ object OptimizeMain {
     val target = (if (rest.length >= 3) rest(2).toLong else 128L) << 20
     val sortKey = if (rest.length >= 4) Some(rest(3)) else None
     val spark = GraftSession.cli()
-    val results = run(spark, rest(0), rest(1), target, sortKey)
-    results.foreach { case (t, s) =>
-      println(f"$t%-12s files ${s.n_files_in}->${s.n_files_out}  " +
-        f"bytes ${s.bytes_in}->${s.bytes_out}  rows ${s.n_rows}  match ${s.content_match}")
-    }
-    val bad = results.filterNot(_._2.content_match)
-    if (bad.isEmpty) publishTable.foreach { tbl =>
-      // only a fully-validated generation may become CURRENT; run()
-      // recorded the source fingerprint at validation time, so this
-      // pointer switch refuses if the source moved since validation
-      graft.operators.Generations.publishChecked(tbl, rest(1))
-      println(s"CURRENT of $tbl -> ${rest(1)}")
-    }
-    spark.stop()
+    val bad = try {
+      val results = run(spark, rest(0), rest(1), target, sortKey)
+      results.foreach { case (t, s) =>
+        println(f"$t%-12s files ${s.n_files_in}->${s.n_files_out}  " +
+          f"bytes ${s.bytes_in}->${s.bytes_out}  rows ${s.n_rows}  match ${s.content_match}")
+      }
+      publishValidated(results, rest(1), publishTable)
+    } finally spark.stop()
     if (bad.nonEmpty)
-      sys.error(s"content mismatch after compaction: ${bad.map(_._1).mkString(",")}")
+      sys.error(s"content mismatch after compaction: ${bad.mkString(",")}")
   }
 }

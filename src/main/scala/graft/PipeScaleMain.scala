@@ -44,11 +44,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object PipeScaleMain {
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmTree)
-    f.delete(); ()
-  }
-
   private def dirBytes(path: String): Long = {
     def walk(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles).toSeq.flatten.map(walk).sum
@@ -66,7 +61,7 @@ object PipeScaleMain {
     val optimizeEvery = args.lift(3).map(_.toInt).getOrElse(4)
     val spark = GraftSession.cli()
 
-    rmTree(new java.io.File(workDir))
+    graft.operators.Generations.deleteTree(workDir)
     new java.io.File(workDir).mkdirs()
     val feedDir = s"$workDir/feed"
     val bloomTable = s"$workDir/bloom"

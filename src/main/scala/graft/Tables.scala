@@ -64,6 +64,21 @@ object GraftSession {
     spark
   }
 
+  /** A CLI id-list argument: a path to a parquet carrying `column`, or an
+    * inline comma-separated id list (`"1, 2,3"`). Anything else fails
+    * naming the argument — a mistyped path must not surface as a bare
+    * `NumberFormatException`. */
+  def idsArg(spark: SparkSession, arg: String, column: String): DataFrame =
+    if (new java.io.File(arg).exists()) spark.read.parquet(arg).select(col(column))
+    else {
+      val tokens = arg.split(",").map(_.trim)
+      val bad = tokens.filterNot(_.toLongOption.isDefined)
+      require(bad.isEmpty, s"id argument '$arg' is neither an existing path " +
+        s"nor a comma-separated id list (bad token '${bad.head}')")
+      import spark.implicits._
+      tokens.map(_.toLong).toSeq.toDF(column)
+    }
+
   def builder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

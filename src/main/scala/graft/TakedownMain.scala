@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Takedown
 
 /** CLI for [[graft.operators.Takedown]] — remove documents from EVERY
@@ -26,13 +24,7 @@ object TakedownMain {
       "usage: TakedownMain <pipeDir> <docIdsCsvOrParquet> [apply] [rebloom]")
     val pipeDir = args(0)
     val spark = GraftSession.cli()
-    val ids =
-      if (new java.io.File(args(1)).exists())
-        spark.read.parquet(args(1)).select("doc_id")
-      else {
-        import spark.implicits._
-        args(1).split(",").map(_.trim.toLong).toSeq.toDF("doc_id")
-      }
+    val ids = GraftSession.idsArg(spark, args(1), "doc_id")
     val doApply = args.drop(2).contains("apply")
     val rebloom = args.drop(2).contains("rebloom")
     val r =

@@ -63,20 +63,11 @@ object ViewStateMain {
         println(s"merged view of ${args(1)} -> ${args(2)}")
       case "optimize" =>
         require(args.length >= 3, "optimize needs <stateDir> <outStateDir>")
-        // lock the SOURCE: an append after the rewrite's listing would
-        // vanish from the new generation (Generations writer contract)
-        Generations.withWriterLock(args(1)) {
+        Generations.cliRewrite(args(1), args(2)) {
           ViewState.optimize(spark, args(1), args(2))
-          Generations.recordSourceFingerprint(args(2), args(1))
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case "publish" =>
-        require(args.length >= 3, "publish needs <tableDir> <generationDir>")
-        Generations.withWriterLock(args(1)) {
-          Generations.publishChecked(args(1), args(2))
-        }
-        println(s"CURRENT of ${args(1)} -> ${args(2)}")
-      case c @ ("resolve" | "history" | "retire") =>
+      case c @ ("publish" | "resolve" | "history" | "retire") =>
         Generations.cliLineage(c, args)
       case other => sys.error(s"unknown command: $other")
     }

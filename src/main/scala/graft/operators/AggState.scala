@@ -521,23 +521,16 @@ object AggState {
     * depends on. */
   def optimize(spark: SparkSession, stateDir: String, outStateDir: String,
       keys: Seq[String], targetFileBytes: Long = 128L << 20): Unit = {
-    require(new File(stateDir).getCanonicalPath !=
-        new File(outStateDir).getCanonicalPath,
-      s"optimize: outStateDir must differ from stateDir ($stateDir)")
-    def sized(df: DataFrame, bytesIn: Long): DataFrame =
-      df.repartition(math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt)
-    def bytesOf(df: DataFrame): Long =
-      df.inputFiles.toSeq.map(p => new File(new java.net.URI(p)).length()).sum
+    Generations.refuseInPlace(stateDir, outStateDir, "optimize")
     def rewrite(sub: String, path: String => String,
         collapse: DataFrame => DataFrame,
         view: String => DataFrame): Unit =
       if (new File(path(stateDir)).isDirectory) {
         val state = spark.read.parquet(path(stateDir))
-        sized(collapse(state), bytesOf(state))
+        collapse(state).repartition(Compaction.filesFor(state, targetFileBytes))
           .write.mode("overwrite").parquet(path(outStateDir))
-        val Seq(rep) = Reconcile.report(Seq((sub,
-          view(stateDir), view(outStateDir))))
-        require(rep.matches, s"optimize: $sub merged view changed after rewrite: $rep")
+        Reconcile.requireMatch("optimize",
+          Seq((sub, view(stateDir), view(outStateDir))))
       }
     require(Seq(statePath _, distinctStatePath _, histStatePath _, bloomStatePath _)
         .exists(p => new File(p(stateDir)).isDirectory),

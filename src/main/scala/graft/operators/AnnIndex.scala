@@ -60,7 +60,7 @@ object AnnIndex {
       codebooks: Option[DataFrame] = None): Unit = {
     // a fresh build replaces everything — stale tombstones from a prior
     // index at the same path would suppress legitimately re-used ids
-    DedupIndex.clearDir(tombstonesPath(indexDir))
+    Generations.deleteTree(tombstonesPath(indexDir))
     centroids.select("centroid_id", "centv")
       .write.mode("overwrite").parquet(centroidsPath(indexDir))
     codebooks.foreach(_.select("code", "cv")
@@ -110,9 +110,7 @@ object AnnIndex {
     * step rescans more than the live corpus once. */
   def reindex(spark: SparkSession, indexDir: String, outIndexDir: String,
       k: Int = 8): Unit = {
-    require(new File(indexDir).getCanonicalPath !=
-        new File(outIndexDir).getCanonicalPath,
-      s"reindex: outIndexDir must differ from indexDir ($indexDir)")
+    Generations.refuseInPlace(indexDir, outIndexDir, "reindex")
     val live = liveVectors(spark, indexDir).select("vec_id", "embedding")
       .localCheckpoint(eager = true) // one materialization feeds seed/assign/build
     val cent = retrainCentroids(live, k)
@@ -375,9 +373,7 @@ object AnnIndex {
     * fingerprint-validated against the live view. */
   def optimize(spark: SparkSession, indexDir: String, outIndexDir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    require(new File(indexDir).getCanonicalPath !=
-        new File(outIndexDir).getCanonicalPath,
-      s"optimize: outIndexDir must differ from indexDir ($indexDir)")
+    Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
     Compaction.compact(spark, centroidsPath(indexDir),
       centroidsPath(outIndexDir), targetFileBytes)
     if (new File(codebooksPath(indexDir)).isDirectory)
@@ -390,14 +386,12 @@ object AnnIndex {
       Compaction.compact(spark, fitStatsPath(indexDir),
         fitStatsPath(outIndexDir), targetFileBytes)
     val vecs = liveVectors(spark, indexDir)
-    val bytesIn = spark.read.parquet(vectorsPath(indexDir)).inputFiles.toSeq
-      .map(p => new File(new java.net.URI(p)).length()).sum
-    val nOut = math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
+    val nOut = Compaction.filesFor(spark.read.parquet(vectorsPath(indexDir)),
+      targetFileBytes)
     vecs.repartition(nOut, col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(vectorsPath(outIndexDir))
-    val rewritten = spark.read.parquet(vectorsPath(outIndexDir))
-    val Seq(rep) = Reconcile.report(Seq(("vectors", vecs, rewritten)))
-    require(rep.matches, s"optimize: vectors content mismatch after rewrite: $rep")
+    Reconcile.requireMatch("optimize",
+      Seq(("vectors", vecs, spark.read.parquet(vectorsPath(outIndexDir)))))
   }
 }

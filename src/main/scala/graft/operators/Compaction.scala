@@ -47,6 +47,15 @@ object Compaction {
   private def inputFileSizes(df: DataFrame): Seq[Long] =
     df.inputFiles.toSeq.map(p => new java.io.File(new java.net.URI(p)).length())
 
+  /** The one output-file-count rule for a size-targeted rewrite:
+    * ceil(bytes in / target), at least one file. */
+  private def filesFor(bytesIn: Long, targetFileBytes: Long): Int =
+    math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
+
+  /** [[filesFor]] over the bytes `df` reads ([[inputFileSizes]]). */
+  def filesFor(df: DataFrame, targetFileBytes: Long): Int =
+    filesFor(inputFileSizes(df).sum, targetFileBytes)
+
   /** Quantile-bucketed Z-value over `keys` — the multi-column clustering
     * coordinate. Each key is bucketed into 2^`bits` quantile ranks (the
     * boundaries come from `approxQuantile`, a mergeable sketch over one
@@ -89,17 +98,11 @@ object Compaction {
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long = 128L << 20, rowGroupBytes: Long = 16L << 20,
       sortKey: Option[String] = None, zorderKeys: Seq[String] = Nil): CompactStats = {
-    // an OPTIMIZE "in place" would delete the input under the reader before
-    // the fingerprint validation could ever run; Spark's own self-overwrite
-    // check can be defeated by path normalization (relative vs absolute,
-    // trailing slash, symlink), so resolve both to canonical form here
-    require(new java.io.File(inDir).getCanonicalPath !=
-        new java.io.File(outDir).getCanonicalPath,
-      s"compact: outDir must differ from inDir ($inDir)")
+    Generations.refuseInPlace(inDir, outDir, "compact")
     val df = spark.read.parquet(inDir)
     val inSizes = inputFileSizes(df)
     val bytesIn = inSizes.sum
-    val nOut = math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
+    val nOut = filesFor(bytesIn, targetFileBytes)
     require(sortKey.isEmpty || zorderKeys.isEmpty,
       "compact: sortKey and zorderKeys are mutually exclusive")
     val shaped = (sortKey, zorderKeys) match {

@@ -48,15 +48,8 @@ object DedupIndex {
     * IS the survivor set; stale tombstones would silently suppress
     * legitimately re-used ids). */
   def build(docs: DataFrame, indexDir: String): Unit = {
-    clearDir(tombstonesPath(indexDir))
+    Generations.deleteTree(tombstonesPath(indexDir))
     write(docs, indexDir, "overwrite")
-  }
-
-  private[operators] def clearDir(path: String): Unit = {
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new File(path))
   }
 
   /** Add a batch to an existing index. Blind parquet appends — no
@@ -75,7 +68,7 @@ object DedupIndex {
     * corpus must not be re-scanned/re-hashed for the index write. Clears
     * stale tombstones exactly like [[build]]. */
   private[graft] def buildFromBase(base: DataFrame, indexDir: String): Unit = {
-    clearDir(tombstonesPath(indexDir))
+    Generations.deleteTree(tombstonesPath(indexDir))
     writeBase(base, indexDir, "overwrite")
   }
 
@@ -263,14 +256,9 @@ object DedupIndex {
     * loudly. */
   def optimize(spark: SparkSession, indexDir: String, outIndexDir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
-    require(new File(indexDir).getCanonicalPath !=
-        new File(outIndexDir).getCanonicalPath,
-      s"optimize: outIndexDir must differ from indexDir ($indexDir)")
-    def nOutFor(path: String): Int = {
-      val bytesIn = spark.read.parquet(path).inputFiles.toSeq
-        .map(p => new File(new java.net.URI(p)).length()).sum
-      math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
-    }
+    Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
+    def nOutFor(path: String): Int =
+      Compaction.filesFor(spark.read.parquet(path), targetFileBytes)
     val sigs = live(spark, indexDir, sigsPath)
     sigs.repartition(nOutFor(sigsPath(indexDir)))
       .write.mode("overwrite").parquet(sigsPath(outIndexDir))
@@ -279,10 +267,8 @@ object DedupIndex {
     val bands = live(spark, indexDir, bandsPath)
     bands.repartition(nOutFor(bandsPath(indexDir)), col("bi"), col("bh"))
       .write.mode("overwrite").partitionBy("bi").parquet(bandsPath(outIndexDir))
-    val reps = Reconcile.report(Seq(
+    Reconcile.requireMatch("optimize", Seq(
       ("sigs", sigs, spark.read.parquet(sigsPath(outIndexDir))),
       ("bands", bands, spark.read.parquet(bandsPath(outIndexDir)))))
-    reps.foreach(rep => require(rep.matches,
-      s"optimize: content mismatch after rewrite: $rep"))
   }
 }

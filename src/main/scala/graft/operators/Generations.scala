@@ -47,7 +47,9 @@ object Generations {
     * lock FILE created atomically in the state dir, held for the span of
     * a mutation, with stale-expiry so a crashed writer cannot wedge the
     * table forever. The CLIs (`*Main`) take it around every mutating
-    * verb, and the streaming maintenance loops take it per batch. It is
+    * verb ([[cliRewrite]] / [[cliPublish]] for rewrites and publishes),
+    * and the streaming maintenance loops and [[Takedown]] take the
+    * table-then-generation pair per batch through [[withTableWriter]]. It is
     * advisory — a writer that bypasses the lock is not stopped (the
     * filesystem cannot do that portably) — but any two cooperating
     * writers serialize or fail loudly instead of losing data.
@@ -63,17 +65,11 @@ object Generations {
     * impl), or serialize writers externally (one maintenance job per
     * table — the deployment shape the CLIs assume anyway). Independent
     * of the lock, `optimize` closes its own validate-to-publish window
-    * defense-in-depth: [[publishIfUnchanged]] re-lists the source
+    * defense-in-depth: [[publishChecked]] re-lists the source
     * generation immediately before the pointer switch and refuses to
     * publish a rewrite whose source grew behind it. */
   private val LockName = ".WRITER_LOCK"
 
-  /** Run `body` holding the writer lock of `stateDir`. Throws
-    * `IllegalStateException` if another live writer holds it; a lock
-    * older than `staleMs` (default 30 min — longer than any single
-    * mutation at sane scale, tune up for huge optimizes) is presumed
-    * crashed and broken with a stderr note. NOT reentrant: one lock
-    * scope per mutation, operators below the CLI layer never lock. */
   /** Lock-hold observability (r15): cumulative held nanos per lock dir
     * since the last drain — the pipeline scale harness reads a per-wave
     * ledger from it ("how long were the standing tables writer-locked
@@ -90,6 +86,12 @@ object Generations {
       .filter(_._2 > 0L).toMap
   }
 
+  /** Run `body` holding the writer lock of `stateDir`. Throws
+    * `IllegalStateException` if another live writer holds it; a lock
+    * older than `staleMs` (default 30 min — longer than any single
+    * mutation at sane scale, tune up for huge optimizes) is presumed
+    * crashed and broken with a stderr note. NOT reentrant: one lock
+    * scope per mutation, operators below the CLI layer never lock. */
   def withWriterLock[T](stateDir: String,
       staleMs: Long = 30L * 60 * 1000)(body: => T): T = {
     val dir = new File(stateDir)
@@ -186,6 +188,75 @@ object Generations {
         "broken?) — leaving it to its current holder")
       ()
     }
+  }
+
+  /** The generation a writer addresses: CURRENT's target, or
+    * `<tableDir>/gen-0` before the first publish. Unlocked, it is only an
+    * optimistic guess; [[withTableWriter]] resolves it under the lock. */
+  def active(tableDir: String): String =
+    current(tableDir).getOrElse(s"$tableDir/gen-0")
+
+  /** The table-writer scope: lock `tableDir`, resolve the active
+    * generation UNDER that lock, lock the generation, run `body` with it.
+    * The generation lock serializes against a CLI append into the live
+    * generation; the table lock serializes publish/retire against a CLI
+    * publish. The order is fixed (table, then generation) and CLI verbs
+    * take one lock each, so no deadlock cycle exists. */
+  def withTableWriter[T](tableDir: String)(body: String => T): T =
+    withWriterLock(tableDir) {
+      val gen = active(tableDir)
+      withWriterLock(gen)(body(gen))
+    }
+
+  /** Whether two paths name one directory — canonically, so a relative
+    * path, a trailing slash or a symlink cannot pass as a second name. */
+  def sameDir(a: String, b: String): Boolean =
+    new File(a).getCanonicalPath == new File(b).getCanonicalPath
+
+  /** The in-place refusal every rewrite entry point runs first: a rewrite
+    * into its own source would delete the input under the reader before
+    * validation could run. Throws `IllegalArgumentException`. */
+  def refuseInPlace(sourceDir: String, outDir: String, what: String): Unit =
+    require(!sameDir(sourceDir, outDir),
+      s"$what: output dir $outDir must differ from the source $sourceDir")
+
+  /** The rewrite step: refuse in place, run the rewrite, then record the
+    * source fingerprint into the new generation if `valid` accepts the
+    * result — at validation time, because a publish-time recording would
+    * fold a late mutation INTO the fingerprint and make [[publishChecked]]
+    * near-vacuous (r14 ADVICE). The caller holds the source's lock. */
+  def rewrite[T](sourceDir: String, outDir: String,
+      valid: T => Boolean = (_: T) => true)(body: => T): T = {
+    refuseInPlace(sourceDir, outDir, "rewrite")
+    val result = body
+    if (valid(result)) recordSourceFingerprint(outDir, sourceDir)
+    result
+  }
+
+  /** [[rewrite]], then its [[publishChecked]] pointer switch — for a
+    * caller already inside the table's [[withTableWriter]] scope. */
+  def rewriteAndPublish(tableDir: String, sourceDir: String, outDir: String)(
+      body: => Unit): Unit = {
+    rewrite(sourceDir, outDir)(body)
+    publishChecked(tableDir, outDir)
+  }
+
+  /** The CLI `optimize`/`reindex` path: [[rewrite]] under the SOURCE's
+    * lock, so no append lands behind the rewrite's listing. */
+  def cliRewrite[T](sourceDir: String, outDir: String,
+      valid: T => Boolean = (_: T) => true)(body: => T): T =
+    withWriterLock(sourceDir)(rewrite(sourceDir, outDir, valid)(body))
+
+  /** The CLI `publish` path: [[publishChecked]] under the table's lock. */
+  def cliPublish(tableDir: String, generationPath: String): Unit =
+    withWriterLock(tableDir)(publishChecked(tableDir, generationPath))
+
+  /** Delete `path` and everything under it (an absent path is a no-op). */
+  def deleteTree(path: String): Unit = {
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new File(path))
   }
 
   /** Atomically point `tableDir`'s CURRENT at `generationPath` (which must
@@ -309,22 +380,22 @@ object Generations {
     def newestMtime(f: File): Long =
       if (f.isDirectory) (f.lastModified +: f.listFiles.toSeq.map(newestMtime)).max
       else f.lastModified
-    def deleteTree(f: File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(deleteTree)
-      f.delete(); ()
-    }
     h.map(_._2).distinct
       .filterNot(keepPaths)
       .filter(p => new File(p).isDirectory && newestMtime(new File(p)) < cutoff)
-      .map { p => deleteTree(new File(p)); p }
+      .map { p => deleteTree(p); p }
   }
 
-  /** Shared CLI handling for the lineage verbs — `resolve <tableDir>
-    * [seq]`, `history <tableDir>`, `retire <tableDir> [keepLast]
-    * [retentionHours]` — so every standing-table Main exposes the same
-    * surface without duplicating it. `args` is the full argv (verb
-    * first). */
+  /** Shared CLI handling for the lineage verbs — `publish <tableDir>
+    * <generationDir>`, `resolve <tableDir> [seq]`, `history <tableDir>`,
+    * `retire <tableDir> [keepLast] [retentionHours]` — so every
+    * standing-table Main exposes the same surface, under the same locks,
+    * without duplicating it. `args` is the full argv (verb first). */
   def cliLineage(cmd: String, args: Array[String]): Unit = cmd match {
+    case "publish" =>
+      require(args.length >= 3, "publish needs <tableDir> <generationDir>")
+      cliPublish(args(1), args(2))
+      println(s"CURRENT of ${args(1)} -> ${args(2)}")
     case "resolve" =>
       // bare: the CURRENT generation; with a seq argument: the as-of
       // read from the publish lineage (time travel while retained)

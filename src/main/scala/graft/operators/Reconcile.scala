@@ -54,6 +54,14 @@ object Reconcile {
         if (rb.getLong(0) == 0) 0L else rb.getLong(2))
     }
 
+  /** Validate-or-fail-loudly over [[report]]: every rewrite must
+    * fingerprint-equal its source, or `what` fails naming the mismatching
+    * report. All reports are taken before the first check (one scan per
+    * side per table, as [[report]]). */
+  def requireMatch(what: String, tables: Seq[(String, DataFrame, DataFrame)]): Unit =
+    report(tables).foreach(rep => require(rep.matches,
+      s"$what: ${rep.tbl} content mismatch after rewrite: $rep"))
+
   final case class TableReport(tbl: String, n_rows_a: Long, n_rows_b: Long,
       xor_fp_a: Long, xor_fp_b: Long, sum_fp_mod_a: Long, sum_fp_mod_b: Long) {
     def matches: Boolean =

@@ -44,9 +44,6 @@ object Takedown {
                     indexTombstoned: Boolean, clustersUpdated: Boolean,
                     paraDigestsRetracted: Long, bloomRebuilt: Boolean)
 
-  private def currentGen(tableDir: String): String =
-    Generations.current(tableDir).getOrElse(s"$tableDir/gen-0")
-
   /** Dry-run accounting: what [[apply]] would remove, touching nothing. */
   def plan(spark: SparkSession, pipeDir: String, docIds: DataFrame): Report = {
     val ids = docIds.select(col("doc_id")).distinct()
@@ -54,7 +51,7 @@ object Takedown {
     val corpus = spark.read.parquet(s"$pipeDir/corpus")
     val removed = corpus.join(ids, Seq("doc_id"), "left_semi")
     val nRemoved = removed.count()
-    val paraGen = currentGen(s"$pipeDir/para")
+    val paraGen = Generations.active(s"$pipeDir/para")
     val nDigs =
       if (AggState.exists(paraGen))
         graft.queries.Dedup.paraDigested(removed.select("doc_id", "text"))
@@ -91,38 +88,34 @@ object Takedown {
 
     // 2. index tombstones + cluster re-derivation (removeDocs tombstones
     // the index itself before re-deriving the affected components)
-    val indexGen = currentGen(indexTable)
-    var clustersUpdated = false; var indexTombstoned = false
-    Generations.withWriterLock(indexTable) {
-      Generations.withWriterLock(indexGen) {
-        if (DedupIndex.exists(indexGen)) {
-          indexTombstoned = true
-          if (ClusterState.exists(clusterDir)) {
-            ClusterState.removeDocs(spark, ids, clusterDir, indexGen)
-            clustersUpdated = true
-          } else DedupIndex.remove(ids, indexGen)
+    val (indexTombstoned, clustersUpdated) =
+      Generations.withTableWriter(indexTable) { indexGen =>
+        if (!DedupIndex.exists(indexGen)) (false, false)
+        else if (ClusterState.exists(clusterDir)) {
+          ClusterState.removeDocs(spark, ids, clusterDir, indexGen)
+          (true, true)
+        } else {
+          DedupIndex.remove(ids, indexGen)
+          (true, false)
         }
       }
-    }
 
     // 3. exact-paragraph digest retraction (affected-keys rebuild)
-    val paraGen = currentGen(paraTable)
-    var nDigs = 0L
-    Generations.withWriterLock(paraTable) {
-      Generations.withWriterLock(paraGen) {
-        if (AggState.exists(paraGen)) {
-          val deleted = graft.queries.Dedup
-            .paraDigested(removed.select("doc_id", "text"))
-            .select(col("dig"),
-              graft.queries.Dedup.pidDecimal(col("pid")).as("pid"))
-            .localCheckpoint(eager = true)
-          nDigs = deleted.select("dig").distinct().count()
-          val surv = graft.queries.Dedup
-            .paraDigested(survivors.select("doc_id", "text"))
-            .select(col("dig"),
-              graft.queries.Dedup.pidDecimal(col("pid")).as("pid"))
-          AggState.retractExact(spark, deleted, surv, Seq("dig"), "pid", paraGen)
-        }
+    val nDigs = Generations.withTableWriter(paraTable) { paraGen =>
+      if (!AggState.exists(paraGen)) 0L
+      else {
+        val deleted = graft.queries.Dedup
+          .paraDigested(removed.select("doc_id", "text"))
+          .select(col("dig"),
+            graft.queries.Dedup.pidDecimal(col("pid")).as("pid"))
+          .localCheckpoint(eager = true)
+        val n = deleted.select("dig").distinct().count()
+        val surv = graft.queries.Dedup
+          .paraDigested(survivors.select("doc_id", "text"))
+          .select(col("dig"),
+            graft.queries.Dedup.pidDecimal(col("pid")).as("pid"))
+        AggState.retractExact(spark, deleted, surv, Seq("dig"), "pid", paraGen)
+        n
       }
     }
 
@@ -132,7 +125,7 @@ object Takedown {
     var bloomRebuilt = false
     if (rebloom) {
       Generations.withWriterLock(bloomTable) {
-        val gen = currentGen(bloomTable)
+        val gen = Generations.active(bloomTable)
         if (AggState.bloomExists(gen)) {
           val m = AggState.readBloomMeta(gen)
           val next = s"$bloomTable/gen-tk${System.currentTimeMillis()}"

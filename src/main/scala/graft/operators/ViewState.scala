@@ -103,7 +103,7 @@ object ViewState {
     require(numBuckets > 0, s"build: numBuckets must be positive ($numBuckets)")
     val dup = (left.columns.toSet -- keys).intersect(right.columns.toSet -- keys)
     require(dup.isEmpty, s"build: non-key columns collide across sides: $dup")
-    DedupIndex.clearDir(stateDir)
+    Generations.deleteTree(stateDir)
     val l = withMult(left, keys, 1, numBuckets)
     val r = withMult(right, keys, 1, numBuckets)
     val v0 = deltaJoin(l, right.withColumn("__mult", lit(1L)), keys)
@@ -230,10 +230,8 @@ object ViewState {
     * equality of the MERGED view — the only invariant compaction must
     * preserve. The output is a fresh generation for `Generations.publish`. */
   def optimize(spark: SparkSession, stateDir: String, outStateDir: String): Unit = {
-    require(new File(stateDir).getCanonicalPath !=
-        new File(outStateDir).getCanonicalPath,
-      s"optimize: outStateDir must differ from stateDir ($stateDir)")
-    DedupIndex.clearDir(outStateDir)
+    Generations.refuseInPlace(stateDir, outStateDir, "optimize")
+    Generations.deleteTree(outStateDir)
     val meta = readMeta(stateDir)
     val keys = meta.keys
     writeMeta(outStateDir, meta)
@@ -253,8 +251,7 @@ object ViewState {
     collapse(leftPath, meta.left, bucketed = true)
     collapse(rightPath, meta.right, bucketed = true)
     collapse(viewPath, meta.view, bucketed = false)
-    val Seq(rep) = Reconcile.report(Seq(("view",
-      merged(spark, stateDir), merged(spark, outStateDir))))
-    require(rep.matches, s"optimize: merged view changed after rewrite: $rep")
+    Reconcile.requireMatch("optimize",
+      Seq(("view", merged(spark, stateDir), merged(spark, outStateDir))))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextHashes
 import graft.Tables
-import TrainPrep.{Stop, rawToks}
+import TrainPrep.{Stop, rawToks, repetitionGate, tokenGate}
 
 /** Text-analysis operators over the `documents` table — the training-data
   * pipeline surface (builder brief): token counting, quality scoring,
@@ -247,9 +247,9 @@ object Text {
     // per-stage retention count. The streaming pipeline observes these
     // numbers per batch (observe() metrics); this is the whole-corpus
     // audit a curation run publishes beside its output, and the shape a
-    // gate-tuning loop evaluates candidates against. Gate expressions are
-    // shared VERBATIM with curated (same double comparisons — IEEE
-    // agreement over identical inputs); distinct counting runs in the
+    // gate-tuning loop evaluates candidates against. The gates are the
+    // same Column functions curated and CorpusMain filter with
+    // (TrainPrep.tokenGate / repetitionGate); distinct counting runs in the
     // native one-pass NgramDistincts expression (string-distinct parity
     // with the oracle pinned by q80). Scale: one corpus scan, per-row
     // array math, one partial aggregation + one distinct-digest count.
@@ -257,19 +257,9 @@ object Text {
       val base = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .withColumn("w", rawToks(col("text")))
-        .withColumn("n", size(col("w")).cast("long"))
-        .withColumn("n_stop",
-          size(filter(col("w"), t => t.isin(Stop: _*))).cast("long"))
         .withColumn("d", TextHashes.ngram_distincts(col("w")))
-        .withColumn("g1", col("n") >= 10 &&
-          col("n_stop").cast("double") /
-            greatest(col("n").cast("double"), lit(1.0)) >= 0.01)
-        .withColumn("dupt", when(col("n") === 0, lit(0.0))
-          .otherwise(lit(1.0) - col("d.d_tok").cast("double") / col("n").cast("double")))
-        .withColumn("t3", greatest(col("n") - 2, lit(0L)))
-        .withColumn("dup3", when(col("t3") === 0, lit(0.0))
-          .otherwise(lit(1.0) - col("d.d_3g").cast("double") / col("t3").cast("double")))
-        .withColumn("g2", col("g1") && !(col("dupt") > 0.8 || col("dup3") > 0.3))
+        .withColumn("g1", tokenGate(col("w")))
+        .withColumn("g2", col("g1") && repetitionGate(col("w"), col("d")))
         .withColumn("digest", md5(lower(trim(col("text"))).cast("binary")))
       base.agg(
         count(lit(1)).as("n_intake"),

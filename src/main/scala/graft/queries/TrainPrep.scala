@@ -65,6 +65,29 @@ object TrainPrep {
     * `array(Stop.map(lit): _*)`. */
   private[graft] val Stop: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
+  /** The curation token gate (q31's signals) over `w` = [[rawToks]] of
+    * the text: at least 10 tokens and a stopword ratio of at least 0.01.
+    * CorpusMain, CorpusStream.curated and q295 all gate through it. */
+  private[graft] def tokenGate(w: Column): Column = {
+    val n = size(w).cast("long")
+    n >= 10 &&
+      size(filter(w, t => array_contains(array(Stop.map(lit): _*), t))).cast("double") /
+        greatest(n.cast("double"), lit(1.0)) >= 0.01
+  }
+
+  /** The curation repetition gate (q80's signals): false when the
+    * duplicate-token fraction exceeds 0.8 or the duplicate-3-gram fraction
+    * exceeds 0.3. `d` is `TextHashes.ngram_distincts(w)`, projected once
+    * by the caller because both fractions read it. */
+  private[graft] def repetitionGate(w: Column, d: Column): Column = {
+    def frac(total: Column, distinct: Column): Column =
+      when(total === 0, lit(0.0))
+        .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
+    val n = size(w).cast("long")
+    !(frac(n, d.getField("d_tok")) > 0.8 ||
+      frac(greatest(n - 2, lit(0L)), d.getField("d_3g")) > 0.3)
+  }
+
   /** q73's content-independent split bucket (first 4 md5 hex digits of the
     * doc id, mod 100) — the train/val/test contract every decontamination
     * and eval query shares with its oracle. Single-sourced: a drifting

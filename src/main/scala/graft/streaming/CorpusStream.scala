@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Redaction
@@ -33,14 +33,6 @@ import graft.queries.Dedup
   */
 object CorpusStream {
 
-  private val stopwords = array(graft.queries.TrainPrep.Stop.map(lit): _*)
-
-  // repetition fractions via the native one-pass NgramDistincts expression
-  // (same gate as CorpusMain stage 4 / q80)
-  private def frac(total: Column, distinct: Column): Column =
-    when(total === 0, lit(0.0))
-      .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
-
   /** `docs` must carry (doc_id, text, lang, source, ingest_ts TIMESTAMP).
     * Returns the curated stream: quality + repetition gates, then
     * watermark-bounded exact dedup, then the scrub. The per-row gates run
@@ -56,12 +48,11 @@ object CorpusStream {
       .observe("intake", count(lit(1)).as("n_in"))
       .withColumn("w", graft.queries.TrainPrep.rawToks(col("text")))
       .withColumn("n_tokens", size(col("w")).cast("long"))
-      .filter(col("n_tokens") >= 10 &&
-        size(filter(col("w"), t => array_contains(stopwords, t))).cast("double") /
-          greatest(col("n_tokens").cast("double"), lit(1.0)) >= 0.01)
+      .filter(graft.queries.TrainPrep.tokenGate(col("w")))
+      // repetition fractions via the native one-pass NgramDistincts
+      // expression (the same gate as CorpusMain stage 4 / q295)
       .withColumn("d", org.apache.spark.sql.graft.TextHashes.ngram_distincts(col("w")))
-      .filter(!(frac(col("n_tokens"), col("d.d_tok")) > 0.8 ||
-        frac(greatest(col("n_tokens") - 2, lit(0L)), col("d.d_3g")) > 0.3))
+      .filter(graft.queries.TrainPrep.repetitionGate(col("w"), col("d")))
       .drop("d")
       .observe("gated", count(lit(1)).as("n_gated"))
       .withColumn("text_hash", md5(lower(trim(col("text"))).cast("binary")))
@@ -199,26 +190,18 @@ object CorpusStream {
     import graft.operators.AggState
     require(optimizeEvery > 0, s"optimizeEvery must be positive: $optimizeEvery")
     val spark = batch.sparkSession
-    // single-writer guard (Generations contract): BOTH locks, table
-    // first then generation — the generation lock serializes against a
-    // CLI append into the live generation (which locks the gen dir); the
-    // TABLE lock serializes the maintain step's publish/retire against a
-    // CLI publish, which locks the table dir (the r13 ADVICE granularity
-    // mismatch: gen-lock-only left two publishers free to interleave and
-    // duplicate lineage seqs). Lock order is fixed (table, then gen) and
-    // CLI verbs take exactly one lock each, so no deadlock cycle exists.
-    val gen = currentGen(tableDir)
-    graft.operators.Generations.withWriterLock(tableDir) {
-      graft.operators.Generations.withWriterLock(gen) {
-        noveltyBatch(gen, outDir, minNovelBp)(batch, batchId)
-        maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
-          retentionHours, AggState.bloomExists, AggState.optimize(spark, _, _, Nil))
-      }
+    // single-writer guard: the shared table-writer scope
+    // (Generations.withTableWriter — table lock, CURRENT resolved under
+    // it, then the generation lock). The TABLE lock serializes the
+    // maintain step's publish/retire against a CLI publish (the r13
+    // ADVICE granularity mismatch: gen-lock-only left two publishers free
+    // to interleave and duplicate lineage seqs).
+    graft.operators.Generations.withTableWriter(tableDir) { gen =>
+      noveltyBatch(gen, outDir, minNovelBp)(batch, batchId)
+      maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
+        retentionHours, AggState.bloomExists, AggState.optimize(spark, _, _, Nil))
     }
   }
-
-  private def currentGen(tableDir: String): String =
-    graft.operators.Generations.current(tableDir).getOrElse(s"$tableDir/gen-0")
 
   /** The shared generation-management tail every maintained foreachBatch
     * loop runs after its per-batch work: first-batch publish, then on the
@@ -243,16 +226,13 @@ object CorpusStream {
     // while `next` is built from the caller's raw tableDir — a relative,
     // trailing-slash, or symlinked tableDir would make a string compare
     // pass two names for the same directory and re-open the wedge
-    def canon(p: String) = new java.io.File(p).getCanonicalPath
     if (exists(gen) && batchId % optimizeEvery == (optimizeEvery - 1) &&
-        canon(next) != canon(gen)) {
-      optimizeTo(gen, next)
-      // record the source's post-rewrite listing; publishChecked re-lists
-      // right before the pointer switch — on an object store where the
-      // writer lock degrades to best-effort, this is what still catches
-      // an append that landed behind the rewrite
-      Generations.recordSourceFingerprint(next, gen)
-      Generations.publishChecked(tableDir, next) // atomic — old or new, never torn
+        !Generations.sameDir(next, gen)) {
+      // the rewrite step records the source's post-rewrite listing, and
+      // the checked publish re-lists it right before the atomic pointer
+      // switch — on an object store where the writer lock degrades to
+      // best-effort, this still catches an append behind the rewrite
+      Generations.rewriteAndPublish(tableDir, gen, next)(optimizeTo(gen, next))
       Generations.retire(tableDir, keepLast, retentionHours)
       ()
     }
@@ -308,15 +288,12 @@ object CorpusStream {
       batch: DataFrame, batchId: Long): Unit = {
     require(optimizeEvery > 0, s"optimizeEvery must be positive: $optimizeEvery")
     val spark = batch.sparkSession
-    // single-writer guard — BOTH locks, table then gen; see
-    // maintainedNoveltyBatch for the ordering rationale
-    val gen = currentGen(tableDir)
-    graft.operators.Generations.withWriterLock(tableDir) {
-      graft.operators.Generations.withWriterLock(gen) {
-        nearDupBatch(gen, outDir)(batch, batchId)
-        maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
-          retentionHours, DedupIndex.exists, DedupIndex.optimize(spark, _, _))
-      }
+    // single-writer guard — the shared table-writer scope; see
+    // maintainedNoveltyBatch for why the table lock is held too
+    graft.operators.Generations.withTableWriter(tableDir) { gen =>
+      nearDupBatch(gen, outDir)(batch, batchId)
+      maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
+        retentionHours, DedupIndex.exists, DedupIndex.optimize(spark, _, _))
     }
   }
 
@@ -419,8 +396,9 @@ object CorpusStream {
     * base, index probe, within-batch LSH pairing, the drop decision and
     * the index tables to land — runs OPTIMISTICALLY with no lock held,
     * pinned by eager localCheckpoints. Each table then gets its own lock
-    * window (fixed order preserved: bloom table, bloom gen, then index
-    * table, index gen — the windows are sequential, never nested across
+    * window — one `Generations.withTableWriter` scope per table (bloom,
+    * then index; each locks its table, then the generation resolved
+    * under that lock; the windows are sequential, never nested across
     * tables, and CLI verbs take exactly one lock each, so no cycle
     * exists) that (1) re-validates the generation by pointer identity +
     * listing fingerprint, (2) lands the pinned results as blind writes,
@@ -482,7 +460,7 @@ object CorpusStream {
     // the survivor digest slice all derive from it lazily)
     var marked: DataFrame = null
     val batch = if (paraTable.isEmpty) batch0 else {
-      val paraGen0 = currentGen(paraTable)
+      val paraGen0 = Generations.active(paraTable)
       val seen =
         if (AggState.exists(paraGen0))
           Some(AggState.merged(spark, paraGen0, Seq("dig")).select("dig"))
@@ -496,51 +474,45 @@ object CorpusStream {
     // the para table's lock window — called after the index window (the
     // survivor set exists) and before the corpus landing (crash contract)
     def paraWindow(keptOfSurvivors: DataFrame): Unit =
-      Generations.withWriterLock(paraTable) {
-        val paraGen = currentGen(paraTable)
-        Generations.withWriterLock(paraGen) {
-          AggState.append(keptOfSurvivors, Seq("dig"), "pid", paraGen)
-          marked.withColumn("nt", size(split(col("text"), " ")).cast("long"))
-            .agg(count(lit(1)).as("paras_in"),
-              sum("d").as("paras_dropped"),
-              sum("nt").as("tokens_in"),
-              sum(when(col("d") === 0L, col("nt")).otherwise(0L))
-                .as("tokens_kept"))
-            .withColumn("batch_id", lit(batchId))
-            // an empty batch writes no row (the fitstats discipline)
-            .filter(col("paras_in") > 0)
-            .coalesce(1)
-            .write.mode("append").parquet(s"$paraTable/trim_ledger")
-          maintainGeneration(paraTable, paraGen, batchId, optimizeEvery,
-            keepLast, retentionHours, AggState.exists,
-            AggState.optimize(spark, _, _, Seq("dig")))
-        }
+      Generations.withTableWriter(paraTable) { paraGen =>
+        AggState.append(keptOfSurvivors, Seq("dig"), "pid", paraGen)
+        marked.withColumn("nt", size(split(col("text"), " ")).cast("long"))
+          .agg(count(lit(1)).as("paras_in"),
+            sum("d").as("paras_dropped"),
+            sum("nt").as("tokens_in"),
+            sum(when(col("d") === 0L, col("nt")).otherwise(0L))
+              .as("tokens_kept"))
+          .withColumn("batch_id", lit(batchId))
+          // an empty batch writes no row (the fitstats discipline)
+          .filter(col("paras_in") > 0)
+          .coalesce(1)
+          .write.mode("append").parquet(s"$paraTable/trim_ledger")
+        maintainGeneration(paraTable, paraGen, batchId, optimizeEvery,
+          keepLast, retentionHours, AggState.exists,
+          AggState.optimize(spark, _, _, Seq("dig")))
       }
 
     // ---- bloom window ------------------------------------------------
-    val bloomGen0 = currentGen(bloomTable)
+    val bloomGen0 = Generations.active(bloomTable)
     val fpBloom0 = Generations.listingFingerprint(bloomGen0)
     var admitted = noveltyDecide(bloomGen0, minNovelBp)(batch)
     raceHook("bloom")
-    Generations.withWriterLock(bloomTable) {
-      val bloomGen = currentGen(bloomTable)
-      Generations.withWriterLock(bloomGen) {
-        if (bloomGen != bloomGen0 ||
-            Generations.listingFingerprint(bloomGen) != fpBloom0) {
-          // contended-rare: the filter (or the pointer) moved under us —
-          // the optimistic decision probed stale state; redo it here
-          admitted = noveltyDecide(bloomGen, minNovelBp)(batch)
-        }
-        // the fold slice derives from the PINNED decision but is computed
-        // inside the window against the locked gen's own meta — one
-        // aggregation of the batch's n-grams, cheap relative to the probe
-        // and one fewer per-batch checkpoint job (the 1x fixed-cost A/B)
-        AggState.writeBloomSlice(admittedSlice(admitted, bloomGen, bloomBits),
-          bloomGen, mBitsIfNew = bloomBits)
-        maintainGeneration(bloomTable, bloomGen, batchId, optimizeEvery,
-          keepLast, retentionHours, AggState.bloomExists,
-          AggState.optimize(spark, _, _, Nil))
+    Generations.withTableWriter(bloomTable) { bloomGen =>
+      if (bloomGen != bloomGen0 ||
+          Generations.listingFingerprint(bloomGen) != fpBloom0) {
+        // contended-rare: the filter (or the pointer) moved under us —
+        // the optimistic decision probed stale state; redo it here
+        admitted = noveltyDecide(bloomGen, minNovelBp)(batch)
       }
+      // the fold slice derives from the PINNED decision but is computed
+      // inside the window against the locked gen's own meta — one
+      // aggregation of the batch's n-grams, cheap relative to the probe
+      // and one fewer per-batch checkpoint job (the 1x fixed-cost A/B)
+      AggState.writeBloomSlice(admittedSlice(admitted, bloomGen, bloomBits),
+        bloomGen, mBitsIfNew = bloomBits)
+      maintainGeneration(bloomTable, bloomGen, batchId, optimizeEvery,
+        keepLast, retentionHours, AggState.bloomExists,
+        AggState.optimize(spark, _, _, Nil))
     }
 
     // ---- index window ------------------------------------------------
@@ -552,7 +524,7 @@ object CorpusStream {
     try {
       if (!admittedDocs.isEmpty) {
         base = Dedup.minhashBase(admittedDocs)
-        val indexGen0 = currentGen(indexTable)
+        val indexGen0 = Generations.active(indexTable)
         val fpIndex0 = Generations.listingFingerprint(indexGen0)
         // probe + pair + the DROP DECISION, all pinned (these are the
         // corpus-sized shuffles and the rows the sink re-evaluation must
@@ -588,29 +560,26 @@ object CorpusStream {
         var (edges, survivors, dropIds, _) = stage(indexGen0)
         var genExisted = DedupIndex.exists(indexGen0)
         raceHook("index")
-        Generations.withWriterLock(indexTable) {
-          val indexGen = currentGen(indexTable)
-          Generations.withWriterLock(indexGen) {
-            if (indexGen != indexGen0 ||
-                Generations.listingFingerprint(indexGen) != fpIndex0) {
-              val st = stage(indexGen) // contended-rare: re-probe under lock
-              edges = st._1; survivors = st._2; dropIds = st._3
-              genExisted = DedupIndex.exists(indexGen)
-            }
-            // cluster fold BEFORE the drop lands (the audit-trail
-            // contract), from inside the window whose probe produced it
-            if (!edges.isEmpty) {
-              if (ClusterState.exists(clusterDir))
-                ClusterState.appendEdges(spark, edges, clusterDir)
-              else ClusterState.build(edges, clusterDir)
-            }
-            DedupIndex.writeBase(
-              base.join(dropIds, Seq("doc_id"), "left_anti"), indexGen,
-              if (genExisted) "append" else "overwrite")
-            maintainGeneration(indexTable, indexGen, batchId, optimizeEvery,
-              keepLast, retentionHours, DedupIndex.exists,
-              DedupIndex.optimize(spark, _, _))
+        Generations.withTableWriter(indexTable) { indexGen =>
+          if (indexGen != indexGen0 ||
+              Generations.listingFingerprint(indexGen) != fpIndex0) {
+            val st = stage(indexGen) // contended-rare: re-probe under lock
+            edges = st._1; survivors = st._2; dropIds = st._3
+            genExisted = DedupIndex.exists(indexGen)
           }
+          // cluster fold BEFORE the drop lands (the audit-trail
+          // contract), from inside the window whose probe produced it
+          if (!edges.isEmpty) {
+            if (ClusterState.exists(clusterDir))
+              ClusterState.appendEdges(spark, edges, clusterDir)
+            else ClusterState.build(edges, clusterDir)
+          }
+          DedupIndex.writeBase(
+            base.join(dropIds, Seq("doc_id"), "left_anti"), indexGen,
+            if (genExisted) "append" else "overwrite")
+          maintainGeneration(indexTable, indexGen, batchId, optimizeEvery,
+            keepLast, retentionHours, DedupIndex.exists,
+            DedupIndex.optimize(spark, _, _))
         }
         // para digest fold: the survivors' KEPT paragraphs — exactly the
         // content about to land — enter the standing state before the
@@ -626,13 +595,10 @@ object CorpusStream {
         ()
       } else {
         // empty batch: only the maintain cadences need the locks
-        Generations.withWriterLock(indexTable) {
-          val indexGen = currentGen(indexTable)
-          Generations.withWriterLock(indexGen) {
-            maintainGeneration(indexTable, indexGen, batchId, optimizeEvery,
-              keepLast, retentionHours, DedupIndex.exists,
-              DedupIndex.optimize(spark, _, _))
-          }
+        Generations.withTableWriter(indexTable) { indexGen =>
+          maintainGeneration(indexTable, indexGen, batchId, optimizeEvery,
+            keepLast, retentionHours, DedupIndex.exists,
+            DedupIndex.optimize(spark, _, _))
         }
         // nothing survived the gates, but the trim may still have run
         // (its ledger row + cadence); the kept slice is empty

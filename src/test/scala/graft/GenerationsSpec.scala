@@ -338,6 +338,52 @@ class GenerationsSpec extends SparkSpec {
     assert(spark.read.parquet(s"${Generations.resolve(table)}/docs").count() === 110L)
   }
 
+  test("OptimizeMain takes the writer contract: the rewrite holds the " +
+      "source lock and the publish path the table lock") {
+    val src = Files.createTempDirectory("graft_opt_lock_src").toString
+    val table = Files.createTempDirectory("graft_opt_lock_table").toString
+    spark.range(50).selectExpr("id", "id * 3 AS v").write.parquet(s"$src/t.parquet")
+    val out = s"$table/gen1"
+    // a live writer on the source: the rewrite refuses before writing
+    Generations.withWriterLock(src) {
+      intercept[IllegalStateException] { OptimizeMain.run(spark, src, out, 1L << 20) }
+    }
+    assert(!new java.io.File(out).exists(), "a refused rewrite must write nothing")
+    val results = OptimizeMain.run(spark, src, out, 1L << 20)
+    assert(results.nonEmpty && results.forall(_._2.content_match))
+    // a live writer on the table: the publish path throws, CURRENT unchanged
+    Generations.withWriterLock(table) {
+      intercept[IllegalStateException] {
+        OptimizeMain.publishValidated(results, out, Some(table))
+      }
+    }
+    assert(Generations.current(table).isEmpty, "a refused publish must not switch CURRENT")
+    assert(OptimizeMain.publishValidated(results, out, Some(table)).isEmpty)
+    assert(Generations.resolve(table) === new java.io.File(out).getCanonicalPath)
+  }
+
+  test("withTableWriter resolves CURRENT under the table lock, gen-0 before " +
+      "the first publish, and releases both locks") {
+    val table = Files.createTempDirectory("graft_tw").toString
+    def locked(dir: String) = new java.io.File(dir, ".WRITER_LOCK").isFile
+    val g0 = Generations.withTableWriter(table) { gen =>
+      assert(locked(table) && locked(gen))
+      gen
+    }
+    assert(g0 === s"$table/gen-0")
+    assert(!locked(table) && !locked(g0))
+    val g1 = Files.createTempDirectory("graft_tw_g1").toString
+    Generations.publish(table, g1)
+    assert(Generations.withTableWriter(table)(identity) ===
+      new java.io.File(g1).getCanonicalPath)
+    // a live writer on the generation: the scope fails loudly and the
+    // table lock it already took is released on the way out
+    Generations.withWriterLock(g1) {
+      intercept[IllegalStateException] { Generations.withTableWriter(table)(_ => ()) }
+    }
+    assert(!locked(table))
+  }
+
   test("cliLineage retire takes the table writer lock") {
     val table = Files.createTempDirectory("graft_retire_lock").toString
     val lock = new java.io.File(table, ".WRITER_LOCK")
