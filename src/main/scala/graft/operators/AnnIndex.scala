@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
+import org.apache.spark.sql.graft.VectorMath
 
 /** Standing IVF (ANN) index as a TABLE — the vector-space sibling of
   * [[DedupIndex]] (reference analog: the memo dict reused across work
@@ -28,8 +29,10 @@ import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
   * index, `optimize` compacts accumulated small append files
   * (fingerprint-validated, partitioning preserved).
   *
-  * The assignment and search shapes are SHARED with q40/q51 (in-query
-  * IVF) via [[assignCosine]]/[[searchAssigned]], so the persisted path
+  * This object is also the ONE home of the engine's vector kernels
+  * (cosine nearest-centroid argmax, top-nprobe selection, PQ encode, ADC
+  * scoring, the Lloyd member mean, the seed frames): the in-query
+  * IVF/PQ/k-means queries call the same kernels, so the persisted path
   * cannot drift from the oracle-verified one — q253 drives
   * build→append→probe for real and is checked against q51's own oracle
   * (the answer depends only on index content).
@@ -130,15 +133,7 @@ object AnnIndex {
   private[graft] def retrainCentroids(live: DataFrame, k: Int): DataFrame = {
     val seeds = live.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-    assignCosine(live, seeds)
-      .select(col("centroid_id"),
-        posexplode(transform(col("embedding"), x => x.cast("double")))
-          .as(Seq("pos", "v")))
-      .groupBy("centroid_id", "pos").agg(avg("v").as("m"))
-      .groupBy("centroid_id")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("centroid_id"),
-        transform(col("pm"), p => p.getField("m").cast("float")).as("centv"))
+    memberMean(assignCosine(live, seeds), "centroid_id", "centv", f32 = true)
   }
 
   /** Record a batch's quantizer-FIT statistics beside the index (r17 —
@@ -146,21 +141,17 @@ object AnnIndex {
     * to `fitstats/` per ingest batch, computed from the batch alone
     * against the frozen quantizer — O(|batch|), the corpus is never
     * rescanned. The per-vector argmax is the index's own assignment
-    * shape ([[assignCosine]]'s max_by), so the statistic measures exactly
+    * kernel ([[nearestCentroid]]), so the statistic measures exactly
     * the assignment the stored vectors received. Call it beside `build`
     * (batchId "build" anchors the ledger) and each `append`. */
   def recordFitStats(spark: SparkSession, embeddings: DataFrame,
       indexDir: String, batchId: String): Unit = {
     val cent = spark.read.parquet(centroidsPath(indexDir))
-    embeddings.select("vec_id", "embedding").join(broadcast(cent))
-      .withColumn("ascore",
-        round(cosine_sim(col("centv"), col("embedding")), 4))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("ascore")),
-        struct(col("ascore"), -col("centroid_id"))).as("b"))
+    nearestCentroid(embeddings.select("vec_id", "embedding"), cent,
+        Seq("vec_id"), Seq("ascore"))
       .agg(count(lit(1)).as("n_vecs"),
-        sum(expr("CAST(floor(b.ascore * 10000) AS BIGINT)")).as("sum_assign_e4"),
-        countDistinct(col("b.centroid_id")).as("n_cent_used"))
+        sum(expr("CAST(floor(best.ascore * 10000) AS BIGINT)")).as("sum_assign_e4"),
+        countDistinct(col("best.centroid_id")).as("n_cent_used"))
       .withColumn("batch_id", lit(batchId))
       // an EMPTY batch would write n_vecs=0 with NULL sum_assign_e4, and
       // fitLedger would then emit null statistics for it (a null "build"
@@ -239,28 +230,11 @@ object AnnIndex {
 
   // ---- PQ (compressed-domain) read path ----------------------------------
 
-  /** Squared L2 between one 16-dim subspace slice of `a` and the codeword
-    * column `cv` — q76/q99's shared formula as a native codegen'd loop
-    * (sequential accumulation, so the raw doubles are bit-equal to the
-    * oracle's list comprehension; parity pinned in VectorMathSpec).
-    * Expects `subspace` and `cv` columns in scope. */
-  private def subL2(a: Column): Column =
-    org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-      a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-
-  private def subspaces: Column = explode(array((0 until 4).map(lit(_)): _*))
-
-  /** q76's per-subspace codeword argmin, emitted as one 4-int `codes`
-    * array per vector. Map-side: the codebook broadcast joins 16 rows per
-    * vector, the argmin is a partial min_by, the array rebuild is one more
-    * keyed aggregation. */
+  /** The vectors' PQ code arrays: [[pqAssign]]'s per-subspace argmin,
+    * rebuilt as one 4-int `codes` array per vector by one more keyed
+    * aggregation. */
   private[graft] def pqEncode(vectors: DataFrame, cw: DataFrame): DataFrame =
-    vectors.select(col("vec_id"), col("embedding"))
-      .withColumn("subspace", subspaces)
-      .join(broadcast(cw))
-      .withColumn("dist", subL2(col("embedding")))
-      .groupBy("vec_id", "subspace")
-      .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+    pqAssign(vectors, cw)
       .groupBy("vec_id")
       .agg(transform(
         array_sort(collect_list(struct(col("subspace"), col("code")))),
@@ -272,41 +246,29 @@ object AnnIndex {
     * compressed domain (ADC: per-query LUT broadcast against the stored
     * 4-byte codes — the embedding column is never read for scoring), the
     * ADC top-`shortlistK` joins back to raw vectors for exact L2, and the
-    * re-rank's top-`topK` is served. The ADC sum is the fixed-order
-    * d0+d1+d2+d3 (q99's cross-engine determinism trick). */
+    * re-rank's top-`topK` is served. The ADC sum is [[adcScore]]'s
+    * fixed-order d0+d1+d2+d3 (q99's cross-engine determinism trick). */
   def probePq(spark: SparkSession, queries: DataFrame, indexDir: String,
       nprobe: Int = 2, shortlistK: Int = 32, topK: Int = 5): DataFrame = {
     val cent = spark.read.parquet(centroidsPath(indexDir))
     val cw = spark.read.parquet(codebooksPath(indexDir))
     val vecs = liveVectors(spark, indexDir)
-    val wQ = Window.partitionBy("qid").orderBy(desc("qscore"), asc("centroid_id"))
-    val probes = queries.join(broadcast(cent))
-      .withColumn("qscore", round(cosine_sim(col("centv"), col("qe")), 4))
-      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= nprobe)
+    val probes = topCentroids(queries, cent, nprobe)
       .select(col("qid"), col("centroid_id").cast("long").as("pcid"))
-    val dt = queries.withColumn("subspace", subspaces)
-      .join(broadcast(cw))
-      .select(col("qid"), col("subspace"), col("code"), subL2(col("qe")).as("d"))
+    val dt = pqLut(queries, cw)
     val cands = probes
       .join(vecs.withColumn("ccid", col("centroid_id").cast("long")),
         col("pcid") === col("ccid") && col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"),
         posexplode(col("codes")).as(Seq("subspace", "code")))
-    val adc = cands.join(broadcast(dt), Seq("qid", "subspace", "code"))
-      .groupBy("qid", "vec_id")
-      .agg(
-        sum(when(col("subspace") === 0, col("d"))).as("d0"),
-        sum(when(col("subspace") === 1, col("d"))).as("d1"),
-        sum(when(col("subspace") === 2, col("d"))).as("d2"),
-        sum(when(col("subspace") === 3, col("d"))).as("d3"))
-      .withColumn("adc", col("d0") + col("d1") + col("d2") + col("d3"))
+    val adc = adcScore(cands.join(broadcast(dt), Seq("qid", "subspace", "code")))
     val shortlist = adc.groupBy("qid")
       .agg(graft.functions.TopKByScore.top_k(shortlistK)(col("vec_id"), -col("adc")).as("top"))
       .select(col("qid"), explode(col("top")).as("sc"))
       .select(col("qid"), col("sc.id").as("vec_id"))
     // exact re-rank: shortlist + query vectors broadcast, ONE map-side
     // reduction of the vectors scan (q247's plan shape)
-    val l2 = org.apache.spark.sql.graft.VectorMath.l2sq(col("qe"), col("embedding"))
+    val l2 = VectorMath.l2sq(col("qe"), col("embedding"))
     val wR = Window.partitionBy("qid").orderBy(asc("dist"), asc("vec_id"))
     vecs.select(col("vec_id"), col("embedding"))
       .join(broadcast(shortlist), Seq("vec_id"))
@@ -331,27 +293,125 @@ object AnnIndex {
     searchAssigned(queries, cent, assign, nprobe, topK)
   }
 
-  /** q40/q51's assignment: nearest centroid by rounded cosine, argmax as
-    * a map-side max_by partial aggregation — one row per vector crosses
-    * the shuffle, no |centroids|× window sort. */
-  private[graft] def assignCosine(e: DataFrame, cent: DataFrame): DataFrame =
+  // ---- the shared vector kernels -----------------------------------------
+  // Every IVF/PQ/k-means site in the engine (this index, Similarity's
+  // q40-q315 family, Dedup's q59/q237) calls these; none is hand-written
+  // elsewhere, so a kernel's plan shape changes in exactly one place.
+
+  /** The quantizer seed: the vectors with `vec_id < k` as
+    * (centroid_id, centv). */
+  private[graft] def seedCentroids(e: DataFrame, k: Int): DataFrame =
+    e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
+
+  /** The PQ codebook seed: the first 4 vectors as codewords (code, cv). */
+  private[graft] def seedCodebook(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("code"), col("embedding").as("cv"))
+
+  /** Nearest centroid by cosine: per `keys` group of `e` (which carries
+    * `embedding`), the broadcast centroid (centroid_id, centv) with the
+    * highest `ascore` = round(cos, 4) — or the raw cosine when
+    * `rounded = false` — ties to the LOWEST centroid_id, emitted as the
+    * struct `best` (centroid_id, payload...). `ascore` is in scope for
+    * the payload. The argmax is a map-side max_by partial aggregation:
+    * one row per key crosses the shuffle, no |centroids|× window sort
+    * (≡ row_number over (ascore DESC, centroid_id ASC) = 1). */
+  private[graft] def nearestCentroid(e: DataFrame, cent: DataFrame,
+      keys: Seq[String], payload: Seq[String], rounded: Boolean = true): DataFrame = {
+    val cos = cosine_sim(col("centv"), col("embedding"))
     e.join(broadcast(cent))
-      .withColumn("ascore", round(cosine_sim(col("centv"), col("embedding")), 4))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("embedding")),
-        struct(col("ascore"), -col("centroid_id"))).as("b"))
-      .select(col("vec_id"), col("b.centroid_id").as("centroid_id"),
-        col("b.embedding").as("embedding"))
+      .withColumn("ascore", if (rounded) round(cos, 4) else cos)
+      .groupBy(keys.map(col): _*)
+      .agg(max_by(struct((col("centroid_id") +: payload.map(col)): _*),
+        struct(col("ascore"), -col("centroid_id"))).as("best"))
+  }
+
+  /** Each query's (qid, qe, ...) top-`nprobe` centroids by
+    * round(cos, 4), ties to the lowest centroid_id: the query rows joined
+    * to their probed centroids, with `qscore`. */
+  private[graft] def topCentroids(q: DataFrame, cent: DataFrame,
+      nprobe: Int): DataFrame = {
+    val wQ = Window.partitionBy("qid").orderBy(desc("qscore"), asc("centroid_id"))
+    q.join(broadcast(cent))
+      .withColumn("qscore", round(cosine_sim(col("centv"), col("qe")), 4))
+      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= nprobe)
+  }
+
+  /** Squared L2 between one 16-dim subspace slice of `a` and the codeword
+    * column `cv` — a native codegen'd loop (sequential accumulation, so
+    * the raw doubles are bit-equal to the oracle's list comprehension;
+    * parity pinned in VectorMathSpec). Expects `subspace` and `cv`. */
+  private def subL2(a: Column): Column =
+    VectorMath.slice_l2sq(a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
+
+  private def subspaces: Column = explode(array((0 until 4).map(lit(_)): _*))
+
+  /** PQ encode, per (vec_id, subspace): the nearest codeword of the
+    * broadcast codebook (code, cv) by raw sub-L2, ties to the LOWEST code
+    * — as `code`, or with `keepDist` as the struct `best` (code, dist).
+    * The argmin is a map-side min_by partial aggregation. */
+  private[graft] def pqAssign(vectors: DataFrame, cw: DataFrame,
+      keepDist: Boolean = false): DataFrame = {
+    val value = if (keepDist) struct(col("code"), col("dist")) else col("code")
+    vectors.select(col("vec_id"), col("embedding"))
+      .withColumn("subspace", subspaces)
+      .join(broadcast(cw))
+      .withColumn("dist", subL2(col("embedding")))
+      .groupBy("vec_id", "subspace")
+      .agg(min_by(value, struct(col("dist"), col("code")))
+        .as(if (keepDist) "best" else "code"))
+  }
+
+  /** The per-query ADC lookup table: the exact sub-L2 of each query
+    * (qid, qe) against every codeword, as (qid, subspace, code, d). */
+  private[graft] def pqLut(q: DataFrame, cw: DataFrame): DataFrame =
+    q.withColumn("subspace", subspaces)
+      .join(broadcast(cw))
+      .select(col("qid"), col("subspace"), col("code"), subL2(col("qe")).as("d"))
+
+  /** ADC score per (qid, vec_id) from looked-up (subspace, d) rows: the
+    * per-subspace components pivot into fixed columns and add in ONE
+    * order, d0+d1+d2+d3, so the double sum never depends on row arrival
+    * (q99's cross-engine determinism trick). */
+  private[graft] def adcScore(lookups: DataFrame): DataFrame =
+    lookups.groupBy("qid", "vec_id")
+      .agg(
+        sum(when(col("subspace") === 0, col("d"))).as("d0"),
+        sum(when(col("subspace") === 1, col("d"))).as("d1"),
+        sum(when(col("subspace") === 2, col("d"))).as("d2"),
+        sum(when(col("subspace") === 3, col("d"))).as("d3"))
+      .withColumn("adc", col("d0") + col("d1") + col("d2") + col("d3"))
+
+  /** One Lloyd update: per `key`, the per-dimension mean of the members'
+    * embeddings as `out` ARRAY<DOUBLE>, or ARRAY<FLOAT> with `f32`.
+    * Member sums of float32-derived doubles are exact in f64, so the
+    * means are order-independent and bit-equal across engines (the q78
+    * parity note); the float cast is the same IEEE rounding in both. */
+  private[graft] def memberMean(members: DataFrame, key: String, out: String,
+      f32: Boolean = false): DataFrame =
+    members
+      .select(col(key),
+        posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("pos", "v")))
+      .groupBy(key, "pos").agg(avg("v").as("m"))
+      .groupBy(key)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(col(key), transform(col("pm"), p =>
+        if (f32) p.getField("m").cast("float") else p.getField("m")).as(out))
+
+  /** q40/q51's assignment: every vector tagged with its nearest centroid
+    * ([[nearestCentroid]]), carrying its embedding through the argmax. */
+  private[graft] def assignCosine(e: DataFrame, cent: DataFrame): DataFrame =
+    nearestCentroid(e, cent, Seq("vec_id"), Seq("embedding"))
+      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
+        col("best.embedding").as("embedding"))
 
   /** q51's search over an assigned corpus: probe the top-`nprobe`
     * centroids per query, score only their members, rank by rounded
     * cosine with cid tie-break. `assign` carries (cid, ccid, ce). */
   private[graft] def searchAssigned(q: DataFrame, cent: DataFrame,
       assign: DataFrame, nprobe: Int, topK: Int): DataFrame = {
-    val wQ = Window.partitionBy("qid").orderBy(desc("qscore"), asc("centroid_id"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("qscore", round(cosine_sim(col("centv"), col("qe")), 4))
-      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= nprobe)
+    val probes = topCentroids(q, cent, nprobe)
       .select(col("qid"), col("qe"), col("centroid_id").as("pcid"))
     val wS = Window.partitionBy("qid").orderBy(desc("score"), asc("cid"))
     probes.join(assign, col("pcid") === col("ccid") && col("qid") =!= col("cid"))
@@ -366,25 +426,22 @@ object AnnIndex {
     * (size-targeted; vectors keep their `centroid_id` partitioning — it
     * is what prunes a probe to the probed centroids' files), physically
     * dropping tombstoned vectors — the output generation is the survivor
-    * set with NO tombstone table. The PQ `codebooks/` table — frozen
-    * state a probePq reader depends on — is carried over verbatim when
-    * present (a generation silently missing it would fail every
-    * compressed-domain probe after a publish switch). Rewrites are
-    * fingerprint-validated against the live view. */
+    * set with NO tombstone table. The quantizer and, when present, the PQ
+    * `codebooks/` and the `fitstats/` ledger are carried over verbatim —
+    * standing state the probePq and fitLedger readers depend on, which a
+    * generation must not silently miss or mangle across a publish switch.
+    * Every rewritten table is fingerprint-validated against its source
+    * (the vectors against the live view) in one check that fails loudly. */
   def optimize(spark: SparkSession, indexDir: String, outIndexDir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
-    Compaction.compact(spark, centroidsPath(indexDir),
-      centroidsPath(outIndexDir), targetFileBytes)
-    if (new File(codebooksPath(indexDir)).isDirectory)
-      Compaction.compact(spark, codebooksPath(indexDir),
-        codebooksPath(outIndexDir), targetFileBytes)
-    // the fit ledger is standing state a fitLedger reader depends on —
-    // a generation silently missing it would break the retrain trigger
-    // after a publish switch (the codebooks precedent)
-    if (new File(fitStatsPath(indexDir)).isDirectory)
-      Compaction.compact(spark, fitStatsPath(indexDir),
-        fitStatsPath(outIndexDir), targetFileBytes)
+    val carried = "centroids" +: Seq("codebooks", "fitstats")
+      .filter(t => new File(s"$indexDir/$t").isDirectory)
+    carried.foreach { t =>
+      val df = spark.read.parquet(s"$indexDir/$t")
+      df.repartition(Compaction.filesFor(df, targetFileBytes))
+        .write.mode("overwrite").parquet(s"$outIndexDir/$t")
+    }
     val vecs = liveVectors(spark, indexDir)
     val nOut = Compaction.filesFor(spark.read.parquet(vectorsPath(indexDir)),
       targetFileBytes)
@@ -392,6 +449,8 @@ object AnnIndex {
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(vectorsPath(outIndexDir))
     Reconcile.requireMatch("optimize",
-      Seq(("vectors", vecs, spark.read.parquet(vectorsPath(outIndexDir)))))
+      carried.map(t => (t, spark.read.parquet(s"$indexDir/$t"),
+        spark.read.parquet(s"$outIndexDir/$t"))) :+
+        (("vectors", vecs, spark.read.parquet(vectorsPath(outIndexDir)))))
   }
 }

@@ -229,13 +229,10 @@ object DedupIndex {
     // mega-bucket screen (r13 window-count form): arrays only for keys
     // proven within the cap, sized over the same shuffle the collect
     // needs (Dedup.withGroupCount)
-    val pairs = Dedup.withGroupCount(bands, Seq("bi", "bh"))
-      .filter(col("cnt").between(2, Dedup.LshBucketCap))
-      .groupBy("bi", "bh")
-      .agg(collect_list("doc_id").as("ds"))
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-      .select(col("x"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+    val pairs = Dedup.bucketPairs(Dedup.withGroupCount(bands, Seq("bi", "bh"))
+        .filter(col("cnt").between(2, Dedup.LshBucketCap))
+        .groupBy("bi", "bh")
+        .agg(collect_list("doc_id").as("ds")))
       .select(least(col("x"), col("y")).as("d1"), greatest(col("x"), col("y")).as("d2"))
       .dropDuplicates("d1", "d2")
     val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.graft.TextHashes
 import graft.Tables
+import graft.operators.AnnIndex
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard
   * (quadratic baseline), MinHash+LSH (the scale path), and SimHash.
@@ -758,6 +759,17 @@ object Dedup {
   private[graft] def withGroupCount(rows: DataFrame, keys: Seq[String]): DataFrame =
     rows.withColumn("cnt", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
 
+  /** Every i<j member pair (x, y) of each bucket's member array `ds` —
+    * the capped in-bucket pair expansion shared by every bucket build
+    * (LSH bands, prefix tokens, SimHash/RHP bands, frame digests): pairs
+    * are generated in place from the array, bounded at cap·(cap−1)/2 per
+    * bucket, with no self-join. Callers screen the bucket sizes before
+    * collecting `ds` and orient/verify the pairs themselves. */
+  private[graft] def bucketPairs(buckets: DataFrame): DataFrame =
+    buckets.select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
+      .select(col("x"),
+        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+
   def lshCandidates(base: DataFrame, cap: Int): DataFrame = {
     // Mega-bucket screen: member arrays are collected ONLY for keys whose
     // group size is proven within the cap. Collecting first and filtering
@@ -798,10 +810,7 @@ object Dedup {
       .select(col("ds"))
     // all i<j position pairs of each bucket array; orient by value so the
     // (d1 < d2) contract holds regardless of collect_list order
-    val pairs = small.unionByName(big)
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-      .select(col("x"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+    val pairs = bucketPairs(small.unionByName(big))
       .select(least(col("x"), col("y")).as("d1"), greatest(col("x"), col("y")).as("d2"))
       .dropDuplicates("d1", "d2")
     val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))
@@ -946,12 +955,10 @@ object Dedup {
     * integer predicate) drops candidates BEFORE the intersect verify on
     * both paths; provably output-neutral. */
   private def prefixCandidates(keyed: DataFrame): DataFrame = {
-    val smallPairs = keyed.filter(col("cnt").between(2, PrefixBucketArrayMax))
+    val smallBuckets = keyed.filter(col("cnt").between(2, PrefixBucketArrayMax))
       .groupBy("h")
       .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-      .select(col("x"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+    val smallPairs = bucketPairs(smallBuckets)
       .filter(least(col("x.sz"), col("y.sz")) * 10 >=
         greatest(col("x.sz"), col("y.sz")) * 7)
       .select(least(col("x.doc_id"), col("y.doc_id")).as("d1"),
@@ -1574,17 +1581,9 @@ object Dedup {
     "q59_cosine_neardup" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
       val e = Tables(s, dir, "embeddings")
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      // map-side argmax (see q40): one row per vector crosses the shuffle,
-      // no |centroids|× window sort
-      val assign = e.join(broadcast(cent))
-        .withColumn("ascore", round(cosine_sim(col("centv"), col("embedding")), 4))
-        .groupBy("vec_id")
-        .agg(max_by(struct(col("centroid_id"), col("embedding")),
-          struct(col("ascore"), -col("centroid_id"))).as("b"))
-        .select(col("vec_id"), col("b.centroid_id").as("centroid_id"),
-          col("b.embedding").as("embedding"))
+      // the index's own assignment (map-side argmax, see q40): one row per
+      // vector crosses the shuffle, no |centroids|× window sort
+      val assign = AnnIndex.assignCosine(e, AnnIndex.seedCentroids(e, 8))
       val a = assign.select(col("vec_id").as("v1"), col("centroid_id").as("c1"),
         col("embedding").as("e1"))
       val b = assign.select(col("vec_id").as("v2"), col("centroid_id").as("c2"),
@@ -1646,10 +1645,7 @@ object Dedup {
         .filter(col("cnt").between(2, cap))
         .groupBy("bi", "bv")
         .agg(collect_list(struct(col("doc_id"), col("sh"))).as("ds"))
-      buckets
-        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-        .select(col("x"),
-          explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+      bucketPairs(buckets)
         .select(
           least(col("x.doc_id"), col("y.doc_id")).as("d1"),
           greatest(col("x.doc_id"), col("y.doc_id")).as("d2"),
@@ -1741,8 +1737,7 @@ object Dedup {
     // exact basis points.
     "q215_boilerplate" -> ((s: SparkSession, dir: String) => {
       val toks = Tables(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
+        .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
       val grams = toks.select(col("doc_id"),
         explode(zip_with(
@@ -1837,15 +1832,11 @@ object Dedup {
       val e = Tables(s, dir, "embeddings")
         .withColumn("b", expr(
           "CAST(conv(substring(md5(CAST(CAST(vec_id AS STRING) AS BINARY)), 1, 4), 16, 10) AS BIGINT) % 100"))
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      val assign = e.join(broadcast(cent))
-        .withColumn("ascore", cosine_sim(col("centv"), col("embedding")))
-        .groupBy("vec_id", "b")
-        .agg(max_by(struct(col("centroid_id"), col("embedding")),
-          struct(col("ascore"), -col("centroid_id"))).as("x"))
-        .select(col("vec_id"), col("b"), col("x.centroid_id").as("cid"),
-          col("x.embedding").as("embedding"))
+      // the shared nearest-centroid kernel, scored on the UNROUNDED cosine
+      val assign = AnnIndex.nearestCentroid(e, AnnIndex.seedCentroids(e, 8),
+          Seq("vec_id", "b"), Seq("embedding"), rounded = false)
+        .select(col("vec_id"), col("b"), col("best.centroid_id").as("cid"),
+          col("best.embedding").as("embedding"))
       val held = assign.filter(col("b") >= 90)
         .select(col("vec_id").as("hv"), col("cid"), col("embedding").as("he"))
       val train = assign.filter(col("b") < 90)
@@ -2096,11 +2087,7 @@ object Dedup {
         .filter(col("cnt").between(2, 128))
         .groupBy("bi", "bv")
         .agg(collect_list(struct(col("vec_id"), col("embedding"))).as("ds"))
-      buckets
-        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-        .select(col("x"),
-          explode(slice(col("ds"), col("i") + lit(2),
-            size(col("ds")) - col("i") - 1)).as("y"))
+      bucketPairs(buckets)
         .select(
           least(col("x.vec_id"), col("y.vec_id")).as("v1"),
           greatest(col("x.vec_id"), col("y.vec_id")).as("v2"),

@@ -99,10 +99,7 @@ object Multimodal {
         .filter(col("cnt").between(2, 32))
         .groupBy("frame_sha")
         .agg(sort_array(collect_set(struct(col("doc_id"), col("n_chunks")))).as("ds"))
-      buckets
-        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "x")))
-        .select(col("x"),
-          explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
+      Dedup.bucketPairs(buckets)
         .select(col("x.doc_id").as("d1"), col("x.n_chunks").as("nc1"),
           col("y.doc_id").as("d2"), col("y.n_chunks").as("nc2"))
         .groupBy("d1", "d2")

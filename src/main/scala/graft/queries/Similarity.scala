@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
 import graft.Tables
+import graft.operators.AnnIndex
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -85,10 +86,9 @@ object Similarity {
       val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
       val drift = e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
-      val cent = base.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      graft.operators.AnnIndex.build(base, cent, idxDir)
-      graft.operators.AnnIndex.append(s, drift, idxDir)
+      val cent = AnnIndex.seedCentroids(base, 16)
+      AnnIndex.build(base, cent, idxDir)
+      AnnIndex.append(s, drift, idxDir)
       val corpus = base.withColumn("slice", lit("base"))
         .unionByName(drift.withColumn("slice", lit("drift")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -102,8 +102,7 @@ object Similarity {
         .withColumn("rank", row_number().over(wB)).filter(col("rank") <= 5)
         .select("qid", "cid")
       // the STANDING index answers through its real probe path
-      val ivf = graft.operators.AnnIndex
-        .probe(s, qs.select("qid", "qe"), idxDir)
+      val ivf = AnnIndex.probe(s, qs.select("qid", "qe"), idxDir)
         .select(col("qid"), col("cid"), lit(1L).as("hit"))
       val recall = bf.join(ivf, Seq("qid", "cid"), "left")
         .groupBy("qid").agg(count(col("hit")).as("nh"))
@@ -111,15 +110,12 @@ object Similarity {
         .groupBy("slice")
         .agg(count(lit(1)).as("n_queries"), sum("nh").as("n_hit"))
       // residual: every corpus vector's fit against the frozen quantizer
-      val resid = corpus.join(broadcast(cent))
-        .withColumn("ascore", round(cosine_sim(col("centv"), col("embedding")), 4))
-        .groupBy("vec_id", "slice")
-        .agg(max_by(struct(col("centroid_id"), col("ascore")),
-          struct(col("ascore"), -col("centroid_id"))).as("b"))
+      val resid = AnnIndex
+        .nearestCentroid(corpus, cent, Seq("vec_id", "slice"), Seq("ascore"))
         .groupBy("slice")
         .agg(count(lit(1)).as("n_vecs"),
-          sum(expr("CAST(floor(b.ascore * 10000) AS BIGINT)")).as("se4"),
-          countDistinct(col("b.centroid_id")).as("n_cent_used"))
+          sum(expr("CAST(floor(best.ascore * 10000) AS BIGINT)")).as("se4"),
+          countDistinct(col("best.centroid_id")).as("n_cent_used"))
         .withColumn("mean_assign_e4", expr("se4 div n_vecs"))
       val wAll = Window.partitionBy()
       val out = resid.join(recall, Seq("slice"))
@@ -161,14 +157,7 @@ object Similarity {
     val c0 = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"),
         transform(col("embedding"), x => x.cast("double")).as("cv"))
-    assignL2(e, c0)
-      .select(col("cid"),
-        posexplode(transform(col("embedding"), x => x.cast("double")))
-          .as(Seq("pos", "v")))
-      .groupBy("cid", "pos").agg(avg("v").as("m"))
-      .groupBy("cid")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cid"), transform(col("pm"), p => p.getField("m")).as("cv"))
+    AnnIndex.memberMean(assignL2(e, c0), "cid", "cv")
   }
 
   val queries: Map[String, Q] = Map(
@@ -188,20 +177,14 @@ object Similarity {
     }),
 
     // ---- IVF assignment: nearest-of-k-centroids --------------------------
-    // argmax via max_by over (score, -centroid_id) — map-side partial
-    // aggregation, one row per vector over the shuffle; ≡ the window
-    // orderBy(score DESC, centroid_id ASC) row_number()=1 (see assignL2)
+    // the shared kernel's map-side argmax (AnnIndex.nearestCentroid): one
+    // row per vector over the shuffle; ≡ the window orderBy(score DESC,
+    // centroid_id ASC) row_number()=1
     "q40_ivf_assign" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      e.join(broadcast(cent))
-        .withColumn("score", round(cosine_sim(col("centv"), col("embedding")), 4))
-        .groupBy("vec_id")
-        .agg(max_by(struct(col("centroid_id"), col("score")),
-          struct(col("score"), -col("centroid_id"))).as("b"))
-        .groupBy(col("b.centroid_id").as("centroid_id"))
-        .agg(count(lit(1)).as("n_members"), round(avg("b.score"), 4).as("avg_sim"))
+      AnnIndex.nearestCentroid(e, AnnIndex.seedCentroids(e, 8), Seq("vec_id"), Seq("ascore"))
+        .groupBy(col("best.centroid_id").as("centroid_id"))
+        .agg(count(lit(1)).as("n_members"), round(avg("best.ascore"), 4).as("avg_sim"))
         .orderBy("centroid_id")
     }),
 
@@ -212,15 +195,13 @@ object Similarity {
     // drift apart.
     "q51_ivf_search" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      val assign = graft.operators.AnnIndex
-        .assignCosine(e.select("vec_id", "embedding"), cent)
+      val cent = AnnIndex.seedCentroids(e, 8)
+      val assign = AnnIndex.assignCosine(e.select("vec_id", "embedding"), cent)
         .select(col("vec_id").as("cid"), col("centroid_id").as("ccid"),
           col("embedding").as("ce"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      graft.operators.AnnIndex.searchAssigned(q, cent, assign, nprobe = 2, topK = 5)
+      AnnIndex.searchAssigned(q, cent, assign, nprobe = 2, topK = 5)
     }),
 
     // ---- standing ANN index: build -> append -> probe --------------------
@@ -232,11 +213,10 @@ object Similarity {
     // own oracle verifies the whole build/append/probe path at every sf.
     "q253_ann_index" -> ((s: SparkSession, dir: String) => withStateDir("graft-ann-index-") { idxDir =>
       val e = Tables(s, dir, "embeddings")
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      graft.operators.AnnIndex.build(e.filter(col("vec_id") % 10 < 5), cent, idxDir)
-      graft.operators.AnnIndex.append(s, e.filter(col("vec_id") % 10 >= 5), idxDir)
-      graft.operators.AnnIndex.probe(s,
+      val cent = AnnIndex.seedCentroids(e, 8)
+      AnnIndex.build(e.filter(col("vec_id") % 10 < 5), cent, idxDir)
+      AnnIndex.append(s, e.filter(col("vec_id") % 10 >= 5), idxDir)
+      AnnIndex.probe(s,
         e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe")),
         idxDir)
@@ -290,13 +270,12 @@ object Similarity {
       val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
       val drift = e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
-      val cent = base.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      graft.operators.AnnIndex.build(base, cent, idxDir)
-      graft.operators.AnnIndex.recordFitStats(s, base, idxDir, "build")
-      graft.operators.AnnIndex.append(s, drift, idxDir)
-      graft.operators.AnnIndex.recordFitStats(s, drift, idxDir, "b1_drift")
-      graft.operators.AnnIndex.fitLedger(s, idxDir)
+      val cent = AnnIndex.seedCentroids(base, 16)
+      AnnIndex.build(base, cent, idxDir)
+      AnnIndex.recordFitStats(s, base, idxDir, "build")
+      AnnIndex.append(s, drift, idxDir)
+      AnnIndex.recordFitStats(s, drift, idxDir, "b1_drift")
+      AnnIndex.fitLedger(s, idxDir)
     }),
 
     // ---- drift -> REINDEX: the retrain trigger's action (r18) ------------
@@ -317,19 +296,18 @@ object Similarity {
       val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
       val drift = e.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
-      val cent = base.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      graft.operators.AnnIndex.build(base, cent, idx0)
-      graft.operators.AnnIndex.recordFitStats(s, base, idx0, "build")
-      graft.operators.AnnIndex.append(s, drift, idx0)
-      graft.operators.AnnIndex.recordFitStats(s, drift, idx0, "b1_drift")
-      graft.operators.AnnIndex.remove(
+      val cent = AnnIndex.seedCentroids(base, 16)
+      AnnIndex.build(base, cent, idx0)
+      AnnIndex.recordFitStats(s, base, idx0, "build")
+      AnnIndex.append(s, drift, idx0)
+      AnnIndex.recordFitStats(s, drift, idx0, "b1_drift")
+      AnnIndex.remove(
         e.filter(col("vec_id") % 7 === 2).select("vec_id"), idx0)
-      graft.operators.AnnIndex.reindex(s, idx0, idx1, k = 8)
+      AnnIndex.reindex(s, idx0, idx1, k = 8)
       val qs = base.unionByName(drift)
         .filter(col("vec_id") < 20 && col("vec_id") % 7 =!= 2)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      graft.operators.AnnIndex.probe(s, qs, idx1)
+      AnnIndex.probe(s, qs, idx1)
     }),
 
     // ---- SQ8 scalar quantization: reconstruction error per label ---------
@@ -382,22 +360,11 @@ object Similarity {
     // codeword id breaks ties; the emitted distance is rounded.
     "q76_pq_assign" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val cw = e.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("code"), col("embedding").as("cv"))
-      val sub = e.select(col("vec_id"), col("embedding"))
-        .withColumn("subspace", explode(array((0 until 4).map(i => lit(i)): _*)))
-      val l2 = org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-        col("embedding"), col("cv"),
-        (col("subspace") * 16 + 1).cast("int"), lit(16))
-      // per-(vector, subspace) argmin via min_by — map-side partial agg,
-      // no |codebook|× window shuffle (see q40)
-      sub.join(broadcast(cw))
-        .withColumn("dist", l2)
-        .groupBy("vec_id", "subspace")
-        .agg(min_by(struct(col("code"), col("dist")),
-          struct(col("dist"), col("code"))).as("b"))
+      // per-(vector, subspace) argmin via the shared PQ kernel's min_by —
+      // map-side partial agg, no |codebook|× window shuffle (see q40)
+      AnnIndex.pqAssign(e, AnnIndex.seedCodebook(e), keepDist = true)
         .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
-          col("b.code").as("code"), round(col("b.dist"), 4).as("dist"))
+          col("best.code").as("code"), round(col("best.dist"), 4).as("dist"))
         .orderBy("vec_id", "subspace")
     }),
 
@@ -482,13 +449,9 @@ object Similarity {
     // q99's ADC chain ∩ q247's re-rank), so IVF pruning, compressed
     // scoring and the refine stage are all hash-checked together.
     "q267_ivfpq_index" -> ((s: SparkSession, dir: String) => withStateDir("graft-ivfpq-index-") { idxDir =>
-      import graft.operators.AnnIndex
       val e = Tables(s, dir, "embeddings")
-      val cent = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-      val cw = e.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("code"), col("embedding").as("cv"))
-      AnnIndex.build(e.filter(col("vec_id") % 2 === 0), cent, idxDir, Some(cw))
+      AnnIndex.build(e.filter(col("vec_id") % 2 === 0), AnnIndex.seedCentroids(e, 8),
+        idxDir, Some(AnnIndex.seedCodebook(e)))
       AnnIndex.append(s, e.filter(col("vec_id") % 2 === 1), idxDir)
       AnnIndex.probePq(s,
         e.filter(col("vec_id") < 10)
@@ -524,14 +487,7 @@ object Similarity {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val c1 = trainedCentroids(e)
       val a2 = assignL2(e, c1)
-      val c2 = a2
-        .select(col("cid"),
-          posexplode(transform(col("embedding"), x => x.cast("double")))
-            .as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(avg("v").as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), transform(col("pm"), p => p.getField("m")).as("cv2"))
+      val c2 = AnnIndex.memberMean(a2, "cid", "cv2")
       val members = a2.groupBy("cid").agg(count(lit(1)).as("n_members"))
       c1.join(c2, Seq("cid")).join(broadcast(members), Seq("cid"))
         .select(col("cid").as("cluster_id"), col("n_members"),
@@ -645,14 +601,7 @@ object Similarity {
     // vectors are never shuffled for the distance itself.
     "q112_embed_outliers" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val cent = e
-        .select(col("label"),
-          posexplode(transform(col("embedding"), x => x.cast("double")))
-            .as(Seq("pos", "v")))
-        .groupBy("label", "pos").agg(avg("v").as("m"))
-        .groupBy("label")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("label"), transform(col("pm"), p => p.getField("m")).as("cv"))
+      val cent = AnnIndex.memberMean(e, "label", "cv")
       val w = Window.partitionBy("label").orderBy(desc("dist"), asc("vec_id"))
       e.join(broadcast(cent), Seq("label"))
         .withColumn("dist", l2(col("embedding"), col("cv")))
@@ -675,14 +624,8 @@ object Similarity {
     // one double division (possibly negative — never DIV).
     "q113_silhouette" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val cent = e
-        .select(col("label").as("clabel"),
-          posexplode(transform(col("embedding"), x => x.cast("double")))
-            .as(Seq("pos", "v")))
-        .groupBy("clabel", "pos").agg(avg("v").as("m"))
-        .groupBy("clabel")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("clabel"), transform(col("pm"), p => p.getField("m")).as("cv"))
+      val cent = AnnIndex.memberMean(e, "label", "cv")
+        .select(col("label").as("clabel"), col("cv"))
       e.join(broadcast(cent))
         .withColumn("dist", l2(col("embedding"), col("cv")))
         .groupBy("vec_id", "label")
@@ -755,15 +698,8 @@ object Similarity {
           .agg(max_by(col("cid"), col("akey")).as("cid"))
       val c0 = e.filter(col("vec_id") < k)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      val c1 = assignCos(c0).join(e, Seq("vec_id"))
-        .select(col("cid"),
-          posexplode(transform(col("embedding"), x => x.cast("double")))
-            .as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(avg("v").as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(
-          struct(col("pos"), col("m").cast("float").as("mf")))).as("pm"))
-        .select(col("cid"), transform(col("pm"), p => p.getField("mf")).as("cv"))
+      val c1 = AnnIndex.memberMean(assignCos(c0).join(e, Seq("vec_id")), "cid", "cv",
+        f32 = true)
       val a2 = assignCos(c1).join(e, Seq("vec_id"))
         .localCheckpoint(eager = true)
       val x = a2.select(col("vec_id").as("v1"), col("cid").as("c1"),
@@ -795,35 +731,15 @@ object Similarity {
 
   private def pqAdcTopK(s: SparkSession, dir: String, k: Int): org.apache.spark.sql.DataFrame = {
       val e = Tables(s, dir, "embeddings")
-      val cw = e.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("code"), col("embedding").as("cv"))
-      def subL2(a: Column): Column = org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-        a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-      val subspaces = explode(array((0 until 4).map(i => lit(i)): _*))
+      val cw = AnnIndex.seedCodebook(e)
       // 1. encode the corpus: q76's per-subspace argmin (map-side min_by)
-      val codes = e.select(col("vec_id"), col("embedding"))
-        .withColumn("subspace", subspaces)
-        .join(broadcast(cw))
-        .withColumn("dist", subL2(col("embedding")))
-        .groupBy("vec_id", "subspace")
-        .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
+      val codes = AnnIndex.pqAssign(e, cw)
       // 2. per-query LUT: exact sub-L2 of query vs every codeword
-      val dt = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        .withColumn("subspace", subspaces)
-        .join(broadcast(cw))
-        .select(col("qid"), col("subspace"), col("code"),
-          subL2(col("qe")).as("d"))
+      val dt = AnnIndex.pqLut(e.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe")), cw)
       // 3. ADC score + bounded-heap top-5 (score = -dist: heap keeps best)
-      codes.join(broadcast(dt), Seq("subspace", "code"))
-        .filter(col("qid") =!= col("vec_id"))
-        .groupBy("qid", "vec_id")
-        .agg(
-          sum(when(col("subspace") === 0, col("d"))).as("d0"),
-          sum(when(col("subspace") === 1, col("d"))).as("d1"),
-          sum(when(col("subspace") === 2, col("d"))).as("d2"),
-          sum(when(col("subspace") === 3, col("d"))).as("d3"))
-        .withColumn("adc", col("d0") + col("d1") + col("d2") + col("d3"))
+      AnnIndex.adcScore(codes.join(broadcast(dt), Seq("subspace", "code"))
+          .filter(col("qid") =!= col("vec_id")))
         .groupBy("qid")
         .agg(graft.functions.TopKByScore.top_k(k)(col("vec_id"), -col("adc")).as("top"))
         .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))

@@ -1129,8 +1129,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.count() // decile width: one scalar, computed once
       val grams = docs
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
+        .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
         // one native pass builds the distinct-gram hash list (string-level
         // dedupe — hash-level would miscount on a collision)
@@ -1157,8 +1156,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.count()
       val grams = docs
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
+        .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
         // r18 (optimization): same native distinct-gram pass as q231
         .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
