@@ -37,9 +37,11 @@ import org.apache.spark.sql.graft.VectorMath
   * build→append→probe for real and is checked against q51's own oracle
   * (the answer depends only on index content).
   *
-  * 100 TB design: centroids are broadcast-tiny; the only per-batch
-  * shuffle is the assignment argmax (one row per vector); probes touch
-  * only probed partitions and shuffle only the leaf candidates.
+  * 100 TB design: centroids and codebooks are tiny, so the assignment
+  * and PQ encode run per row against their driver-collected candidate
+  * literals — an append is one map stage straight into the partitioned
+  * write, with no shuffle; probes touch only probed partitions and
+  * shuffle only the leaf candidates.
   */
 object AnnIndex {
 
@@ -108,7 +110,7 @@ object AnnIndex {
     *    the old generation for history.
     *
     * 100 TB: seeds are a k-row TakeOrdered; the Lloyd step is one
-    * broadcast-assign + one (centroid, dim) aggregation shuffle; the
+    * per-row assignment + one (centroid, dim) aggregation shuffle; the
     * rebuild itself is [[build]]'s one assignment pass — all linear, no
     * step rescans more than the live corpus once. */
   def reindex(spark: SparkSession, indexDir: String, outIndexDir: String,
@@ -217,28 +219,26 @@ object AnnIndex {
     else raw
   }
 
+  /** (vec_id, centroid_id, embedding[, codes]) per vector, then the
+    * partitioned write: both kernels run per row, so the whole write is
+    * one map stage. */
   private def writeVectors(e: DataFrame, cent: DataFrame, indexDir: String,
       mode: String, codebooks: Option[DataFrame]): Unit = {
     val assigned = assignCosine(e.select("vec_id", "embedding"), cent)
-    val out = codebooks match {
-      case Some(cw) =>
-        assigned.join(pqEncode(e.select("vec_id", "embedding"), cw), Seq("vec_id"))
-      case None => assigned
-    }
-    out.write.mode(mode).partitionBy("centroid_id").parquet(vectorsPath(indexDir))
+    codebooks.fold(assigned)(pqEncode(assigned, _))
+      .write.mode(mode).partitionBy("centroid_id").parquet(vectorsPath(indexDir))
   }
 
   // ---- PQ (compressed-domain) read path ----------------------------------
 
-  /** The vectors' PQ code arrays: [[pqAssign]]'s per-subspace argmin,
-    * rebuilt as one 4-int `codes` array per vector by one more keyed
-    * aggregation. */
-  private[graft] def pqEncode(vectors: DataFrame, cw: DataFrame): DataFrame =
-    pqAssign(vectors, cw)
-      .groupBy("vec_id")
-      .agg(transform(
-        array_sort(collect_list(struct(col("subspace"), col("code")))),
-        s => s.getField("code")).as("codes"))
+  /** `vectors` with its PQ code array appended as `codes`: per row, the
+    * lowest-code nearest codeword of each subspace ([[pqAssign]]'s
+    * argmin, in subspace order). */
+  private[graft] def pqEncode(vectors: DataFrame, cw: DataFrame): DataFrame = {
+    val (cands, k) = candidateSet(cw, "code", "cv")
+    nonEmpty(vectors.withColumn("codes", VectorMath.nearest_l2(col("embedding"),
+      cands, PqSubspaces, PqSubDim, keepDist = false)), k)
+  }
 
   /** IVF-PQ search against the standing index — the full production ANN
     * read path: the probe prunes to the top-`nprobe` centroids' OWN
@@ -297,6 +297,30 @@ object AnnIndex {
   // Every IVF/PQ/k-means site in the engine (this index, Similarity's
   // q40-q315 family, Dedup's q59/q237) calls these; none is hand-written
   // elsewhere, so a kernel's plan shape changes in exactly one place.
+  //
+  // The three assignment kernels (nearestCentroid, pqAssign/pqEncode,
+  // assignL2) are PER ROW: the candidate frame is collected once on the
+  // driver and scanned by a native expression (VectorMath.nearest_cosine /
+  // nearest_l2) — no cross join, no shuffle, no aggregate. This equals the
+  // grouped argmax over the cross join exactly when the grouping keys are
+  // unique in the input, which holds at every caller (they key on vec_id,
+  // or on (vec_id, slice) over a union of disjoint slices).
+
+  private val PqSubspaces = 4
+  private val PqSubDim = 16
+
+  /** The K-row candidate frame `cand` (id, vec), collected once on the
+    * driver — the data path a broadcast exchange takes — as the literal
+    * the per-row kernels scan, with its row count. */
+  private def candidateSet(cand: DataFrame, id: String, vec: String): (Column, Int) = {
+    val df = cand.select(col(id), col(vec))
+    val rows = df.collect().toSeq
+    (VectorMath.candidates(rows, df.schema(0).dataType, df.schema(1).dataType), rows.size)
+  }
+
+  /** An empty candidate set pairs with nothing: no rows, as the cross
+    * join it replaces. */
+  private def nonEmpty(df: DataFrame, k: Int): DataFrame = if (k == 0) df.limit(0) else df
 
   /** The quantizer seed: the vectors with `vec_id < k` as
     * (centroid_id, centv). */
@@ -309,22 +333,22 @@ object AnnIndex {
     e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("code"), col("embedding").as("cv"))
 
-  /** Nearest centroid by cosine: per `keys` group of `e` (which carries
-    * `embedding`), the broadcast centroid (centroid_id, centv) with the
-    * highest `ascore` = round(cos, 4) — or the raw cosine when
-    * `rounded = false` — ties to the LOWEST centroid_id, emitted as the
-    * struct `best` (centroid_id, payload...). `ascore` is in scope for
-    * the payload. The argmax is a map-side max_by partial aggregation:
-    * one row per key crosses the shuffle, no |centroids|× window sort
-    * (≡ row_number over (ascore DESC, centroid_id ASC) = 1). */
+  /** Nearest centroid by cosine: per row of `e` (which carries
+    * `embedding`), the centroid (centroid_id, centv) with the highest
+    * `ascore` = round(cos, 4) — or the raw cosine when `rounded = false`
+    * — ties to the LOWEST centroid_id, emitted beside `keys` as the struct
+    * `best` (centroid_id, payload...). `ascore` is in scope for the
+    * payload. Per row (≡ row_number over (ascore DESC, centroid_id ASC)
+    * = 1 per key, given `keys` unique in `e`): a NaN score beats every
+    * number, a NULL one loses to every number. */
   private[graft] def nearestCentroid(e: DataFrame, cent: DataFrame,
       keys: Seq[String], payload: Seq[String], rounded: Boolean = true): DataFrame = {
-    val cos = cosine_sim(col("centv"), col("embedding"))
-    e.join(broadcast(cent))
-      .withColumn("ascore", if (rounded) round(cos, 4) else cos)
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(struct((col("centroid_id") +: payload.map(col)): _*),
-        struct(col("ascore"), -col("centroid_id"))).as("best"))
+    val (cands, k) = candidateSet(cent, "centroid_id", "centv")
+    val best = struct((col("_nearest.id").as("centroid_id") +: payload.map(p =>
+      if (p == "ascore") col("_nearest.score").as("ascore") else col(p))): _*)
+    nonEmpty(e.withColumn("_nearest",
+        VectorMath.nearest_cosine(col("embedding"), cands, rounded))
+      .select((keys.map(col) :+ best.as("best")): _*), k)
   }
 
   /** Each query's (qid, qe, ...) top-`nprobe` centroids by
@@ -343,30 +367,43 @@ object AnnIndex {
     * the raw doubles are bit-equal to the oracle's list comprehension;
     * parity pinned in VectorMathSpec). Expects `subspace` and `cv`. */
   private def subL2(a: Column): Column =
-    VectorMath.slice_l2sq(a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-
-  private def subspaces: Column = explode(array((0 until 4).map(lit(_)): _*))
+    VectorMath.slice_l2sq(a, col("cv"), (col("subspace") * PqSubDim + 1).cast("int"),
+      lit(PqSubDim))
 
   /** PQ encode, per (vec_id, subspace): the nearest codeword of the
-    * broadcast codebook (code, cv) by raw sub-L2, ties to the LOWEST code
-    * — as `code`, or with `keepDist` as the struct `best` (code, dist).
-    * The argmin is a map-side min_by partial aggregation. */
+    * codebook (code, cv) by raw sub-L2, ties to the LOWEST code — as
+    * `code`, or with `keepDist` as the struct `best` (code, dist). A NULL
+    * distance (a vector whose slice length differs from the codeword's)
+    * sorts first, as min_by's struct order puts it. Per row: the 4
+    * argmins of a vector come out of one expression. */
   private[graft] def pqAssign(vectors: DataFrame, cw: DataFrame,
       keepDist: Boolean = false): DataFrame = {
-    val value = if (keepDist) struct(col("code"), col("dist")) else col("code")
-    vectors.select(col("vec_id"), col("embedding"))
-      .withColumn("subspace", subspaces)
-      .join(broadcast(cw))
-      .withColumn("dist", subL2(col("embedding")))
-      .groupBy("vec_id", "subspace")
-      .agg(min_by(value, struct(col("dist"), col("code")))
-        .as(if (keepDist) "best" else "code"))
+    val (cands, k) = candidateSet(cw, "code", "cv")
+    val codes = vectors.select(col("vec_id"), posexplode(VectorMath.nearest_l2(
+      col("embedding"), cands, PqSubspaces, PqSubDim, keepDist)).as(Seq("subspace", "b")))
+    nonEmpty(
+      if (keepDist) codes.select(col("vec_id"), col("subspace"),
+        struct(col("b.id").as("code"), col("b.score").as("dist")).as("best"))
+      else codes.withColumnRenamed("b", "code"), k)
+  }
+
+  /** Nearest centroid under squared L2, ties to the lowest `cid`: every
+    * vector of `e` (vec_id, embedding) with its centroid of `cent`
+    * (cid, cv) and the raw distance, as (vec_id, cid, embedding, dist).
+    * Per row, given vec_id unique in `e`; a NULL distance (unequal
+    * lengths) sorts first, as min_by's struct order puts it. */
+  private[graft] def assignL2(e: DataFrame, cent: DataFrame): DataFrame = {
+    val (cands, k) = candidateSet(cent, "cid", "cv")
+    nonEmpty(e.withColumn("_nearest", VectorMath.nearest_l2(col("embedding"), cands,
+        1, Int.MaxValue, keepDist = true).getItem(0))
+      .select(col("vec_id"), col("_nearest.id").as("cid"), col("embedding"),
+        col("_nearest.score").as("dist")), k)
   }
 
   /** The per-query ADC lookup table: the exact sub-L2 of each query
     * (qid, qe) against every codeword, as (qid, subspace, code, d). */
   private[graft] def pqLut(q: DataFrame, cw: DataFrame): DataFrame =
-    q.withColumn("subspace", subspaces)
+    q.withColumn("subspace", explode(array((0 until PqSubspaces).map(lit(_)): _*)))
       .join(broadcast(cw))
       .select(col("qid"), col("subspace"), col("code"), subL2(col("qe")).as("d"))
 

@@ -1581,8 +1581,8 @@ object Dedup {
     "q59_cosine_neardup" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
       val e = Tables(s, dir, "embeddings")
-      // the index's own assignment (map-side argmax, see q40): one row per
-      // vector crosses the shuffle, no |centroids|× window sort
+      // the index's own per-row assignment (see q40): no centroid join,
+      // no shuffle, no |centroids|× window sort
       val assign = AnnIndex.assignCosine(e, AnnIndex.seedCentroids(e, 8))
       val a = assign.select(col("vec_id").as("v1"), col("centroid_id").as("c1"),
         col("embedding").as("e1"))

@@ -42,23 +42,6 @@ object Similarity {
   private def l2(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorMath.l2sq(a, b)
 
-  /** Nearest-centroid assignment under L2 (ties → lowest cid). `cent` must
-    * be small — it is broadcast. The argmin is `min_by` over the struct
-    * order (dist, cid), NOT a row_number window: min_by partially
-    * aggregates map-side, so ONE row per vector crosses the shuffle
-    * instead of |centroids|× rows plus a sort — the window form's exchange
-    * is the scale bug this avoids (same result set: lexicographic
-    * (dist asc, cid asc) ≡ the window's orderBy). */
-  private def assignL2(e: org.apache.spark.sql.DataFrame,
-                       cent: org.apache.spark.sql.DataFrame) =
-    e.join(broadcast(cent))
-      .withColumn("dist", l2(col("embedding"), col("cv")))
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("cid"), col("embedding"), col("dist")),
-        struct(col("dist"), col("cid"))).as("b"))
-      .select(col("vec_id"), col("b.cid").as("cid"),
-        col("b.embedding").as("embedding"), col("b.dist").as("dist"))
-
   /** q307's drift shift: a deterministic per-dimension affine
     * (x*0.5 + 0.25, computed in double, rounded back to float so the
     * index parquet schema stays array<float> and every shared cosine
@@ -157,7 +140,7 @@ object Similarity {
     val c0 = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"),
         transform(col("embedding"), x => x.cast("double")).as("cv"))
-    AnnIndex.memberMean(assignL2(e, c0), "cid", "cv")
+    AnnIndex.memberMean(AnnIndex.assignL2(e, c0), "cid", "cv")
   }
 
   val queries: Map[String, Q] = Map(
@@ -177,9 +160,10 @@ object Similarity {
     }),
 
     // ---- IVF assignment: nearest-of-k-centroids --------------------------
-    // the shared kernel's map-side argmax (AnnIndex.nearestCentroid): one
-    // row per vector over the shuffle; ≡ the window orderBy(score DESC,
-    // centroid_id ASC) row_number()=1
+    // the shared per-row kernel (AnnIndex.nearestCentroid): each vector
+    // scans the 8 driver-collected centroids in one expression, no join or
+    // shuffle; ≡ the window orderBy(score DESC, centroid_id ASC)
+    // row_number()=1
     "q40_ivf_assign" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
       AnnIndex.nearestCentroid(e, AnnIndex.seedCentroids(e, 8), Seq("vec_id"), Seq("ascore"))
@@ -189,7 +173,7 @@ object Similarity {
     }),
 
     // ---- IVF search: probe top-2 centroids, search only their members ----
-    // Assignment (map-side argmax, see q40) and search are the SHARED
+    // Assignment (per-row argmax, see q40) and search are the SHARED
     // AnnIndex shapes — the persisted-index path (q253) runs this exact
     // code over parquet instead of an in-query frame, so the two cannot
     // drift apart.
@@ -360,8 +344,8 @@ object Similarity {
     // codeword id breaks ties; the emitted distance is rounded.
     "q76_pq_assign" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      // per-(vector, subspace) argmin via the shared PQ kernel's min_by —
-      // map-side partial agg, no |codebook|× window shuffle (see q40)
+      // per-(vector, subspace) argmin via the shared per-row PQ kernel —
+      // no codebook join, no shuffle (see q40)
       AnnIndex.pqAssign(e, AnnIndex.seedCodebook(e), keepDist = true)
         .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
           col("best.code").as("code"), round(col("best.dist"), 4).as("dist"))
@@ -462,15 +446,16 @@ object Similarity {
     // ---- distributed k-means (2 Lloyd iterations) ------------------------
     // The training step IVF (q40) and PQ (q76) codebooks actually come
     // from: init = first 8 vectors, then assign → per-dimension mean →
-    // re-assign, twice. Each iteration is one broadcast join (assignment,
-    // no shuffle of the vectors) + one (cluster, dim) aggregation shuffle.
+    // re-assign, twice. Each iteration is one per-row assignment against
+    // the driver-collected centroids (no join, no shuffle of the vectors)
+    // + one (cluster, dim) aggregation shuffle.
     // Parity note: member sums of float32-derived doubles are EXACT in
     // f64 (24-bit mantissas + small exponent spread), so the per-dimension
     // means are order-independent and bit-equal across engines; only the
     // final avg_dist is a rounded computed double.
     "q78_kmeans" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val a2 = assignL2(e, trainedCentroids(e))
+      val a2 = AnnIndex.assignL2(e, trainedCentroids(e))
       a2.groupBy(col("cid").as("cluster_id"))
         .agg(count(lit(1)).as("n_members"), round(avg("dist"), 4).as("avg_dist"))
         .orderBy("cluster_id")
@@ -482,11 +467,12 @@ object Similarity {
     // centroid's L2 shift. Means are exact (float32-derived doubles sum
     // exactly in f64 — the q78 note), so both engines hold bit-identical
     // arrays and the fixed-order 64-term shift fold is IEEE-deterministic,
-    // floor-e9'd. Vectors shuffle once per assignment; centroids broadcast.
+    // floor-e9'd. Assignment is per row against the collected centroids;
+    // only the member-mean aggregation shuffles.
     "q169_kmeans_shift" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val c1 = trainedCentroids(e)
-      val a2 = assignL2(e, c1)
+      val a2 = AnnIndex.assignL2(e, c1)
       val c2 = AnnIndex.memberMean(a2, "cid", "cv2")
       val members = a2.groupBy("cid").agg(count(lit(1)).as("n_members"))
       c1.join(c2, Seq("cid")).join(broadcast(members), Seq("cid"))
@@ -559,7 +545,7 @@ object Similarity {
     "q79_trained_ivf" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cent = trainedCentroids(e)
-      val assign = assignL2(e, cent)
+      val assign = AnnIndex.assignL2(e, cent)
         .select(col("vec_id").as("cid"), col("cid").as("ccid"),
           col("embedding").as("ce"))
       val q = e.filter(col("vec_id") < 10)
@@ -659,9 +645,9 @@ object Similarity {
     // exercise the decision path with non-empty drops at all 3 SFs
     // (2/9/51 dropped).
     //
-    // Scale: the assignment is one broadcast of K centroids + a map-side
-    // argmin (assignL2's min_by — one row per vector crosses the shuffle);
-    // the pair join shuffles once on cid with the cosine threshold INSIDE
+    // Scale: the assignment is one broadcast of K centroids + a packed
+    // BIGINT max_by (below) — one row per vector crosses the shuffle; the
+    // pair join shuffles once on cid with the cosine threshold INSIDE
     // the join condition after the cheap conjuncts (the PushPredicate
     // lesson). K SCALES WITH THE CORPUS (semdedupK: n/250 clamped to
     // 8..4096) so cluster cardinality — the only quadratic term — stays
@@ -732,7 +718,7 @@ object Similarity {
   private def pqAdcTopK(s: SparkSession, dir: String, k: Int): org.apache.spark.sql.DataFrame = {
       val e = Tables(s, dir, "embeddings")
       val cw = AnnIndex.seedCodebook(e)
-      // 1. encode the corpus: q76's per-subspace argmin (map-side min_by)
+      // 1. encode the corpus: q76's per-subspace argmin (per-row kernel)
       val codes = AnnIndex.pqAssign(e, cw)
       // 2. per-query LUT: exact sub-L2 of query vs every codeword
       val dt = AnnIndex.pqLut(e.filter(col("vec_id") < 10)

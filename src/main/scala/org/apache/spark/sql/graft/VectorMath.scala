@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
@@ -72,6 +75,162 @@ object VectorMath {
 
   private[graft] val FloatOrDoubleArray =
     TypeCollection(ArrayType(FloatType), ArrayType(DoubleType))
+
+  // ---- per-row argmin/argmax over a tiny candidate set ---------------------
+  // The IVF/PQ/k-means assignment kernels once cross-joined every vector
+  // with a broadcast candidate frame and reduced with a struct-ordered
+  // max_by/min_by, which plans as a SortAggregate over K rows per vector
+  // plus a shuffle. The candidate sets are tiny by design (K centroids,
+  // a PQ codebook), so the argmin runs per row instead: one generated
+  // loop over the K candidates, keeping only the best one. The result
+  // equals the grouped form whenever each input row is its own group.
+
+  /** A K-row candidate frame — `id` INT/BIGINT, `vec` a float/double
+    * array — as the `array<struct<id, vec>>` literal the per-row kernels
+    * scan. The rows come from one driver-side collect, the data path a
+    * broadcast exchange takes. */
+  def candidates(rows: Seq[Row], idType: DataType, vecType: DataType): Column =
+    ExpressionUtils.column(Literal.create(rows, ArrayType(StructType(Seq(
+      StructField("id", idType), StructField("vec", vecType))))))
+
+  /** Per row, the candidate nearest `vec` (array<float>) by cosine, as
+    * struct(id, score): score = round(cos, 4) when `rounded`, else the
+    * raw cosine. The cosine is [[CosineSimilarity]]'s with the candidate
+    * on the left. Equal to `max_by(struct(id), struct(score, -id))` over
+    * the cross join with the candidates; NULL when there are none. */
+  def nearest_cosine(vec: Column, cands: Column, rounded: Boolean): Column =
+    ExpressionUtils.column(NearestCosine(
+      ExpressionUtils.expression(vec), ExpressionUtils.expression(cands), rounded))
+
+  /** Per row, for each of `nsub` consecutive `subDim`-wide slices of
+    * `vec`, the candidate nearest by squared L2 over that slice — the
+    * [[slice_l2sq]] of `vec` and the candidate, 1-based start
+    * `s * subDim + 1`. Equal to `min_by(id, struct(dist, id))` per slice
+    * over the cross join. Returns the `nsub` ids, or with `keepDist` the
+    * `nsub` structs (id, score = dist); NULL when there are no
+    * candidates. */
+  def nearest_l2(vec: Column, cands: Column, nsub: Int, subDim: Int,
+      keepDist: Boolean): Column =
+    ExpressionUtils.column(NearestL2(
+      ExpressionUtils.expression(vec), ExpressionUtils.expression(cands),
+      nsub, subDim, keepDist))
+
+  /** Does candidate (`sNull`/`s`, `id`) beat the best so far (`bNull`/
+    * `b`, `bId`) under Spark's ordering of struct(score, id)? NULL sorts
+    * first, NaN above every double, -0.0 equals 0.0; `dir` = 1 keeps the
+    * highest score (max_by), -1 the lowest (min_by); ties go to the lowest
+    * id. */
+  def beats(dir: Int, sNull: Boolean, s: Double, id: Long,
+      bNull: Boolean, b: Double, bId: Long): Boolean = {
+    val c =
+      if (sNull) { if (bNull) 0 else -1 }
+      else if (bNull) 1
+      else SQLOrderingUtil.compareDoubles(s, b)
+    c * dir > 0 || (c == 0 && id < bId)
+  }
+
+  /** `round(x, 4)` as Spark's Round evaluates a double: HALF_UP on
+    * `BigDecimal.valueOf`; NaN and infinities pass through. */
+  def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+}
+
+/** A candidate literal unpacked once into primitive arrays for the
+  * generated loops: `vecs(k)` is null for a NULL vector and reads 0.0 at
+  * NULL elements (as an unsafe array's getFloat does); `nulls(k)` marks
+  * those elements, and is null when there are none. */
+final class VectorCandidates(val ids: Array[Long], val vecs: Array[Array[Double]],
+    val nulls: Array[Array[Boolean]]) extends Serializable {
+  def size: Int = ids.length
+  def id(k: Int, idType: DataType): Any = if (idType == IntegerType) ids(k).toInt else ids(k)
+}
+
+object VectorCandidates {
+  def apply(cands: Expression): VectorCandidates = {
+    val st = cands.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    val longIds = st(0).dataType == LongType
+    val floats = st(1).dataType.asInstanceOf[ArrayType].elementType == FloatType
+    val rows = cands.eval().asInstanceOf[ArrayData]
+    val n = rows.numElements()
+    val ids = new Array[Long](n)
+    val vecs = new Array[Array[Double]](n)
+    val nulls = new Array[Array[Boolean]](n)
+    for (k <- 0 until n) {
+      require(!rows.isNullAt(k) && !rows.getStruct(k, 2).isNullAt(0),
+        "vector candidates need a non-null id")
+      val r = rows.getStruct(k, 2)
+      ids(k) = if (longIds) r.getLong(0) else r.getInt(0).toLong
+      if (!r.isNullAt(1)) {
+        val a = r.getArray(1)
+        val m = a.numElements()
+        vecs(k) = Array.tabulate(m)(i =>
+          if (a.isNullAt(i)) 0.0 else if (floats) a.getFloat(i).toDouble else a.getDouble(i))
+        if ((0 until m).exists(a.isNullAt)) nulls(k) = Array.tabulate(m)(a.isNullAt)
+      }
+    }
+    new VectorCandidates(ids, vecs, nulls)
+  }
+}
+
+/** Shared frame of the per-row kernels: `left` is the row's vector,
+  * `right` the foldable `array<struct<id, vec>>` candidate literal. */
+abstract class NearestCandidate extends BinaryExpression {
+  /** Element types accepted on both the row and the candidate vectors. */
+  protected def elementTypes: Seq[DataType]
+
+  override def nullable: Boolean = true
+
+  protected def idType: DataType = right.dataType.asInstanceOf[ArrayType]
+    .elementType.asInstanceOf[StructType](0).dataType
+
+  @transient protected lazy val cands: VectorCandidates = VectorCandidates(right)
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def vecOk(t: DataType) = t match {
+      case ArrayType(e, _) => elementTypes.contains(e)
+      case _ => false
+    }
+    val candOk = right.foldable && (right.dataType match {
+      case ArrayType(StructType(Array(StructField(_, IntegerType | LongType, _, _),
+          StructField(_, v, _, _))), _) => vecOk(v)
+      case _ => false
+    })
+    if (vecOk(left.dataType) && candOk) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects an array of ${elementTypes.map(_.catalogString).mkString("/")}" +
+        " and a foldable array<struct<id: int|bigint, vec: array>> of the same element" +
+        s" types, got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
+  }
+
+  // the literal holds every candidate vector: print its size, not its rows
+  override def toString: String = {
+    val k = right.eval() match { case a: ArrayData => a.numElements(); case _ => 0 }
+    s"$prettyName($left, $k candidates)"
+  }
+
+  /** Java names of the candidate ids, vectors and null masks, hoisted
+    * into the generated class once. */
+  protected def genCands(ctx: CodegenContext): (String, String, String) = {
+    val ref = ctx.addReferenceObj("cands", cands, classOf[VectorCandidates].getName)
+    (ctx.addMutableState("long[]", "candIds", v => s"$v = $ref.ids();"),
+      ctx.addMutableState("double[][]", "candVecs", v => s"$v = $ref.vecs();"),
+      ctx.addMutableState("boolean[][]", "candNulls", v => s"$v = $ref.nulls();"))
+  }
+
+  /** Java: the boxed id of candidate `k`, in the id column's type. */
+  protected def genId(ids: String, k: String): String =
+    if (idType == IntegerType) s"java.lang.Integer.valueOf((int) $ids[$k])"
+    else s"java.lang.Long.valueOf($ids[$k])"
+
+  /** Java: the (id, score) result row of candidate `k`. */
+  protected def genBest(ids: String, k: String, sNull: String, s: String): String =
+    s"new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(new Object[] {" +
+      s"${genId(ids, k)}, $sNull ? null : (Object) java.lang.Double.valueOf($s)})"
+
+  protected def bestStruct: StructType = StructType(Seq(
+    StructField("id", idType, nullable = false), StructField("score", DoubleType)))
 }
 
 /** See [[VectorMath.slice_l2sq]]. `start` is 1-based and must be positive
@@ -202,5 +361,205 @@ case class Dot(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Dot =
+    copy(left = newLeft, right = newRight)
+}
+
+/** See [[VectorMath.nearest_cosine]]. */
+case class NearestCosine(left: Expression, right: Expression, rounded: Boolean)
+    extends NearestCandidate {
+
+  override protected def elementTypes: Seq[DataType] = Seq(FloatType)
+  override def dataType: DataType = bestStruct
+  override def prettyName: String = "nearest_cosine"
+
+  override def eval(input: InternalRow): Any = {
+    val c = cands
+    if (c.size == 0) return null
+    val y = left.eval(input).asInstanceOf[ArrayData]
+    var bk = -1
+    var bNull = true
+    var b = 0.0
+    var k = 0
+    while (k < c.size) {
+      val x = c.vecs(k)
+      val sNull = y == null || x == null
+      var s = 0.0
+      if (!sNull) {
+        val n = math.min(x.length, y.numElements())
+        var dot = 0.0; var nx = 0.0; var ny = 0.0
+        var i = 0
+        while (i < n) {
+          val xv = x(i)
+          val yv = y.getFloat(i).toDouble
+          dot += xv * yv; nx += xv * xv; ny += yv * yv
+          i += 1
+        }
+        s = dot / (math.sqrt(nx) * math.sqrt(ny))
+        if (rounded) s = VectorMath.round4(s)
+      }
+      if (bk < 0 || VectorMath.beats(1, sNull, s, c.ids(k), bNull, b, c.ids(bk))) {
+        bk = k; bNull = sNull; b = s
+      }
+      k += 1
+    }
+    InternalRow(c.id(bk, idType), if (bNull) null else b)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val y = left.genCode(ctx)
+    val (ids, vecs, _) = genCands(ctx)
+    val vm = "org.apache.spark.sql.graft.VectorMath"
+    val Seq(k, bk, bNull, b, x, sNull, s, n, i, dot, nx, ny, xv, yv) =
+      Seq("k", "bk", "bNull", "b", "x", "sNull", "s", "n", "i", "dot", "nx", "ny",
+        "xv", "yv").map(ctx.freshName)
+    ev.copy(code = code"""
+      |${y.code}
+      |boolean ${ev.isNull} = $ids.length == 0;
+      |InternalRow ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  int $bk = -1;
+      |  boolean $bNull = true;
+      |  double $b = 0.0;
+      |  for (int $k = 0; $k < $ids.length; $k++) {
+      |    double[] $x = $vecs[$k];
+      |    boolean $sNull = ${y.isNull} || $x == null;
+      |    double $s = 0.0;
+      |    if (!$sNull) {
+      |      int $n = java.lang.Math.min($x.length, ${y.value}.numElements());
+      |      double $dot = 0.0, $nx = 0.0, $ny = 0.0;
+      |      for (int $i = 0; $i < $n; $i++) {
+      |        double $xv = $x[$i];
+      |        double $yv = (double) ${y.value}.getFloat($i);
+      |        $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
+      |      }
+      |      $s = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
+      |      ${if (rounded) s"$s = $vm.round4($s);" else ""}
+      |    }
+      |    if ($bk < 0 || $vm.beats(1, $sNull, $s, $ids[$k], $bNull, $b, $ids[$bk])) {
+      |      $bk = $k; $bNull = $sNull; $b = $s;
+      |    }
+      |  }
+      |  ${ev.value} = ${genBest(ids, bk, bNull, b)};
+      |}
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCosine =
+    copy(left = newLeft, right = newRight)
+}
+
+/** See [[VectorMath.nearest_l2]]. */
+case class NearestL2(left: Expression, right: Expression, nsub: Int, subDim: Int,
+    keepDist: Boolean) extends NearestCandidate {
+
+  override protected def elementTypes: Seq[DataType] = Seq(FloatType, DoubleType)
+  override def dataType: DataType =
+    ArrayType(if (keepDist) bestStruct else idType, containsNull = false)
+  override def prettyName: String = "nearest_l2"
+
+  @transient private lazy val get = VectorMath.getter(left)
+
+  override def eval(input: InternalRow): Any = {
+    val c = cands
+    if (c.size == 0) return null
+    val y = left.eval(input).asInstanceOf[ArrayData]
+    val out = new Array[Any](nsub)
+    for (sub <- 0 until nsub) {
+      val start = sub.toLong * subDim
+      var bk = -1
+      var bNull = true
+      var b = 0.0
+      var k = 0
+      while (k < c.size) {
+        val x = c.vecs(k)
+        val xn = c.nulls(k)
+        var dNull = y == null || x == null
+        var d = 0.0
+        if (!dNull) {
+          val ny = math.max(0L, math.min(y.numElements() - start, subDim.toLong)).toInt
+          val nx = math.max(0L, math.min(x.length - start, subDim.toLong)).toInt
+          if (ny != nx) dNull = true // zip_with pads the short side with NULL
+          var i = 0
+          while (!dNull && i < ny) {
+            val j = (start + i).toInt
+            if (y.isNullAt(j) || (xn != null && xn(j))) dNull = true
+            else { val t = get(y, j) - x(j); d += t * t }
+            i += 1
+          }
+        }
+        if (bk < 0 || VectorMath.beats(-1, dNull, d, c.ids(k), bNull, b, c.ids(bk))) {
+          bk = k; bNull = dNull; b = d
+        }
+        k += 1
+      }
+      out(sub) =
+        if (keepDist) InternalRow(c.id(bk, idType), if (bNull) null else b)
+        else c.id(bk, idType)
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val y = left.genCode(ctx)
+    val (ids, vecs, nulls) = genCands(ctx)
+    val vm = "org.apache.spark.sql.graft.VectorMath"
+    val Seq(out, sub, start, k, bk, bNull, b, x, xn, dNull, d, ny, nx, i, j, t) =
+      Seq("out", "sub", "start", "k", "bk", "bNull", "b", "x", "xn", "dNull", "d",
+        "ny", "nx", "i", "j", "t").map(ctx.freshName)
+    val (outDecl, store, wrap) =
+      if (keepDist) ("Object[]", genBest(ids, bk, bNull, b),
+        s"new org.apache.spark.sql.catalyst.util.GenericArrayData($out)")
+      else {
+        val prim = if (idType == IntegerType) "int" else "long"
+        (s"$prim[]", s"($prim) $ids[$bk]",
+          s"org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out)")
+      }
+    val elem = outDecl.stripSuffix("[]")
+    ev.copy(code = code"""
+      |${y.code}
+      |boolean ${ev.isNull} = $ids.length == 0;
+      |ArrayData ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  $outDecl $out = new $elem[$nsub];
+      |  for (int $sub = 0; $sub < $nsub; $sub++) {
+      |    long $start = (long) $sub * ${subDim}L;
+      |    int $bk = -1;
+      |    boolean $bNull = true;
+      |    double $b = 0.0;
+      |    for (int $k = 0; $k < $ids.length; $k++) {
+      |      double[] $x = $vecs[$k];
+      |      boolean[] $xn = $nulls[$k];
+      |      boolean $dNull = ${y.isNull} || $x == null;
+      |      double $d = 0.0;
+      |      if (!$dNull) {
+      |        int $ny = (int) java.lang.Math.max(0L,
+      |          java.lang.Math.min((long) ${y.value}.numElements() - $start, ${subDim}L));
+      |        int $nx = (int) java.lang.Math.max(0L,
+      |          java.lang.Math.min((long) $x.length - $start, ${subDim}L));
+      |        if ($ny != $nx) $dNull = true;
+      |        for (int $i = 0; !$dNull && $i < $ny; $i++) {
+      |          int $j = (int) ($start + $i);
+      |          if (${y.value}.isNullAt($j) || ($xn != null && $xn[$j])) {
+      |            $dNull = true;
+      |          } else {
+      |            double $t = ${VectorMath.genGet(left, y.value.toString, j)} - $x[$j];
+      |            $d += $t * $t;
+      |          }
+      |        }
+      |      }
+      |      if ($bk < 0 || $vm.beats(-1, $dNull, $d, $ids[$k], $bNull, $b, $ids[$bk])) {
+      |        $bk = $k; $bNull = $dNull; $b = $d;
+      |      }
+      |    }
+      |    $out[$sub] = $store;
+      |  }
+      |  ${ev.value} = $wrap;
+      |}
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestL2 =
     copy(left = newLeft, right = newRight)
 }

@@ -61,26 +61,27 @@ class PlanLintSpec extends SparkSpec {
     // aggregate, or a bounded eval sample. The |big|·|tiny| scan is the
     // intended plan (VERDICT r6 plan audit); the lint can't see size, the
     // reviewer can.
+    // The vector assignment kernels (nearest centroid, PQ encode, L2
+    // assignment) run per row with no join, so their callers
+    // q40/q59/q76/q78/q169/q237 are off this list.
     val tinyBroadcastJoin = Seq(
-      "q36_jaccard_pairs", "q39_cosine_topk", "q40_ivf_assign",
+      "q36_jaccard_pairs", "q39_cosine_topk",
       "q49_edit_distance", "q51_ivf_search", "q55_ivf_recall",
-      "q56_topk_agg", "q59_cosine_neardup", "q76_pq_assign", "q78_kmeans",
-      "q79_trained_ivf", "q83_containment", "q99_pq_search",
+      "q56_topk_agg", "q79_trained_ivf", "q83_containment", "q99_pq_search",
       "q100_pq_recall", "q106_rolling_dau", "q109_bm25", "q113_silhouette",
       "q119_pmi", "q153_baskets", "q154_cramers_v", "q156_jsd",
-      "q169_kmeans_shift", "q171_lsh_recall", "q174_label_agreement",
+      "q171_lsh_recall", "q174_label_agreement",
       "q179_value_drift", "q192_key_skew", "q195_calibration",
       "q218_log_odds", "q221_incremental", "q229_kmv_setops",
-      "q237_semantic_decontam",
       "q240_tablesample", // two 1-row CTEs (sample count × total count)
       "q185_naive_bayes", // prior vs broadcast 1-row total (listener-visible)
       "q247_pq_rerank", // q99's 4-row codebook cartesian feeds the shortlist
       "q250_tpch11", // 1-row global (total, count) threshold broadcast
       "q252_rhp_neardup", // 24-row hyperplane table cross into signatures
-      "q253_ann_index", // q51's 8-row centroid cross (build/append/probe)
+      "q253_ann_index", // the probe's query × 8-centroid cross (topCentroids, q51's probe)
       "q256_expectations", // 1-row checks aggregate × 1-row anti-join count
       "q261_retrieval_eval", // q109's 1-row (n_docs, sum_dl) totals cross
-      "q267_ivfpq_index", // 8-row centroid / 4-row codebook broadcast crosses
+      "q267_ivfpq_index", // probePq's query × 8-centroid (topCentroids) and query × 4-codeword (pqLut) crosses
       "q276_weighted_bernoulli", // 1-row broadcast total-weight cross (PPS denominator)
       "q280_incr_bm25", // q109's 1-row (n_docs, sum_dl) totals cross over state
       "q281_bm25_takedown", // same totals cross over the post-retraction state
@@ -90,10 +91,10 @@ class PlanLintSpec extends SparkSpec {
       "q285_train_eval", // same weight-vector cross: 3 train steps + 1 eval pass
       "q290_converged_training", // same 1-row weight cross, loop-until-converged
       "q293_bloom_audit", // 1-row n_ngrams total cross into the 3-row per-mBits aggregate
-      "q297_semdedup", // 8-row trained-centroid cross (assignL2), the q78/q169 shape
-      "q307_ann_drift", // 20-row query-set cross (q39's shape) + 8-row frozen-centroid cross
-      "q309_ann_fit_ledger", // 8-row frozen-centroid cross + 1-row build-anchor cross
-      "q315_ann_reindex") // 8-row retrained-centroid cross (assignCosine) + 20-row probe set — q51's shape over the reindexed generation
+      "q297_semdedup", // K-row trained-centroid cross of its packed-BIGINT cosine argmax (assignCos)
+      "q307_ann_drift", // 20-row query-set cross (q39's shape) + the probe's query × centroid cross
+      "q309_ann_fit_ledger", // 1-row build-anchor cross (fitLedger)
+      "q315_ann_reindex") // 20-row probe set × retrained centroids (topCentroids) — q51's probe over the reindexed generation
     // (b) unpartitioned windows (and the SinglePartition exchange feeding
     // them) that run over post-aggregate domains — |days|, |sources|,
     // |deciles|, |clusters|, vocabulary heads — or over semantics that are

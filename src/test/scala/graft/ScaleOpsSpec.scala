@@ -165,16 +165,19 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("centroid assignment is map-side argmin, not a window sort") {
     // the window form shuffles |centroids|× the vector rows plus a sort;
-    // min_by/max_by partially aggregates, so one row per vector crosses
-    // the exchange — assert the plan shape the scale design depends on
+    // the per-row kernels scan the collected centroids inside the map
+    // stage, so the assignment needs no exchange and no aggregate (not
+    // even the grouped min_by/max_by over a cross join they replaced) —
+    // assert the plan shape the scale design depends on
     val plan = SparkEntry.queries("q78_kmeans")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_min_by"),
-      s"assignment not partially aggregated:\n$plan")
+    assert(plan.contains("nearest_l2"), s"assignment not the per-row kernel:\n$plan")
+    assert(!plan.contains("min_by"), s"grouped argmin crept back in:\n$plan")
     assert(!plan.contains("Window"), s"window sort crept back in:\n$plan")
     val plan40 = SparkEntry.queries("q40_ivf_assign")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
-    assert(plan40.contains("partial_max_by") && !plan40.contains("Window"))
+    assert(plan40.contains("nearest_cosine") && !plan40.contains("max_by") &&
+      !plan40.contains("Window"), plan40)
   }
 
   test("q94 joins the exploded corpus against a BROADCAST vocab, map-side combined") {
