@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StandingTables
 
 /** Incremental aggregate maintenance — a standing partial-aggregate table
   * kept current by blind appends, the third member of the standing-state
@@ -134,7 +135,7 @@ object AggState {
       val rebuilt = partials(
         survivors.join(broadcast(affected), keys, "left_semi"), keys, valueCol)
       // pin before overwriting the directory the plan reads from
-      val newState = spark.read.parquet(statePath(stateDir))
+      val newState = StandingTables.read(spark, statePath(stateDir))
         .join(broadcast(affected), keys, "left_anti")
         .unionByName(rebuilt)
         .localCheckpoint(eager = true)
@@ -144,7 +145,7 @@ object AggState {
 
   /** The exact current aggregate: fold all slice rows per key. */
   def merged(spark: SparkSession, stateDir: String, keys: Seq[String]): DataFrame =
-    mergeRows(spark.read.parquet(statePath(stateDir)), keys)
+    mergeRows(StandingTables.read(spark, statePath(stateDir)), keys)
 
   private def mergeRows(state: DataFrame, keys: Seq[String]): DataFrame =
     state.groupBy(keys.map(col): _*)
@@ -213,7 +214,7 @@ object AggState {
     * re-take the bottom-k, apply the KMV estimator. */
   def mergedDistinct(spark: SparkSession, stateDir: String,
       keys: Seq[String]): DataFrame =
-    kmvFold(spark.read.parquet(distinctStatePath(stateDir)), keys)
+    kmvFold(StandingTables.read(spark, distinctStatePath(stateDir)), keys)
       .withColumn("__h_k", element_at(col("__kmv"), KmvK))
       .select(keys.map(col) ++ Seq(
         when(size(col("__kmv")) < KmvK, size(col("__kmv")).cast("long"))
@@ -281,7 +282,7 @@ object AggState {
   def mergedHist(spark: SparkSession, stateDir: String,
       keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val folded = spark.read.parquet(histStatePath(stateDir))
+    val folded = StandingTables.read(spark, histStatePath(stateDir))
       .groupBy(keys.map(col) :+ col("__idx"): _*)
       .agg(sum("__cnt").as("__cnt"))
       // a fully-retracted bucket vanishes, exactly as from scratch
@@ -436,7 +437,7 @@ object AggState {
     * array a from-scratch build writes). */
   def mergedBloom(spark: SparkSession, stateDir: String,
       keys: Seq[String]): DataFrame =
-    spark.read.parquet(bloomStatePath(stateDir))
+    StandingTables.read(spark, bloomStatePath(stateDir))
       .groupBy((keys :+ "__word").map(col): _*)
       .agg(bit_or(col("__bits")).as("__bits"))
 
@@ -526,7 +527,7 @@ object AggState {
         collapse: DataFrame => DataFrame,
         view: String => DataFrame): Unit =
       if (new File(path(stateDir)).isDirectory) {
-        val state = spark.read.parquet(path(stateDir))
+        val state = StandingTables.read(spark, path(stateDir))
         collapse(state).repartition(Compaction.filesFor(state, targetFileBytes))
           .write.mode("overwrite").parquet(path(outStateDir))
         Reconcile.requireMatch("optimize",

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
-import org.apache.spark.sql.graft.VectorMath
+import org.apache.spark.sql.graft.{StandingTables, VectorMath}
 
 /** Standing IVF (ANN) index as a TABLE — the vector-space sibling of
   * [[DedupIndex]] (reference analog: the memo dict reused across work
@@ -37,11 +37,17 @@ import org.apache.spark.sql.graft.VectorMath
   * build→append→probe for real and is checked against q51's own oracle
   * (the answer depends only on index content).
   *
-  * 100 TB design: centroids and codebooks are tiny, so the assignment
-  * and PQ encode run per row against their driver-collected candidate
-  * literals — an append is one map stage straight into the partitioned
-  * write, with no shuffle; probes touch only probed partitions and
-  * shuffle only the leaf candidates.
+  * 100 TB design: centroids and codebooks are tiny, so the assignment,
+  * PQ encode and top-nprobe selection run per row against their
+  * driver-collected candidate literals — an append is one map stage
+  * straight into the partitioned write, with no shuffle. A probe is
+  * planned around its request: the probe set is broadcast into the
+  * vectors scan, which streams past it and reads only the probed
+  * partitions, so the only exchanges carry each task's leaf top-k per
+  * query (and, for probePq, the ADC scores of the probed partitions'
+  * candidates) — never a vectors row that has not met a query. The
+  * standing tables are read without a schema job
+  * ([[org.apache.spark.sql.graft.StandingTables]]).
   */
 object AnnIndex {
 
@@ -79,10 +85,10 @@ object AnnIndex {
     * assigned/encoded against it — blind parquet appends, no
     * read-modify-write. */
   def append(spark: SparkSession, embeddings: DataFrame, indexDir: String): Unit =
-    writeVectors(embeddings, spark.read.parquet(centroidsPath(indexDir)),
+    writeVectors(embeddings, StandingTables.read(spark, centroidsPath(indexDir)),
       indexDir, "append",
       if (new File(codebooksPath(indexDir)).isDirectory)
-        Some(spark.read.parquet(codebooksPath(indexDir))) else None)
+        Some(StandingTables.read(spark, codebooksPath(indexDir))) else None)
 
   /** Drift-aware REBUILD into a new generation dir (r18 — the action the
     * q307/q309 retrain trigger advises): retrain the coarse quantizer
@@ -121,7 +127,7 @@ object AnnIndex {
     val cent = retrainCentroids(live, k)
     val cb =
       if (new File(codebooksPath(indexDir)).isDirectory)
-        Some(spark.read.parquet(codebooksPath(indexDir)))
+        Some(StandingTables.read(spark, codebooksPath(indexDir)))
       else None
     build(live, cent, outIndexDir, cb)
     recordFitStats(spark, live, outIndexDir, "build")
@@ -148,7 +154,7 @@ object AnnIndex {
     * (batchId "build" anchors the ledger) and each `append`. */
   def recordFitStats(spark: SparkSession, embeddings: DataFrame,
       indexDir: String, batchId: String): Unit = {
-    val cent = spark.read.parquet(centroidsPath(indexDir))
+    val cent = StandingTables.read(spark, centroidsPath(indexDir))
     nearestCentroid(embeddings.select("vec_id", "embedding"), cent,
         Seq("vec_id"), Seq("ascore"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -171,7 +177,7 @@ object AnnIndex {
     * 1-row-per-batch ledger instead of a corpus scan. */
   def fitLedger(spark: SparkSession, indexDir: String,
       dropE4: Long = 100L): DataFrame = {
-    val st = spark.read.parquet(fitStatsPath(indexDir))
+    val st = StandingTables.read(spark, fitStatsPath(indexDir))
       .withColumn("mean_assign_e4", expr("sum_assign_e4 div n_vecs"))
     val anchor = st.filter(col("batch_id") === "build")
       .select(col("mean_assign_e4").as("base_e4"))
@@ -210,12 +216,14 @@ object AnnIndex {
       .write.mode("append").parquet(tombstonesPath(indexDir))
 
   /** The index's LIVE vectors: raw table minus tombstoned ids (the
-    * tombstone set is delta-sized — AQE broadcasts the anti join). */
+    * tombstone set is delta-sized — AQE broadcasts the anti join). An
+    * anti join ignores duplicate keys on its right side, so ids removed
+    * twice need no distinct, and no exchange of their own. */
   private def liveVectors(spark: SparkSession, indexDir: String): DataFrame = {
-    val raw = spark.read.parquet(vectorsPath(indexDir))
+    val raw = StandingTables.read(spark, vectorsPath(indexDir))
     if (new File(tombstonesPath(indexDir)).isDirectory)
-      raw.join(spark.read.parquet(tombstonesPath(indexDir))
-        .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
+      raw.join(StandingTables.read(spark, tombstonesPath(indexDir)).select("vec_id"),
+        Seq("vec_id"), "left_anti")
     else raw
   }
 
@@ -245,20 +253,28 @@ object AnnIndex {
     * partitions (the q253 DPP discipline), candidates are scored in the
     * compressed domain (ADC: per-query LUT broadcast against the stored
     * 4-byte codes — the embedding column is never read for scoring), the
-    * ADC top-`shortlistK` joins back to raw vectors for exact L2, and the
-    * re-rank's top-`topK` is served. The ADC sum is [[adcScore]]'s
-    * fixed-order d0+d1+d2+d3 (q99's cross-engine determinism trick). */
+    * ADC top-`shortlistK` joins back to the probed partitions' raw vectors
+    * for exact L2, and the re-rank's top-`topK` is served. The ADC sum is
+    * [[adcScore]]'s fixed-order d0+d1+d2+d3 (q99's cross-engine
+    * determinism trick). Both vectors scans stream past the broadcast
+    * probe set, so each is pruned to the probed partitions; the answer is
+    * |queries| × `topK` rows, sorted in one partition (see [[probe]]). */
   def probePq(spark: SparkSession, queries: DataFrame, indexDir: String,
       nprobe: Int = 2, shortlistK: Int = 32, topK: Int = 5): DataFrame = {
-    val cent = spark.read.parquet(centroidsPath(indexDir))
-    val cw = spark.read.parquet(codebooksPath(indexDir))
-    val vecs = liveVectors(spark, indexDir)
+    val cent = StandingTables.read(spark, centroidsPath(indexDir))
+    val cw = StandingTables.read(spark, codebooksPath(indexDir))
     val probes = topCentroids(queries, cent, nprobe)
       .select(col("qid"), col("centroid_id").cast("long").as("pcid"))
+    // the probe set is the request, so it is the broadcast side: the
+    // vectors scan streams past it, and dynamic partition pruning reuses
+    // the same broadcast to read only the probed partitions — the index
+    // table is never shuffled, whatever the planner estimates for the
+    // probe frame
+    val probed = liveVectors(spark, indexDir)
+      .withColumn("ccid", col("centroid_id").cast("long"))
+      .join(broadcast(probes), col("pcid") === col("ccid") && col("qid") =!= col("vec_id"))
     val dt = pqLut(queries, cw)
-    val cands = probes
-      .join(vecs.withColumn("ccid", col("centroid_id").cast("long")),
-        col("pcid") === col("ccid") && col("qid") =!= col("vec_id"))
+    val cands = probed
       .select(col("qid"), col("vec_id"),
         posexplode(col("codes")).as(Seq("subspace", "code")))
     val adc = adcScore(cands.join(broadcast(dt), Seq("qid", "subspace", "code")))
@@ -267,26 +283,35 @@ object AnnIndex {
       .select(col("qid"), explode(col("top")).as("sc"))
       .select(col("qid"), col("sc.id").as("vec_id"))
     // exact re-rank: shortlist + query vectors broadcast, ONE map-side
-    // reduction of the vectors scan (q247's plan shape)
+    // reduction of the probed partitions' scan (q247's plan shape); a
+    // shortlisted vector lives in a partition its query probed
     val l2 = VectorMath.l2sq(col("qe"), col("embedding"))
     val wR = Window.partitionBy("qid").orderBy(asc("dist"), asc("vec_id"))
-    vecs.select(col("vec_id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("vec_id"))
+    sortedAnswer(probed.select(col("qid"), col("vec_id"), col("embedding"))
+      .join(broadcast(shortlist), Seq("qid", "vec_id"))
       .join(broadcast(queries), Seq("qid"))
       .withColumn("dist", l2)
       .withColumn("rank", row_number().over(wR).cast("long"))
       .filter(col("rank") <= topK)
       .select(col("qid"), col("rank"), col("vec_id"),
-        round(col("dist"), 4).as("l2"))
-      .orderBy("qid", "rank")
+        round(col("dist"), 4).as("l2")))
   }
+
+  /** A probe's answer — |queries| × topK rows, delta-sized by
+    * construction — sorted by (qid, rank) in ONE partition: a
+    * `coalesce(1).sortWithinPartitions`, not a range-partitioned orderBy
+    * and the sampling job it launches. */
+  private def sortedAnswer(ranked: DataFrame): DataFrame =
+    ranked.coalesce(1).sortWithinPartitions("qid", "rank")
 
   /** Top-k search against the standing index: q51's probe discipline
     * (top-`nprobe` centroids per query, leaf top-`topK` by cosine) over
-    * the persisted assignment. Queries carry (qid, qe). */
+    * the persisted assignment. Queries carry (qid, qe), qid unique. The
+    * answer is sorted by (qid, rank) in one partition (it is at most
+    * |queries| × `topK` rows). */
   def probe(spark: SparkSession, queries: DataFrame, indexDir: String,
       nprobe: Int = 2, topK: Int = 5): DataFrame = {
-    val cent = spark.read.parquet(centroidsPath(indexDir))
+    val cent = StandingTables.read(spark, centroidsPath(indexDir))
     val assign = liveVectors(spark, indexDir)
       .select(col("vec_id").as("cid"),
         col("centroid_id").cast("long").as("ccid"), col("embedding").as("ce"))
@@ -299,11 +324,12 @@ object AnnIndex {
   // elsewhere, so a kernel's plan shape changes in exactly one place.
   //
   // The three assignment kernels (nearestCentroid, pqAssign/pqEncode,
-  // assignL2) are PER ROW: the candidate frame is collected once on the
-  // driver and scanned by a native expression (VectorMath.nearest_cosine /
-  // nearest_l2) — no cross join, no shuffle, no aggregate. This equals the
-  // grouped argmax over the cross join exactly when the grouping keys are
-  // unique in the input, which holds at every caller (they key on vec_id,
+  // assignL2) and topCentroids are PER ROW: the candidate frame is
+  // collected once on the driver and scanned by a native expression
+  // (VectorMath.nearest_cosine / top_cosine / nearest_l2) — no cross join,
+  // no shuffle, no aggregate. This equals the grouped argmax (or ranking
+  // window) over the cross join exactly when the grouping keys are unique
+  // in the input, which holds at every caller (they key on vec_id or qid,
   // or on (vec_id, slice) over a union of disjoint slices).
 
   private val PqSubspaces = 4
@@ -352,14 +378,21 @@ object AnnIndex {
   }
 
   /** Each query's (qid, qe, ...) top-`nprobe` centroids by
-    * round(cos, 4), ties to the lowest centroid_id: the query rows joined
-    * to their probed centroids, with `qscore`. */
+    * round(cos, 4) — score descending, NaN highest, NULL lowest, ties to
+    * the lowest centroid_id — as one row per probed centroid: the query's
+    * columns, `centroid_id`, `qscore` and its rank `rn` (1-based). One
+    * per-row kernel over the driver-collected centroids
+    * ([[VectorMath.top_cosine]]): no query × centroid cross join and no
+    * window. Equal to `row_number() <= nprobe` over (qscore DESC,
+    * centroid_id ASC) per qid when qid is unique in `q`. */
   private[graft] def topCentroids(q: DataFrame, cent: DataFrame,
       nprobe: Int): DataFrame = {
-    val wQ = Window.partitionBy("qid").orderBy(desc("qscore"), asc("centroid_id"))
-    q.join(broadcast(cent))
-      .withColumn("qscore", round(cosine_sim(col("centv"), col("qe")), 4))
-      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= nprobe)
+    val (cands, k) = candidateSet(cent, "centroid_id", "centv")
+    nonEmpty(q.select(col("*"),
+        posexplode(VectorMath.top_cosine(col("qe"), cands, nprobe, rounded = true))
+          .as(Seq("_pos", "_top")))
+      .select((q.columns.map(c => col(s"`$c`")) ++ Seq(col("_top.id").as("centroid_id"),
+        col("_top.score").as("qscore"), (col("_pos") + 1).as("rn"))): _*), k)
   }
 
   /** Squared L2 between one 16-dim subspace slice of `a` and the codeword
@@ -445,18 +478,20 @@ object AnnIndex {
 
   /** q51's search over an assigned corpus: probe the top-`nprobe`
     * centroids per query, score only their members, rank by rounded
-    * cosine with cid tie-break. `assign` carries (cid, ccid, ce). */
+    * cosine with cid tie-break. `assign` carries (cid, ccid, ce); the
+    * probe set is broadcast into it (as in [[probePq]]), and the answer
+    * is sorted in one partition (see [[sortedAnswer]]). */
   private[graft] def searchAssigned(q: DataFrame, cent: DataFrame,
       assign: DataFrame, nprobe: Int, topK: Int): DataFrame = {
     val probes = topCentroids(q, cent, nprobe)
       .select(col("qid"), col("qe"), col("centroid_id").as("pcid"))
     val wS = Window.partitionBy("qid").orderBy(desc("score"), asc("cid"))
-    probes.join(assign, col("pcid") === col("ccid") && col("qid") =!= col("cid"))
+    sortedAnswer(assign.join(broadcast(probes),
+        col("pcid") === col("ccid") && col("qid") =!= col("cid"))
       .withColumn("score", round(cosine_sim(col("qe"), col("ce")), 4))
       .withColumn("rank", row_number().over(wS).cast("long"))
       .filter(col("rank") <= topK)
-      .select("qid", "rank", "cid", "score")
-      .orderBy("qid", "rank")
+      .select("qid", "rank", "cid", "score"))
   }
 
   /** Compact the index's accumulated append files into `outIndexDir`
@@ -475,19 +510,19 @@ object AnnIndex {
     val carried = "centroids" +: Seq("codebooks", "fitstats")
       .filter(t => new File(s"$indexDir/$t").isDirectory)
     carried.foreach { t =>
-      val df = spark.read.parquet(s"$indexDir/$t")
+      val df = StandingTables.read(spark, s"$indexDir/$t")
       df.repartition(Compaction.filesFor(df, targetFileBytes))
         .write.mode("overwrite").parquet(s"$outIndexDir/$t")
     }
     val vecs = liveVectors(spark, indexDir)
-    val nOut = Compaction.filesFor(spark.read.parquet(vectorsPath(indexDir)),
+    val nOut = Compaction.filesFor(StandingTables.read(spark, vectorsPath(indexDir)),
       targetFileBytes)
     vecs.repartition(nOut, col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(vectorsPath(outIndexDir))
     Reconcile.requireMatch("optimize",
-      carried.map(t => (t, spark.read.parquet(s"$indexDir/$t"),
-        spark.read.parquet(s"$outIndexDir/$t"))) :+
-        (("vectors", vecs, spark.read.parquet(vectorsPath(outIndexDir)))))
+      carried.map(t => (t, StandingTables.read(spark, s"$indexDir/$t"),
+        StandingTables.read(spark, s"$outIndexDir/$t"))) :+
+        (("vectors", vecs, StandingTables.read(spark, vectorsPath(outIndexDir)))))
   }
 }

@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StandingTables
 
 /** Standing duplicate-cluster assignment — the transitive-closure half of
   * the near-dup lifecycle kept as a TABLE. DedupIndex answers "which docs
@@ -82,7 +83,7 @@ object ClusterState {
     * old components and the losing side relabels. */
   def appendEdges(spark: SparkSession, newEdges: DataFrame, stateDir: String,
       retention: Retention = Retention()): Unit = {
-    val stars = spark.read.parquet(labelsPath(stateDir))
+    val stars = StandingTables.read(spark, labelsPath(stateDir))
       .select(col("id").as("src"), col("cluster_id").as("dst"))
     val comp = ConnectedComponents.components(
       stars.unionByName(newEdges.toDF("src", "dst")))
@@ -115,7 +116,7 @@ object ClusterState {
     val deleted = docIds.select(col("doc_id")).distinct()
       .localCheckpoint(eager = true)
     DedupIndex.remove(deleted, indexDir)
-    val labels = spark.read.parquet(labelsPath(stateDir))
+    val labels = StandingTables.read(spark, labelsPath(stateDir))
     // r19: the emptiness probe rides the pin job as an observed count
     // (the old touched.isEmpty was a second job over the checkpoint)
     val obs = org.apache.spark.sql.Observation()
@@ -144,7 +145,7 @@ object ClusterState {
     * the read for consumers that need only the labels, e.g. the
     * leakage-free split keying ([[graft.queries.Dedup.clusterSplitFromState]]). */
   def labels(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(labelsPath(stateDir)).select("id", "cluster_id")
+    StandingTables.read(spark, labelsPath(stateDir)).select("id", "cluster_id")
 
   /** The current assignment with cluster sizes: one window over the
     * label table (never the corpus). */
@@ -159,7 +160,7 @@ object ClusterState {
 
   private def clustersFrom(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.read.parquet(path)
+    StandingTables.read(spark, path)
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy("cluster_id")))
       .select(col("id"), col("cluster_id"), col("cluster_size"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StandingTables
 
 /** The OPTIMIZE executor — q230 plans compaction bins from file metadata;
   * this operator actually rewrites a table directory into size-targeted
@@ -99,7 +100,7 @@ object Compaction {
       targetFileBytes: Long = 128L << 20, rowGroupBytes: Long = 16L << 20,
       sortKey: Option[String] = None, zorderKeys: Seq[String] = Nil): CompactStats = {
     Generations.refuseInPlace(inDir, outDir, "compact")
-    val df = spark.read.parquet(inDir)
+    val df = StandingTables.read(spark, inDir)
     val inSizes = inputFileSizes(df)
     val bytesIn = inSizes.sum
     val nOut = filesFor(bytesIn, targetFileBytes)
@@ -120,7 +121,7 @@ object Compaction {
     shaped.write.mode("overwrite")
       .option("parquet.block.size", rowGroupBytes.toString)
       .parquet(outDir)
-    val out = spark.read.parquet(outDir)
+    val out = StandingTables.read(spark, outDir)
     val outSizes = inputFileSizes(out)
     val Seq(rep) = Reconcile.report(Seq(("compact", df, out)))
     CompactStats(inSizes.size.toLong, bytesIn,

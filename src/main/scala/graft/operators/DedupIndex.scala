@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StandingTables
 
 import graft.queries.Dedup
 
@@ -29,9 +30,14 @@ import graft.queries.Dedup
   * (proved in `DedupIndexSpec`).
   *
   * 100 TB design: both tables are plain parquet keyed by doc — appends
-  * are blind writes (no read-modify-write), probes touch only colliding
-  * (bi, bh) buckets, and the only shuffles are the probe's band join and
-  * verify join, both sized by the DELTA, not the corpus.
+  * are blind writes (no read-modify-write). A probe is planned around its
+  * request: the probe's own (bi, bh) keys are broadcast into a semi join
+  * with the band table, so the bucket-size count and the candidate
+  * exchange see only the rows of buckets the probe hits — both sized by
+  * the DELTA — and the band table is only scanned and streamed
+  * (IndexProbePlanSpec). The verify join still takes the whole live
+  * `sigs/` table as its build side (broadcast while it fits the
+  * threshold), which is corpus-sized at scale.
   */
 object DedupIndex {
 
@@ -110,15 +116,17 @@ object DedupIndex {
 
   private def tombstones(spark: SparkSession, indexDir: String): Option[DataFrame] =
     if (new File(tombstonesPath(indexDir)).isDirectory)
-      Some(spark.read.parquet(tombstonesPath(indexDir)).select("doc_id").distinct())
+      Some(StandingTables.read(spark, tombstonesPath(indexDir)).select("doc_id"))
     else None
 
   /** The index's LIVE rows: raw table minus tombstoned docs. The
     * tombstone set is delta-sized, so AQE broadcasts the anti join —
-    * map-side, no extra shuffle of the index. */
+    * map-side, no extra shuffle of the index. An anti join ignores
+    * duplicate keys on its right side, so the tombstone ids (a doc may be
+    * removed twice) need no distinct, and no exchange of their own. */
   private def live(spark: SparkSession, indexDir: String,
       path: String => String): DataFrame = {
-    val raw = spark.read.parquet(path(indexDir))
+    val raw = StandingTables.read(spark, path(indexDir))
     tombstones(spark, indexDir)
       .map(ts => raw.join(ts, Seq("doc_id"), "left_anti")).getOrElse(raw)
   }
@@ -150,11 +158,14 @@ object DedupIndex {
   /** Match `deltaDocs` against the standing index: q244's probe shape,
     * with the index read from parquet instead of derived in-query. Output
     * is one row per delta doc with at least one verified match:
-    * (batch_id, n_matches, match_id, jacc_bp). */
+    * (batch_id, n_matches, match_id, jacc_bp), ordered by batch_id. The
+    * answer is delta-sized (at most one row per delta doc), so it is
+    * sorted in ONE partition (`coalesce(1).sortWithinPartitions`) — no
+    * range partitioning and no sampling job. */
   def probe(spark: SparkSession, deltaDocs: DataFrame, indexDir: String): DataFrame = {
     val base = Dedup.minhashBase(deltaDocs)
     val out = probePersisted(spark, base, indexDir)
-      .orderBy("batch_id")
+      .coalesce(1).sortWithinPartitions("batch_id")
       .localCheckpoint(eager = true)
     base.unpersist()
     out
@@ -179,27 +190,48 @@ object DedupIndex {
   /** The probe's VERIFIED PAIRS (b = batch doc, c = indexed doc, jacc_bp)
     * before the per-batch-doc best-match aggregate — the edge feed for
     * standing cluster maintenance (ClusterState): a batch's near-dup
-    * edges against the corpus, never a corpus-corpus pair. */
+    * edges against the corpus, never a corpus-corpus pair.
+    *
+    * The index band rows are screened around the request: a semi join
+    * with the broadcast (bi, bh) keys of the probe's own bands keeps every
+    * row of each bucket the probe hits and nothing else, so the
+    * mega-bucket count ([[cappedBuckets]]) runs over delta-sized rows
+    * and the index table itself is only scanned and streamed. This is
+    * exact: a bucket's count is unchanged by the semi join, and a bucket
+    * the probe misses can never join a candidate. */
   private[graft] def probePairs(prbBase: DataFrame, idxBands: DataFrame,
       idxSigs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.TextHashes
-    // Mega-bucket screen (r13 window-count form): bucket sizes come from
-    // a window count over the same (bi, bh) shuffle the candidate join
-    // keys on — one pass over the index band rows instead of the r12
-    // count+join's two (Dedup.withGroupCount; WindowExec group buffers
-    // spill, so a degenerate band hash is disk-bounded, and its rows are
-    // dropped by the size filter before the join). No bucket ARRAY forms
-    // at all here: the candidate set is the probe-bands ⋈
-    // screened-index-bands equi join, streamed. The pre-r12 shape
-    // collected every index bucket's full member array before the size
-    // filter — one reducer-side array per degenerate key at 100 TB.
-    val screened = Dedup.withGroupCount(idxBands, Seq("bi", "bh"))
+    val prbBands = Dedup.bandKeys(prbBase)
+    val hit = idxBands.join(broadcast(prbBands.select("bi", "bh")), Seq("bi", "bh"),
+      "left_semi")
+    verifiedPairs(prbBase, prbBands, cappedBuckets(hit), idxSigs)
+  }
+
+  /** The index band rows of buckets within [[Dedup.LshBucketCap]]
+    * (singletons stay probe-able — `<= cap`, not `between(2, cap)`),
+    * sized by a window count over (bi, bh) (`Dedup.withGroupCount`;
+    * WindowExec group buffers spill, so a degenerate band hash is
+    * disk-bounded, and its rows are dropped by the size filter before the
+    * join). No bucket ARRAY forms here: the candidate set is an equi
+    * join, streamed. */
+  private[graft] def cappedBuckets(bands: DataFrame): DataFrame =
+    Dedup.withGroupCount(bands, Seq("bi", "bh"))
       .filter(col("cnt") <= Dedup.LshBucketCap)
       .drop("cnt")
-    val cands = Dedup.bandKeys(prbBase)
+
+  /** The candidate pairs of the probe bands `prbBands` against the
+    * `screened` index bands, verified by exact Jaccard against the sigs.
+    * The candidates are hash-partitioned by `b` once: their dedup and the
+    * per-doc aggregate of [[probeBase]] both cluster on `b`, so they
+    * share that one exchange. */
+  private[graft] def verifiedPairs(prbBase: DataFrame, prbBands: DataFrame,
+      screened: DataFrame, idxSigs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.TextHashes
+    val cands = prbBands
       .join(screened.select(col("bi"), col("bh"), col("doc_id").as("c")),
         Seq("bi", "bh"))
       .select(col("doc_id").as("b"), col("c"))
+      .repartition(col("b"))
       .dropDuplicates("b", "c")
     cands
       .join(prbBase.select(col("doc_id").as("b"), col("hs").as("h1"),
@@ -255,7 +287,7 @@ object DedupIndex {
       targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
     def nOutFor(path: String): Int =
-      Compaction.filesFor(spark.read.parquet(path), targetFileBytes)
+      Compaction.filesFor(StandingTables.read(spark, path), targetFileBytes)
     val sigs = live(spark, indexDir, sigsPath)
     sigs.repartition(nOutFor(sigsPath(indexDir)))
       .write.mode("overwrite").parquet(sigsPath(outIndexDir))
@@ -265,7 +297,7 @@ object DedupIndex {
     bands.repartition(nOutFor(bandsPath(indexDir)), col("bi"), col("bh"))
       .write.mode("overwrite").partitionBy("bi").parquet(bandsPath(outIndexDir))
     Reconcile.requireMatch("optimize", Seq(
-      ("sigs", sigs, spark.read.parquet(sigsPath(outIndexDir))),
-      ("bands", bands, spark.read.parquet(bandsPath(outIndexDir)))))
+      ("sigs", sigs, StandingTables.read(spark, sigsPath(outIndexDir))),
+      ("bands", bands, StandingTables.read(spark, bandsPath(outIndexDir)))))
   }
 }

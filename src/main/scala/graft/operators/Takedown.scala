@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StandingTables
 
 /** End-to-end corpus TAKEDOWN across every standing table the curation
   * pipeline maintains (r18) — the GDPR/DMCA-deletion shape. Each table
@@ -48,7 +49,7 @@ object Takedown {
   def plan(spark: SparkSession, pipeDir: String, docIds: DataFrame): Report = {
     val ids = docIds.select(col("doc_id")).distinct()
       .localCheckpoint(eager = true)
-    val corpus = spark.read.parquet(s"$pipeDir/corpus")
+    val corpus = StandingTables.read(spark, s"$pipeDir/corpus")
     val removed = corpus.join(ids, Seq("doc_id"), "left_semi")
     val nRemoved = removed.count()
     val paraGen = Generations.active(s"$pipeDir/para")
@@ -74,7 +75,7 @@ object Takedown {
 
     val ids = docIds.select(col("doc_id")).distinct()
       .localCheckpoint(eager = true)
-    val corpus = spark.read.parquet(corpusDir)
+    val corpus = StandingTables.read(spark, corpusDir)
     // pin BOTH halves before the overwrite destroys the directory the
     // plans read from; the removed docs' TEXT drives the para retraction
     val removed = corpus.join(ids, Seq("doc_id"), "left_semi")

@@ -3,6 +3,7 @@ package graft.operators
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.StandingTables
 
 /** Orphan-file cleanup for parquet table directories — the retention half
   * of table maintenance (Compaction rewrites what IS the table; Vacuum
@@ -56,7 +57,7 @@ object Vacuum {
   }
 
   def orphans(spark: SparkSession, dir: String): (Set[String], Seq[File]) = {
-    val committed = spark.read.parquet(dir).inputFiles.toSet[String]
+    val committed = StandingTables.read(spark, dir).inputFiles.toSet[String]
       .map(u => new File(new java.net.URI(u)).getCanonicalPath)
     val orphan = leafParquet(new File(dir))
       .filterNot(f => committed.contains(f.getCanonicalPath))

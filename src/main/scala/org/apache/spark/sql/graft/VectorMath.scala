@@ -102,6 +102,17 @@ object VectorMath {
     ExpressionUtils.column(NearestCosine(
       ExpressionUtils.expression(vec), ExpressionUtils.expression(cands), rounded))
 
+  /** Per row, the `n` candidates nearest `vec` by cosine, best first, as
+    * an array of struct(id, score) — [[nearest_cosine]]'s order (score
+    * descending, NaN highest, NULL lowest, ties to the lowest id), so its
+    * first element is [[nearest_cosine]]'s answer. Equal to
+    * `row_number() <= n` over (score DESC, id ASC) per row of the cross
+    * join with the candidates; all of them when there are fewer than `n`,
+    * NULL when there are none. */
+  def top_cosine(vec: Column, cands: Column, n: Int, rounded: Boolean): Column =
+    ExpressionUtils.column(NearestCosine(
+      ExpressionUtils.expression(vec), ExpressionUtils.expression(cands), rounded, Some(n)))
+
   /** Per row, for each of `nsub` consecutive `subDim`-wide slices of
     * `vec`, the candidate nearest by squared L2 over that slice — the
     * [[slice_l2sq]] of `vec` and the candidate, 1-based start
@@ -364,31 +375,41 @@ case class Dot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** See [[VectorMath.nearest_cosine]]. */
-case class NearestCosine(left: Expression, right: Expression, rounded: Boolean)
-    extends NearestCandidate {
+/** See [[VectorMath.nearest_cosine]] (`top` = None) and
+  * [[VectorMath.top_cosine]] (`top` = Some(n)). One loop over the
+  * candidates keeps the n best so far in a list sorted best first: a
+  * candidate enters after every kept one it does not beat, so it walks up
+  * from the tail; n = 1 is a plain argmax. */
+case class NearestCosine(left: Expression, right: Expression, rounded: Boolean,
+    top: Option[Int] = None) extends NearestCandidate {
+
+  require(top.forall(_ > 0), s"top_cosine needs n > 0, got ${top.getOrElse(0)}")
+
+  private def n: Int = top.getOrElse(1)
 
   override protected def elementTypes: Seq[DataType] = Seq(FloatType)
-  override def dataType: DataType = bestStruct
-  override def prettyName: String = "nearest_cosine"
+  override def dataType: DataType =
+    if (top.isEmpty) bestStruct else ArrayType(bestStruct, containsNull = false)
+  override def prettyName: String = if (top.isEmpty) "nearest_cosine" else "top_cosine"
 
   override def eval(input: InternalRow): Any = {
     val c = cands
     if (c.size == 0) return null
     val y = left.eval(input).asInstanceOf[ArrayData]
-    var bk = -1
-    var bNull = true
-    var b = 0.0
+    val bk = new Array[Int](n)
+    val bNull = new Array[Boolean](n)
+    val b = new Array[Double](n)
+    var kept = 0
     var k = 0
     while (k < c.size) {
       val x = c.vecs(k)
       val sNull = y == null || x == null
       var s = 0.0
       if (!sNull) {
-        val n = math.min(x.length, y.numElements())
+        val len = math.min(x.length, y.numElements())
         var dot = 0.0; var nx = 0.0; var ny = 0.0
         var i = 0
-        while (i < n) {
+        while (i < len) {
           val xv = x(i)
           val yv = y.getFloat(i).toDouble
           dot += xv * yv; nx += xv * xv; ny += yv * yv
@@ -397,37 +418,57 @@ case class NearestCosine(left: Expression, right: Expression, rounded: Boolean)
         s = dot / (math.sqrt(nx) * math.sqrt(ny))
         if (rounded) s = VectorMath.round4(s)
       }
-      if (bk < 0 || VectorMath.beats(1, sNull, s, c.ids(k), bNull, b, c.ids(bk))) {
-        bk = k; bNull = sNull; b = s
+      var j = kept
+      while (j > 0 && VectorMath.beats(1, sNull, s, c.ids(k), bNull(j - 1), b(j - 1),
+          c.ids(bk(j - 1)))) j -= 1
+      if (j < n) {
+        var t = math.min(kept, n - 1)
+        while (t > j) { bk(t) = bk(t - 1); bNull(t) = bNull(t - 1); b(t) = b(t - 1); t -= 1 }
+        bk(j) = k; bNull(j) = sNull; b(j) = s
+        if (kept < n) kept += 1
       }
       k += 1
     }
-    InternalRow(c.id(bk, idType), if (bNull) null else b)
+    def row(j: Int) = InternalRow(c.id(bk(j), idType), if (bNull(j)) null else b(j))
+    if (top.isEmpty) row(0) else new GenericArrayData(Array.tabulate[Any](kept)(row))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val y = left.genCode(ctx)
     val (ids, vecs, _) = genCands(ctx)
     val vm = "org.apache.spark.sql.graft.VectorMath"
-    val Seq(k, bk, bNull, b, x, sNull, s, n, i, dot, nx, ny, xv, yv) =
-      Seq("k", "bk", "bNull", "b", "x", "sNull", "s", "n", "i", "dot", "nx", "ny",
-        "xv", "yv").map(ctx.freshName)
+    // the kept list, allocated once per generated class
+    val bk = ctx.addMutableState("int[]", "bestK", v => s"$v = new int[$n];")
+    val bNull = ctx.addMutableState("boolean[]", "bestNull", v => s"$v = new boolean[$n];")
+    val b = ctx.addMutableState("double[]", "bestScore", v => s"$v = new double[$n];")
+    val Seq(kept, k, j, t, x, sNull, s, len, i, dot, nx, ny, xv, yv, out) =
+      Seq("kept", "k", "j", "t", "x", "sNull", "s", "len", "i", "dot", "nx", "ny",
+        "xv", "yv", "out").map(ctx.freshName)
+    val result = top match {
+      case None => s"${ev.value} = ${genBest(ids, s"$bk[0]", s"$bNull[0]", s"$b[0]")};"
+      case Some(_) =>
+        s"""Object[] $out = new Object[$kept];
+           |for (int $j = 0; $j < $kept; $j++) {
+           |  $out[$j] = ${genBest(ids, s"$bk[$j]", s"$bNull[$j]", s"$b[$j]")};
+           |}
+           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         """.stripMargin
+    }
+    val javaType = if (top.isEmpty) "InternalRow" else "ArrayData"
     ev.copy(code = code"""
       |${y.code}
       |boolean ${ev.isNull} = $ids.length == 0;
-      |InternalRow ${ev.value} = null;
+      |$javaType ${ev.value} = null;
       |if (!${ev.isNull}) {
-      |  int $bk = -1;
-      |  boolean $bNull = true;
-      |  double $b = 0.0;
+      |  int $kept = 0;
       |  for (int $k = 0; $k < $ids.length; $k++) {
       |    double[] $x = $vecs[$k];
       |    boolean $sNull = ${y.isNull} || $x == null;
       |    double $s = 0.0;
       |    if (!$sNull) {
-      |      int $n = java.lang.Math.min($x.length, ${y.value}.numElements());
+      |      int $len = java.lang.Math.min($x.length, ${y.value}.numElements());
       |      double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-      |      for (int $i = 0; $i < $n; $i++) {
+      |      for (int $i = 0; $i < $len; $i++) {
       |        double $xv = $x[$i];
       |        double $yv = (double) ${y.value}.getFloat($i);
       |        $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
@@ -435,11 +476,18 @@ case class NearestCosine(left: Expression, right: Expression, rounded: Boolean)
       |      $s = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
       |      ${if (rounded) s"$s = $vm.round4($s);" else ""}
       |    }
-      |    if ($bk < 0 || $vm.beats(1, $sNull, $s, $ids[$k], $bNull, $b, $ids[$bk])) {
-      |      $bk = $k; $bNull = $sNull; $b = $s;
+      |    int $j = $kept;
+      |    while ($j > 0 && $vm.beats(1, $sNull, $s, $ids[$k], $bNull[$j - 1], $b[$j - 1],
+      |        $ids[$bk[$j - 1]])) $j--;
+      |    if ($j < $n) {
+      |      for (int $t = java.lang.Math.min($kept, ${n - 1}); $t > $j; $t--) {
+      |        $bk[$t] = $bk[$t - 1]; $bNull[$t] = $bNull[$t - 1]; $b[$t] = $b[$t - 1];
+      |      }
+      |      $bk[$j] = $k; $bNull[$j] = $sNull; $b[$j] = $s;
+      |      if ($kept < $n) $kept++;
       |    }
       |  }
-      |  ${ev.value} = ${genBest(ids, bk, bNull, b)};
+      |  $result
       |}
     """.stripMargin)
   }

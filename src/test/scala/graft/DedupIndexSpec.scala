@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 
-import graft.operators.DedupIndex
+import graft.operators.{DedupIndex, GroupedKernels}
+import graft.queries.Dedup
 
 /** The standing LSH index's lifecycle contract: incremental maintenance
   * must be INVISIBLE — an index built in batches answers probes exactly
@@ -118,5 +120,69 @@ class DedupIndexSpec extends SparkSpec with BeforeAndAfterEach {
     val q246 = SparkEntry.queries("q246_standing_index")(spark, dir)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(q244.toSeq == q246.toSeq)
+  }
+
+  // ---- the request-screened bucket count vs the full-index one ----------
+
+  /** An index table's live rows, read the plain way. */
+  private def liveRows(indexDir: String, table: String): DataFrame = {
+    val raw = spark.read.parquet(s"$indexDir/$table")
+    if (new java.io.File(s"$indexDir/tombstones").isDirectory)
+      raw.join(spark.read.parquet(s"$indexDir/tombstones"), Seq("doc_id"), "left_anti")
+    else raw
+  }
+
+  private def pairRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The probe's verified pairs against `indexDir`, and the same pairs
+    * with the bucket count run over every live index band row. */
+  private def screenedAndFull(base: DataFrame, indexDir: String): (Seq[String], Seq[String]) =
+    (pairRows(DedupIndex.probePairsPersisted(spark, base, indexDir)),
+      pairRows(GroupedKernels.fullScreenProbePairs(base,
+        liveRows(indexDir, "bands"), liveRows(indexDir, "sigs"))))
+
+  test("the request-screened bucket count equals the full-index count on grown indexes") {
+    val docs = Tables(spark, dir, "documents")
+    val idxDir = tmp()
+    DedupIndex.build(docs.filter(col("doc_id") % 10 < 5), idxDir)
+    DedupIndex.append(docs.filter(col("doc_id") % 10 >= 5 && col("doc_id") % 10 =!= 7), idxDir)
+    val base = Dedup.minhashBase(docs.filter(col("doc_id") % 10 === 7))
+    val (fresh, freshFull) = screenedAndFull(base, idxDir)
+    assert(fresh.nonEmpty && fresh == freshFull)
+    // tombstone one matched doc beside a tenth of the corpus
+    val victim = DedupIndex.probePairsPersisted(spark, base, idxDir).agg(min("c")).head().getLong(0)
+    DedupIndex.remove(docs.filter(col("doc_id") % 10 === 3 || col("doc_id") === victim)
+      .select("doc_id"), idxDir)
+    val (tomb, tombFull) = screenedAndFull(base, idxDir)
+    assert(tomb == tombFull && tomb != fresh)
+    val optDir = tmp()
+    DedupIndex.optimize(spark, idxDir, optDir)
+    val (opt, optFull) = screenedAndFull(base, optDir)
+    assert(opt == optFull && opt == tomb)
+  }
+
+  test("a bucket one over the cap drops; a tombstone bringing it to the cap restores it") {
+    import spark.implicits._
+    val delta = Dedup.minhashBase(Tables(spark, dir, "documents").filter(col("doc_id") % 10 === 7))
+    val probeId = delta.agg(min("doc_id")).head().getLong(0)
+    val base = delta.filter(col("doc_id") === probeId)
+    // cap+1 index docs share the probe's band-0 bucket; doc 1000 carries
+    // the probe's own shingle set, the others a disjoint one
+    val bucket = Dedup.bandKeys(base).filter(col("bi") === 0).select("bi", "bh").head()
+    val members = 1000L to (1000L + Dedup.LshBucketCap)
+    val bands = members.map(d => (d, bucket.getString(1), bucket.getInt(0))).toDF("doc_id", "bh", "bi")
+    val sig = base.select("hs", "sz").head()
+    val other = Seq(-3L, -2L, -1L)
+    val sigs = members.map(d =>
+      if (d == 1000L) (d, sig.getSeq[Long](0), sig.getInt(1)) else (d, other, other.size))
+      .toDF("doc_id", "hs", "sz")
+    val idxDir = tmp()
+    DedupIndex.writeTables(sigs, bands, idxDir, "overwrite")
+    val (over, overFull) = screenedAndFull(base, idxDir)
+    assert(over.isEmpty && overFull.isEmpty, s"an over-cap bucket matched: $over")
+    DedupIndex.remove(Seq(members.last).toDF("doc_id"), idxDir)
+    val (atCap, atCapFull) = screenedAndFull(base, idxDir)
+    assert(atCap == atCapFull && atCap == Seq(s"[$probeId,1000,10000]"), s"at the cap: $atCap")
   }
 }

@@ -62,11 +62,12 @@ class PlanLintSpec extends SparkSpec {
     // intended plan (VERDICT r6 plan audit); the lint can't see size, the
     // reviewer can.
     // The vector assignment kernels (nearest centroid, PQ encode, L2
-    // assignment) run per row with no join, so their callers
-    // q40/q59/q76/q78/q169/q237 are off this list.
+    // assignment) and the top-nprobe centroid selection run per row with
+    // no join, so their callers q40/q51/q59/q76/q78/q169/q237/q253/q315
+    // are off this list.
     val tinyBroadcastJoin = Seq(
       "q36_jaccard_pairs", "q39_cosine_topk",
-      "q49_edit_distance", "q51_ivf_search", "q55_ivf_recall",
+      "q49_edit_distance", "q55_ivf_recall",
       "q56_topk_agg", "q79_trained_ivf", "q83_containment", "q99_pq_search",
       "q100_pq_recall", "q106_rolling_dau", "q109_bm25", "q113_silhouette",
       "q119_pmi", "q153_baskets", "q154_cramers_v", "q156_jsd",
@@ -78,10 +79,9 @@ class PlanLintSpec extends SparkSpec {
       "q247_pq_rerank", // q99's 4-row codebook cartesian feeds the shortlist
       "q250_tpch11", // 1-row global (total, count) threshold broadcast
       "q252_rhp_neardup", // 24-row hyperplane table cross into signatures
-      "q253_ann_index", // the probe's query × 8-centroid cross (topCentroids, q51's probe)
       "q256_expectations", // 1-row checks aggregate × 1-row anti-join count
       "q261_retrieval_eval", // q109's 1-row (n_docs, sum_dl) totals cross
-      "q267_ivfpq_index", // probePq's query × 8-centroid (topCentroids) and query × 4-codeword (pqLut) crosses
+      "q267_ivfpq_index", // probePq's query × 4-codeword (pqLut) cross
       "q276_weighted_bernoulli", // 1-row broadcast total-weight cross (PPS denominator)
       "q280_incr_bm25", // q109's 1-row (n_docs, sum_dl) totals cross over state
       "q281_bm25_takedown", // same totals cross over the post-retraction state
@@ -92,9 +92,8 @@ class PlanLintSpec extends SparkSpec {
       "q290_converged_training", // same 1-row weight cross, loop-until-converged
       "q293_bloom_audit", // 1-row n_ngrams total cross into the 3-row per-mBits aggregate
       "q297_semdedup", // K-row trained-centroid cross of its packed-BIGINT cosine argmax (assignCos)
-      "q307_ann_drift", // 20-row query-set cross (q39's shape) + the probe's query × centroid cross
-      "q309_ann_fit_ledger", // 1-row build-anchor cross (fitLedger)
-      "q315_ann_reindex") // 20-row probe set × retrained centroids (topCentroids) — q51's probe over the reindexed generation
+      "q307_ann_drift", // 20-row query-set cross (q39's shape)
+      "q309_ann_fit_ledger") // 1-row build-anchor cross (fitLedger)
     // (b) unpartitioned windows (and the SinglePartition exchange feeding
     // them) that run over post-aggregate domains — |days|, |sources|,
     // |deciles|, |clusters|, vocabulary heads — or over semantics that are

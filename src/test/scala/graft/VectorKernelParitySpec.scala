@@ -10,12 +10,13 @@ import graft.operators.{AnnIndex, GroupedKernels => G}
 
 /** The per-row vector kernels in [[AnnIndex]] against their grouped
   * forms ([[graft.operators.GroupedKernels]]: cross join + struct-ordered
-  * max_by/min_by), row for row — on the fixture embeddings, where the
-  * oracle already pins the grouped answers, and on planted cases the
-  * fixture never reaches: duplicate candidates, a tie that exists only
-  * after round(cos, 4), zero vectors (NaN cosines), unequal lengths (NULL
-  * distances), NaN and NULL elements, NULL vectors, INT and BIGINT ids and
-  * an empty candidate set. Planted frames run twice: as local relations
+  * max_by/min_by, or a row_number window for topCentroids), row for row
+  * — on the fixture embeddings, where the oracle already pins the grouped
+  * answers, and on planted cases the fixture never reaches: duplicate
+  * candidates, a tie that exists only after round(cos, 4), zero vectors
+  * (NaN cosines), unequal lengths (NULL distances), NaN and NULL elements,
+  * NULL vectors, INT and BIGINT ids, an empty candidate set and nprobe at
+  * or above the candidate count. Planted frames run twice: as local relations
   * (interpreted eval) and read back from parquet (generated code). */
 class VectorKernelParitySpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +48,15 @@ class VectorKernelParitySpec extends SparkSpec {
     assertSame(s"$tag assignCosine", AnnIndex.assignCosine(e, cent), G.assignCosine(e, cent))
   }
 
+  /** topCentroids with every row of `e` as a query, at nprobe below,
+    * at and above the candidate count. */
+  private def topKernels(tag: String, e: DataFrame, cent: DataFrame): Unit = {
+    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    for (n <- Seq(1, 2, 3, 8, 9))
+      assertSame(s"$tag topCentroids nprobe=$n",
+        AnnIndex.topCentroids(q, cent, n), G.topCentroids(q, cent, n))
+  }
+
   private def pqKernels(tag: String, e: DataFrame, cw: DataFrame): Unit = {
     for (keepDist <- Seq(false, true))
       assertSame(s"$tag pqAssign keepDist=$keepDist",
@@ -63,6 +73,10 @@ class VectorKernelParitySpec extends SparkSpec {
     val seeds = AnnIndex.seedCentroids(e, 8)
     cosineKernels("seed centroids", e, seeds)
     cosineKernels("retrained f32 centroids", e, AnnIndex.retrainCentroids(e, 8))
+    topKernels("seed centroids", e, seeds)
+    topKernels("int-id seed centroids", e,
+      seeds.select(col("centroid_id").cast("int").as("centroid_id"), col("centv")))
+    topKernels("retrained f32 centroids", e, AnnIndex.retrainCentroids(e, 8))
     pqKernels("seed codebook", e, AnnIndex.seedCodebook(e))
     val c0 = e.filter(col("vec_id") < 8).select(col("vec_id").as("cid"),
       transform(col("embedding"), x => x.cast("double")).as("cv"))
@@ -168,6 +182,7 @@ class VectorKernelParitySpec extends SparkSpec {
         "local" -> (df => df), "parquet" -> viaParquet)) {
       val v3 = load(vecs3)
       cosineSets.foreach { case (n, c) => cosineKernels(s"$mode $n", v3, load(c)) }
+      cosineSets.foreach { case (n, c) => topKernels(s"$mode $n", v3, load(c)) }
       val vl2 = load(vecsL2)
       l2Sets.foreach { case (n, c) => l2Kernels(s"$mode $n", vl2, load(c)) }
       val vpq = load(vecsPq)
@@ -195,6 +210,20 @@ class VectorKernelParitySpec extends SparkSpec {
     // a NULL vector scores NULL everywhere: the lowest id, NULL score
     assert(zero(6L) == ((4L, null)))
     assert(AnnIndex.nearestCentroid(vecs3, cs("empty"), Seq("vec_id"), Nil).count() == 0)
+    // the top-n list keeps the same order: both rounded-tie centroids at
+    // 0.9999 with the lower id first, the NaN-scoring zero centroids above
+    // every number, and every candidate once nprobe exceeds their count
+    def top(c: DataFrame, n: Int): Map[Long, Seq[(Long, java.lang.Double)]] =
+      AnnIndex.topCentroids(vecs3.select(col("vec_id").as("qid"), col("embedding").as("qe")), c, n)
+        .select(col("qid"), col("centroid_id").cast("long"), col("qscore"), col("rn"))
+        .collect().groupBy(_.getLong(0)).map { case (k, rs) =>
+          k -> rs.sortBy(_.getInt(3)).map(r => (r.getLong(1), r.get(2).asInstanceOf[java.lang.Double])).toSeq
+        }
+    assert(top(cs("tie after rounding"), 2)(4L) == Seq((2L, 0.9999), (5L, 0.9999)))
+    val zeroTop = top(cs("zero-vector centroids"), 5)(1L)
+    assert(zeroTop.map(_._1) == Seq(6L, 8L, 4L) && zeroTop.take(2).forall(_._2.isNaN))
+    assert(AnnIndex.topCentroids(vecs3.select(col("vec_id").as("qid"), col("embedding").as("qe")),
+      cs("empty"), 2).count() == 0)
     // NULL distances sort first: the 2-dim centroid wins for 3-dim vectors
     val l2 = AnnIndex.assignL2(vecsL2, l2Sets.toMap.apply("unequal lengths"))
       .select("vec_id", "cid", "dist").collect().map(r => r.getLong(0) -> r).toMap

@@ -1,16 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
 import org.apache.spark.sql.graft.VectorMath
 
-/** The grouped forms of the three vector assignment kernels: a broadcast
-  * cross join with the candidate frame, a score per pair, then a
-  * struct-ordered max_by/min_by per key. These plans are the semantics
-  * the DuckDB oracle was first proven against; VectorKernelParitySpec pins
-  * the per-row kernels in [[AnnIndex]] row for row to them. Test scope
-  * only — production runs the per-row forms exclusively. */
+/** The grouped forms of the vector assignment kernels: a broadcast cross
+  * join with the candidate frame, a score per pair, then a struct-ordered
+  * max_by/min_by (or a row_number window) per key — and the full-index
+  * form of the DedupIndex probe's bucket screen. These plans are the
+  * semantics the DuckDB oracle was first proven against;
+  * VectorKernelParitySpec and DedupIndexSpec pin the production forms in
+  * [[AnnIndex]] and [[DedupIndex]] row for row to them. Test scope only —
+  * production runs the per-row and request-screened forms exclusively. */
 object GroupedKernels {
 
   /** [[AnnIndex.nearestCentroid]]: max_by over (ascore, -centroid_id). */
@@ -71,4 +74,23 @@ object GroupedKernels {
     val assigned = assignCosine(v, cent)
     cw.fold(assigned)(c => assigned.join(pqEncode(v, c), Seq("vec_id")))
   }
+
+  /** [[AnnIndex.topCentroids]]: the query × centroid cross join ranked by
+    * a row_number window over (qscore DESC, centroid_id ASC) per qid, as
+    * (q's columns, centroid_id, qscore, rn). */
+  def topCentroids(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
+    val wQ = Window.partitionBy("qid").orderBy(desc("qscore"), asc("centroid_id"))
+    q.join(broadcast(cent))
+      .withColumn("qscore", round(cosine_sim(col("centv"), col("qe")), 4))
+      .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= nprobe)
+      .select((q.columns.map(col) ++ Seq("centroid_id", "qscore", "rn").map(col)): _*)
+  }
+
+  /** [[DedupIndex.probePairs]] with the bucket screen over EVERY index
+    * band row: the window count runs over the whole `idxBands` table
+    * instead of only the buckets the probe hits. */
+  def fullScreenProbePairs(prbBase: DataFrame, idxBands: DataFrame,
+      idxSigs: DataFrame): DataFrame =
+    DedupIndex.verifiedPairs(prbBase, graft.queries.Dedup.bandKeys(prbBase),
+      DedupIndex.cappedBuckets(idxBands), idxSigs)
 }
