@@ -402,8 +402,9 @@ object Bench {
     * operator). Returns a compact JSON object; a failure degrades to None
     * and never fails the bench. */
   /** transformWithState micro-bench. Two numbers per processor (r12 — the
-    * r11 single small-batch figure conflated them; profile in
-    * `StreamProfileMain`, decomposition in SURVEY §8):
+    * r11 single small-batch figure conflated them; the per-partition
+    * cost rule is `EventsPipeline.statePartitionsFor`, decomposition in
+    * SURVEY §8):
     *  - `rows_per_sec` — SUSTAINED throughput at 20k-row batches, where
     *    the per-batch fixed cost amortizes: the number an ingest pipeline
     *    (seconds-long triggers, millions of rows) actually sees;

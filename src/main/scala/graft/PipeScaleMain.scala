@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Scale harness for the COMPOSED curation pipeline (VERDICT r14 #1).
   *
@@ -10,11 +9,11 @@ import org.apache.spark.sql.streaming.Trigger
   * screen, table lifecycle) — but the composition (one `pipelineBatch`
   * holding two table locks while chaining novelty gate → index probe →
   * cluster fold → corpus append → optimize cadence) had only ever run at
-  * sf0.01. This main runs the EXACT production stream — the same
-  * `CorpusStream.curated` gates and the same `pipelineBatch` sink
-  * PipelineMain wires, checkpointed `Trigger.AvailableNow` drains — over
-  * the documents table of any fixture tier, delivered in WAVES, and
-  * writes a per-wave ledger:
+  * sf0.01. This main runs the EXACT production stream — PipelineMain's
+  * own `feed` and `drain` (the `CorpusStream.curated` gates into the
+  * `pipelineBatch` sink, checkpointed `Trigger.AvailableNow` drains) with
+  * `workDir` as the pipe dir — over the documents table of any fixture
+  * tier, delivered in WAVES, and writes a per-wave ledger:
   *
   *   - `wall_sec` — the wave's end-to-end drain time;
   *   - `spill_mb` / `shuffle_mb` — task-metric totals for the wave (the
@@ -64,12 +63,14 @@ object PipeScaleMain {
     graft.operators.Generations.deleteTree(workDir)
     new java.io.File(workDir).mkdirs()
     val feedDir = s"$workDir/feed"
-    val bloomTable = s"$workDir/bloom"
-    val indexTable = s"$workDir/index"
-    val clusterDir = s"$workDir/clusters"
-    val corpusDir = s"$workDir/corpus"
-    val paraTable = s"$workDir/para"
+    val t = PipelineMain.Layout(workDir)
     val ledgerPath = java.nio.file.Paths.get(s"$workDir/pipescale.jsonl")
+    def emit(line: String): Unit = {
+      println(line)
+      java.nio.file.Files.write(ledgerPath, (line + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+    }
 
     val docs = Tables(spark, sfDir, "documents")
       .select("doc_id", "text", "lang", "source")
@@ -111,21 +112,12 @@ object PipeScaleMain {
             java.nio.file.Paths.get(feedDir, s"wave_${w}_$i.parquet"))
         }
       val nIn = wave.count()
-      // the PRODUCTION stream, verbatim: curated gates -> pipelineBatch,
-      // checkpointed AvailableNow drain of exactly this wave's new file
-      val schema = spark.read.parquet(feedDir).schema
-      val feed = spark.readStream.schema(schema).parquet(feedDir)
-        .withColumn("ingest_ts", col("ingest_ts").cast("timestamp"))
+      // PipelineMain's own drain of exactly this wave's new files; the
+      // feed's schema read stays outside the timed window
+      val feed = PipelineMain.feed(spark, feedDir)
       graft.operators.Generations.drainLockHoldMs()
       val (_, m) = RunLedger.measure(spark) {
-        streaming.CorpusStream.curated(feed).writeStream
-          .option("checkpointLocation", s"$workDir/checkpoint")
-          .foreachBatch(streaming.CorpusStream.pipelineBatch(bloomTable,
-            indexTable, clusterDir, corpusDir, optimizeEvery,
-            bloomBits = bloomBits, paraTable = paraTable) _)
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+        PipelineMain.drain(feed, workDir, optimizeEvery, bloomBits = bloomBits)
       }
       wallTotal += m.wallSec; spillTotal += m.spillBytes
       val locks = graft.operators.Generations.drainLockHoldMs()
@@ -136,64 +128,42 @@ object PipeScaleMain {
         val key = Option(f.getParentFile).map(_.getName + "/").getOrElse("") +
           f.getName
         s"""${RunLedger.jsonString(key)}:$ms""" }.mkString("{", ",", "}")
-      val corpusRows = scala.util.Try(
-        spark.read.parquet(corpusDir).count()).getOrElse(0L)
+      val counts = new PipelineMain.Counts(spark, workDir)
       // standing-filter occupancy (AggState.bloomFill): the saturation
       // early-warning the r15 tiers showed the pipeline needs — fill_bp
       // must stay well under ~5000 for the novelty gate to mean anything
       val fillBp = scala.util.Try {
-        val gen = graft.operators.Generations.current(bloomTable)
-          .getOrElse(s"$bloomTable/gen-0")
+        val gen = graft.operators.Generations.current(t.bloom)
+          .getOrElse(s"${t.bloom}/gen-0")
         graft.operators.AggState.bloomFill(spark, gen)
           .select("fill_bp").head().getLong(0)
       }.getOrElse(-1L)
       // exact-paragraph trim stage: this wave's admission delta (paras
       // probed/trimmed) + the standing digest state's footprint
-      val (paraInCum, paraDropCum) = scala.util.Try {
-        val r = spark.read.parquet(s"$paraTable/trim_ledger")
-          .agg(sum("paras_in"), sum("paras_dropped")).head()
-        (r.getLong(0), r.getLong(1))
-      }.getOrElse((0L, 0L))
+      val (paraInCum, paraDropCum) = counts.paraTotals
       val (paraIn, paraDrop) = (paraInCum - paraInPrev, paraDropCum - paraDropPrev)
       paraInPrev = paraInCum; paraDropPrev = paraDropCum
-      val line =
-        s"""{"metric":"pipescale_wave","sf":$sf,"wave":$w,""" +
-          s""""docs_in":$nIn,"wall_sec":${Bench.jnum(m.wallSec, 2)},""" +
-          s""""spill_mb":${mb(m.spillBytes)},"shuffle_mb":${mb(m.shuffleBytes)},""" +
-          s""""lock_hold_ms":$lockJson,"corpus_rows":$corpusRows,""" +
-          s""""corpus_mb":${mb(dirBytes(corpusDir))},""" +
-          s""""index_mb":${mb(dirBytes(indexTable))},""" +
-          s""""bloom_mb":${mb(dirBytes(bloomTable))},""" +
-          s""""bloom_fill_bp":$fillBp,""" +
-          s""""para_in":$paraIn,"para_trimmed":$paraDrop,""" +
-          s""""para_mb":${mb(dirBytes(paraTable))},""" +
-          s""""clusters_mb":${mb(dirBytes(clusterDir))}}"""
-      println(line)
-      java.nio.file.Files.write(ledgerPath, (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      ()
+      emit(s"""{"metric":"pipescale_wave","sf":$sf,"wave":$w,""" +
+        s""""docs_in":$nIn,"wall_sec":${Bench.jnum(m.wallSec, 2)},""" +
+        s""""spill_mb":${mb(m.spillBytes)},"shuffle_mb":${mb(m.shuffleBytes)},""" +
+        s""""lock_hold_ms":$lockJson,"corpus_rows":${counts.corpusDocs},""" +
+        s""""corpus_mb":${mb(dirBytes(t.corpus))},""" +
+        s""""index_mb":${mb(dirBytes(t.index))},""" +
+        s""""bloom_mb":${mb(dirBytes(t.bloom))},""" +
+        s""""bloom_fill_bp":$fillBp,""" +
+        s""""para_in":$paraIn,"para_trimmed":$paraDrop,""" +
+        s""""para_mb":${mb(dirBytes(t.para))},""" +
+        s""""clusters_mb":${mb(dirBytes(t.clusters))}}""")
     }
-    val clustersN =
-      if (graft.operators.ClusterState.exists(clusterDir))
-        graft.operators.ClusterState.clusters(spark, clusterDir)
-          .select("cluster_id").distinct().count()
-      else 0L
-    val corpusN = scala.util.Try(
-      spark.read.parquet(corpusDir).count()).getOrElse(0L)
-    val totalLine =
-      s"""{"metric":"pipescale_total","sf":$sf,"waves":$waves,""" +
-        s""""docs_in":$totalDocs,"corpus_docs":$corpusN,""" +
-        s""""paras_in":$paraInPrev,"paras_trimmed":$paraDropPrev,""" +
-        s""""dup_clusters":$clustersN,""" +
-        s""""wall_sec":${Bench.jnum(wallTotal, 2)},""" +
-        s""""wall_with_setup_sec":${Bench.jnum((System.nanoTime() - t0All) / 1e9, 2)},""" +
-        s""""spill_mb":${mb(spillTotal)},""" +
-        s""""calib_mt_sec":${Bench.jnum(Bench.calibrate(GraftSession.cpus))}}"""
-    println(totalLine)
-    java.nio.file.Files.write(ledgerPath, (totalLine + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    val end = new PipelineMain.Counts(spark, workDir)
+    emit(s"""{"metric":"pipescale_total","sf":$sf,"waves":$waves,""" +
+      s""""docs_in":$totalDocs,"corpus_docs":${end.corpusDocs},""" +
+      s""""paras_in":$paraInPrev,"paras_trimmed":$paraDropPrev,""" +
+      s""""dup_clusters":${end.dupClusters},""" +
+      s""""wall_sec":${Bench.jnum(wallTotal, 2)},""" +
+      s""""wall_with_setup_sec":${Bench.jnum((System.nanoTime() - t0All) / 1e9, 2)},""" +
+      s""""spill_mb":${mb(spillTotal)},""" +
+      s""""calib_mt_sec":${Bench.jnum(Bench.calibrate(GraftSession.cpus))}}""")
     docs.unpersist()
     spark.stop()
   }

@@ -1,7 +1,12 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.operators.{AggState, ClusterState, Generations}
 
 /** End-to-end corpus curation as ONE long-running CLI (VERDICT r12 #8) —
   * the capstone wiring of every standing-state piece:
@@ -45,6 +50,62 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object PipelineMain {
 
+  /** The standing tables under a pipe dir (layout in the object doc). */
+  private[graft] final case class Layout(pipeDir: String) {
+    val bloom = s"$pipeDir/bloom"
+    val index = s"$pipeDir/index"
+    val clusters = s"$pipeDir/clusters"
+    val corpus = s"$pipeDir/corpus"
+    val para = s"$pipeDir/para"
+  }
+
+  /** The directory feed over `inDir`. Reading the schema runs a job here,
+    * so a caller that times only the drain builds the feed first. */
+  private[graft] def feed(spark: SparkSession, inDir: String): DataFrame = {
+    val schema = spark.read.parquet(inDir).schema
+    val raw = spark.readStream.schema(schema).parquet(inDir)
+    if (schema.fieldNames.contains("ingest_ts"))
+      raw.withColumn("ingest_ts", col("ingest_ts").cast("timestamp"))
+    else raw.withColumn("ingest_ts", current_timestamp())
+  }
+
+  /** One checkpointed `AvailableNow` drain of `feed` through
+    * `CorpusStream.curated` and `pipelineBatch` into the tables under
+    * `pipeDir`; returns once every file present at start is committed. */
+  private[graft] def drain(feed: DataFrame, pipeDir: String,
+      optimizeEvery: Int, keepLast: Int = 1, retentionHours: Double = 0.0,
+      minNovelBp: Long = 3000L,
+      bloomBits: Long = AggState.BloomDefaultBits): Unit = {
+    val t = Layout(pipeDir)
+    streaming.CorpusStream.curated(feed).writeStream
+      .option("checkpointLocation", s"$pipeDir/checkpoint")
+      .foreachBatch(streaming.CorpusStream.pipelineBatch(t.bloom, t.index,
+        t.clusters, t.corpus, optimizeEvery, keepLast, retentionHours,
+        minNovelBp, bloomBits, t.para) _)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
+  /** The published state a reader sees under a pipe dir, each count read
+    * on first use (a missing table counts 0). */
+  private[graft] final class Counts(spark: SparkSession, pipeDir: String) {
+    private val t = Layout(pipeDir)
+    lazy val corpusDocs: Long =
+      Try(spark.read.parquet(t.corpus).count()).getOrElse(0L)
+    lazy val dupClusters: Long =
+      if (ClusterState.exists(t.clusters))
+        ClusterState.clusters(spark, t.clusters)
+          .select("cluster_id").distinct().count()
+      else 0L
+    // exact-paragraph retention (paras_in, paras_dropped), 1 row/batch
+    lazy val paraTotals: (Long, Long) = Try {
+      val r = spark.read.parquet(s"${t.para}/trim_ledger")
+        .agg(sum("paras_in"), sum("paras_dropped")).head()
+      (r.getLong(0), r.getLong(1))
+    }.getOrElse((0L, 0L))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PipelineMain <inDir> <pipeDir> [optimizeEvery] [keepLast] " +
@@ -56,56 +117,20 @@ object PipelineMain {
     val retentionHours = args.lift(4).map(_.toDouble).getOrElse(0.0)
     val minNovelBp = args.lift(5).map(_.toLong).getOrElse(3000L)
     val bloomBits = args.lift(6).map(_.toLong)
-      .getOrElse(graft.operators.AggState.BloomDefaultBits)
+      .getOrElse(AggState.BloomDefaultBits)
     val spark = GraftSession.cli()
 
-    val schema = spark.read.parquet(inDir).schema
-    val raw = spark.readStream.schema(schema).parquet(inDir)
-    val feed =
-      if (schema.fieldNames.contains("ingest_ts"))
-        raw.withColumn("ingest_ts", col("ingest_ts").cast("timestamp"))
-      else raw.withColumn("ingest_ts", current_timestamp())
+    drain(feed(spark, inDir), pipeDir, optimizeEvery, keepLast,
+      retentionHours, minNovelBp, bloomBits)
 
-    val bloomTable = s"$pipeDir/bloom"
-    val indexTable = s"$pipeDir/index"
-    val clusterDir = s"$pipeDir/clusters"
-    val corpusDir = s"$pipeDir/corpus"
-    val paraTable = s"$pipeDir/para"
-
-    val q = streaming.CorpusStream.curated(feed).writeStream
-      .option("checkpointLocation", s"$pipeDir/checkpoint")
-      .foreachBatch(streaming.CorpusStream.pipelineBatch(bloomTable,
-        indexTable, clusterDir, corpusDir, optimizeEvery, keepLast,
-        retentionHours, minNovelBp, bloomBits, paraTable) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    // end-of-drain report: the published state a reader sees
-    import graft.operators.{ClusterState, Generations}
-    def cnt(p: String): Long =
-      if (new java.io.File(p).exists())
-        scala.util.Try(spark.read.parquet(p).count()).getOrElse(0L)
-      else 0L
-    val corpusN = cnt(corpusDir)
-    val clustersN =
-      if (ClusterState.exists(clusterDir))
-        ClusterState.clusters(spark, clusterDir)
-          .select("cluster_id").distinct().count()
-      else 0L
-    val bloomGen = Generations.current(bloomTable).getOrElse("(unpublished)")
-    val indexGen = Generations.current(indexTable).getOrElse("(unpublished)")
-    val paraGen = Generations.current(paraTable).getOrElse("(unpublished)")
-    // exact-paragraph retention totals (the trim ledger, 1 row/batch)
-    val (paraIn, paraDropped) = scala.util.Try {
-      val r = spark.read.parquet(s"$paraTable/trim_ledger")
-        .agg(sum("paras_in"), sum("paras_dropped")).head()
-      (r.getLong(0), r.getLong(1))
-    }.getOrElse((0L, 0L))
-    println(s"""{"corpus_docs":$corpusN,"dup_clusters":$clustersN,""" +
+    val c = new Counts(spark, pipeDir)
+    val (paraIn, paraDropped) = c.paraTotals
+    val t = Layout(pipeDir)
+    def gen(table: String) = Generations.current(table).getOrElse("(unpublished)")
+    println(s"""{"corpus_docs":${c.corpusDocs},"dup_clusters":${c.dupClusters},""" +
       s""""paras_in":$paraIn,"paras_trimmed":$paraDropped,""" +
-      s""""bloom_generation":"$bloomGen","index_generation":"$indexGen",""" +
-      s""""para_generation":"$paraGen"}""")
+      s""""bloom_generation":"${gen(t.bloom)}","index_generation":"${gen(t.index)}",""" +
+      s""""para_generation":"${gen(t.para)}"}""")
     spark.stop()
   }
 }

@@ -12,8 +12,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one metrics and plan capture every harness measures through
-  * (Bench, ScaleMain, PipeScaleMain, BpeScaleMain, StageLedgerMain,
-  * ExplainMain). Each capture registers its listener for the duration of
+  * (Bench, ScaleMain, PipeScaleMain, StageLedgerMain, ExplainMain). Each capture registers its listener for the duration of
   * one `body` only, and drains the listener bus with
   * [[org.apache.spark.graft.ListenerBridge.drain]] both before it zeroes
   * and before it reads: late events of an earlier window can never land

@@ -175,7 +175,7 @@ object ScaleMain {
     "q305_para_trim",
     // r17: batched BPE under the gate — 8 merges in 2 passes; per pass one
     // pair-count shuffle + one map-only scan, so the tier cost is ~2/8 of
-    // greedy's at the same merge count (BpeScaleMain's measured trade) —
+    // greedy's at the same merge count (SCALE.md "BPE round axis") —
     // and the q304 cap-loss audit, whose capped band only materializes on
     // replicated tiers (the fixtures never exceed 32 occurrences), and the
     // ANN drift audit (20-query ground truth × the grown corpus — the

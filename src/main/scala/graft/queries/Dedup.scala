@@ -888,8 +888,8 @@ object Dedup {
     * plan plus a checkpoint (measured ~identical wall), so small inputs
     * pay nothing for the scale path. At a real deployment the budget is
     * re-derived from executor memory ÷ (candidate pair width × expected
-    * pairs per doc); the env override (`SPARK_GRAFT_PREFIX_SHARDS` on
-    * q289) forces a count for A/B matrices. */
+    * pairs per doc). q289 runs `max(2, prefixShardsFor(n))` shards; the
+    * 4/8/16-shard matrix behind this rule is in SCALE.md "r14". */
   def prefixShardsFor(nDocs: Long, docsPerShard: Long = 125000L,
       maxShards: Int = 64): Int = {
     require(docsPerShard >= 1 && maxShards >= 1)
@@ -1804,14 +1804,11 @@ object Dedup {
     // DedupSpec alone — the floor keeps the multi-shard union+dedup path
     // under the DuckDB hash check at all 3 SFs (production callers use
     // prefixShardsFor directly and DO degenerate to one shard on small
-    // inputs). SPARK_GRAFT_PREFIX_SHARDS forces a count for the ScaleMain
-    // A/B matrix. Output is shard-count-invariant by construction, so the
-    // oracle stays valid at any setting.
+    // inputs). Output is shard-count-invariant by construction (DedupSpec
+    // pins 1/3/8 shards), so the oracle holds at any count.
     "q289_sharded_prefix" -> ((s: SparkSession, dir: String) => {
       val base = minhashBase(Tables(s, dir, "documents"))
-      val shards = sys.env.get("SPARK_GRAFT_PREFIX_SHARDS")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .getOrElse(math.max(2, prefixShardsFor(base.count())))
+      val shards = math.max(2, prefixShardsFor(base.count()))
       val out = prefixPairsSharded(base, numShards = shards)
         .orderBy("d1", "d2")
         .localCheckpoint(eager = true)

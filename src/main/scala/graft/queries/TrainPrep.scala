@@ -1036,10 +1036,10 @@ object TrainPrep {
     }),
 
     // ---- BATCHED BPE merges (the production trainer path, r17) -----------
-    // BpeScaleMain's cost model names batched top-B token-disjoint merges
-    // the production path (~8x less wall per merge at 81% of the token
-    // savings) — this puts its SEMANTICS under the oracle gate, not just
-    // specs. Two passes, B = 4 per pass: rank adjacent pairs (count DESC,
+    // The r16 BPE round-axis cost model (SCALE.md "BPE round axis") names
+    // batched top-B token-disjoint merges the production path (~8x less
+    // wall per merge at 81% of the token savings) — this puts its
+    // SEMANTICS under the oracle gate, not just specs. Two passes, B = 4 per pass: rank adjacent pairs (count DESC,
     // pair ASC), scan the top 16 candidates in rank order and take up to 4
     // whose footprints {a, b, "a b"} are pairwise disjoint with a != b
     // ([[bpeSelectBatch]] — the skipped overlappers defer to pass 2), then
@@ -1163,8 +1163,9 @@ object TrainPrep {
     * already-taken pair's footprint (and a != b) — exactly
     * [[bpeApplyPairs]]' batch contract, so a selected batch always
     * passes its require. Skipped pairs are deferred to the next pass,
-    * never misapplied. Shared by q306 and BpeScaleMain so the oracle,
-    * the gate query and the measurement harness select identically. */
+    * never misapplied. q306 selects through it and TrainingSpec pins it;
+    * q306's oracle re-derives the same scan relationally
+    * ([[bpeBatchSql]]). */
   private[graft] def bpeSelectBatch(cand: Seq[(String, String, Long)],
       b: Int): Seq[(String, String)] = {
     val taken = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -1178,7 +1179,7 @@ object TrainPrep {
     taken.toSeq
   }
 
-  /** [[bpeTopPair]]'s top-K form for the batched trainer (BpeScaleMain):
+  /** [[bpeTopPair]]'s top-K form for the batched trainer (q306):
     * the K most frequent adjacent pairs (count DESC, pair ASC), one
     * distributed TakeOrderedAndProject, K rows to the driver. */
   private[graft] def bpeTopPairs(cur: org.apache.spark.sql.DataFrame,

@@ -36,8 +36,9 @@ object EventsPipeline {
 
   /** State-partition count from expected key cardinality (VERDICT r12 #7).
     *
-    * `StreamProfileMain`'s grid measured ~30 ms PER STATE PARTITION PER
-    * BATCH of RocksDB store lifecycle (open/commit — paid even by
+    * The r11 transformWithState profile grid (SURVEY §8 "Streaming
+    * throughput pass") measured ~30 ms PER STATE PARTITION PER BATCH of
+    * RocksDB store lifecycle (open/commit — paid even by
     * zero-key partitions) on top of a ~140 ms stateless micro-batch
     * floor, and the width is FROZEN at the query's first start
     * (`spark.sql.shuffle.partitions` at that moment). So oversizing
@@ -87,20 +88,6 @@ object EventsPipeline {
       else math.max(1L,
         (rowsPerBatch + rowsPerPartitionBudget - 1) / rowsPerPartitionBudget)
     math.max(floor, math.min(byKeys, byVolume)).toInt
-  }
-
-  /** [[statePartitionsFor]] applied to the session: sets
-    * `spark.sql.shuffle.partitions` (the knob stateful-query state width
-    * is frozen from at FIRST start) and returns the width. Call before
-    * `.start()` on a NEW stateful query — an existing checkpoint keeps
-    * the width it was started with. */
-  def sizeStatePartitions(spark: org.apache.spark.sql.SparkSession,
-      expectedKeys: Long, keysPerPartition: Long = 4096L,
-      rowsPerBatch: Long = -1L): Int = {
-    val p = statePartitionsFor(expectedKeys,
-      spark.sparkContext.defaultParallelism, keysPerPartition, rowsPerBatch)
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    p
   }
 
   /** Tumbling 1-hour windowed aggregation per event type. */

@@ -144,7 +144,7 @@ class TrainingSpec extends SparkSpec {
     }
   }
 
-  // ---- r16: batched BPE merges (BpeScaleMain's one-pass form) -------------
+  // ---- r16: batched BPE merges (q306's one-pass form) ----------------------
 
   test("bpeMergeTokens: token-disjoint batch == sequential single-pair merges, either order") {
     import spark.implicits._
