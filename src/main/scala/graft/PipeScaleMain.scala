@@ -63,7 +63,7 @@ object PipeScaleMain {
     graft.operators.Generations.deleteTree(workDir)
     new java.io.File(workDir).mkdirs()
     val feedDir = s"$workDir/feed"
-    val t = PipelineMain.Layout(workDir)
+    val t = streaming.CorpusStream.Layout(workDir)
     val ledgerPath = java.nio.file.Paths.get(s"$workDir/pipescale.jsonl")
     def emit(line: String): Unit = {
       println(line)

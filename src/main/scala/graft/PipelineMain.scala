@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{AggState, ClusterState, Generations}
+import graft.streaming.CorpusStream.Layout
 
 /** End-to-end corpus curation as ONE long-running CLI (VERDICT r12 #8) —
   * the capstone wiring of every standing-state piece:
@@ -23,7 +24,7 @@ import graft.operators.{AggState, ClusterState, Generations}
   *                           recorded BEFORE the copy is dropped)
   *          corpus append   (the published, gated corpus)
   *          optimize/publish/retire every `optimizeEvery` batches, under
-  *          the writer locks of both tables and their live generations
+  *          the writer locks of all three tables and their live generations
   *
   * ```
   * runMain graft.PipelineMain <inDir> <pipeDir> [optimizeEvery] [keepLast]
@@ -31,33 +32,20 @@ import graft.operators.{AggState, ClusterState, Generations}
   * ```
   *
   * `bloomBits` sizes the novelty filter at FIRST build — ~8 bits per
-  * expected corpus 8-gram (≈ docs × 33 for this corpus shape). The
-  * default 2^20 saturates around ~15k docs, after which the gate drops
-  * nearly everything (the r15 scale-tier finding; PipeScaleMain sizes it
-  * from the tier automatically).
+  * expected corpus 8-gram (≈ docs × 33 here); the 2^20 default saturates
+  * around ~15k docs (see `pipelineBatch`; PipeScaleMain sizes it per tier).
   *
-  * `pipeDir` layout: `bloom/` + `index/` + `para/` (generation-managed
-  * standing tables; `para/trim_ledger` holds the per-batch retention
-  * rows), `clusters/` (standing dup clusters), `corpus/` (admitted
-  * docs), `checkpoint/` (streaming offsets — a rerun resumes, reprocessing
-  * nothing already committed). Runs with `Trigger.AvailableNow`: one
-  * invocation drains everything currently in `inDir` and exits — the cron
-  * shape; re-running after new files land processes only the delta.
+  * `pipeDir` layout: `CorpusStream.Layout`; its `checkpoint/` offsets make
+  * a rerun resume, reprocessing nothing already committed. Runs with
+  * `Trigger.AvailableNow`: one invocation drains everything currently in
+  * `inDir` and exits — the cron shape; re-running after new files land
+  * processes only the delta.
   *
   * The feed needs (doc_id, text, lang, source); `ingest_ts` is taken from
   * the files when present, else stamped at intake (only the exact-dedup
   * watermark consumes it).
   */
 object PipelineMain {
-
-  /** The standing tables under a pipe dir (layout in the object doc). */
-  private[graft] final case class Layout(pipeDir: String) {
-    val bloom = s"$pipeDir/bloom"
-    val index = s"$pipeDir/index"
-    val clusters = s"$pipeDir/clusters"
-    val corpus = s"$pipeDir/corpus"
-    val para = s"$pipeDir/para"
-  }
 
   /** The directory feed over `inDir`. Reading the schema runs a job here,
     * so a caller that times only the drain builds the feed first. */
@@ -78,7 +66,7 @@ object PipelineMain {
       bloomBits: Long = AggState.BloomDefaultBits): Unit = {
     val t = Layout(pipeDir)
     streaming.CorpusStream.curated(feed).writeStream
-      .option("checkpointLocation", s"$pipeDir/checkpoint")
+      .option("checkpointLocation", t.checkpoint)
       .foreachBatch(streaming.CorpusStream.pipelineBatch(t.bloom, t.index,
         t.clusters, t.corpus, optimizeEvery, keepLast, retentionHours,
         minNovelBp, bloomBits, t.para) _)
@@ -109,7 +97,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PipelineMain <inDir> <pipeDir> [optimizeEvery] [keepLast] " +
-        "[retentionHours] [minNovelBp]")
+        "[retentionHours] [minNovelBp] [bloomBits]")
     val inDir = args(0)
     val pipeDir = args(1)
     val optimizeEvery = args.lift(2).map(_.toInt).getOrElse(4)

@@ -148,7 +148,7 @@ object DedupIndex {
 
   /** [[probePairs]] against the PERSISTED index at `indexDir` (live rows
     * only) — the per-batch edge feed for standing cluster maintenance
-    * (ClusterState / CorpusStream.clusterBatch). */
+    * (ClusterState / CorpusStream.pipelineBatch). */
   private[graft] def probePairsPersisted(spark: SparkSession, base: DataFrame,
       indexDir: String): DataFrame =
     probePairs(base,

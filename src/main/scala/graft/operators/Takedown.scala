@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.StandingTables
 
+import graft.streaming.CorpusStream.Layout
+
 /** End-to-end corpus TAKEDOWN across every standing table the curation
   * pipeline maintains (r18) — the GDPR/DMCA-deletion shape. Each table
   * has had its own delete primitive for rounds (index tombstones q270,
@@ -49,10 +51,11 @@ object Takedown {
   def plan(spark: SparkSession, pipeDir: String, docIds: DataFrame): Report = {
     val ids = docIds.select(col("doc_id")).distinct()
       .localCheckpoint(eager = true)
-    val corpus = StandingTables.read(spark, s"$pipeDir/corpus")
+    val t = Layout(pipeDir)
+    val corpus = StandingTables.read(spark, t.corpus)
     val removed = corpus.join(ids, Seq("doc_id"), "left_semi")
     val nRemoved = removed.count()
-    val paraGen = Generations.active(s"$pipeDir/para")
+    val paraGen = Generations.active(t.para)
     val nDigs =
       if (AggState.exists(paraGen))
         graft.queries.Dedup.paraDigested(removed.select("doc_id", "text"))
@@ -67,15 +70,11 @@ object Takedown {
     * contract). `docIds`: any frame with a `doc_id` column. */
   def apply(spark: SparkSession, pipeDir: String, docIds: DataFrame,
       rebloom: Boolean = false): Report = {
-    val corpusDir = s"$pipeDir/corpus"
-    val indexTable = s"$pipeDir/index"
-    val clusterDir = s"$pipeDir/clusters"
-    val paraTable = s"$pipeDir/para"
-    val bloomTable = s"$pipeDir/bloom"
+    val t = Layout(pipeDir)
 
     val ids = docIds.select(col("doc_id")).distinct()
       .localCheckpoint(eager = true)
-    val corpus = StandingTables.read(spark, corpusDir)
+    val corpus = StandingTables.read(spark, t.corpus)
     // pin BOTH halves before the overwrite destroys the directory the
     // plans read from; the removed docs' TEXT drives the para retraction
     val removed = corpus.join(ids, Seq("doc_id"), "left_semi")
@@ -85,15 +84,15 @@ object Takedown {
     val nRemoved = removed.count()
 
     // 1. the corpus itself
-    survivors.write.mode("overwrite").parquet(corpusDir)
+    survivors.write.mode("overwrite").parquet(t.corpus)
 
     // 2. index tombstones + cluster re-derivation (removeDocs tombstones
     // the index itself before re-deriving the affected components)
     val (indexTombstoned, clustersUpdated) =
-      Generations.withTableWriter(indexTable) { indexGen =>
+      Generations.withTableWriter(t.index) { indexGen =>
         if (!DedupIndex.exists(indexGen)) (false, false)
-        else if (ClusterState.exists(clusterDir)) {
-          ClusterState.removeDocs(spark, ids, clusterDir, indexGen)
+        else if (ClusterState.exists(t.clusters)) {
+          ClusterState.removeDocs(spark, ids, t.clusters, indexGen)
           (true, true)
         } else {
           DedupIndex.remove(ids, indexGen)
@@ -102,7 +101,7 @@ object Takedown {
       }
 
     // 3. exact-paragraph digest retraction (affected-keys rebuild)
-    val nDigs = Generations.withTableWriter(paraTable) { paraGen =>
+    val nDigs = Generations.withTableWriter(t.para) { paraGen =>
       if (!AggState.exists(paraGen)) 0L
       else {
         val deleted = graft.queries.Dedup
@@ -125,17 +124,17 @@ object Takedown {
     // cadence — the pipeline's own maintain loop keeps running)
     var bloomRebuilt = false
     if (rebloom) {
-      Generations.withWriterLock(bloomTable) {
-        val gen = Generations.active(bloomTable)
+      Generations.withWriterLock(t.bloom) {
+        val gen = Generations.active(t.bloom)
         if (AggState.bloomExists(gen)) {
           val m = AggState.readBloomMeta(gen)
-          val next = s"$bloomTable/gen-tk${System.currentTimeMillis()}"
+          val next = s"${t.bloom}/gen-tk${System.currentTimeMillis()}"
           AggState.buildBloom(
             survivors.select(
               explode(graft.queries.TrainPrep.hashedNgrams8(col("text")))
                 .as("__h")),
             Nil, "__h", next, m.mBits, m.k)
-          Generations.publish(bloomTable, next)
+          Generations.publish(t.bloom, next)
           bloomRebuilt = true
         }
       }

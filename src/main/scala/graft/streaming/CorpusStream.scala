@@ -23,15 +23,27 @@ import graft.queries.Dedup
   *
   * Near-dup dedup IS here, but NOT as stream state: the corpus-wide LSH
   * bucket state lives in the standing [[graft.operators.DedupIndex]]
-  * table, and [[nearDupBatch]] probes/extends it per micro-batch inside
-  * `foreachBatch` — exactly the batch index q244/q246 verify, consulted
-  * incrementally. A paraphrase arriving batches after its original (a
-  * shape `dropDuplicatesWithinWatermark` can never catch — different
-  * digest) is dropped by the index probe; pairs straddling micro-batches
-  * are caught because every batch's survivors enter the index before the
-  * next batch probes it.
+  * table, and [[pipelineBatch]] (the one curation `foreachBatch` sink)
+  * probes/extends it per micro-batch — exactly the batch index q244/q246
+  * verify, consulted incrementally. A paraphrase arriving batches after
+  * its original (a shape `dropDuplicatesWithinWatermark` can never catch
+  * — different digest) is dropped by the index probe; pairs straddling
+  * micro-batches are caught because every batch's survivors enter the
+  * index before the next batch probes it.
   */
 object CorpusStream {
+
+  /** A pipe dir's tables — `bloom`/`index`/`para` generation-managed,
+    * `para/trim_ledger` the per-batch retention rows — and its streaming
+    * `checkpoint`: PipelineMain, PipeScaleMain and Takedown all read it. */
+  private[graft] final case class Layout(pipeDir: String) {
+    val bloom = s"$pipeDir/bloom"
+    val index = s"$pipeDir/index"
+    val clusters = s"$pipeDir/clusters"
+    val corpus = s"$pipeDir/corpus"
+    val para = s"$pipeDir/para"
+    val checkpoint = s"$pipeDir/checkpoint"
+  }
 
   /** `docs` must carry (doc_id, text, lang, source, ingest_ts TIMESTAMP).
     * Returns the curated stream: quality + repetition gates, then
@@ -65,32 +77,24 @@ object CorpusStream {
     * ([[graft.operators.AggState]], r12) — the cheap "seen-before" screen
     * a crawler feed runs BEFORE the LSH probe: a doc whose distinct
     * 8-grams are mostly already in the corpus (re-crawl, template remix,
-    * syndicated copy) is dropped without ever touching the index. Per
-    * micro-batch:
+    * syndicated copy) is dropped without ever touching the index. This is
+    * the probe-and-pin half (r16 lock staging): [[pipelineBatch]] runs it
+    * outside any writer lock and lands the fold of the admitted n-grams
+    * ([[admittedSlice]]) under one, before the batch lands.
     *
-    *  1. probe each doc's hashed 8-grams against the standing filter —
-    *     one broadcast of <=16384 packed words, k map lookups per n-gram,
-    *     map-side, no shuffle of the corpus (which is never rescanned);
-    *  2. admit docs whose NOVEL fraction clears `minNovelBp` (integer
-    *     basis points — no float boundary); docs with no 8-gram to probe
-    *     (too short, or null text) are admitted — no signal, the quality
-    *     gates own them;
-    *  3. admitted docs' n-grams fold into the filter by a blind
-    *     bitwise-OR append (O(batch) forever), THEN the batch lands —
-    *     the nearDupBatch ordering, so a crash-replayed batch re-probes
-    *     a filter that already holds its n-grams and under-admits:
-    *     an n-gram-BEARING doc is never landed twice. No-signal docs
-    *     have nothing in the filter to suppress a replay with, so they
-    *     follow the sink's plain at-least-once semantics — their exact
-    *     duplicates are owned by [[curated]]'s digest dedup upstream.
+    * Each doc's hashed 8-grams probe the filter (one broadcast of the
+    * packed words, map-side, the corpus never rescanned); docs whose NOVEL
+    * fraction clears `minNovelBp` (integer basis points) are admitted, as
+    * are docs with no 8-gram to probe (too short, or null text — no
+    * signal, the quality gates own them). The admitted set is PINNED —
+    * `__ng` kept for the fold slice — and NOTHING is mutated.
     *
     * INTRA-batch near-dups pass this gate by design: every doc in a
     * micro-batch probes the filter as it stood BEFORE the batch (the
-    * admitted set's own n-grams fold in only at step 3), so N
-    * near-identical docs arriving in the SAME batch are all admitted and
-    * landed. The downstream LSH probe ([[nearDupBatch]]) owns
-    * within-batch and cross-batch near-dup pairs alike; this screen's
-    * contract is only "drop what the CORPUS has already absorbed"
+    * admitted set's own n-grams fold in afterwards), so N near-identical
+    * docs arriving in the SAME batch are all admitted. The downstream LSH
+    * probe owns within-batch and cross-batch near-dup pairs alike; this
+    * screen's contract is only "drop what the CORPUS has already absorbed"
     * without rescanning it. Probing the batch against its own admitted
     * prefix would force a sequential per-doc loop — the opposite of a
     * partition-parallel screen.
@@ -100,40 +104,7 @@ object CorpusStream {
     * positives make a doc look LESS novel by the filter's FP rate
     * (~0.005% at the 2^20/k=3 default with 10^5 n-grams) — a curation
     * bias toward dropping, never a correctness leak; size mBits up for
-    * bigger corpora (it is a build knob persisted in the state's meta).
-    */
-  def noveltyBatch(bloomDir: String, outDir: String, minNovelBp: Long = 3000L)(
-      batch: DataFrame, batchId: Long): Unit = {
-    noveltyAdmit(bloomDir, minNovelBp)(batch)
-      .write.mode("append").parquet(outDir)
-  }
-
-  /** The novelty gate's decide-and-fold half, landing-free: probe, PIN
-    * the admitted set, fold its n-grams into the filter, and RETURN the
-    * pinned admitted docs for whatever lands them (the plain sink in
-    * [[noveltyBatch]]; the near-dup probe in [[pipelineBatch]]). */
-  /** `bloomBits` sizes the filter at FIRST build (appends inherit the
-    * built meta): the r15 scale tiers measured the default 2^20 filter
-    * saturating around ~15k docs of this corpus shape (~33 8-grams/doc;
-    * fill → 0.9, false-positive rate → 0.73), after which the novelty
-    * fraction of genuinely new docs reads below minNovelBp and the gate
-    * drops nearly everything. Size it at ~8 bits per expected corpus
-    * n-gram (fill ≈ 0.31 at capacity, FP ≈ 3%) — 500k docs ≈ 140M bits
-    * ≈ 17.5 MB packed, still one broadcast. */
-  private[graft] def noveltyAdmit(bloomDir: String, minNovelBp: Long = 3000L,
-      bloomBits: Long = graft.operators.AggState.BloomDefaultBits)(
-      batch: DataFrame): DataFrame = {
-    import graft.operators.AggState
-    val admitted = noveltyDecide(bloomDir, minNovelBp)(batch)
-    AggState.writeBloomSlice(admittedSlice(admitted, bloomDir, bloomBits),
-      bloomDir, bloomBits)
-    admitted.drop("__ng")
-  }
-
-  /** The probe-and-pin half of [[noveltyAdmit]] (r16 lock staging): probe
-    * the filter, PIN the admitted set — `__ng` kept so the caller can
-    * derive the fold slice — and mutate NOTHING. [[pipelineBatch]] runs
-    * this outside any writer lock and lands the fold under one. */
+    * bigger corpora (`pipelineBatch`'s `bloomBits`). */
   private[graft] def noveltyDecide(bloomDir: String, minNovelBp: Long = 3000L)(
       batch: DataFrame): DataFrame = {
     import graft.operators.AggState
@@ -153,11 +124,10 @@ object CorpusStream {
           sum(when(col("__seen"), 0L).otherwise(1L)).as("__novel"))
         .filter(expr(s"(__novel * 10000) DIV __n >= $minNovelBp"))
         .select("doc_id")
-      // PIN the admission decision BEFORE mutating the filter (the
-      // nearDupBatch discipline): the sink write re-evaluates its input,
-      // and an un-pinned plan would re-probe a filter that already holds
-      // this batch's n-grams — every admitted doc would then read as
-      // seen and silently vanish from the sink
+      // PIN the admission decision BEFORE the filter is mutated: the sink
+      // write re-evaluates its input, and an un-pinned plan would re-probe
+      // a filter that already holds this batch's n-grams — every admitted
+      // doc would then read as seen and silently vanish from the sink
       // no-signal branch via coalesce: size(NULL __ng) is NULL under ANSI,
       // so a bare === 0 would silently drop null-text docs from BOTH
       // branches (they match neither the probe's > 0 nor an equality)
@@ -174,38 +144,9 @@ object CorpusStream {
       admitted.select(explode(col("__ng")).as("__h")), Nil, "__h",
       bloomDir, mBitsIfNew = bloomBits)
 
-  /** [[noveltyBatch]] under generation management — the long-running form.
-    * A streaming append loop accumulates one packed-word slice per batch,
-    * so the per-batch state read grows linearly with batch COUNT (never
-    * with corpus size — each slice stays <=mBits/64 rows) until an
-    * optimize collapses it. Every `optimizeEvery` batches the filter is
-    * rewritten into a new generation (AggState.optimize — bit_or fold,
-    * fingerprint-gated, meta carried), the CURRENT pointer swaps
-    * atomically, and retirement follows the keepLast/retentionHours
-    * policy — the maintainedBatch protocol applied to the fourth standing
-    * state. */
-  def maintainedNoveltyBatch(tableDir: String, outDir: String,
-      optimizeEvery: Int, minNovelBp: Long = 3000L, keepLast: Int = 1,
-      retentionHours: Double = 0.0)(batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.AggState
-    require(optimizeEvery > 0, s"optimizeEvery must be positive: $optimizeEvery")
-    val spark = batch.sparkSession
-    // single-writer guard: the shared table-writer scope
-    // (Generations.withTableWriter — table lock, CURRENT resolved under
-    // it, then the generation lock). The TABLE lock serializes the
-    // maintain step's publish/retire against a CLI publish (the r13
-    // ADVICE granularity mismatch: gen-lock-only left two publishers free
-    // to interleave and duplicate lineage seqs).
-    graft.operators.Generations.withTableWriter(tableDir) { gen =>
-      noveltyBatch(gen, outDir, minNovelBp)(batch, batchId)
-      maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
-        retentionHours, AggState.bloomExists, AggState.optimize(spark, _, _, Nil))
-    }
-  }
-
-  /** The shared generation-management tail every maintained foreachBatch
-    * loop runs after its per-batch work: first-batch publish, then on the
-    * optimize cadence rewrite -> atomic publish -> policy retirement.
+  /** The generation-management tail each of [[pipelineBatch]]'s three
+    * table windows runs after its per-batch work: first-batch publish,
+    * then on the optimize cadence rewrite -> publish -> policy retirement.
     * The `next != gen` guard makes a crash-REPLAYED cadence batch a no-op
     * instead of a permanent wedge: after `publish(gen-N)` succeeded but
     * the streaming checkpoint did not commit, the replay resolves
@@ -238,65 +179,6 @@ object CorpusStream {
     }
   }
 
-  /** Near-dup curation against the standing index, as a `foreachBatch`
-    * sink for the [[curated]] stream:
-    *
-    * {{{
-    * curated(docs).writeStream
-    *   .foreachBatch(CorpusStream.nearDupBatch(indexDir, outDir) _)
-    * }}}
-    *
-    * Per micro-batch: one MinHash base over the batch, then
-    *  1. probe the standing [[DedupIndex]] — a batch doc whose best index
-    *     match clears J >= 0.7 is a near-dup of an already-landed doc;
-    *  2. within-batch LSH pairing ([[Dedup.lshPairs]]) — of two batch
-    *     near-dups the smaller doc_id survives (keep-first, the q35
-    *     discipline);
-    *  3. survivors append to BOTH the index (their signatures/bands — the
-    *     next batch probes against them) and `outDir` parquet.
-    *
-    * Scale: every step is sized by the BATCH — the probe touches only
-    * colliding index buckets, the append is a blind write, and the corpus
-    * is never rescanned. The index accumulates small files at streaming
-    * cadence; run [[DedupIndex.optimize]] on compaction cadence.
-    *
-    * Exactly-once caveat: the index append itself is not transactional
-    * with the sink write — a batch replayed after a crash between the two
-    * re-probes an index that already contains its survivors and drops
-    * them as self-matches. That fails SAFE for curation (never a dup
-    * landed twice, at worst a replayed batch under-admits); a stricter
-    * pipeline would stage appends under `batchId` and commit atomically.
-    */
-  /** [[nearDupBatch]] under generation management — the long-running form.
-    * The index lives behind a [[graft.operators.Generations]] CURRENT
-    * pointer at `tableDir`; every `optimizeEvery` batches the active
-    * generation is compacted into a NEW generation dir
-    * ([[DedupIndex.optimize]] — fingerprint-validated, tombstones dropped
-    * physically), the CURRENT pointer swaps atomically, and the old
-    * generation is retired. Probes always resolve through CURRENT, so a
-    * reader never sees a half-compacted index — the unbounded small-file
-    * accumulation of a streaming append loop is capped at one optimize
-    * period. Retirement is policy-driven (r12 — was an immediate delete):
-    * the defaults (`keepLast = 1`, `retentionHours = 0`) reproduce the
-    * single-writer loop's behavior — this loop is, between batches, the
-    * only reader — while a multi-reader deployment passes a positive
-    * window so a reader that resolved CURRENT just before the swap keeps
-    * its snapshot on disk for the drain window.
-    */
-  def maintainedBatch(tableDir: String, outDir: String, optimizeEvery: Int,
-      keepLast: Int = 1, retentionHours: Double = 0.0)(
-      batch: DataFrame, batchId: Long): Unit = {
-    require(optimizeEvery > 0, s"optimizeEvery must be positive: $optimizeEvery")
-    val spark = batch.sparkSession
-    // single-writer guard — the shared table-writer scope; see
-    // maintainedNoveltyBatch for why the table lock is held too
-    graft.operators.Generations.withTableWriter(tableDir) { gen =>
-      nearDupBatch(gen, outDir)(batch, batchId)
-      maintainGeneration(tableDir, gen, batchId, optimizeEvery, keepLast,
-        retentionHours, DedupIndex.exists, DedupIndex.optimize(spark, _, _))
-    }
-  }
-
   /** Recovery for the documented crash window (index appended, sink write
     * lost): index entries whose doc never landed in the corpus store are
     * GHOSTS — they suppress every future copy of their content while the
@@ -323,71 +205,23 @@ object CorpusStream {
     n
   }
 
-  /** Standing-cluster maintenance stream — the ARCHIVE/audit shape beside
-    * [[nearDupBatch]]'s curation shape: every doc is ADMITTED (an archive
-    * keeps all copies) and the duplicate GRAPH is tracked instead. Per
-    * micro-batch: one MinHash base feeds (1) the index probe's VERIFIED
-    * PAIRS (batch vs corpus — [[DedupIndex.probePairsPersisted]], no
-    * corpus-corpus pair), (2) within-batch LSH pairs, and (3) the blind
-    * index append; the pair union folds into the standing
-    * [[graft.operators.ClusterState]] labels (CC over label stars + the
-    * delta only — the historical pair set is never re-clustered). An edge
-    * bridging docs landed in different earlier batches merges their
-    * standing clusters. Every step is sized by the batch; replay fails
-    * safe (re-derived edges reproduce the same connectivity — labels are
-    * a function of the cumulative graph, and duplicate edges are no-ops
-    * to CC). */
-  def clusterBatch(indexDir: String, clusterDir: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.ClusterState
-    val spark = batch.sparkSession
-    val docs = batch.persist()
-    // unpersist the minhash base in the FINALLY (r14 ADVICE): a throw from
-    // writeBase/append used to leak the persisted base, and in a
-    // long-running stream each failed-then-replayed batch left another
-    // cached RDD squeezing execution memory
-    var base: DataFrame = null
-    try {
-      if (!docs.isEmpty) {
-        base = Dedup.minhashBase(docs)
-        val probeEdges =
-          if (DedupIndex.exists(indexDir))
-            DedupIndex.probePairsPersisted(spark, base, indexDir)
-              .select(col("b").as("src"), col("c").as("dst"))
-          else base.select(col("doc_id").as("src"), col("doc_id").as("dst")).limit(0)
-        val batchEdges = Dedup.lshPairs(base, Dedup.LshBucketCap)
-          .select(col("d1").as("src"), col("d2").as("dst"))
-        val edges = probeEdges.unionByName(batchEdges).localCheckpoint(eager = true)
-        if (!edges.isEmpty) {
-          if (ClusterState.exists(clusterDir))
-            ClusterState.appendEdges(spark, edges, clusterDir)
-          else ClusterState.build(edges, clusterDir)
-        }
-        DedupIndex.writeBase(base, indexDir,
-          if (DedupIndex.exists(indexDir)) "append" else "overwrite")
-        docs.write.mode("append").parquet(outDir)
-      }
-    } finally {
-      if (base != null) base.unpersist()
-      docs.unpersist()
-      ()
-    }
-  }
-
   /** The COMPLETE curation loop as ONE foreachBatch sink (VERDICT r12 #8)
-    * — per micro-batch of [[curated]] output:
+    * — the only curation sink; per micro-batch of [[curated]] output:
     *
-    *  1. novelty gate against the standing Bloom state (seen-before
-    *     content dropped, admitted n-grams folded in — [[noveltyAdmit]]);
-    *  2. near-dup probe of the admitted docs against the standing
-    *     [[DedupIndex]] + within-batch LSH pairs;
-    *  3. every discovered duplicate EDGE folds into the standing
+    *  1. exact-paragraph trim against the standing digest state (below);
+    *  2. novelty gate against the standing Bloom state (seen-before
+    *     content dropped — [[noveltyDecide]] — and the admitted n-grams
+    *     folded in);
+    *  3. near-dup probe of the admitted docs against the standing
+    *     [[DedupIndex]] + within-batch LSH pairs (of two batch near-dups
+    *     the smaller doc_id survives — q35's keep-first);
+    *  4. every discovered duplicate EDGE folds into the standing
     *     [[graft.operators.ClusterState]] BEFORE dropping — the corpus
     *     keeps one copy, the audit/takedown trail keeps the structure;
-    *  4. survivors append to the corpus store and their signatures to the
-    *     index;
-    *  5. every `optimizeEvery` batches BOTH generation-managed tables
-    *     (bloom + index) rewrite, publish (fingerprint-checked pointer
+    *  5. survivors' signatures append to the index, their kept paragraphs'
+    *     digests to the para state, and the survivors to the corpus store;
+    *  6. every `optimizeEvery` batches all three generation-managed tables
+    *     (bloom, index, para) rewrite, publish (fingerprint-checked pointer
     *     switch) and retire under the keepLast/retentionHours policy.
     *
     * LOCK STAGING (r16 — the r15 tiers measured lock-hold ≈ wave wall
@@ -397,9 +231,9 @@ object CorpusStream {
     * the index tables to land — runs OPTIMISTICALLY with no lock held,
     * pinned by eager localCheckpoints. Each table then gets its own lock
     * window — one `Generations.withTableWriter` scope per table (bloom,
-    * then index; each locks its table, then the generation resolved
-    * under that lock; the windows are sequential, never nested across
-    * tables, and CLI verbs take exactly one lock each, so no cycle
+    * then index, then para; each locks its table, then the generation
+    * resolved under that lock; the windows are sequential, never nested
+    * across tables, and CLI verbs take exactly one lock each, so no cycle
     * exists) that (1) re-validates the generation by pointer identity +
     * listing fingerprint, (2) lands the pinned results as blind writes,
     * (3) runs the maintain cadence. A writer that mutated the state
@@ -409,36 +243,49 @@ object CorpusStream {
     * are never blocked either way (readers resolve published pointers).
     *
     * Crash-replay fail-safes compose unchanged: the novelty fold precedes
-    * landing (a replayed batch under-admits), the index append precedes
-    * the corpus write (ghost entries are [[repairIndex]]'s contract), and
-    * the cluster fold precedes the drop from inside the index window
-    * (edges derive from that window's validated probe).
+    * landing (a replayed batch re-probes a filter that already holds its
+    * n-grams and under-admits — an n-gram-BEARING doc is never landed
+    * twice; no-signal docs follow the sink's plain at-least-once
+    * semantics, their exact duplicates owned by [[curated]]'s digest
+    * dedup), the index append precedes the corpus write (ghost entries are
+    * [[repairIndex]]'s contract), and the cluster fold precedes the drop
+    * from inside the index window (edges derive from that window's
+    * validated probe). A replayed cadence batch skips its optimize (see
+    * [[maintainGeneration]]).
     *
     * EXACT-PARAGRAPH trim (r18, VERDICT r17 #1 — exact-FIRST: q311
     * measured the digest trim at ~1/10 the near-dup trim's cost at the
-    * 100× tier, so production curation leads with it): when `paraTable`
-    * is non-empty, the batch's paragraphs are digested
-    * ([[Dedup.paraDigested]]) and checked against the standing
-    * (digest → first-seen pid) min-partial state (the q312 table,
-    * [[graft.operators.AggState]]) — a paragraph the corpus already
-    * shipped, or a within-batch repeat, is trimmed before ANY other gate
-    * sees the text ([[Dedup.paraExactRebuild]]; a doc with zero novel
-    * paragraphs vanishes). The digests of the FINAL survivors' kept
-    * paragraphs blind-append into the state in the para table's own lock
-    * window, AFTER the index window and BEFORE the corpus landing, so
-    * the state mirrors exactly the corpus's paragraph content (the
-    * keep-first contract "the first copy survives somewhere" holds:
-    * only shipped paragraphs block future copies) and a crash-replayed
-    * batch reads all its paragraphs as seen and under-admits (the
-    * noveltyBatch fail direction — never a double landing). The para
-    * window needs NO fingerprint fallback: min-partial appends are blind
-    * and commutative (no read-modify-write), and a probe gone stale
-    * against a concurrent writer only UNDER-trims — both shipped copies
-    * are real corpus content and the merged min is still a valid keeper.
-    * A 1-row trim ledger (paras in/dropped, tokens in/kept) appends to
-    * `paraTable/trim_ledger` per batch — the PipeScaleMain per-wave
-    * retention signal. Empty `paraTable` (the default) disables the
-    * stage.
+    * 100× tier, so production curation leads with it): the batch's
+    * paragraphs are digested ([[Dedup.paraDigested]]) and checked against
+    * the standing (digest → first-seen pid) min-partial state at
+    * `paraTable` (the q312 table, [[graft.operators.AggState]]) — a
+    * paragraph the corpus already shipped, or a within-batch repeat, is
+    * trimmed before ANY other gate sees the text
+    * ([[Dedup.paraExactRebuild]]; a doc with zero novel paragraphs
+    * vanishes). The digests of the FINAL survivors' kept paragraphs
+    * blind-append into the state in the para table's own lock window,
+    * AFTER the index window and BEFORE the corpus landing, so the state
+    * mirrors exactly the corpus's paragraph content (the keep-first
+    * contract "the first copy survives somewhere" holds: only shipped
+    * paragraphs block future copies) and a crash-replayed batch reads all
+    * its paragraphs as seen and under-admits (the novelty fold's fail
+    * direction — never a double landing). The para window needs NO
+    * fingerprint fallback: min-partial appends are blind and commutative
+    * (no read-modify-write), and a probe gone stale against a concurrent
+    * writer only UNDER-trims — both shipped copies are real corpus content
+    * and the merged min is still a valid keeper. A 1-row trim ledger
+    * (paras in/dropped, tokens in/kept) appends to `paraTable/trim_ledger`
+    * per batch — the PipeScaleMain per-wave retention signal. Empty
+    * `paraTable` (the default) disables the stage.
+    *
+    * `bloomBits` sizes the novelty filter at FIRST build (appends inherit
+    * the built meta): the r15 scale tiers measured the default 2^20 filter
+    * saturating around ~15k docs of this corpus shape (~33 8-grams/doc;
+    * fill → 0.9, false-positive rate → 0.73), after which the novelty
+    * fraction of genuinely new docs reads below `minNovelBp` and the gate
+    * drops nearly everything. Size it at ~8 bits per expected corpus
+    * n-gram (fill ≈ 0.31 at capacity, FP ≈ 3%) — 500k docs ≈ 140M bits
+    * ≈ 17.5 MB packed, still one broadcast.
     *
     * `raceHook` is a test seam: invoked with "bloom"/"index" after each
     * optimistic compute, right before its lock window — specs mutate the
@@ -472,10 +319,16 @@ object CorpusStream {
     }
 
     // the para table's lock window — called after the index window (the
-    // survivor set exists) and before the corpus landing (crash contract)
-    def paraWindow(keptOfSurvivors: DataFrame): Unit =
+    // survivor set exists) and before the corpus landing (crash contract):
+    // the survivors' KEPT paragraphs — exactly the content about to land —
+    // fold into the standing state; a no-op with the stage disabled
+    def paraWindow(survivors: DataFrame): Unit = if (paraTable.nonEmpty)
       Generations.withTableWriter(paraTable) { paraGen =>
-        AggState.append(keptOfSurvivors, Seq("dig"), "pid", paraGen)
+        AggState.append(marked.filter(col("d") === 0L)
+          .join(survivors.select(col("doc_id").as("src_doc")),
+            Seq("src_doc"), "left_semi")
+          .select(col("dig"), Dedup.pidDecimal(col("pid")).as("pid")),
+          Seq("dig"), "pid", paraGen)
         marked.withColumn("nt", size(split(col("text"), " ")).cast("long"))
           .agg(count(lit(1)).as("paras_in"),
             sum("d").as("paras_dropped"),
@@ -581,14 +434,7 @@ object CorpusStream {
             keepLast, retentionHours, DedupIndex.exists,
             DedupIndex.optimize(spark, _, _))
         }
-        // para digest fold: the survivors' KEPT paragraphs — exactly the
-        // content about to land — enter the standing state before the
-        // corpus write (see the scaladoc's crash contract)
-        if (paraTable.nonEmpty)
-          paraWindow(marked.filter(col("d") === 0L)
-            .join(survivors.select(col("doc_id").as("src_doc")),
-              Seq("src_doc"), "left_semi")
-            .select(col("dig"), Dedup.pidDecimal(col("pid")).as("pid")))
+        paraWindow(survivors)
         // the corpus landing needs no standing-table lock; the index
         // append still PRECEDES it (the ghost-entry crash contract)
         survivors.write.mode("append").parquet(outDir)
@@ -602,43 +448,10 @@ object CorpusStream {
         }
         // nothing survived the gates, but the trim may still have run
         // (its ledger row + cadence); the kept slice is empty
-        if (paraTable.nonEmpty)
-          paraWindow(marked.filter(col("d") === 0L)
-            .select(col("dig"), Dedup.pidDecimal(col("pid")).as("pid")).limit(0))
+        paraWindow(admittedDocs)
       }
     } finally {
       if (base != null) base.unpersist()
-      ()
-    }
-  }
-
-  def nearDupBatch(indexDir: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val docs = batch.persist()
-    var base: DataFrame = null // unpersisted in the finally (r14 ADVICE)
-    try {
-      if (!docs.isEmpty) {
-        base = Dedup.minhashBase(docs)
-        val idxMatches =
-          if (DedupIndex.exists(indexDir))
-            DedupIndex.probePersisted(spark, base, indexDir)
-              .select(col("batch_id").as("doc_id"))
-          else base.select("doc_id").limit(0)
-        val batchDups = Dedup.lshPairs(base, Dedup.LshBucketCap)
-          .select(col("d2").as("doc_id")).distinct()
-        val dropIds = idxMatches.unionByName(batchDups).distinct()
-          .localCheckpoint(eager = true)
-        val survivors = docs.join(dropIds, Seq("doc_id"), "left_anti")
-          .localCheckpoint(eager = true)
-        val survivorBase = base.join(dropIds, Seq("doc_id"), "left_anti")
-        DedupIndex.writeBase(survivorBase, indexDir,
-          if (DedupIndex.exists(indexDir)) "append" else "overwrite")
-        survivors.write.mode("append").parquet(outDir)
-      }
-    } finally {
-      if (base != null) base.unpersist()
-      docs.unpersist()
       ()
     }
   }

@@ -2,9 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{ClusterState, DedupIndex, Generations}
+import graft.operators.{AggState, ClusterState, DedupIndex, Generations}
 import graft.streaming.CorpusStream
 
 /** The end-to-end curation pipeline (PipelineMain's wiring): a directory
@@ -209,23 +210,24 @@ class PipelineSpec extends SparkSpec {
     val freshB = "a curious model reads the long corpus and it " +
       "notes every rare word while the index stays small in memory"
     val nearB = freshB.replaceAll("rare", "odd") // middle-token edit: J = 16/22 >= 0.7
-    def setup(root: String): (String, String, String, String) = {
+    def setup(root: String): (String, String, String, String, String) = {
       val pipe = s"$root/pipe"
-      val tables = (s"$pipe/bloom", s"$pipe/index", s"$pipe/clusters", s"$pipe/corpus")
+      val tables = (s"$pipe/bloom", s"$pipe/index", s"$pipe/clusters",
+        s"$pipe/corpus", s"$pipe/para")
       val seed = Seq(Doc(1, good, "en", "crawl", t("2024-01-01 10:00:00"))).toDF()
       CorpusStream.pipelineBatch(tables._1, tables._2, tables._3, tables._4,
-        optimizeEvery = 100)(seed, 0L)
+        optimizeEvery = 100, paraTable = tables._5)(seed, 0L)
       tables
     }
     // control: without the race, the near-dup's only index neighbor is
     // absent and doc 21 LANDS — proving the racing append below is what
     // the optimistic probe genuinely missed
     val rootA = java.nio.file.Files.createTempDirectory("graft_race_a").toString
-    val (_, _, _, corpusA) = setup(rootA)
+    val (_, _, _, corpusA, _) = setup(rootA)
     locally {
-      val (bloomT, indexT, clusterD, corpusD) = setup(rootA + "/ctl")
+      val (bloomT, indexT, clusterD, corpusD, paraT) = setup(rootA + "/ctl")
       CorpusStream.pipelineBatch(bloomT, indexT, clusterD, corpusD,
-        optimizeEvery = 100)(
+        optimizeEvery = 100, paraTable = paraT)(
         Seq(Doc(21, nearB, "en", "crawl", t("2024-01-01 11:00:00"))).toDF(), 1L)
       val landed = spark.read.parquet(corpusD)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
@@ -233,7 +235,7 @@ class PipelineSpec extends SparkSpec {
     }
     // raced: doc 20 (near-dup source) is appended to the live index
     // generation between the optimistic probe and the index lock window
-    val (bloomT, indexT, clusterD, corpusD) = setup(rootA + "/raced")
+    val (bloomT, indexT, clusterD, corpusD, paraT) = setup(rootA + "/raced")
     var fired = false
     val hook: String => Unit = {
       case "index" =>
@@ -244,7 +246,7 @@ class PipelineSpec extends SparkSpec {
       case _ => ()
     }
     CorpusStream.pipelineBatch(bloomT, indexT, clusterD, corpusD,
-      optimizeEvery = 100, raceHook = hook)(
+      optimizeEvery = 100, paraTable = paraT, raceHook = hook)(
       Seq(Doc(21, nearB, "en", "crawl", t("2024-01-01 11:00:00"))).toDF(), 1L)
     assert(fired, "race hook never fired")
     val landed = spark.read.parquet(corpusD)
@@ -261,11 +263,12 @@ class PipelineSpec extends SparkSpec {
   test("lock staging: bloom fold racing the window is seen by the re-probe") {
     val root = java.nio.file.Files.createTempDirectory("graft_race_b").toString
     val pipe = s"$root/pipe"
-    val (bloomT, indexT, clusterD, corpusD) =
-      (s"$pipe/bloom", s"$pipe/index", s"$pipe/clusters", s"$pipe/corpus")
+    val (bloomT, indexT, clusterD, corpusD, paraT) =
+      (s"$pipe/bloom", s"$pipe/index", s"$pipe/clusters", s"$pipe/corpus",
+        s"$pipe/para")
     val seed = Seq(Doc(1, good, "en", "crawl", t("2024-01-01 10:00:00"))).toDF()
     CorpusStream.pipelineBatch(bloomT, indexT, clusterD, corpusD,
-      optimizeEvery = 100)(seed, 0L)
+      optimizeEvery = 100, paraTable = paraT)(seed, 0L)
     // a concurrent writer lands doc 31's CONTENT (folds its n-grams) in
     // the bloom race window; the batch carries the identical content under
     // a new id — the optimistic decision admitted it, the locked re-probe
@@ -274,13 +277,15 @@ class PipelineSpec extends SparkSpec {
     val hook: String => Unit = {
       case "bloom" =>
         fired = true
-        CorpusStream.noveltyAdmit(Generations.resolve(bloomT))(
-          Seq(Doc(30, fresh2, "en", "crawl", t("2024-01-01 10:30:00"))).toDF())
-        ()
+        val gen = Generations.resolve(bloomT)
+        val ngrams = Seq(fresh2).toDF("text").select(explode(
+          graft.queries.TrainPrep.hashedNgrams8(col("text"))).as("h"))
+        AggState.writeBloomSlice(
+          AggState.bloomSliceFor(ngrams, Nil, "h", gen), gen)
       case _ => ()
     }
     CorpusStream.pipelineBatch(bloomT, indexT, clusterD, corpusD,
-      optimizeEvery = 100, raceHook = hook)(
+      optimizeEvery = 100, paraTable = paraT, raceHook = hook)(
       Seq(Doc(31, fresh2, "en", "crawl", t("2024-01-01 11:00:00"))).toDF(), 1L)
     assert(fired, "race hook never fired")
     val landed = spark.read.parquet(corpusD)
