@@ -10,7 +10,7 @@ import graft.sinks.ReportSink
   * "What's missing" #3; SURVEY.md §7.1's minimum slice made runnable).
   *
   * ```
-  * runMain graft.AuditMain <inDir|baseUrl> <outDir> [asOfUtc]
+  * runMain graft.AuditMain <inDir|baseUrl> <outDir> [asOfUtc] [q2=reference]
   * ```
   *
   * Each source is a JSON *document* in the API shapes of SURVEY.md §1.1,
@@ -19,7 +19,11 @@ import graft.sinks.ReportSink
   * from `<baseUrl>/<name>` via the graft-http DSv2 source (S2-S4), with
   * `GRAFT_TOKEN` forwarded as the Authorization header (S1,
   * `app.py:23-41`). Both paths produce identical `(seq, variant)` rows, so
-  * the pipeline downstream of the source select is one plan:
+  * the pipeline downstream of the source select is one plan. A trailing
+  * `q2=reference` reproduces the reference's literal GMT+25 weekly/monthly
+  * Q2 offset (`app.py:142-144`) instead of the normalized +7 — the last
+  * documented divergence, kept for byte-faithful replays of the original
+  * report (SURVEY.md §7.5):
   *
   *  - `projects`:   `{"data":[{id, name, init_name?, loc?}, ...]}` —
   *    `init_name` defaults to `name` and `loc` to `'Delman'`, the aliasing
@@ -80,8 +84,10 @@ object AuditMain {
   private[graft] def auditProjects(spark: SparkSession, source: String,
                                    projects: DataFrame,
                                    asOfUtc: org.apache.spark.sql.Column,
-                                   token: Option[String]): DataFrame =
-    auditFrom(projects, asOfUtc, name => AuditMain.entries(spark, source, name, token))
+                                   token: Option[String],
+                                   referenceQ2: Boolean): DataFrame =
+    auditFrom(projects, asOfUtc,
+      name => AuditMain.entries(spark, source, name, token), referenceQ2)
 
   /** [[auditProjects]] with the side documents fetched per-project through
     * the keyed multi-path scan (`$base/projects/{id}/<name>`, the
@@ -93,7 +99,8 @@ object AuditMain {
   private[graft] def auditProjectsKeyed(spark: SparkSession, baseUrl: String,
                                         projects: DataFrame, ids: Seq[String],
                                         asOfUtc: org.apache.spark.sql.Column,
-                                        token: Option[String]): DataFrame = {
+                                        token: Option[String],
+                                        referenceQ2: Boolean): DataFrame = {
     // path_values is comma-delimited: an id carrying a comma would split
     // into two bogus keys and silently fetch the wrong endpoints
     ids.find(_.contains(",")).foreach(bad => throw new IllegalArgumentException(
@@ -111,12 +118,13 @@ object AuditMain {
         .select(col("seq") + 1, try_parse_json(col("json")).as("e"))
         .toDF("seq", "e")
     }
-    auditFrom(projects, asOfUtc, keyedEntries)
+    auditFrom(projects, asOfUtc, keyedEntries, referenceQ2)
   }
 
   private def auditFrom(projects: DataFrame,
                         asOfUtc: org.apache.spark.sql.Column,
-                        entries: String => DataFrame): DataFrame = {
+                        entries: String => DataFrame,
+                        referenceQ2: Boolean): DataFrame = {
 
     val schedules = ScheduleNormalizer.normalizeSchedules(
       entries("schedules").select(
@@ -141,26 +149,24 @@ object AuditMain {
         str("$.status")(col("n")).as("status"),
         str("$.export_status")(col("n")).as("export_status"))
 
-    // GRAFT_Q2_MODE=reference reproduces the reference's literal GMT+25
-    // weekly/monthly offset (app.py:142-144) instead of the normalized +7
-    // — the last documented divergence, switchable for byte-faithful
-    // replays of the original report (SURVEY.md §7.5)
-    Audit.audit(projects, schedules, monitoring, nodes, asOfUtc,
-      referenceQ2 = sys.env.get("GRAFT_Q2_MODE").contains("reference"))
+    Audit.audit(projects, schedules, monitoring, nodes, asOfUtc, referenceQ2)
   }
 
   /** Builds the report DataFrame (separated from `main` for the golden
     * end-to-end spec). HTTP mode forwards `GRAFT_TOKEN` as the
-    * Authorization header (S1). */
+    * Authorization header (S1). `referenceQ2` is the `q2=reference`
+    * argument (the literal GMT+25 Q2 offset; see the object scaladoc). */
   def run(spark: SparkSession, source: String,
-          asOfUtc: org.apache.spark.sql.Column): DataFrame =
-    runWithAuth(spark, source, asOfUtc, sys.env.get("GRAFT_TOKEN"))
+          asOfUtc: org.apache.spark.sql.Column,
+          referenceQ2: Boolean = false): DataFrame =
+    runWithAuth(spark, source, asOfUtc, sys.env.get("GRAFT_TOKEN"), referenceQ2)
 
   def runWithAuth(spark: SparkSession, source: String,
                   asOfUtc: org.apache.spark.sql.Column,
-                  token: Option[String]): DataFrame = {
+                  token: Option[String],
+                  referenceQ2: Boolean = false): DataFrame = {
     val projects = parseProjects(entries(spark, source, "projects", token))
-    auditProjects(spark, source, projects, asOfUtc, token)
+    auditProjects(spark, source, projects, asOfUtc, token, referenceQ2)
   }
 
   /** The streaming project source: same rows as the batch `entries`
@@ -178,10 +184,13 @@ object AuditMain {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: AuditMain <inDir|baseUrl> <outDir> [asOfUtc]")
+    require(args.length >= 2,
+      "usage: AuditMain <inDir|baseUrl> <outDir> [asOfUtc] [q2=reference]")
+    val referenceQ2 = args.drop(2).contains("q2=reference")
     val spark = GraftSession.cli()
-    val asOf = args.lift(2).map(s => to_timestamp(lit(s))).getOrElse(current_timestamp())
-    val report = run(spark, args(0), asOf)
+    val asOf = args.drop(2).find(_ != "q2=reference")
+      .map(s => to_timestamp(lit(s))).getOrElse(current_timestamp())
+    val report = run(spark, args(0), asOf, referenceQ2)
     ReportSink.writeCsv(report, args(1))
     // the reference's literal artifact (`app.py:220`): a styled workbook
     sinks.XlsxWriter.writeXlsx(report,

@@ -194,17 +194,7 @@ object CorpusMain {
     // shared span is exactly what a training run should not see 6×. One
     // (doc, gram) aggregate feeds the df count AND the join-back (its one
     // shuffle is reused); the drop list is checkpointed before release.
-    val grams3 = {
-      val t = TrainPrep.rawToks(col("text"))
-      when(size(t) < 3, array().cast("array<string>"))
-        .otherwise(zip_with(
-          zip_with(
-            slice(t, lit(1), size(t) - 2),
-            slice(t, lit(2), size(t) - 2),
-            (a, b) => concat(a, lit(" "), b)),
-          slice(t, lit(3), size(t) - 2),
-          (ab, c) => concat(ab, lit(" "), c)))
-    }
+    val grams3 = TrainPrep.wordGrams(TrainPrep.rawToks(col("text")), 3)
     val gc = deRepped
       .select(col("doc_id"), explode(grams3).as("g"))
       .select(col("doc_id"),

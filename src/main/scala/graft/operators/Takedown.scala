@@ -17,8 +17,7 @@ import graft.streaming.CorpusStream.Layout
   *  1. **corpus rewrite first** — the takedown's primary obligation
   *     lands before anything else (survivors pinned eagerly before the
   *     overwrite); a crash after this leaves ghost state entries, which
-  *     only over-suppress re-crawls (and [[graft.streaming.CorpusStream
-  *     .repairIndex]] already owns index ghosts);
+  *     only over-suppress re-crawls until the takedown is re-run;
   *  2. index tombstones + affected-cluster re-derivation
   *     ([[ClusterState.removeDocs]] — a hub removal SPLITS its cluster)
   *     under the index table's writer locks;
@@ -29,7 +28,11 @@ import graft.streaming.CorpusStream.Layout
   *     the survivors and the digest vanishes, re-admitting a future
   *     re-crawl of that content at the trim gate. Corpus-derived pids
   *     are <= the ingest-time pids (a rebuild only removes indexes), so
-  *     the affected-min detection always fires for removed keepers;
+  *     the affected-min detection always fires for removed keepers. A
+  *     requested id the corpus never held — a GHOST, whose batch lost its
+  *     corpus write after its para window — has no text to digest: its
+  *     keepers are the state's own rows whose min pid falls in the id's
+  *     pid range (pid = doc_id * 2^20 + paragraph index);
   *  4. optionally (`rebloom`) the novelty Bloom filter is REBUILT from
   *     the surviving corpus into a new published generation — OR-only
   *     bits cannot retract, so without this the novelty gate keeps
@@ -58,12 +61,26 @@ object Takedown {
     val paraGen = Generations.active(t.para)
     val nDigs =
       if (AggState.exists(paraGen))
-        graft.queries.Dedup.paraDigested(removed.select("doc_id", "text"))
-          .select("dig").distinct().count()
+        paraKeepers(spark, paraGen, ids, removed).select("dig").distinct().count()
       else 0L
     Report(ids.count(), nRemoved, corpus.count() - nRemoved,
       indexTombstoned = false, clustersUpdated = false, nDigs,
       bloomRebuilt = false)
+  }
+
+  /** The (dig, pid) para-state rows a takedown of `ids` retracts: the
+    * paragraphs of the `removed` corpus docs, plus the state's own keeper
+    * rows of every requested id the corpus never held (ghosts). */
+  private def paraKeepers(spark: SparkSession, paraGen: String,
+      ids: DataFrame, removed: DataFrame): DataFrame = {
+    import graft.queries.Dedup
+    val ghosts = ids.join(removed.select("doc_id"), Seq("doc_id"), "left_anti")
+    Dedup.paraDigested(removed.select("doc_id", "text"))
+      .select(col("dig"), Dedup.pidDecimal(col("pid")).as("pid"))
+      .unionByName(AggState.merged(spark, paraGen, Seq("dig"))
+        .withColumn("doc_id", floor(col("min") / lit(Dedup.ParaIdScale)).cast("long"))
+        .join(ghosts, Seq("doc_id"), "left_semi")
+        .select(col("dig"), col("min").as("pid")))
   }
 
   /** Execute the takedown (see the object scaladoc for order + crash
@@ -104,10 +121,7 @@ object Takedown {
     val nDigs = Generations.withTableWriter(t.para) { paraGen =>
       if (!AggState.exists(paraGen)) 0L
       else {
-        val deleted = graft.queries.Dedup
-          .paraDigested(removed.select("doc_id", "text"))
-          .select(col("dig"),
-            graft.queries.Dedup.pidDecimal(col("pid")).as("pid"))
+        val deleted = paraKeepers(spark, paraGen, ids, removed)
           .localCheckpoint(eager = true)
         val n = deleted.select("dig").distinct().count()
         val surv = graft.queries.Dedup

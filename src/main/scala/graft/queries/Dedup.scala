@@ -66,7 +66,7 @@ object Dedup {
   private[queries] val TokHashSql =
     "('0x' || substr(md5(t), 1, 8))::BIGINT % 2147483647"
 
-  /** Distinct 3-word shingle set, mirroring hashedDocs (CTEs tk -> sh).
+  /** Distinct 3-word shingle set, mirroring shingleSet (CTEs tk -> sh).
     * Parametrized by the source relation (r16): q303 runs the identical
     * chain over a derived paragraph relation — the fragment must stay
     * single-sourced or the pair semantics fork. The `documents` instance
@@ -619,33 +619,17 @@ object Dedup {
     out
   }
 
-  /** Distinct 3-word shingles of a token array, built with slice+zip_with.
-    * NOT with `transform(sequence(...), i -> t[i]...)`: after projection
-    * collapse the indexed child is re-evaluated per lambda invocation,
-    * turning shingling O(tokens²) per row. zip_with walks each slice once. */
+  /** Distinct 3-word shingle strings of a token array. */
   private[queries] def shingles3(t: Column): Column =
-    when(size(t) < 3, array().cast("array<string>"))
-      .otherwise(array_distinct(zip_with(
-        zip_with(
-          slice(t, lit(1), size(t) - 2),
-          slice(t, lit(2), size(t) - 2),
-          (a, b) => concat(a, lit(" "), b)),
-        slice(t, lit(3), size(t) - 2),
-        (ab, c) => concat(ab, lit(" "), c))))
+    array_distinct(TrainPrep.wordGrams(t, 3))
 
-  /** doc_id + distinct 3-word-shingle set + per-shingle hashes. Shingles are
-    * the MinHash item set: unigram token sets are not discriminating on a
+  /** The sorted distinct 3-word-shingle hash set of a token array (raw,
+    * non-distinct tokens — shingles need word order). Shingles are the
+    * MinHash item set: unigram token sets are not discriminating on a
     * small vocabulary (nearly all docs collide), shingles make Jaccard ≈ 0
     * for unrelated docs. */
-  private[queries] def hashedDocsOf(docs: DataFrame): DataFrame =
-    docs
-      // raw (non-distinct) token sequence — shingles need word order
-      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
-      .select(col("doc_id"), shingles3(col("t")).as("w"))
-      .withColumn("h", transform(col("w"), t => tokHash(t)))
-
-  private def hashedDocs(s: SparkSession, dir: String): DataFrame =
-    hashedDocsOf(Tables(s, dir, "documents"))
+  private def shingleSet(t: Column): Column =
+    array_sort(TextHashes.hashed_ngrams(t, 3, P))
 
   /** LSH bucket-size cap: a band bucket with more members than this never
     * pairs directly — a degenerate bucket (boilerplate or near-empty docs
@@ -1305,8 +1289,8 @@ object Dedup {
       // Jaccard over *hashed* shingle sets (BIGINT arrays): set ops on longs
       // are several× cheaper than on ~20-char strings, and |A∪B| is derived
       // arithmetically (|A|+|B|-|A∩B|) instead of building the union array.
-      val d = hashedDocs(s, dir).filter(col("doc_id") < 500)
-        .select(col("doc_id"), array_sort(array_distinct(col("h"))).as("hs"))
+      val d = Tables(s, dir, "documents").filter(col("doc_id") < 500)
+        .select(col("doc_id"), shingleSet(TrainPrep.rawToks(col("text"))).as("hs"))
         .select(col("doc_id"), col("hs"), size(col("hs")).as("sz"))
       val a = d.select(col("doc_id").as("d1"), col("hs").as("h1"), col("sz").as("sz1"))
       val b = d.select(col("doc_id").as("d2"), col("hs").as("h2"), col("sz").as("sz2"))
@@ -1347,14 +1331,14 @@ object Dedup {
     // this bounded-sample form is the oracle for.
     "q83_containment" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val host = hashedDocsOf(docs)
-        .select(col("doc_id").as("d2"), array_sort(array_distinct(col("h"))).as("h2"))
+      val host = docs
+        .select(col("doc_id").as("d2"), shingleSet(TrainPrep.rawToks(col("text"))).as("h2"))
         .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
       val snip = docs.filter(col("doc_id") % 7 === 0)
         .withColumn("t", TrainPrep.rawToks(col("text")))
         .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
         .select((col("doc_id") + lit(1000000L)).as("d1"),
-          array_sort(array_distinct(transform(shingles3(col("ht")), x => tokHash(x)))).as("h1"))
+          shingleSet(col("ht")).as("h1"))
         .select(col("d1"), col("h1"), size(col("h1")).as("sz1"))
         .filter(col("sz1") > 0)
       val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))
@@ -1379,14 +1363,14 @@ object Dedup {
     // it — no probabilistic slack in the comparison.
     "q89_containment_lsh" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val host = hashedDocsOf(docs)
-        .select(col("doc_id").as("d2"), array_sort(array_distinct(col("h"))).as("h2"))
+      val host = docs
+        .select(col("doc_id").as("d2"), shingleSet(TrainPrep.rawToks(col("text"))).as("h2"))
         .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
       val snip = docs.filter(col("doc_id") % 7 === 0)
         .withColumn("t", TrainPrep.rawToks(col("text")))
         .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
         .select((col("doc_id") + lit(1000000L)).as("d1"),
-          array_sort(array_distinct(transform(shingles3(col("ht")), x => tokHash(x)))).as("h1"))
+          shingleSet(col("ht")).as("h1"))
         .select(col("d1"), col("h1"), size(col("h1")).as("sz1"))
         .filter(col("sz1") > 0)
       // inverted index of host hashes; probe = bottom-4 sketch per snippet
@@ -1740,14 +1724,7 @@ object Dedup {
         .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
       val grams = toks.select(col("doc_id"),
-        explode(zip_with(
-          zip_with(
-            slice(col("t"), lit(1), size(col("t")) - 2),
-            slice(col("t"), lit(2), size(col("t")) - 2),
-            (a, b) => concat(a, lit(" "), b)),
-          slice(col("t"), lit(3), size(col("t")) - 2),
-          (ab, c) => concat(ab, lit(" "), c))).as("g"))
-        .select(col("doc_id"), tokHash(col("g")).as("h"))
+        explode(TextHashes.hashed_ngrams_seq(col("t"), 3, P)).as("h"))
       val gc = grams.groupBy("doc_id", "h").agg(count(lit(1)).as("cnt"))
       val df = gc.groupBy("h").agg(count(lit(1)).as("df"))
       gc.join(df, Seq("h"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextHashes
 import graft.Tables
-import TrainPrep.{Stop, rawToks, repetitionGate, tokenGate}
+import TrainPrep.{Stop, rawToks, repetitionGate, tokenGate, wordPairs}
 
 /** Text-analysis operators over the `documents` table — the training-data
   * pipeline surface (builder brief): token counting, quality scoring,
@@ -108,12 +108,8 @@ object Text {
     * both the LM aggregation and the per-doc join, so it is persisted and
     * the small scored output is checkpointed eagerly before release. */
   def lmScore(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val w = rawToks(col("text"))
-    val pairs = when(size(w) < 2, array().cast("array<struct<prev:string,nxt:string>>"))
-      .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (a, b) => struct(a.as("prev"), b.as("nxt"))))
     val base = docs
-      .select(col("doc_id"), explode(pairs).as("p"))
+      .select(col("doc_id"), explode(wordPairs(rawToks(col("text")))).as("p"))
       .select(col("doc_id"), col("p.prev").as("prev"), col("p.nxt").as("nxt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lm = base.groupBy("prev", "nxt").agg(count(lit(1)).as("cnt"))
@@ -325,12 +321,8 @@ object Text {
     // one row per prev over the second shuffle (no window sort; the q40
     // pattern, negating the count because strings can't be negated).
     "q87_bigram_lm" -> ((s: SparkSession, dir: String) => {
-      val w = rawToks(col("text"))
-      val pairs = when(size(w) < 2, array().cast("array<struct<prev:string,nxt:string>>"))
-        .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-          (a, b) => struct(a.as("prev"), b.as("nxt"))))
       val pc = Tables(s, dir, "documents")
-        .select(explode(pairs).as("p"))
+        .select(explode(wordPairs(rawToks(col("text")))).as("p"))
         .groupBy(col("p.prev").as("prev"), col("p.nxt").as("nxt"))
         .agg(count(lit(1)).as("cnt"))
       pc.groupBy("prev")

@@ -60,6 +60,26 @@ object TrainPrep {
     when(length(trim(c)) === 0, array().cast("array<string>"))
       .otherwise(split(lower(trim(c)), "\\s+"))
 
+  /** Positional space-joined word n-grams of a token array: element i is
+    * tokens [i, i+n) joined by single spaces (no distinct); fewer than n
+    * tokens → []. Built as a slice+zip_with fold, NOT
+    * `transform(sequence(...), i -> t[i]...)`: after projection collapse
+    * the indexed child is re-evaluated per lambda invocation, turning the
+    * build O(tokens²) per row. zip_with walks each slice once. To HASH
+    * grams, use the native TextHashes kernels instead. */
+  private[graft] def wordGrams(t: Column, n: Int): Column =
+    when(size(t) < n, array().cast("array<string>"))
+      .otherwise((2 to n).foldLeft(slice(t, lit(1), size(t) - (n - 1))) { (acc, k) =>
+        zip_with(acc, slice(t, lit(k), size(t) - (n - 1)), (a, b) => concat(a, lit(" "), b))
+      })
+
+  /** Adjacent token pairs of a token array as `struct<prev, nxt>`
+    * elements, in order; fewer than 2 tokens → []. */
+  private[graft] def wordPairs(w: Column): Column =
+    when(size(w) < 2, array().cast("array<struct<prev:string,nxt:string>>"))
+      .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
+        (a, b) => struct(a.as("prev"), b.as("nxt"))))
+
   /** The shared stopword list (quality gates, language heuristics, the
     * q284-family stopword feature). Column callers use
     * `array(Stop.map(lit): _*)`. */
@@ -233,13 +253,11 @@ object TrainPrep {
 
   /** Distinct md5-hashed 8-gram set of a text column — q85's contamination
     * unit, extracted so CorpusMain's decontamination stage uses the exact
-    * construction the oracle-verified query does. The 8-gram build is
-    * slice+zip_with (one walk per position), never indexed-transform
-    * (which re-evaluates the child per index after projection collapse). */
+    * construction the oracle-verified query does. */
   def hashedNgrams8(text: Column): Column =
-    // one native codegen'd pass — md5 digests token bytes directly, no
-    // gram string materializes, distinct folds in place (bit-parity incl.
-    // element ORDER with the HOF form pinned in TextHashesSpec)
+    // the native gram kernel — md5 digests token bytes directly, no gram
+    // string materializes — then array_distinct (bit-parity incl. element
+    // ORDER with the HOF form pinned in TextHashesSpec)
     org.apache.spark.sql.graft.TextHashes.hashed_ngrams(rawToks(text), 8, 2147483647L)
 
   val queries: Map[String, Q] = Map(
@@ -1137,18 +1155,14 @@ object TrainPrep {
   /** The corpus-global argmax pair (count DESC, pair ASC): a distributed
     * TakeOrderedAndProject — ONE row reaches the driver. Takes the
     * SEQUENCES, not the exploded view: adjacent-pair counting needs no
-    * positions, so the q87 zip_with shape replaces the explode+lead
+    * positions, so q87's [[wordPairs]] replaces the explode+lead
     * window — StageLedgerMain attributed the q299/q301 100×-tier
     * residual spill (2 GB in-memory sorter per counting pass) to exactly
     * that window sort, which this removes (the one remaining windowed
     * pass per round is the mark/rebuild, which genuinely needs order). */
   private[graft] def bpeTopPair(cur: org.apache.spark.sql.DataFrame): (String, String) = {
-    val w = col("w")
-    val pairs = when(size(w) < 2, array().cast("array<struct<a:string,b:string>>"))
-      .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (x, y) => struct(x.as("a"), y.as("b"))))
-    val top = cur.select(explode(pairs).as("p"))
-      .groupBy(col("p.a").as("tok"), col("p.b").as("nxt"))
+    val top = cur.select(explode(wordPairs(col("w"))).as("p"))
+      .groupBy(col("p.prev").as("tok"), col("p.nxt").as("nxt"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("tok"), asc("nxt")).limit(1)
       .collect().headOption
@@ -1184,12 +1198,8 @@ object TrainPrep {
     * distributed TakeOrderedAndProject, K rows to the driver. */
   private[graft] def bpeTopPairs(cur: org.apache.spark.sql.DataFrame,
       k: Int): Seq[(String, String, Long)] = {
-    val w = col("w")
-    val pairs = when(size(w) < 2, array().cast("array<struct<a:string,b:string>>"))
-      .otherwise(zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-        (x, y) => struct(x.as("a"), y.as("b"))))
-    cur.select(explode(pairs).as("p"))
-      .groupBy(col("p.a").as("tok"), col("p.b").as("nxt"))
+    cur.select(explode(wordPairs(col("w"))).as("p"))
+      .groupBy(col("p.prev").as("tok"), col("p.nxt").as("nxt"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("tok"), asc("nxt")).limit(k)
       .collect().toSeq
@@ -1220,12 +1230,8 @@ object TrainPrep {
       .withColumn("tgt",
         (size(filter(col("w"), t => array_contains(stop, t))).cast("long") * lit(10000L)
           >= size(col("w")).cast("long") * lit(800L)).cast("long"))
-    val bigrams = when(size(col("w")) < 2, array().cast("array<string>"))
-      .otherwise(zip_with(slice(col("w"), lit(1), size(col("w")) - 1),
-        slice(col("w"), lit(2), size(col("w")) - 1),
-        (a, b) => concat(a, lit(" "), b)))
     lab
-      .withColumn("f", explode(concat(col("w"), bigrams)))
+      .withColumn("f", explode(concat(col("w"), wordGrams(col("w"), 2))))
       .select(col("doc_id"), col("tgt"), (Dedup.tokHash(col("f")) % 1024).as("bucket"))
   }
 

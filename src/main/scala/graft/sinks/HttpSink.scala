@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Per-row result of a sync POST — the K1d report shape
@@ -35,27 +35,42 @@ object HttpSink {
       .repartition(parallelism)
       .mapPartitions { rows =>
         // one pooled client per partition — never per row
-        val client = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofMillis(timeoutMs.toLong)).build()
+        val c = client(timeoutMs)
         rows.map { case (nodeId, url) =>
-          var attempt = 0
-          var code = -1
-          while (attempt < maxAttempts && !(code >= 200 && code < 300)) {
-            attempt += 1
-            code =
-              try {
-                val b = HttpRequest.newBuilder(URI.create(url))
-                  .timeout(Duration.ofMillis(timeoutMs.toLong))
-                  .POST(HttpRequest.BodyPublishers.noBody())
-                hdrs.foreach { case (k, v) => b.header(k, v) }
-                client.send(b.build(), HttpResponse.BodyHandlers.discarding()).statusCode()
-              } catch { case _: Exception => -1 }
-            if (!(code >= 200 && code < 300) && attempt < maxAttempts)
-              Thread.sleep(100L * attempt) // linear backoff
-          }
-          PostResult(nodeId, url, code, attempt)
+          val (code, attempts) = postWithRetry(c, url, hdrs, maxAttempts, timeoutMs)
+          PostResult(nodeId, url, code, attempts)
         }
       }
+  }
+
+  /** The HTTP client one task reuses for all its rows. */
+  private[graft] def client(timeoutMs: Int): HttpClient =
+    HttpClient.newBuilder().connectTimeout(Duration.ofMillis(timeoutMs.toLong)).build()
+
+  private[graft] def ok(code: Int): Boolean = code >= 200 && code < 300
+
+  /** The one POST-retry loop of both HTTP sinks (this one and the
+    * graft-http DSv2 writer): POST `url` with no body until a 2xx or
+    * `maxAttempts` tries, sleeping 100 ms × attempt between tries; a
+    * connection error reads as status -1. Returns (last status, attempts). */
+  private[graft] def postWithRetry(client: HttpClient, url: String,
+      headers: Seq[(String, String)], maxAttempts: Int, timeoutMs: Int): (Int, Int) = {
+    var attempt = 0
+    var code = -1
+    while (attempt < maxAttempts && !ok(code)) {
+      attempt += 1
+      code =
+        try {
+          val b = HttpRequest.newBuilder(URI.create(url))
+            .timeout(Duration.ofMillis(timeoutMs.toLong))
+            .POST(HttpRequest.BodyPublishers.noBody())
+          headers.foreach { case (k, v) => b.header(k, v) }
+          client.send(b.build(), HttpResponse.BodyHandlers.discarding()).statusCode()
+        } catch { case _: Exception => -1 }
+      if (!ok(code) && attempt < maxAttempts)
+        Thread.sleep(100L * attempt) // linear backoff
+    }
+    (code, attempt)
   }
 
   /** Streaming K1 (SURVEY.md §2.6): drive the POST sink from an unbounded
@@ -78,16 +93,4 @@ object HttpSink {
         ()
       }
       .start()
-
-  /** REST token auth (S1, `sync.py:14-32`): a connector *option*, not an
-    * operator — runs once on the driver, result is shipped as a header. */
-  def fetchAuthHeader(spark: SparkSession, tokenUrl: String, body: String,
-                      headerName: String = "Authorization"): Option[String] = {
-    val client = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
-    val req = HttpRequest.newBuilder(URI.create(tokenUrl))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(body)).build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    Option(resp.headers().firstValue(headerName).orElse(null))
-  }
 }

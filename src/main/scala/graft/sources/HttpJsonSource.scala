@@ -18,6 +18,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sinks.HttpSink
 
 /** DataSource V2 reader for paginated JSON REST endpoints — the S2/S3/S4
   * source family (`Job Cek Script/app.py:125-129,161-165,201-205`;
@@ -141,32 +142,18 @@ final class HttpRowWriter(props: Map[String, String], urlIdx: Int,
                           maxAttempts: Int, timeoutMs: Int)
     extends DataWriter[InternalRow] {
   // one pooled client per task, never per row
-  private lazy val client = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofMillis(timeoutMs.toLong)).build()
+  private lazy val client = HttpSink.client(timeoutMs)
+  private val headers = props.toSeq.collect {
+    case (k, v) if k.toLowerCase.startsWith("header.") => k.substring(7) -> v
+  }
   private var posted = 0L
   private var failed = 0L
 
   override def write(row: InternalRow): Unit = {
     if (row.isNullAt(urlIdx)) { failed += 1; return } // null url = failed row, not an NPE
-    val url = row.getUTF8String(urlIdx).toString
-    var attempt = 0
-    var code = -1
-    while (attempt < maxAttempts && !(code >= 200 && code < 300)) {
-      attempt += 1
-      code =
-        try {
-          val b = HttpRequest.newBuilder(URI.create(url))
-            .timeout(Duration.ofMillis(timeoutMs.toLong))
-            .POST(HttpRequest.BodyPublishers.noBody())
-          props.foreach { case (k, v) =>
-            if (k.toLowerCase.startsWith("header.")) b.header(k.substring(7), v)
-          }
-          client.send(b.build(), HttpResponse.BodyHandlers.discarding()).statusCode()
-        } catch { case _: Exception => -1 }
-      if (!(code >= 200 && code < 300) && attempt < maxAttempts)
-        Thread.sleep(50L * attempt)
-    }
-    if (code >= 200 && code < 300) posted += 1 else failed += 1
+    val (code, _) = HttpSink.postWithRetry(client,
+      row.getUTF8String(urlIdx).toString, headers, maxAttempts, timeoutMs)
+    if (HttpSink.ok(code)) posted += 1 else failed += 1
   }
   override def commit(): WriterCommitMessage = HttpWriteSummary(posted, failed)
   override def abort(): Unit = ()

@@ -61,8 +61,9 @@ object AuditStream {
             val ids = projects.select("id").distinct()
               .collect().map(_.getString(0)).sorted.toSeq
             AuditMain.auditProjectsKeyed(spark, baseUrl, projects, ids,
-              asOfUtc, token)
-          } else AuditMain.auditProjects(spark, baseUrl, projects, asOfUtc, token)
+              asOfUtc, token, referenceQ2 = false)
+          } else AuditMain.auditProjects(spark, baseUrl, projects, asOfUtc,
+            token, referenceQ2 = false)
         report.write.mode("append").parquet(outDir)
       }
       .start()

@@ -179,17 +179,24 @@ object CorpusStream {
     }
   }
 
-  /** Recovery for the documented crash window (index appended, sink write
-    * lost): index entries whose doc never landed in the corpus store are
-    * GHOSTS — they suppress every future copy of their content while the
-    * content itself was never admitted. The repair tombstones them
-    * ([[DedupIndex.remove]]) so the next crawl of that content is
-    * admitted cleanly. Assumes ingest assigns fresh surrogate doc_ids per
-    * crawl (re-crawled content returns under a NEW id, so tombstoned
-    * ghost ids never resurface) — the standard ingest-id discipline.
-    * Run it at restart, before the stream resumes. Returns the ghost
-    * count; both sides of the anti join are id projections (delta-sized
-    * driver cost: none). */
+  /** Index half of the recovery for the documented crash window (index
+    * appended, sink write lost): index entries whose doc never landed in
+    * the corpus store are GHOSTS — they suppress every future copy of
+    * their content while the content itself was never admitted. The
+    * repair finds and tombstones them ([[DedupIndex.remove]]; pass the
+    * resolved index generation). On a [[pipelineBatch]] pipe dir that
+    * alone does NOT re-admit the content: the batch's bloom and para
+    * windows ran before the lost write, so the novelty filter and the
+    * paragraph state still hold it and a re-crawl dies at those gates
+    * (CorpusStreamSpec runs the case). There the recovery that works is
+    * [[graft.operators.Takedown]] with `rebloom` over the ghost ids (the
+    * index's live ids missing from the corpus, the set this repair
+    * counts): it tombstones them, retracts their paragraph keepers and
+    * rebuilds the filter from the corpus. Assumes ingest assigns fresh surrogate
+    * doc_ids per crawl (re-crawled content returns under a NEW id, so
+    * tombstoned ghost ids never resurface) — the standard ingest-id
+    * discipline. Returns the ghost count; both sides of the anti join are
+    * id projections (delta-sized driver cost: none). */
   def repairIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, outDir: String): Long = {
     if (!DedupIndex.exists(indexDir)) return 0L
@@ -247,11 +254,13 @@ object CorpusStream {
     * n-grams and under-admits — an n-gram-BEARING doc is never landed
     * twice; no-signal docs follow the sink's plain at-least-once
     * semantics, their exact duplicates owned by [[curated]]'s digest
-    * dedup), the index append precedes the corpus write (ghost entries are
-    * [[repairIndex]]'s contract), and the cluster fold precedes the drop
-    * from inside the index window (edges derive from that window's
-    * validated probe). A replayed cadence batch skips its optimize (see
-    * [[maintainGeneration]]).
+    * dedup), the index append precedes the corpus write (a lost write
+    * leaves a GHOST in the bloom, index and para states; a Takedown of
+    * the ghost ids with `rebloom` re-admits its content, where
+    * [[repairIndex]] clears only the index), and the cluster fold
+    * precedes the drop from inside the index window (edges derive from
+    * that window's validated probe). A replayed cadence batch skips its
+    * optimize (see [[maintainGeneration]]).
     *
     * EXACT-PARAGRAPH trim (r18, VERDICT r17 #1 — exact-FIRST: q311
     * measured the digest trim at ~1/10 the near-dup trim's cost at the

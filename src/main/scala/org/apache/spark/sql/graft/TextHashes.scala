@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.array_distinct
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -22,6 +23,10 @@ import org.apache.spark.sql.types._
   * All three fold over Unicode codepoints / long hashes with the same
   * arithmetic the DuckDB oracle uses: `(acc * 31 + cp) % 1e9+7` for the
   * polynomial hashes, per-bit ±1 majority for SimHash.
+  *
+  * The md5 word-n-gram family (`hashed_ngrams_seq`, its distinct form
+  * `hashed_ngrams`, `hashed_ngrams_uniq`, `minhash_shingles`) hashes every
+  * gram through the one kernel [[GramHash]].
   */
 object TextHashes {
   private[graft] val MOD = 1000000007L
@@ -45,8 +50,11 @@ object TextHashes {
     ExpressionUtils.column(BpeMerge(ExpressionUtils.expression(tokens), pairs))
   def minhash_shingles(tokens: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     ExpressionUtils.column(MinHashShingles(ExpressionUtils.expression(tokens), a, b, p))
+  /** Distinct md5-hashed word n-grams in first-occurrence order (one NULL
+    * kept should a gram hold a NULL token) — the positional kernel's
+    * array_distinct. */
   def hashed_ngrams(tokens: Column, n: Int, p: Long): Column =
-    ExpressionUtils.column(HashedNgrams(ExpressionUtils.expression(tokens), n, p))
+    array_distinct(hashed_ngrams_seq(tokens, n, p))
   def hashed_ngrams_seq(tokens: Column, n: Int, p: Long): Column =
     ExpressionUtils.column(HashedNgramsSeq(ExpressionUtils.expression(tokens), n, p))
   def chunk_join(tokens: Column, chunk: Int, chunkSep: String): Column =
@@ -55,10 +63,70 @@ object TextHashes {
     ExpressionUtils.column(HashedNgramsUniq(ExpressionUtils.expression(tokens), n, p))
 }
 
+/** The md5 word-n-gram hash, written once for every native gram
+  * expression: md5 of the n tokens joined by single spaces, the first 4
+  * digest bytes read as an unsigned big-endian int, `% p` — exactly
+  * `conv(substring(md5(cast(g AS BINARY)),1,8),16,10) % p` (Dedup.tokHash)
+  * of the space-joined gram g, and the DuckDB oracles' `TokHashSql`.
+  * The digest is fed the token bytes and separators directly (no gram
+  * string is built) and lands in a per-thread buffer, so hashing a window
+  * allocates nothing. */
+private[graft] object GramHash {
+  private final class Md5 {
+    val md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+  }
+  private val md5Local = new ThreadLocal[Md5] {
+    override def initialValue(): Md5 = new Md5
+  }
+
+  /** The UTF-8 bytes of each token, a NULL element as null. */
+  def tokenBytes(arr: ArrayData): Array[Array[Byte]] = {
+    val toks = new Array[Array[Byte]](arr.numElements())
+    var i = 0
+    while (i < toks.length) {
+      toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i).getBytes
+      i += 1
+    }
+    toks
+  }
+
+  /** The hash of the window toks[i, i+n), in [0, p); -1 when the window
+    * holds a NULL token (the HOF form's NULL element). */
+  def hashAt(toks: Array[Array[Byte]], i: Int, n: Int, p: Long): Long = {
+    var j = i
+    while (j < i + n) { if (toks(j) == null) return -1L; j += 1 }
+    val s = md5Local.get()
+    val md = s.md
+    md.reset()
+    j = i
+    while (j < i + n) {
+      if (j > i) md.update(' '.toByte)
+      md.update(toks(j))
+      j += 1
+    }
+    val d = s.digest
+    md.digest(d, 0, d.length)
+    (((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % p
+  }
+
+  /** hs[0, m) as an `array<bigint>`, -1 as NULL. */
+  def toArrayData(hs: Array[Long], m: Int): ArrayData = {
+    val out = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.createFreshArray(m, 8)
+    var i = 0
+    while (i < m) {
+      if (hs(i) < 0) out.setNullAt(i) else out.setLong(i, hs(i))
+      i += 1
+    }
+    out
+  }
+}
+
 /** md5-hashed word n-grams deduped at the GRAM-STRING level — exactly
   * `transform(array_distinct(ngrams_n(w)), g -> tokHash(g))`: one hash
   * per DISTINCT gram string in first-occurrence order. This is NOT
-  * [[HashedNgrams]] (which dedupes at hash level): two distinct strings
+  * `hashed_ngrams` (which dedupes at hash level): two distinct strings
   * colliding to one hash must stay two elements here, because consumers
   * (q231/q232's novelty/Heaps grams) count exploded rows. A gram with a
   * NULL token contributes one NULL element (array_distinct keeps one);
@@ -76,55 +144,23 @@ case class HashedNgramsUniq(child: Expression, n: Int, p: Long)
   /** public (not protected nullSafeEval): the generated code calls it. */
   def computeArr(input: Any): ArrayData = {
     val arr = input.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    if (len < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      new Array[Any](0))
-    val toks = new Array[UTF8String](len)
-    var i = 0
-    while (i < len) {
-      toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i)
-      i += 1
-    }
+    val toks = GramHash.tokenBytes(arr)
+    val hs = new Array[Long](math.max(toks.length - n + 1, 0))
     val space = UTF8String.fromString(" ")
-    val seen = new java.util.LinkedHashSet[UTF8String]()
-    var sawNull = false
-    var nullPos = -1
-    val order = new java.util.ArrayList[AnyRef](len - n + 1)
-    i = 0
-    while (i + n <= len) {
-      var anyNull = false
-      var j = 0
-      while (!anyNull && j < n) { if (toks(i + j) == null) anyNull = true; j += 1 }
-      if (anyNull) {
-        if (!sawNull) { sawNull = true; order.add(null) }
-      } else {
-        val parts = new Array[UTF8String](2 * n - 1)
-        var q = 0
-        while (q < n) {
-          parts(2 * q) = toks(i + q)
-          if (q < n - 1) parts(2 * q + 1) = space
-          q += 1
-        }
-        val g = UTF8String.concat(parts: _*)
-        if (seen.add(g)) order.add(g)
+    // the gram STRINGS seen so far; null stands for the NULL element
+    val seen = new java.util.HashSet[UTF8String]()
+    var m = 0
+    var i = 0
+    while (i < hs.length) {
+      val h = GramHash.hashAt(toks, i, n, p)
+      if (seen.add(if (h < 0) null
+          else UTF8String.concatWs(space, (i until i + n).map(arr.getUTF8String): _*))) {
+        hs(m) = h
+        m += 1
       }
       i += 1
     }
-    val md = HashedNgramsUniq.md5Local.get()
-    val out = new Array[Any](order.size())
-    var k = 0
-    while (k < order.size()) {
-      val g = order.get(k).asInstanceOf[UTF8String]
-      if (g != null) {
-        md.reset()
-        md.update(g.getBytes)
-        val d = md.digest()
-        out(k) = (((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % p
-      }
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    GramHash.toArrayData(hs, m)
   }
 
   override def nullSafeEval(input: Any): Any = computeArr(input)
@@ -137,13 +173,6 @@ case class HashedNgramsUniq(child: Expression, n: Int, p: Long)
 
   override protected def withNewChildInternal(newChild: Expression): HashedNgramsUniq =
     copy(child = newChild)
-}
-
-object HashedNgramsUniq {
-  private[graft] val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 }
 
 /** Join a token array into chunks of `chunk` tokens (space-separated)
@@ -209,11 +238,12 @@ case class ChunkJoin(child: Expression, chunk: Int, chunkSep: String)
   * (no distinct), exactly `transform(ngrams_n(w), g -> tokHash(g))` over
   * the chained slice+zip_with gram build: element i = the hash of tokens
   * [i, i+n). The span family's window relation (q287/q288/q304/q308 via
-  * [[graft.queries.Dedup]]'s spanWindows) posexplodes this. A gram
-  * containing a NULL token yields a NULL element at its position (concat
-  * propagation — never on tokenizer output). Fewer than n tokens → empty
-  * array (the HOF's empty-slice zip); NULL input → NULL. Bit-parity with
-  * the HOF form pinned in TextHashesSpec; oracles unchanged. */
+  * [[graft.queries.Dedup]]'s spanWindows) posexplodes this, q215 explodes
+  * it, and `hashed_ngrams` is its `array_distinct`. A gram containing a
+  * NULL token yields a NULL element at its position (concat propagation —
+  * never on tokenizer output). Fewer than n tokens → empty array (the
+  * HOF's empty-slice zip); NULL input → NULL. Bit-parity with the HOF
+  * form pinned in TextHashesSpec; oracles unchanged. */
 case class HashedNgramsSeq(child: Expression, n: Int, p: Long)
     extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"hashed_ngrams_seq: bad n $n")
@@ -223,8 +253,13 @@ case class HashedNgramsSeq(child: Expression, n: Int, p: Long)
   override def prettyName: String = "hashed_ngrams_seq"
 
   /** public (not protected nullSafeEval): the generated code calls it. */
-  def computeArr(input: Any): ArrayData =
-    HashedNgramsSeq.compute(input.asInstanceOf[ArrayData], n, p)
+  def computeArr(input: Any): ArrayData = {
+    val toks = GramHash.tokenBytes(input.asInstanceOf[ArrayData])
+    val hs = new Array[Long](math.max(toks.length - n + 1, 0))
+    var i = 0
+    while (i < hs.length) { hs(i) = GramHash.hashAt(toks, i, n, p); i += 1 }
+    GramHash.toArrayData(hs, hs.length)
+  }
 
   override def nullSafeEval(input: Any): Any = computeArr(input)
 
@@ -238,142 +273,6 @@ case class HashedNgramsSeq(child: Expression, n: Int, p: Long)
     copy(child = newChild)
 }
 
-object HashedNgramsSeq {
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private[graft] def compute(arr: ArrayData, n: Int, p: Long): ArrayData = {
-    val len = arr.numElements()
-    if (len < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      new Array[Any](0))
-    val md = md5Local.get()
-    val toks = new Array[Array[Byte]](len)
-    var i = 0
-    while (i < len) {
-      toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i).getBytes
-      i += 1
-    }
-    val out = new Array[Any](len - n + 1)
-    i = 0
-    while (i + n <= len) {
-      var anyNull = false
-      var j = 0
-      while (!anyNull && j < n) { if (toks(i + j) == null) anyNull = true; j += 1 }
-      if (!anyNull) {
-        md.reset()
-        var q = 0
-        while (q < n) {
-          if (q > 0) md.update(' '.toByte)
-          md.update(toks(i + q))
-          q += 1
-        }
-        val d = md.digest()
-        out(i) = (((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % p
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-/** Distinct md5-hashed word n-grams of a token array in ONE pass —
-  * `array<bigint>` in FIRST-OCCURRENCE order, exactly
-  * `array_distinct(transform(ngrams_n(w), g -> tokHash(g)))` where
-  * ngrams_n is the chained slice+zip_with build and tokHash =
-  * conv(substring(md5(cast(g AS BINARY)),1,8),16,10) % p.
-  *
-  * Replaces the HOF chain in [[graft.queries.TrainPrep.hashedNgrams8]]
-  * (the decontamination unit: q85/q277/q282/q293 + the CorpusStream
-  * novelty gate), which allocated every n-gram as n-1 progressively longer
-  * UTF8String concats and then md5'd it through an interpreted transform
-  * lambda. Here each gram's md5 digests the token bytes + separators
-  * directly — no gram string is ever materialized — and distinctness
-  * (first-occurrence order, array_distinct semantics, one NULL kept if a
-  * gram contains a NULL token) folds in the same pass. Bit-parity with
-  * the HOF form is pinned in TextHashesSpec; the DuckDB oracles are
-  * unchanged. Fewer than n tokens → empty array (the HOF's `size(w) < n`
-  * branch); NULL input → NULL.
-  */
-case class HashedNgrams(child: Expression, n: Int, p: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1, s"hashed_ngrams: bad n $n")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "hashed_ngrams"
-
-  /** public (not protected nullSafeEval): the generated code calls it. */
-  def computeArr(input: Any): ArrayData =
-    HashedNgrams.compute(input.asInstanceOf[ArrayData], n, p)
-
-  override def nullSafeEval(input: Any): Any = computeArr(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("hng", this, classOf[HashedNgrams].getName)
-      s"${ev.value} = $ref.computeArr($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HashedNgrams =
-    copy(child = newChild)
-}
-
-object HashedNgrams {
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private[graft] def compute(arr: ArrayData, n: Int, p: Long): ArrayData = {
-    val len = arr.numElements()
-    if (len < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      new Array[Any](0))
-    val md = md5Local.get()
-    val toks = new Array[Array[Byte]](len)
-    var i = 0
-    while (i < len) {
-      toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i).getBytes
-      i += 1
-    }
-    // LinkedHashSet: array_distinct keeps FIRST occurrence order (and one
-    // null, should a gram contain a null token — never on tokenizer output)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    i = 0
-    while (i + n <= len) {
-      var anyNull = false
-      var j = 0
-      while (!anyNull && j < n) { if (toks(i + j) == null) anyNull = true; j += 1 }
-      if (anyNull) seen.add(null)
-      else {
-        md.reset()
-        var q = 0
-        while (q < n) {
-          if (q > 0) md.update(' '.toByte)
-          md.update(toks(i + q))
-          q += 1
-        }
-        val d = md.digest()
-        val h = (((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % p
-        seen.add(java.lang.Long.valueOf(h))
-      }
-      i += 1
-    }
-    val out = new Array[Any](seen.size())
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) {
-      val v = it.next()
-      out(k) = if (v == null) null else v.longValue()
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
 /** The whole MinHash per-document pipeline — distinct 3-word shingles,
   * 31-bit md5 token hash, sorted distinct hash set, K-permutation
   * signature minima — as ONE pass over the token array inside whole-stage
@@ -385,15 +284,14 @@ object HashedNgrams {
   * interpreted lambda per shingle per permutation AND allocated every
   * shingle as a fresh UTF8String — the dominant per-task cost of every
   * LSH-family query (q37/q70/q101/.../q294: the corpus hash pass). Here
-  * each shingle's md5 is fed token bytes directly (no shingle string is
-  * ever materialized), hashes dedupe in one hash set, and the K minima
-  * fold in a primitive long loop.
+  * each shingle hashes through [[GramHash]] (no shingle string is ever
+  * materialized), the hashes sort and dedupe in one primitive array, and
+  * the K minima fold in a primitive long loop.
   *
   * Semantics are IDENTICAL to the HOF form (pinned bit-for-bit in
   * TextHashesSpec on the fixture corpus + edge cases; the DuckDB oracles
   * are unchanged):
-  *  - shingle hash = conv(substring(md5(cast(s AS BINARY)),1,8),16,10) % p
-  *    — the first 4 digest bytes as an unsigned big-endian int, mod p;
+  *  - shingle hash = [[GramHash]] at n = 3;
   *  - dedupe at HASH level ≡ array_distinct(shingles) then
   *    array_distinct(hashes): equal strings hash equal, so the composed
   *    distincts collapse;
@@ -437,49 +335,27 @@ case class MinHashShingles(child: Expression, a: Seq[Long], b: Seq[Long], p: Lon
 }
 
 object MinHashShingles {
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   private[graft] def compute(arr: ArrayData, a: Array[Long], b: Array[Long],
       p: Long): org.apache.spark.sql.catalyst.InternalRow = {
-    val n = arr.numElements()
+    val toks = GramHash.tokenBytes(arr)
     val k = a.length
-    val md = md5Local.get()
-    val set = new java.util.HashSet[java.lang.Long]()
+    // every shingle hash, then sorted and deduped in place
+    val hs = new Array[Long](math.max(toks.length - 2, 0))
+    var m0 = 0
     var sawNull = false
-    if (n >= 3) {
-      val toks = new Array[Array[Byte]](n)
-      var i = 0
-      while (i < n) {
-        toks(i) = if (arr.isNullAt(i)) null else arr.getUTF8String(i).getBytes
-        i += 1
-      }
-      i = 0
-      while (i + 2 < n) {
-        if (toks(i) == null || toks(i + 1) == null || toks(i + 2) == null) {
-          sawNull = true
-        } else {
-          md.reset()
-          md.update(toks(i)); md.update(' '.toByte)
-          md.update(toks(i + 1)); md.update(' '.toByte)
-          md.update(toks(i + 2))
-          val d = md.digest()
-          // first 8 hex chars = first 4 digest bytes, unsigned big-endian
-          val h = (((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-            ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)) % p
-          set.add(java.lang.Long.valueOf(h))
-        }
-        i += 1
-      }
+    var i = 0
+    while (i < hs.length) {
+      val h = GramHash.hashAt(toks, i, 3, p)
+      if (h < 0) sawNull = true else { hs(m0) = h; m0 += 1 }
+      i += 1
     }
-    val m = set.size()
-    val hs = new Array[Long](m)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { hs(j) = it.next().longValue(); j += 1 }
-    java.util.Arrays.sort(hs)
+    java.util.Arrays.sort(hs, 0, m0)
+    var m = 0
+    i = 0
+    while (i < m0) {
+      if (m == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
+      i += 1
+    }
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, p)
     var x = 0
@@ -493,15 +369,10 @@ object MinHashShingles {
       }
       x += 1
     }
-    val hsData: ArrayData =
-      if (sawNull) {
-        // one NULL element (array_distinct keeps one), sorted LAST
-        val boxed = new Array[Any](m + 1)
-        var q = 0
-        while (q < m) { boxed(q) = hs(q); q += 1 }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(boxed)
-      } else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(hs)
+    // one NULL element (array_distinct keeps one), sorted LAST; a NULL
+    // window left a free slot behind the m distinct hashes
+    if (sawNull) hs(m) = -1L
+    val hsData = GramHash.toArrayData(hs, if (sawNull) m + 1 else m)
     val sigData = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(sig)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(

@@ -417,6 +417,42 @@ class CorpusStreamSpec extends SparkSpec {
     } finally clearCaches()
   }
 
+  test("crash repair on a pipe dir: repairIndex leaves a ghost's content " +
+      "suppressed, takedown with rebloom re-admits it") {
+    import graft.operators.{Generations, Takedown}
+    val p = pipe("graft_ghost")
+    def corpusFiles(): Set[java.io.File] =
+      Option(new java.io.File(p.corpus).listFiles()).map(_.toSet).getOrElse(Set.empty)
+    def crawl(batchId: Long, id: Long, text: String): Unit =
+      run(p)(batchId, Doc(id, text, "en", "crawl", t("2024-01-01 10:00:00")))
+    try {
+      crawl(0L, 1L, good)
+      val before = corpusFiles()
+      // CRASH WINDOW: batch 1 ran its bloom, index and para windows, then
+      // its corpus write was lost — doc 10 is a ghost
+      crawl(1L, 10L, fresh)
+      (corpusFiles() -- before).foreach(f => assert(f.delete(), s"cannot delete $f"))
+      assert(landed(p) == Seq(1L))
+      // repairIndex tombstones the ghost's index entry...
+      assert(CorpusStream.repairIndex(spark, Generations.resolve(p.index), p.corpus) === 1L)
+      // ...but the bloom and para states still hold its content, so a
+      // re-crawl under a new id dies before the index
+      crawl(2L, 11L, fresh)
+      assert(landed(p) == Seq(1L), "repairIndex alone re-admitted the ghost's content")
+      // a takedown of the ghost id retracts its paragraph keepers, but
+      // without rebloom the novelty filter still holds its n-grams
+      val r0 = Takedown.apply(spark, p.pipeDir, Seq(10L).toDF("doc_id"))
+      assert(r0.corpusRemoved == 0L && r0.paraDigestsRetracted > 0L, s"takedown: $r0")
+      crawl(3L, 12L, fresh)
+      assert(landed(p) == Seq(1L), "the novelty filter forgot the ghost's n-grams")
+      // the recovery that works: the takedown with rebloom
+      val r = Takedown.apply(spark, p.pipeDir, Seq(10L).toDF("doc_id"), rebloom = true)
+      assert(r.bloomRebuilt, s"takedown: $r")
+      crawl(4L, 13L, fresh)
+      assert(landed(p) == Seq(1L, 13L), "takedown + rebloom did not re-admit the content")
+    } finally clearCaches()
+  }
+
   test("standing clusters fold forward across stream batches (archive shape)") {
     val p = pipe("graft_cl_pipe")
     try {

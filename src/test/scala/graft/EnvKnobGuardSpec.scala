@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * sources, sinks and the `org.apache.spark.sql.graft` extensions), and
   * every name elsewhere under src/main must be one of the harness knobs
   * below (core count, query selection, Spark conf overrides, data dir,
-  * sweep/repeat counts, the prior-bench file). A settled A/B arm is
-  * deleted, not parked behind a new env toggle. */
+  * sweep/repeat counts, the prior-bench file). Outside that prefix the
+  * only `GRAFT_*` name is the `GRAFT_TOKEN` credential. A settled A/B arm
+  * is deleted, not parked behind a new env toggle. */
 class EnvKnobGuardSpec extends AnyFunSuite {
 
   private val HarnessKnobs = Set(
@@ -34,11 +35,12 @@ class EnvKnobGuardSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  /** Every knob name in `files`, as `path:line: NAME`. */
-  private def knobLines(files: Seq[Path]): Seq[(String, String)] = for {
+  /** Every name `re` matches in `files`, as `path:line: NAME`. */
+  private def knobLines(files: Seq[Path],
+      re: scala.util.matching.Regex = Knob): Seq[(String, String)] = for {
     f <- files
     (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-    name <- Knob.findAllIn(line)
+    name <- re.findAllIn(line)
   } yield (s"$f:${i + 1}: $name", name)
 
   test("src/main names only harness SPARK_GRAFT_* knobs") {
@@ -58,6 +60,16 @@ class EnvKnobGuardSpec extends AnyFunSuite {
     val offenders = knobLines(files).map(_._1)
     assert(offenders.isEmpty,
       s"SPARK_GRAFT_* knobs in engine code:\n${offenders.mkString("\n")}")
+  }
+
+  test("src/main names no GRAFT_* variable but the GRAFT_TOKEN credential") {
+    // a run-mode switch is an argument (AuditMain's q2=reference), never an
+    // env var; the negative lookbehind skips the SPARK_GRAFT_* harness knobs
+    val hits = knobLines(mainSources, "(?<![A-Z_])GRAFT_[A-Z_]+".r)
+    assert(hits.exists(_._2 == "GRAFT_TOKEN"))
+    val offenders = hits.collect { case (at, name) if name != "GRAFT_TOKEN" => at }
+    assert(offenders.isEmpty,
+      s"GRAFT_* env names in src/main:\n${offenders.mkString("\n")}")
   }
 
   test("the scan sees the harness knobs it allows") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextHashes
+import scala.jdk.CollectionConverters._
 
 /** Native TextHashes expressions vs their higher-order-function reference
   * formulations — the HOF forms are the semantics (they passed the DuckDB
@@ -245,6 +246,59 @@ class TextHashesSpec extends SparkSpec {
       if (!r.isNullAt(1))
         assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"differ: $r")
     }
+    // n = 3 on the corpus plus planted rows (NULL, empty, 1-3 tokens,
+    // repeated grams): q36/q83/q89's sorted set form against the HOF
+    // shingle set, and q215's exploded positional form against the
+    // zip_with + tokHash explode
+    import graft.queries.{HofReference, TrainPrep}
+    val P = 2147483647L
+    val tokHash = (g: org.apache.spark.sql.Column) =>
+      conv(substring(md5(g.cast("binary")), 1, 8), 16, 10).cast("long") % P
+    val planted = Seq(
+      (-1L, null.asInstanceOf[String]), (-2L, ""), (-3L, "one"),
+      (-4L, "one two"), (-5L, "one two three"),
+      (-6L, "a b c a b c a b c d")
+    ).toDF("doc_id", "text")
+    val docs3 = docs.select("doc_id", "text").unionByName(planted)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val setNative = docs3.select(col("doc_id"),
+      array_sort(TextHashes.hashed_ngrams(TrainPrep.rawToks(col("text")), 3, P)))
+    val setHof = HofReference.hashedDocsOf(docs3)
+      .select(col("doc_id"), array_sort(array_distinct(col("h"))))
+    val setRows = rows(setNative)
+    assert(setRows.size == rows(docs3).size)
+    assert(setRows == rows(setHof), "n = 3 shingle sets differ")
+    val toks3 = docs3.select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
+    val explodedNative = toks3.select(col("doc_id"),
+      explode(TextHashes.hashed_ngrams_seq(col("t"), 3, P)))
+    val explodedHof = toks3.select(col("doc_id"),
+      explode(TrainPrep.wordGrams(col("t"), 3)).as("g"))
+      .select(col("doc_id"), tokHash(col("g")))
+    val exploded = rows(explodedNative)
+    assert(exploded.count(_.startsWith("[-6,")) == 8, "repeated grams must stay positional")
+    assert(exploded == rows(explodedHof), "n = 3 positional hashes differ")
+    // a NULL token: the set keeps one NULL, like array_distinct of the HOF
+    val nullTok = Seq(Tuple1(Seq("a", null, "b", "c", "d"))).toDF("t")
+    val n3 = nullTok.select(
+      TextHashes.hashed_ngrams(col("t"), 3, P),
+      array_distinct(transform(TrainPrep.wordGrams(col("t"), 3), g => tokHash(g))))
+      .collect().head
+    assert(n3.getSeq[Any](0) == n3.getSeq[Any](1) && n3.getSeq[Any](0).count(_ == null) == 1,
+      n3.toString)
+  }
+
+  test("the md5 gram hash has one home: TextHashes' GramHash kernel") {
+    val dir = java.nio.file.Paths.get("src/main/scala/org/apache/spark/sql/graft")
+    assert(java.nio.file.Files.isDirectory(dir), s"run from the repo root: $dir missing")
+    val s = java.nio.file.Files.walk(dir)
+    val hits = try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        "MessageDigest\\.getInstance\\(\"MD5\"\\)".r.findAllIn(text).map(_ => f.toString)
+      }
+    finally s.close()
+    assert(hits.size == 1, s"MessageDigest.getInstance(\"MD5\") sites: $hits")
   }
 
   test("hashed_ngrams_seq matches the positional HOF transform (12-token windows)") {

@@ -11,6 +11,15 @@ import org.apache.spark.storage.StorageLevel
   * forms exclusively. */
 object HofReference {
 
+  /** doc_id + distinct 3-word-shingle strings `w` + per-shingle hashes
+    * `h`: the HOF form of q36/q83/q89's shingle set and of
+    * [[Dedup.minhashBase]]'s item set. */
+  def hashedDocsOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
+      .select(col("doc_id"), Dedup.shingles3(col("t")).as("w"))
+      .withColumn("h", transform(col("w"), t => Dedup.tokHash(t)))
+
   /** [[Dedup.minhashBase]] as the shingle → tokHash → sorted distinct set
     * → K-permutation fold over `hs`. */
   def minhashBaseHof(docs: DataFrame): DataFrame = {
@@ -23,7 +32,7 @@ object HofReference {
       array_repeat(lit(P), K),
       (acc, x) => zip_with(acc, consts, (m, c) =>
         least(m, (c.getField("a") * x + c.getField("b")) % lit(P))))
-    Dedup.hashedDocsOf(docs)
+    hashedDocsOf(docs)
       .filter(size(col("w")) > 0) // empty shingle sets would fold to NULL sigs
       .select(col("doc_id"), array_sort(array_distinct(col("h"))).as("hs"))
       .select(col("doc_id"), col("hs"), size(col("hs")).as("sz"), sigArr.as("sig"))
