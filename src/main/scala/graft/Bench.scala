@@ -105,9 +105,12 @@ object Bench {
       .map(_.getCollectionTime).filter(_ > 0).sum
   }
 
-  private val calibSink = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] val calibSink = new java.util.concurrent.atomic.AtomicLong()
 
-  private def burn(iters: Long): Long = {
+  /** The per-thread loop count of [[calibrate]]. */
+  private[graft] val calibIters = 400000000L
+
+  private[graft] def burn(iters: Long): Long = {
     var s = 0L; var i = 0L
     while (i < iters) { s += i * i + (s >> 3); i += 1 }
     s
@@ -123,10 +126,9 @@ object Bench {
     * engine regression. total/calib_mt is the machine-independent figure
     * of merit. The sink defeats dead-code elimination. */
   def calibrate(threads: Int): Double = {
-    val iters = 400000000L
-    calibSink.addAndGet(burn(iters / 8)) // JIT warmup, untimed
+    calibSink.addAndGet(burn(calibIters / 8)) // JIT warmup, untimed
     val t0 = System.nanoTime()
-    val ts = (1 to threads).map(_ => new Thread(() => calibSink.addAndGet(burn(iters))))
+    val ts = (1 to threads).map(_ => new Thread(() => calibSink.addAndGet(burn(calibIters))))
     ts.foreach(_.start()); ts.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
   }

@@ -175,16 +175,10 @@ object AggState {
     * string bytes, so a DuckDB oracle's '0x' || substr(md5(v), 1, 14)
     * reproduces it exactly). One dedup + one partial bottom-k shuffle. */
   def distinctPartials(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
-    df.select(keys.map(col) :+
+    kmvBottomK(df.select(keys.map(col) :+
         md5(col(valueCol).cast("string").cast("binary")).as("__m"): _*)
       .select(keys.map(col) :+
-        expr("CAST(conv(substring(__m, 1, 14), 16, 10) AS BIGINT)").as("__h"): _*)
-      .dropDuplicates(keys :+ "__h")
-      .groupBy(keys.map(col): _*)
-      .agg(graft.functions.TopKByScore.top_k(KmvK)(col("__h"),
-        negate(col("__h").cast("double"))).as("__mins"))
-      .select(keys.map(col) :+
-        transform(col("__mins"), m => m.getField("id")).as("__kmv"): _*)
+        expr("CAST(conv(substring(__m, 1, 14), 16, 10) AS BIGINT)").as("__h"): _*), keys)
 
   def buildDistinct(df: DataFrame, keys: Seq[String], valueCol: String,
       stateDir: String): Unit =
@@ -201,8 +195,12 @@ object AggState {
     * persists (bottom-k of a union of bottom-ks is the bottom-k of the
     * union, so collapsing is lossless by construction). */
   private def kmvFold(state: DataFrame, keys: Seq[String]): DataFrame =
-    state
-      .select(keys.map(col) :+ explode(col("__kmv")).as("__h"): _*)
+    kmvBottomK(state.select(keys.map(col) :+ explode(col("__kmv")).as("__h"): _*), keys)
+
+  /** The bottom-k distinct `__h` hashes per key of (keys, __h) rows, as
+    * the `__kmv` array: one dedup + one partial bottom-k shuffle. */
+  private def kmvBottomK(hashes: DataFrame, keys: Seq[String]): DataFrame =
+    hashes
       .dropDuplicates(keys :+ "__h")
       .groupBy(keys.map(col): _*)
       .agg(graft.functions.TopKByScore.top_k(KmvK)(col("__h"),

@@ -488,15 +488,30 @@ object Dedup {
     * boilerplate paragraph with millions of copies folds to one row per
     * map partition instead of buffering a degenerate window group. */
   private[graft] def paraExact(docs: DataFrame): DataFrame = {
-    val paras = paraRelation(docs).localCheckpoint(eager = true)
-    val digested = paras.withColumn("dig", md5(col("text").cast("binary")))
+    val digested = digestedParas(docs)
     val keep = digested.groupBy("dig").agg(min(col("doc_id")).as("keep_pid"))
-    val marked = digested.join(keep, Seq("dig"))
+    keptLedger(digested, keep).localCheckpoint(eager = true)
+  }
+
+  /** The paragraphs of `docs` ([[paraRelation]], pinned) with their md5
+    * content digest `dig`. */
+  private def digestedParas(docs: DataFrame): DataFrame =
+    paraRelation(docs).localCheckpoint(eager = true)
+      .withColumn("dig", md5(col("text").cast("binary")))
+
+  /** [[paraLedger]] of digested paragraphs against a keep map (dig,
+    * keep_pid): a paragraph is a drop when another pid is its digest's
+    * keeper. */
+  private def keptLedger(digested: DataFrame, keep: DataFrame): DataFrame =
+    paraLedger(digested.join(keep, Seq("dig"))
       .select(col("src_doc"), col("doc_id").as("pid"), col("text"),
         (col("doc_id") =!= col("keep_pid")).cast("long").as("d"),
-        size(split(col("text"), " ")).cast("long").as("nt"))
-    paraLedger(marked).localCheckpoint(eager = true)
-  }
+        size(split(col("text"), " ")).cast("long").as("nt")))
+
+  /** The keep map (dig, keep_pid) of the standing min-pid digest state. */
+  private def stateKeep(s: SparkSession, stateDir: String): DataFrame =
+    graft.operators.AggState.merged(s, stateDir, Seq("dig"))
+      .select(col("dig"), col("min").cast("long").as("keep_pid"))
 
   /** The digested paragraph relation (src_doc, pid, text, dig) — the unit
     * the PRODUCTION exact-paragraph trim decides over (r18, VERDICT r17
@@ -694,6 +709,10 @@ object Dedup {
   def lshPairs(base: DataFrame, cap: Int): DataFrame =
     lshCandidates(base, cap).filter(col("jacc") >= 0.7).select("d1", "d2", "jacc")
 
+  /** [[lshPairs]] at [[LshBucketCap]] as (src, dst) graph edges. */
+  private[queries] def lshEdges(base: DataFrame): DataFrame =
+    lshPairs(base, LshBucketCap).select(col("d1").as("src"), col("d2").as("dst"))
+
   /** The pre-verification candidate pair set (banding output, scored but
     * unfiltered) — what [[lshPairs]] gates at jacc ≥ 0.7. Exposed so the
     * banding's false-positive rate is itself measurable (q194). */
@@ -797,13 +816,7 @@ object Dedup {
     val pairs = bucketPairs(small.unionByName(big))
       .select(least(col("x"), col("y")).as("d1"), greatest(col("x"), col("y")).as("d2"))
       .dropDuplicates("d1", "d2")
-    val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))
-    pairs
-      .join(base.select(col("doc_id").as("d1"), col("hs").as("h1"), col("sz").as("sz1")), Seq("d1"))
-      .join(base.select(col("doc_id").as("d2"), col("hs").as("h2"), col("sz").as("sz2")), Seq("d2"))
-      .withColumn("jacc", round(
-        inter.cast("double") / (col("sz1") + col("sz2") - inter).cast("double"), 4))
-      .select("d1", "d2", "jacc")
+    withJaccard(base, pairs).select("d1", "d2", "jacc")
   }
 
   /** EXACT Jaccard >= 0.7 pairs over a [[minhashBase]] table via prefix
@@ -959,15 +972,20 @@ object Dedup {
 
   /** Exact-Jaccard verify of oriented candidate pairs against the base's
     * sorted shingle-hash sets; keeps pairs at J >= 0.7. */
-  private[graft] def verifyJaccard(base: DataFrame, pairs: DataFrame): DataFrame = {
+  private[graft] def verifyJaccard(base: DataFrame, pairs: DataFrame): DataFrame =
+    withJaccard(base, pairs)
+      .filter(col("jacc") >= 0.7)
+      .select("d1", "d2", "jacc")
+
+  /** Oriented (d1, d2) pairs with both sides' sorted shingle-hash sets
+    * from the base and their exact Jaccard `jacc` (4 dp). */
+  private def withJaccard(base: DataFrame, pairs: DataFrame): DataFrame = {
     val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))
     pairs
       .join(base.select(col("doc_id").as("d1"), col("hs").as("h1"), col("sz").as("sz1")), Seq("d1"))
       .join(base.select(col("doc_id").as("d2"), col("hs").as("h2"), col("sz").as("sz2")), Seq("d2"))
       .withColumn("jacc", round(
         inter.cast("double") / (col("sz1") + col("sz2") - inter).cast("double"), 4))
-      .filter(col("jacc") >= 0.7)
-      .select("d1", "d2", "jacc")
   }
 
   /** Split assignment shared by q291 (from-scratch CC) and
@@ -1002,6 +1020,53 @@ object Dedup {
   def clusterSplitFromState(spark: SparkSession, docs: DataFrame,
       stateDir: String): DataFrame =
     splitByClusterKey(docs, graft.operators.ClusterState.labels(spark, stateDir))
+
+  /** q83/q89's containment sides over docs < 500: the hosts (d2, h2, sz2)
+    * and the synthesized snippets (d1, h1, sz1) — the first half of every
+    * 7th doc's tokens under pseudo id + 1e6, non-empty only. */
+  private def containmentSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
+    val host = docs
+      .select(col("doc_id").as("d2"), shingleSet(TrainPrep.rawToks(col("text"))).as("h2"))
+      .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
+    val snip = docs.filter(col("doc_id") % 7 === 0)
+      .withColumn("t", TrainPrep.rawToks(col("text")))
+      .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
+      .select((col("doc_id") + lit(1000000L)).as("d1"),
+        shingleSet(col("ht")).as("h1"))
+      .select(col("d1"), col("h1"), size(col("h1")).as("sz1"))
+      .filter(col("sz1") > 0)
+    (host, snip)
+  }
+
+  /** q246/q270's standing index at `idxDir`: built from the doc_id % 10 < 5
+    * slice, then appended every other doc but the doc_id % 10 == 7 probe
+    * slice. Returns the documents. */
+  private def slicedIndex(s: SparkSession, dir: String, idxDir: String): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+    graft.operators.DedupIndex.build(
+      docs.filter(col("doc_id") % 10 < 5), idxDir)
+    graft.operators.DedupIndex.append(
+      docs.filter(col("doc_id") % 10 >= 5 && col("doc_id") % 10 =!= 7), idxDir)
+    docs
+  }
+
+  /** Folds a batch `nw` into the standing clusters at `stateDir`: its
+    * index-probe pairs (b, c) and its own LSH pairs are the new edges. */
+  private def appendBatchEdges(s: SparkSession, probePairs: DataFrame,
+      nw: DataFrame, stateDir: String): Unit = {
+    val probeEdges = probePairs.select(col("b").as("src"), col("c").as("dst"))
+    val batchEdges = lshEdges(nw)
+    graft.operators.ClusterState.appendEdges(s,
+      probeEdges.unionByName(batchEdges), stateDir)
+  }
+
+  /** Clusters (id, cluster_id, cluster_size) as output rows by doc,
+    * eagerly pinned so the caller may release what they were read from. */
+  private[queries] def clusterRows(clusters: DataFrame): DataFrame =
+    clusters.select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
+      .orderBy("doc_id")
+      .localCheckpoint(eager = true)
 
   val queries: Map[String, Q] = Map(
     // ---- repeated-span REMOVAL accounting (the cut, not just the find) ---
@@ -1204,21 +1269,13 @@ object Dedup {
     // digests (min partials alone are not invertible).
     "q312_incr_para_exact" -> ((s: SparkSession, dir: String) => withStateDir("graft-para-digest-") { stateDir =>
       import graft.operators.AggState
-      val paras = paraRelation(Tables(s, dir, "documents"))
-        .localCheckpoint(eager = true)
-      val digested = paras.withColumn("dig", md5(col("text").cast("binary")))
+      val digested = digestedParas(Tables(s, dir, "documents"))
       def slice(r: Int) = digested.filter(col("src_doc") % 3 === r)
         .select(col("dig"), pidDecimal(col("doc_id")).as("pid"))
       AggState.build(slice(0), Seq("dig"), "pid", stateDir)
       AggState.append(slice(1), Seq("dig"), "pid", stateDir)
       AggState.append(slice(2), Seq("dig"), "pid", stateDir)
-      val keep = AggState.merged(s, stateDir, Seq("dig"))
-        .select(col("dig"), col("min").cast("long").as("keep_pid"))
-      val marked = digested.join(keep, Seq("dig"))
-        .select(col("src_doc"), col("doc_id").as("pid"), col("text"),
-          (col("doc_id") =!= col("keep_pid")).cast("long").as("d"),
-          size(split(col("text"), " ")).cast("long").as("nt"))
-      paraLedger(marked)
+      keptLedger(digested, stateKeep(s, stateDir))
     }),
 
     // ---- exact paragraph dedup ON the boundary path (r18) -----------------
@@ -1250,9 +1307,7 @@ object Dedup {
     // is live at every SF.
     "q314_para_takedown" -> ((s: SparkSession, dir: String) => withStateDir("graft-para-takedown-") { stateDir =>
       import graft.operators.AggState
-      val paras = paraRelation(Tables(s, dir, "documents"))
-        .localCheckpoint(eager = true)
-      val digested = paras.withColumn("dig", md5(col("text").cast("binary")))
+      val digested = digestedParas(Tables(s, dir, "documents"))
       def rel(df: DataFrame) = df.select(col("dig"), pidDecimal(col("doc_id")).as("pid"))
       AggState.build(rel(digested.filter(col("src_doc") % 2 === 0)),
         Seq("dig"), "pid", stateDir)
@@ -1261,13 +1316,7 @@ object Dedup {
       val survivors = digested.filter(col("src_doc") % 7 =!= 3)
       AggState.retractExact(s, rel(digested.filter(col("src_doc") % 7 === 3)),
         rel(survivors), Seq("dig"), "pid", stateDir)
-      val keep = AggState.merged(s, stateDir, Seq("dig"))
-        .select(col("dig"), col("min").cast("long").as("keep_pid"))
-      val marked = survivors.join(keep, Seq("dig"))
-        .select(col("src_doc"), col("doc_id").as("pid"), col("text"),
-          (col("doc_id") =!= col("keep_pid")).cast("long").as("d"),
-          size(split(col("text"), " ")).cast("long").as("nt"))
-      paraLedger(marked)
+      keptLedger(survivors, stateKeep(s, stateDir))
     }),
 
     // ---- exact dedup: hash-groupBy on content digest ---------------------
@@ -1330,17 +1379,7 @@ object Dedup {
     // per-band thresholds tuned for containment (asymmetric banding), which
     // this bounded-sample form is the oracle for.
     "q83_containment" -> ((s: SparkSession, dir: String) => {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val host = docs
-        .select(col("doc_id").as("d2"), shingleSet(TrainPrep.rawToks(col("text"))).as("h2"))
-        .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
-      val snip = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("t", TrainPrep.rawToks(col("text")))
-        .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
-        .select((col("doc_id") + lit(1000000L)).as("d1"),
-          shingleSet(col("ht")).as("h1"))
-        .select(col("d1"), col("h1"), size(col("h1")).as("sz1"))
-        .filter(col("sz1") > 0)
+      val (host, snip) = containmentSides(s, dir)
       val inter = TextHashes.sorted_intersect_size(col("h1"), col("h2"))
       snip.repartition(col("d1"))
         .join(broadcast(host),
@@ -1362,17 +1401,7 @@ object Dedup {
     // md5 hashes, so the screen is deterministic and the oracle mirrors
     // it — no probabilistic slack in the comparison.
     "q89_containment_lsh" -> ((s: SparkSession, dir: String) => {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") < 500)
-      val host = docs
-        .select(col("doc_id").as("d2"), shingleSet(TrainPrep.rawToks(col("text"))).as("h2"))
-        .select(col("d2"), col("h2"), size(col("h2")).as("sz2"))
-      val snip = docs.filter(col("doc_id") % 7 === 0)
-        .withColumn("t", TrainPrep.rawToks(col("text")))
-        .withColumn("ht", slice(col("t"), lit(1), expr("(size(t) + 1) div 2")))
-        .select((col("doc_id") + lit(1000000L)).as("d1"),
-          shingleSet(col("ht")).as("h1"))
-        .select(col("d1"), col("h1"), size(col("h1")).as("sz1"))
-        .filter(col("sz1") > 0)
+      val (host, snip) = containmentSides(s, dir)
       // inverted index of host hashes; probe = bottom-4 sketch per snippet
       val inv = host.select(col("d2"), explode(col("h2")).as("h"))
       val probes = snip.select(col("d1"),
@@ -1427,9 +1456,7 @@ object Dedup {
       // persisted base, which is materialized once BEFORE the fork so
       // the threads never race to compute cache blocks.
       def chain(b: org.apache.spark.sql.DataFrame) =
-        graft.operators.ConnectedComponents.components(
-          lshPairs(b, LshBucketCap)
-            .select(col("d1").as("src"), col("d2").as("dst")))
+        graft.operators.ConnectedComponents.components(lshEdges(b))
       base.count()
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -1476,9 +1503,7 @@ object Dedup {
     "q291_cluster_split" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       val base = minhashBase(docs)
-      val pairs = lshPairs(base, LshBucketCap)
-      val comp = graft.operators.ConnectedComponents.components(
-        pairs.select(col("d1").as("src"), col("d2").as("dst")))
+      val comp = graft.operators.ConnectedComponents.components(lshEdges(base))
       val out = splitByClusterKey(docs,
           comp.select(col("id"), col("cluster_id")))
         .localCheckpoint(eager = true)
@@ -1498,10 +1523,7 @@ object Dedup {
     "q292_state_split" -> ((s: SparkSession, dir: String) => withStateDir("graft-split-state-") { stateDir =>
       val docs = Tables(s, dir, "documents")
       val base = minhashBase(docs)
-      graft.operators.ClusterState.build(
-        lshPairs(base, LshBucketCap)
-          .select(col("d1").as("src"), col("d2").as("dst")),
-        stateDir)
+      graft.operators.ClusterState.build(lshEdges(base), stateDir)
       val out = clusterSplitFromState(s, docs, stateDir)
         .localCheckpoint(eager = true)
       base.unpersist()
@@ -1906,11 +1928,7 @@ object Dedup {
     // depends only on index CONTENT, so the q244 oracle verifies the whole
     // build/append/probe path end-to-end at every sf.
     "q246_standing_index" -> ((s: SparkSession, dir: String) => withStateDir("graft-standing-index-") { idxDir =>
-      val docs = Tables(s, dir, "documents")
-      graft.operators.DedupIndex.build(
-        docs.filter(col("doc_id") % 10 < 5), idxDir)
-      graft.operators.DedupIndex.append(
-        docs.filter(col("doc_id") % 10 >= 5 && col("doc_id") % 10 =!= 7), idxDir)
+      val docs = slicedIndex(s, dir, idxDir)
       graft.operators.DedupIndex.probe(
         s, docs.filter(col("doc_id") % 10 === 7), idxDir)
     }),
@@ -1927,11 +1945,7 @@ object Dedup {
     // spec-asserted. The first production lifecycle op after append for
     // any index with takedown obligations.
     "q270_tombstoned_index" -> ((s: SparkSession, dir: String) => withStateDir("graft-tombstone-index-") { idxDir =>
-      val docs = Tables(s, dir, "documents")
-      graft.operators.DedupIndex.build(
-        docs.filter(col("doc_id") % 10 < 5), idxDir)
-      graft.operators.DedupIndex.append(
-        docs.filter(col("doc_id") % 10 >= 5 && col("doc_id") % 10 =!= 7), idxDir)
+      val docs = slicedIndex(s, dir, idxDir)
       graft.operators.DedupIndex.remove(
         docs.filter(col("doc_id") % 10 === 3).select("doc_id"), idxDir)
       graft.operators.DedupIndex.probe(
@@ -1956,21 +1970,11 @@ object Dedup {
       val base = minhashBase(Tables(s, dir, "documents"))
       val old = base.filter(col("doc_id") % 10 =!= 7)
       val nw = base.filter(col("doc_id") % 10 === 7)
-      graft.operators.ClusterState.build(
-        lshPairs(old, LshBucketCap).select(col("d1").as("src"), col("d2").as("dst")),
-        stateDir)
-      val probeEdges = graft.operators.DedupIndex.probePairs(nw,
+      graft.operators.ClusterState.build(lshEdges(old), stateDir)
+      appendBatchEdges(s, graft.operators.DedupIndex.probePairs(nw,
           bandKeys(old).select("doc_id", "bi", "bh"),
-          old.select("doc_id", "hs", "sz"))
-        .select(col("b").as("src"), col("c").as("dst"))
-      val batchEdges = lshPairs(nw, LshBucketCap)
-        .select(col("d1").as("src"), col("d2").as("dst"))
-      graft.operators.ClusterState.appendEdges(s,
-        probeEdges.unionByName(batchEdges), stateDir)
-      val out = graft.operators.ClusterState.clusters(s, stateDir)
-        .select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
-        .localCheckpoint(eager = true)
+          old.select("doc_id", "hs", "sz")), nw, stateDir)
+      val out = clusterRows(graft.operators.ClusterState.clusters(s, stateDir))
       base.unpersist()
       out
     }),
@@ -1996,22 +2000,13 @@ object Dedup {
       val old = base.filter(col("doc_id") % 10 =!= 7)
       val nw = base.filter(col("doc_id") % 10 === 7)
       graft.operators.DedupIndex.buildFromBase(old, idxDir)
-      graft.operators.ClusterState.build(
-        lshPairs(old, LshBucketCap).select(col("d1").as("src"), col("d2").as("dst")),
-        stateDir)
-      val probeEdges = graft.operators.DedupIndex.probePairsPersisted(s, nw, idxDir)
-        .select(col("b").as("src"), col("c").as("dst"))
-      val batchEdges = lshPairs(nw, LshBucketCap)
-        .select(col("d1").as("src"), col("d2").as("dst"))
-      graft.operators.ClusterState.appendEdges(s,
-        probeEdges.unionByName(batchEdges), stateDir)
+      graft.operators.ClusterState.build(lshEdges(old), stateDir)
+      appendBatchEdges(s,
+        graft.operators.DedupIndex.probePairsPersisted(s, nw, idxDir), nw, stateDir)
       graft.operators.DedupIndex.writeBase(nw, idxDir, "append")
       graft.operators.ClusterState.removeDocs(s,
         docs.filter(col("doc_id") % 9 === 4).select("doc_id"), stateDir, idxDir)
-      val out = graft.operators.ClusterState.clusters(s, stateDir)
-        .select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
-        .localCheckpoint(eager = true)
+      val out = clusterRows(graft.operators.ClusterState.clusters(s, stateDir))
       base.unpersist()
       out
     }),

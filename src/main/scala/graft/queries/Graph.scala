@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -22,26 +22,47 @@ import graft.Tables
   * (ReuseExchange does not fire across swapped projections — measured
   * 6.3 s → 4.5 s on q161 at sf0.1). */
 object Graph {
-  import Dedup.{lshPairs, minhashBase, LshBucketCap}
+  import Dedup.{clusterRows, lshEdges, lshPairs, minhashBase, LshBucketCap}
 
-  type Q = (SparkSession, String) => org.apache.spark.sql.DataFrame
+  type Q = (SparkSession, String) => DataFrame
+
+  /** The corpus's capped near-dup pairs (d1, d2), persisted and
+    * materialized once — every caller reads them more than once (both
+    * orientations, or three triangle scans), and ReuseExchange does not
+    * fire across the swapped projections. The caller unpersists. */
+  private def pinnedPairs(s: SparkSession, dir: String): DataFrame = {
+    val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
+      .select(col("d1"), col("d2"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pairs.count()
+    pairs
+  }
+
+  /** Both orientations of every pair, once each. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("d2").as("d1"), col("d1").as("d2"))).distinct()
+
+  /** One (doc_id) row per member of each triangle, by the ordered-edge
+    * two-join: d1 < d2 everywhere, so each triangle is found once. */
+  private def triangleMembers(pairs: DataFrame): DataFrame = {
+    val x = pairs.select(col("d1").as("a"), col("d2").as("b"))
+    val y = pairs.select(col("d1").as("b"), col("d2").as("c"))
+    val z = pairs.select(col("d1").as("a"), col("d2").as("c"))
+    x.join(y, Seq("b")).join(z, Seq("a", "c"))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
+  }
 
   val queries: Map[String, Q] = Map(
     "q70_dup_clusters" -> ((s: SparkSession, dir: String) => {
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
       val comp = graft.operators.ConnectedComponents.components(
-        pairs.select(col("d1").as("src"), col("d2").as("dst")))
+        lshEdges(minhashBase(Tables(s, dir, "documents"))))
       // cluster sizes via ONE window over the cluster-keyed shuffle (the
       // agg + join-back form consumed comp twice and paid a second join).
       // components() persists its result and the CALLER releases it —
       // eagerly checkpoint the (tiny: one row per clustered doc) output,
       // then unpersist, so repeated q70 runs don't accumulate caches
-      val out = comp
-        .withColumn("cluster_size",
-          count(lit(1)).over(Window.partitionBy("cluster_id")))
-        .select(col("id").as("doc_id"), col("cluster_id"), col("cluster_size"))
-        .orderBy("doc_id")
-        .localCheckpoint(eager = true)
+      val out = clusterRows(comp.withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy("cluster_id"))))
       comp.unpersist()
       out
     }),
@@ -56,9 +77,7 @@ object Graph {
     // a boilerplate family; this is the quality-aware upgrade.
     "q128_canonical" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
-      val pairs = lshPairs(minhashBase(docs), LshBucketCap)
-      val comp = graft.operators.ConnectedComponents.components(
-        pairs.select(col("d1").as("src"), col("d2").as("dst")))
+      val comp = graft.operators.ConnectedComponents.components(lshEdges(minhashBase(docs)))
       val qual = docs.select(col("doc_id").as("id"),
         size(TrainPrep.rawToks(col("text"))).cast("long").as("n_tok"))
       val scored = comp.join(qual, Seq("id"))
@@ -93,17 +112,8 @@ object Graph {
     // shuffle + one aggregation, all key-partitioned; the symmetrized edge
     // set is persisted and materialized once.
     "q101_pagerank" -> ((s: SparkSession, dir: String) => {
-      // persist BEFORE the symmetrizing union: both branches read the
-      // cached pair set instead of re-running the LSH pipeline (q161's
-      // lesson — ReuseExchange does not fire across the swapped
-      // projections)
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
-        .select(col("d1"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
-      val sym = pairs
-        .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-        .distinct()
+      val pairs = pinnedPairs(s, dir)
+      val sym = symmetric(pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sym.count() // then every iteration scan is cached
       val deg = sym.groupBy("d1").agg(count(lit(1)).as("deg"))
@@ -136,16 +146,8 @@ object Graph {
     // convention bounds the join fan-out by the forward-degree. Output =
     // per-doc triangle membership, all-integer.
     "q102_triangles" -> ((s: SparkSession, dir: String) => {
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
-        .select(col("d1"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count() // materialize the pair pipeline once; 3 scans below
-      val x = pairs.select(col("d1").as("a"), col("d2").as("b"))
-      val y = pairs.select(col("d1").as("b"), col("d2").as("c"))
-      val z = pairs.select(col("d1").as("a"), col("d2").as("c"))
-      val tri = x.join(y, Seq("b")).join(z, Seq("a", "c"))
-      val out = tri
-        .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
+      val pairs = pinnedPairs(s, dir)
+      val out = triangleMembers(pairs)
         .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))
         .orderBy("doc_id")
         .localCheckpoint(eager = true)
@@ -159,17 +161,8 @@ object Graph {
     // the capped LSH pair set (per-node degree, then the histogram) — the
     // pair pipeline runs once since the chain has a single consumer.
     "q161_degree_dist" -> ((s: SparkSession, dir: String) => {
-      // the pair set feeds BOTH union branches — persisted, or the whole
-      // LSH pipeline executes twice (ReuseExchange does not fire across
-      // the differing endpoint projections; measured 6.3 s -> 4.5 s at
-      // sf0.1)
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
-        .select(col("d1"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
-      val out = pairs
-        .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-        .distinct()
+      val pairs = pinnedPairs(s, dir)
+      val out = symmetric(pairs)
         .groupBy("d1").agg(count(lit(1)).as("deg"))
         .groupBy("deg")
         .agg(count(lit(1)).as("n_docs"), min("d1").as("min_doc"), max("d1").as("max_doc"))
@@ -187,20 +180,10 @@ object Graph {
     // pair-dropping would over-merge. One persisted pair pipeline feeds the
     // degree aggregate and the two-join triangle enumeration.
     "q167_clustering_coeff" -> ((s: SparkSession, dir: String) => {
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
-        .select(col("d1"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count() // materialize once; degree + 3 triangle scans below
-      val sym = pairs
-        .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-        .distinct()
-      val deg = sym.groupBy("d1").agg(count(lit(1)).as("deg"))
+      val pairs = pinnedPairs(s, dir)
+      val deg = symmetric(pairs).groupBy("d1").agg(count(lit(1)).as("deg"))
         .select(col("d1").as("doc_id"), col("deg"))
-      val x = pairs.select(col("d1").as("a"), col("d2").as("b"))
-      val y = pairs.select(col("d1").as("b"), col("d2").as("c"))
-      val z = pairs.select(col("d1").as("a"), col("d2").as("c"))
-      val tri = x.join(y, Seq("b")).join(z, Seq("a", "c"))
-        .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
+      val tri = triangleMembers(pairs)
         .groupBy("doc_id").agg(count(lit(1)).as("n_tri"))
       val out = deg.join(tri, Seq("doc_id"), "left")
         .withColumn("n_tri", coalesce(col("n_tri"), lit(0L)))
@@ -221,13 +204,8 @@ object Graph {
     // power sums are exact BIGINTs off one degree join; the r lands in one
     // shared-verbatim double, floor-e4.
     "q175_assortativity" -> ((s: SparkSession, dir: String) => {
-      val pairs = lshPairs(minhashBase(Tables(s, dir, "documents")), LshBucketCap)
-        .select(col("d1"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count() // degree + edge-join both read it
-      val sym = pairs
-        .union(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-        .distinct()
+      val pairs = pinnedPairs(s, dir)
+      val sym = symmetric(pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val deg = sym.groupBy("d1").agg(count(lit(1)).as("deg"))
       val out = sym

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{AggState, Merge, ViewState}
@@ -35,6 +35,52 @@ object Lifecycle {
         s"(((l_suppkey % 16) $divOp ${1 << b}) % 2) * ${1 << (2 * b + 1)}"
     }.mkString(" + ")
 
+  /** The SCD2 queries' change log: the events of users with
+    * user_id % 7 == `slice`, as (user_id, ts, event_id, event_type). */
+  private def changeLog(s: SparkSession, dir: String, slice: Int): DataFrame =
+    Tables(s, dir, "events").filter(col("user_id") % 7 === slice)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+
+  /** An SCD2 dimension as output rows: timestamps as strings, the open
+    * version's NULL effective_to as the 9999-12-31 sentinel (NULLs break
+    * the oracle's row sort), is_current as 0/1, by (user, version). */
+  private def scd2Rows(dim: DataFrame): DataFrame =
+    dim.select(col("user_id"), col("version"), col("event_type"),
+        date_format(col("effective_from"), "yyyy-MM-dd HH:mm:ss").as("effective_from"),
+        coalesce(date_format(col("effective_to"), "yyyy-MM-dd HH:mm:ss"),
+          lit("9999-12-31 00:00:00")).as("effective_to"),
+        col("n_changes"),
+        when(col("is_current"), 1L).otherwise(0L).as("is_current"))
+      .orderBy("user_id", "version")
+
+  /** q273/q274's orders ⋈ customer view at `stateDir`, grown in
+    * interleaved slices: built from the orderkey % 3 == 0 orders and even
+    * customers, then the other orders and customers appended left, right,
+    * left. Returns the two projected sides. */
+  private def grownOrderView(s: SparkSession, dir: String,
+      stateDir: String): (DataFrame, DataFrame) = {
+    val orders = Tables(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey").as("custkey"),
+        col("o_orderstatus"),
+        expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("o_cents"))
+    val cust = Tables(s, dir, "customer")
+      .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
+    ViewState.build(orders.filter(col("o_orderkey") % 3 === 0),
+      cust.filter(col("custkey") % 2 === 0), Seq("custkey"), stateDir)
+    ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 1), stateDir)
+    ViewState.appendRight(s, cust.filter(col("custkey") % 2 === 1), stateDir)
+    ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 2), stateDir)
+    (orders, cust)
+  }
+
+  /** The view's order count and cents per (segment, status), weighted by
+    * the collapsed multiplicities. */
+  private def segmentStatusTotals(s: SparkSession, stateDir: String): DataFrame =
+    ViewState.merged(s, stateDir)
+      .groupBy("c_mktsegment", "o_orderstatus")
+      .agg(sum(col("mult")).cast("long").as("n_orders"),
+        sum(col("o_cents") * col("mult")).cast("long").as("sum_cents"))
+      .orderBy("c_mktsegment", "o_orderstatus")
 
   val queries: Map[String, Q] = Map(
     // ---- keyed MERGE / upsert with last-writer-wins feed dedup -----------
@@ -70,17 +116,8 @@ object Lifecycle {
     // per-key history is the unit of parallelism. NULL effective_to maps
     // to the 9999-12-31 sentinel (NULLs break the oracle's row sort).
     "q255_scd2" -> ((s: SparkSession, dir: String) => {
-      val changes = Tables(s, dir, "events")
-        .filter(col("user_id") % 7 === 0)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      Merge.scd2(changes, "user_id", Seq(col("ts"), col("event_id")), "event_type")
-        .select(col("user_id"), col("version"), col("event_type"),
-          date_format(col("effective_from"), "yyyy-MM-dd HH:mm:ss").as("effective_from"),
-          coalesce(date_format(col("effective_to"), "yyyy-MM-dd HH:mm:ss"),
-            lit("9999-12-31 00:00:00")).as("effective_to"),
-          col("n_changes"),
-          when(col("is_current"), 1L).otherwise(0L).as("is_current"))
-        .orderBy("user_id", "version")
+      val changes = changeLog(s, dir, 0)
+      scd2Rows(Merge.scd2(changes, "user_id", Seq(col("ts"), col("event_id")), "event_type"))
     }),
 
     // ---- data-quality expectations: the one-pass audit -------------------
@@ -193,22 +230,13 @@ object Lifecycle {
     // incremental ≡ rebuild equivalence is hash-checked in the gate
     // itself, not just spec-asserted. Delta-sized cost at any scale.
     "q264_scd2_incremental" -> ((s: SparkSession, dir: String) => {
-      val changes = Tables(s, dir, "events")
-        .filter(col("user_id") % 7 === 1)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      val changes = changeLog(s, dir, 1)
       val dim = Merge.scd2(
         changes.filter(expr("ts < TIMESTAMP '2024-01-10 00:00:00'")),
         "user_id", Seq(col("ts"), col("event_id")), "event_type")
-      Merge.scd2Apply(dim,
-          changes.filter(expr("ts >= TIMESTAMP '2024-01-10 00:00:00'")),
-          "user_id", Seq(col("ts"), col("event_id")), "event_type")
-        .select(col("user_id"), col("version"), col("event_type"),
-          date_format(col("effective_from"), "yyyy-MM-dd HH:mm:ss").as("effective_from"),
-          coalesce(date_format(col("effective_to"), "yyyy-MM-dd HH:mm:ss"),
-            lit("9999-12-31 00:00:00")).as("effective_to"),
-          col("n_changes"),
-          when(col("is_current"), 1L).otherwise(0L).as("is_current"))
-        .orderBy("user_id", "version")
+      scd2Rows(Merge.scd2Apply(dim,
+        changes.filter(expr("ts >= TIMESTAMP '2024-01-10 00:00:00'")),
+        "user_id", Seq(col("ts"), col("event_id")), "event_type"))
     }),
 
     // ---- point-in-time (as-of) read over the SCD2 dimension --------------
@@ -221,9 +249,7 @@ object Lifecycle {
     // exactly the as-of join shape (AsOfJoinExec / union + last-non-null)
     // the engine already ships for event streams.
     "q265_asof_dimension" -> ((s: SparkSession, dir: String) => {
-      val changes = Tables(s, dir, "events")
-        .filter(col("user_id") % 7 === 0)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      val changes = changeLog(s, dir, 0)
       val dim = Merge.scd2(changes, "user_id",
         Seq(col("ts"), col("event_id")), "event_type")
       val probes = changes
@@ -337,22 +363,8 @@ object Lifecycle {
     // maintained join through.
     "q273_incr_join_view" -> ((s: SparkSession, dir: String) => {
       withStateDir("graft-join-view-") { stateDir =>
-        val orders = Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-            col("o_orderstatus"),
-            expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("o_cents"))
-        val cust = Tables(s, dir, "customer")
-          .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-        ViewState.build(orders.filter(col("o_orderkey") % 3 === 0),
-          cust.filter(col("custkey") % 2 === 0), Seq("custkey"), stateDir)
-        ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 1), stateDir)
-        ViewState.appendRight(s, cust.filter(col("custkey") % 2 === 1), stateDir)
-        ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 2), stateDir)
-        ViewState.merged(s, stateDir)
-          .groupBy("c_mktsegment", "o_orderstatus")
-          .agg(sum(col("mult")).cast("long").as("n_orders"),
-            sum(col("o_cents") * col("mult")).cast("long").as("sum_cents"))
-          .orderBy("c_mktsegment", "o_orderstatus")
+        grownOrderView(s, dir, stateDir)
+        segmentStatusTotals(s, stateDir)
       }
     }),
 
@@ -365,26 +377,12 @@ object Lifecycle {
     // scratch-on-survivors is hash-checked at every sf.
     "q274_view_retract" -> ((s: SparkSession, dir: String) => {
       withStateDir("graft-view-retract-") { stateDir =>
-        val orders = Tables(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-            col("o_orderstatus"),
-            expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("o_cents"))
-        val cust = Tables(s, dir, "customer")
-          .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-        ViewState.build(orders.filter(col("o_orderkey") % 3 === 0),
-          cust.filter(col("custkey") % 2 === 0), Seq("custkey"), stateDir)
-        ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 1), stateDir)
-        ViewState.appendRight(s, cust.filter(col("custkey") % 2 === 1), stateDir)
-        ViewState.appendLeft(s, orders.filter(col("o_orderkey") % 3 === 2), stateDir)
+        val (orders, cust) = grownOrderView(s, dir, stateDir)
         // takedowns: only rows previously ingested (both filters partition
         // the full input, so the %5 / %7 slices were all added above)
         ViewState.retractLeft(s, orders.filter(col("o_orderkey") % 5 === 0), stateDir)
         ViewState.retractRight(s, cust.filter(col("custkey") % 7 === 3), stateDir)
-        ViewState.merged(s, stateDir)
-          .groupBy("c_mktsegment", "o_orderstatus")
-          .agg(sum(col("mult")).cast("long").as("n_orders"),
-            sum(col("o_cents") * col("mult")).cast("long").as("sum_cents"))
-          .orderBy("c_mktsegment", "o_orderstatus")
+        segmentStatusTotals(s, stateDir)
       }
     }),
 

@@ -25,6 +25,12 @@ object Relational {
 
   private def ts(s: String): Column = to_timestamp(lit(s))
 
+  /** A line's discounted revenue at the exact cents × basis-points
+    * integer scale (e6 of the currency unit): no float summation order can
+    * move a sum or break a tie between engines. */
+  private val RevE6Sql =
+    "CAST(round(l_extendedprice * 100.0) AS BIGINT) * (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))"
+
   /** q154's per-cell chi-square contribution x 1e6, shared VERBATIM with
     * the oracle: (o - e)^2/e with e = r*c/n rearranged to integer inputs,
     * (o*n - r*c)^2 / (n*r*c). The squared term exceeds BIGINT range, so it
@@ -868,41 +874,30 @@ object Relational {
           countDistinct(col("o_orderkey")).as("nd"),
           sum(when(!col("o_orderstatus").isin("O", "F", "P"), 1L).otherwise(0L)).as("bad_status"),
           sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("orphans"))
-      val oChecks = o.select(
-        array(
-          struct(lit("orders_pk_unique").as("check"), col("n"),
-            (col("n") - col("nd")).as("n_violations")),
-          struct(lit("orders_status_accepted").as("check"), col("n"),
-            col("bad_status").as("n_violations")),
-          struct(lit("orders_fk_customer").as("check"), col("n"),
-            col("orphans").as("n_violations"))).as("cs"))
-        .select(explode(col("cs")).as("c")).select("c.*")
+      // one (check, n, n_violations) row per named violation count of a
+      // one-row pass aggregate `a` (its row count in n)
+      def checks(a: DataFrame, violations: (String, Column)*) =
+        a.select(array(violations.map { case (name, v) =>
+            struct(lit(name).as("check"), col("n"), v.as("n_violations")) }: _*).as("cs"))
+          .select(explode(col("cs")).as("c")).select("c.*")
+      val oChecks = checks(o, "orders_pk_unique" -> (col("n") - col("nd")),
+        "orders_status_accepted" -> col("bad_status"), "orders_fk_customer" -> col("orphans"))
       // lineitem: one pass → qty range + FK to orders
       val l = Tables(s, dir, "lineitem")
         .join(ordKeys, col("l_orderkey") === col("ok"), "left")
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L).otherwise(0L)).as("bad_qty"),
           sum(when(col("ok").isNull, 1L).otherwise(0L)).as("orphans"))
-      val lChecks = l.select(
-        array(
-          struct(lit("lineitem_qty_range").as("check"), col("n"),
-            col("bad_qty").as("n_violations")),
-          struct(lit("lineitem_fk_orders").as("check"), col("n"),
-            col("orphans").as("n_violations"))).as("cs"))
-        .select(explode(col("cs")).as("c")).select("c.*")
+      val lChecks = checks(l,
+        "lineitem_qty_range" -> col("bad_qty"), "lineitem_fk_orders" -> col("orphans"))
       // events: one pass → user not-null + ts bounds
       val e = Tables(s, dir, "events")
         .agg(count(lit(1)).as("n"),
           sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("null_user"),
           sum(when(col("ts") < ts("1970-01-01 00:00:00") ||
             col("ts") >= ts("2100-01-01 00:00:00"), 1L).otherwise(0L)).as("bad_ts"))
-      val eChecks = e.select(
-        array(
-          struct(lit("events_user_not_null").as("check"), col("n"),
-            col("null_user").as("n_violations")),
-          struct(lit("events_ts_bounds").as("check"), col("n"),
-            col("bad_ts").as("n_violations"))).as("cs"))
-        .select(explode(col("cs")).as("c")).select("c.*")
+      val eChecks = checks(e,
+        "events_user_not_null" -> col("null_user"), "events_ts_bounds" -> col("bad_ts"))
       oChecks.unionByName(lChecks).unionByName(eChecks)
         .select(col("check"), col("n").cast("long").as("n_checked"),
           col("n_violations").cast("long").as("n_violations"),
@@ -1045,8 +1040,7 @@ object Relational {
         .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
           col("l_shipdate") < to_timestamp(lit("1997-01-01")))
         .groupBy("l_suppkey")
-        .agg(sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-          "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("rev_e6"))
+        .agg(sum(expr(RevE6Sql)).as("rev_e6"))
       val top = rev.agg(max("rev_e6").as("mx"))
       rev.join(broadcast(top), col("rev_e6") === col("mx"))
         .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -1090,8 +1084,7 @@ object Relational {
           (col("p_brand") === "Brand#3" && col("p_size").between(26, 50) &&
             col("l_quantity").between(20, 40)))
         .agg(count(lit(1)).as("n_lines"),
-          sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("revenue_e6"))
+          sum(expr(RevE6Sql)).as("revenue_e6"))
         .select(col("n_lines"), col("revenue_e6").cast("long").as("revenue_e6"))
     }),
 
@@ -1136,8 +1129,7 @@ object Relational {
           (col("supp_nation") === "NATION_19" && col("cust_nation") === "NATION_18"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-          "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("revenue_e6"))
+        .agg(sum(expr(RevE6Sql)).as("revenue_e6"))
         .select(col("supp_nation"), col("cust_nation"),
           col("l_year").cast("long").as("l_year"),
           col("revenue_e6").cast("long").as("revenue_e6"))
@@ -1164,12 +1156,9 @@ object Relational {
         .join(broadcast(sn), col("s_nationkey") === col("sn_key"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
         .agg(
-          sum(expr("CASE WHEN supp_nation = 'NATION_3' THEN " +
-            "CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT)) ELSE 0 END"))
+          sum(expr(s"CASE WHEN supp_nation = 'NATION_3' THEN $RevE6Sql ELSE 0 END"))
             .as("nation_rev_e6"),
-          sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("total_rev_e6"))
+          sum(expr(RevE6Sql)).as("total_rev_e6"))
         .select(col("o_year").cast("long").as("o_year"),
           col("nation_rev_e6").cast("long").as("nation_rev_e6"),
           expr("CAST((nation_rev_e6 * 10000) DIV total_rev_e6 AS BIGINT)").as("share_bp"))
@@ -1189,10 +1178,7 @@ object Relational {
         .join(broadcast(sn), col("s_nationkey") === col("sn_key"))
         .join(Tables(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg(sum(expr(
-          "CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT)) " +
-            "- CAST(l_quantity AS BIGINT) " +
+        .agg(sum(expr(s"$RevE6Sql - CAST(l_quantity AS BIGINT) " +
             "* CAST(round(p_retailprice * 100.0) AS BIGINT) * 9000"))
           .as("profit_e6"))
         .select(col("nation"), col("o_year").cast("long").as("o_year"),
@@ -1211,12 +1197,9 @@ object Relational {
         .join(Tables(s, dir, "part"), col("p_partkey") === col("l_partkey"))
         .groupBy(month(col("l_shipdate")).as("l_month"))
         .agg(
-          sum(expr("CASE WHEN p_type = 'PROMO' THEN " +
-            "CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT)) ELSE 0 END"))
+          sum(expr(s"CASE WHEN p_type = 'PROMO' THEN $RevE6Sql ELSE 0 END"))
             .as("promo_rev_e6"),
-          sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-            "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("total_rev_e6"))
+          sum(expr(RevE6Sql)).as("total_rev_e6"))
         .select(col("l_month").cast("long").as("l_month"),
           col("promo_rev_e6").cast("long").as("promo_rev_e6"),
           expr("CAST((promo_rev_e6 * 10000) DIV total_rev_e6 AS BIGINT)").as("promo_bp"))
@@ -1260,8 +1243,7 @@ object Relational {
         .join(Tables(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(nat), col("c_nationkey") === col("nk"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100.0) AS BIGINT) " +
-          "* (10000 - CAST(round(l_discount * 10000.0) AS BIGINT))")).as("revenue_e6"),
+        .agg(sum(expr(RevE6Sql)).as("revenue_e6"),
           expr("CAST(round(max(c_acctbal) * 100.0) AS BIGINT)").as("acctbal_c"))
         .select(col("c_custkey"), col("c_name"), col("n_name"),
           col("revenue_e6").cast("long").as("revenue_e6"), col("acctbal_c"))

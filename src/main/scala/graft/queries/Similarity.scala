@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
@@ -56,6 +56,27 @@ object Similarity {
     * than the base slice's (e4-integerized). */
   private[graft] val ReindexDropE4 = 100L
 
+  /** The drift fixture's slices of a (vec_id, embedding) frame: even ids
+    * as the base slice, odd ids [[driftShift]]ed as the drift slice. */
+  private def driftSlices(e: DataFrame): (DataFrame, DataFrame) =
+    (e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding"),
+      e.filter(col("vec_id") % 2 === 1)
+        .select(col("vec_id"), driftShift(col("embedding")).as("embedding")))
+
+  /** q309/q315's index at `idxDir`: built on the base slice with 16 seeded
+    * centroids, the drift slice appended, each batch's fit recorded
+    * ("build", "b1_drift"). Returns the two slices. */
+  private def driftFitIndex(s: SparkSession, e: DataFrame,
+      idxDir: String): (DataFrame, DataFrame) = {
+    val (base, drift) = driftSlices(e)
+    val cent = AnnIndex.seedCentroids(base, 16)
+    AnnIndex.build(base, cent, idxDir)
+    AnnIndex.recordFitStats(s, base, idxDir, "build")
+    AnnIndex.append(s, drift, idxDir)
+    AnnIndex.recordFitStats(s, drift, idxDir, "b1_drift")
+    (base, drift)
+  }
+
   /** q307's body over any (vec_id, embedding) frame — spec-callable so
     * planted drift cases run without fixture I/O. Even ids are the base
     * slice (quantizer + first index slice), odd ids are [[driftShift]]ed
@@ -66,9 +87,7 @@ object Similarity {
   private[graft] def annDriftReport(s: SparkSession,
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     withStateDir("graft-ann-drift-") { idxDir =>
-      val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
-      val drift = e.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
+      val (base, drift) = driftSlices(e)
       val cent = AnnIndex.seedCentroids(base, 16)
       AnnIndex.build(base, cent, idxDir)
       AnnIndex.append(s, drift, idxDir)
@@ -143,15 +162,31 @@ object Similarity {
     AnnIndex.memberMean(AnnIndex.assignL2(e, c0), "cid", "cv")
   }
 
+  /** The `k` best `id`s of each qid by `score` (highest first), through
+    * the bounded-heap aggregate: one (qid, rank from 1, sc = (id, score))
+    * row per hit. */
+  private def rankedTopK(scored: DataFrame, k: Int, id: String, score: Column): DataFrame =
+    scored.groupBy("qid")
+      .agg(graft.functions.TopKByScore.top_k(k)(col(id), score).as("top"))
+      .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))
+      .select(col("qid"), (col("idx") + 1).cast("long").as("rank"), col("sc"))
+
+  /** The embedding queries' fixed query set: vectors 0..9 as (qid, qe). */
+  private def querySet(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("embedding").as("qe"))
+
+  /** Every (query, other vector) pair: the broadcast [[querySet]] beside
+    * each vector (cid, ce) but itself. */
+  private def queryPairs(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
+      .join(broadcast(querySet(e)), col("qid") =!= col("cid"))
+
   val queries: Map[String, Q] = Map(
     // ---- brute-force cosine top-k ---------------------------------------
     "q39_cosine_topk" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
       val w = Window.partitionBy("qid").orderBy(desc("score"), asc("cid"))
-      c.join(broadcast(q), col("qid") =!= col("cid"))
+      queryPairs(e)
         .withColumn("score", round(cosine_sim(col("qe"), col("ce")), 4))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
@@ -183,8 +218,7 @@ object Similarity {
       val assign = AnnIndex.assignCosine(e.select("vec_id", "embedding"), cent)
         .select(col("vec_id").as("cid"), col("centroid_id").as("ccid"),
           col("embedding").as("ce"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = querySet(e)
       AnnIndex.searchAssigned(q, cent, assign, nprobe = 2, topK = 5)
     }),
 
@@ -200,10 +234,7 @@ object Similarity {
       val cent = AnnIndex.seedCentroids(e, 8)
       AnnIndex.build(e.filter(col("vec_id") % 10 < 5), cent, idxDir)
       AnnIndex.append(s, e.filter(col("vec_id") % 10 >= 5), idxDir)
-      AnnIndex.probe(s,
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
-        idxDir)
+      AnnIndex.probe(s, querySet(e), idxDir)
     }),
 
     // ---- recall@5 of IVF vs brute force (ANN quality measurement) --------
@@ -250,15 +281,7 @@ object Similarity {
     // per-batch fold from the slice definitions — content-determined, the
     // q253 discipline for persisted state).
     "q309_ann_fit_ledger" -> ((s: SparkSession, dir: String) => withStateDir("graft-ann-fit-") { idxDir =>
-      val e = Tables(s, dir, "embeddings")
-      val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
-      val drift = e.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
-      val cent = AnnIndex.seedCentroids(base, 16)
-      AnnIndex.build(base, cent, idxDir)
-      AnnIndex.recordFitStats(s, base, idxDir, "build")
-      AnnIndex.append(s, drift, idxDir)
-      AnnIndex.recordFitStats(s, drift, idxDir, "b1_drift")
+      driftFitIndex(s, Tables(s, dir, "embeddings"), idxDir)
       AnnIndex.fitLedger(s, idxDir)
     }),
 
@@ -277,14 +300,7 @@ object Similarity {
     "q315_ann_reindex" -> ((s: SparkSession, dir: String) => withStateDir("graft-ann-reindex-") { tmpDir =>
       val idx0 = s"$tmpDir/gen0"; val idx1 = s"$tmpDir/gen1"
       val e = Tables(s, dir, "embeddings")
-      val base = e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
-      val drift = e.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), driftShift(col("embedding")).as("embedding"))
-      val cent = AnnIndex.seedCentroids(base, 16)
-      AnnIndex.build(base, cent, idx0)
-      AnnIndex.recordFitStats(s, base, idx0, "build")
-      AnnIndex.append(s, drift, idx0)
-      AnnIndex.recordFitStats(s, drift, idx0, "b1_drift")
+      val (base, drift) = driftFitIndex(s, e, idx0)
       AnnIndex.remove(
         e.filter(col("vec_id") % 7 === 2).select("vec_id"), idx0)
       AnnIndex.reindex(s, idx0, idx1, k = 8)
@@ -320,16 +336,9 @@ object Similarity {
     // two forms agree and that this plan has no window sort.
     "q56_topk_agg" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      c.join(broadcast(q), col("qid") =!= col("cid"))
-        .withColumn("score", round(cosine_sim(col("qe"), col("ce")), 4))
-        .groupBy("qid")
-        .agg(graft.functions.TopKByScore.top_k(5)(col("cid"), col("score")).as("top"))
-        .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))
-        .select(col("qid"), (col("idx") + 1).cast("long").as("rank"),
-          col("sc.id").as("cid"), col("sc.score").as("score"))
+      rankedTopK(queryPairs(e)
+          .withColumn("score", round(cosine_sim(col("qe"), col("ce")), 4)), 5, "cid", col("score"))
+        .select(col("qid"), col("rank"), col("sc.id").as("cid"), col("sc.score").as("score"))
         .orderBy("qid", "rank")
     }),
 
@@ -373,10 +382,7 @@ object Similarity {
     // recall is exact integer math — hits × 2000 bp.
     "q100_pq_recall" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      val exact = c.join(broadcast(q), col("qid") =!= col("cid"))
+      val exact = queryPairs(e)
         .withColumn("d", l2(col("qe"), col("ce")))
         .groupBy("qid")
         .agg(graft.functions.TopKByScore.top_k(5)(col("cid"), -col("d")).as("top"))
@@ -408,17 +414,12 @@ object Similarity {
     "q247_pq_rerank" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings")
       val cand = pqAdcTopK(s, dir, 32).select(col("qid"), col("vec_id"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      e.select(col("vec_id"), col("embedding").as("ce"))
-        .join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(q), Seq("qid"))
-        .withColumn("d", l2(col("qe"), col("ce")))
-        .groupBy("qid")
-        .agg(graft.functions.TopKByScore.top_k(5)(col("vec_id"), -col("d")).as("top"))
-        .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))
-        .select(col("qid"), (col("idx") + 1).cast("long").as("rank"),
-          col("sc.id").as("vec_id"), round(-col("sc.score"), 4).as("l2"))
+      val q = querySet(e)
+      rankedTopK(e.select(col("vec_id"), col("embedding").as("ce"))
+          .join(broadcast(cand), Seq("vec_id"))
+          .join(broadcast(q), Seq("qid"))
+          .withColumn("d", l2(col("qe"), col("ce"))), 5, "vec_id", -col("d"))
+        .select(col("qid"), col("rank"), col("sc.id").as("vec_id"), round(-col("sc.score"), 4).as("l2"))
         .orderBy("qid", "rank")
     }),
 
@@ -437,10 +438,7 @@ object Similarity {
       AnnIndex.build(e.filter(col("vec_id") % 2 === 0), AnnIndex.seedCentroids(e, 8),
         idxDir, Some(AnnIndex.seedCodebook(e)))
       AnnIndex.append(s, e.filter(col("vec_id") % 2 === 1), idxDir)
-      AnnIndex.probePq(s,
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qe")),
-        idxDir)
+      AnnIndex.probePq(s, querySet(e), idxDir)
     }),
 
     // ---- distributed k-means (2 Lloyd iterations) ------------------------
@@ -548,8 +546,7 @@ object Similarity {
       val assign = AnnIndex.assignL2(e, cent)
         .select(col("vec_id").as("cid"), col("cid").as("ccid"),
           col("embedding").as("ce"))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = querySet(e)
       val wQ = Window.partitionBy("qid").orderBy(asc("qdist"), asc("cid"))
       val probes = q.join(broadcast(cent))
         .withColumn("qdist", l2(col("qe"), col("cv")))
@@ -721,16 +718,11 @@ object Similarity {
       // 1. encode the corpus: q76's per-subspace argmin (per-row kernel)
       val codes = AnnIndex.pqAssign(e, cw)
       // 2. per-query LUT: exact sub-L2 of query vs every codeword
-      val dt = AnnIndex.pqLut(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")), cw)
+      val dt = AnnIndex.pqLut(querySet(e), cw)
       // 3. ADC score + bounded-heap top-5 (score = -dist: heap keeps best)
-      AnnIndex.adcScore(codes.join(broadcast(dt), Seq("subspace", "code"))
-          .filter(col("qid") =!= col("vec_id")))
-        .groupBy("qid")
-        .agg(graft.functions.TopKByScore.top_k(k)(col("vec_id"), -col("adc")).as("top"))
-        .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))
-        .select(col("qid"), (col("idx") + 1).cast("long").as("rank"),
-          col("sc.id").as("vec_id"), (-col("sc.score")).as("adc"))
+      rankedTopK(AnnIndex.adcScore(codes.join(broadcast(dt), Seq("subspace", "code"))
+          .filter(col("qid") =!= col("vec_id"))), k, "vec_id", -col("adc"))
+        .select(col("qid"), col("rank"), col("sc.id").as("vec_id"), (-col("sc.score")).as("adc"))
     }
 
   private lazy val q39Sql: String =

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -195,6 +195,104 @@ object Stats {
       "r2_e6" -> guarded(s"(($b1 * $c1y + $b2 * $c2y) / $cyy)", s"OR $cyy = 0.0"))
   }
 
+  /** q124's deterministic experiment arm of a user (0 or 1): the first 8
+    * md5 hex digits of its id, mod 2 — the q73 split discipline. */
+  private def abArm: Column =
+    expr("CAST(conv(substring(md5(CAST(CAST(user_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 2")
+
+  /** The purchase and the view events of `dir`, projected by `p` and `v`. */
+  private def purchasesAndViews(s: SparkSession, dir: String,
+      p: Seq[Column], v: Seq[Column]): (DataFrame, DataFrame) = {
+    val ev = Tables(s, dir, "events")
+    (ev.filter(col("event_type") === "purchase").select(p: _*),
+      ev.filter(col("event_type") === "view").select(v: _*))
+  }
+
+  /** [[purchasesAndViews]] with both sides projected to `cols`. */
+  private def purchasesAndViews(s: SparkSession, dir: String,
+      cols: Seq[String]): (DataFrame, DataFrame) =
+    purchasesAndViews(s, dir, cols.map(col), cols.map(col))
+
+  /** q183/q193's touch set: each purchase (pid, puid, pt) beside every
+    * view (vuid, vt, touch_day) of its user in the 7 days before it — ONE
+    * user-keyed equi-join with the time bound in the join condition. */
+  private def weekTouches(s: SparkSession, dir: String): DataFrame = {
+    val (p, v) = purchasesAndViews(s, dir,
+      Seq(col("event_id").as("pid"), col("user_id").as("puid"),
+        unix_timestamp(col("ts")).as("pt")),
+      Seq(col("user_id").as("vuid"), unix_timestamp(col("ts")).as("vt"),
+        date_format(col("ts"), "yyyy-MM-dd").as("touch_day")))
+    p.join(v, col("puid") === col("vuid") &&
+      col("vt") >= col("pt") - 604800L && col("vt") < col("pt"))
+  }
+
+  /** q62/q71's range join as an equi-join on hour buckets: each purchase
+    * (p_id, u, p_s, bkt) `joinType`-joined with its user's views in the
+    * hour before it, the views projected by the SQL expressions `v` (which
+    * must name vu and v_s). A view in bucket b can precede purchases in
+    * buckets b and b+1 only, so each candidate pair shares exactly ONE
+    * expanded key and the fan-out can't double-count. */
+  private def hourBeforeJoin(s: SparkSession, dir: String, v: Seq[String],
+      joinType: String): DataFrame = {
+    val (p0, v0) = purchasesAndViews(s, dir,
+      Seq("event_id AS p_id", "user_id AS u", "unix_timestamp(ts) AS p_s").map(expr),
+      v.map(expr))
+    val p = p0.withColumn("bkt", expr("p_s div 3600"))
+    val vb = v0.withColumn("vbkt0", expr("v_s div 3600"))
+      .withColumn("bkt", explode(array(col("vbkt0"), col("vbkt0") + 1)))
+    p.join(vb, col("u") === col("vu") && p("bkt") === vb("bkt") &&
+        col("v_s") >= col("p_s") - 3600 && col("v_s") < col("p_s"), joinType)
+  }
+
+  /** q269/q272's histogram input: each line's (l_returnflag, l_orderkey)
+    * and its price in exact cents. */
+  private def lineCents(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
+      expr("CAST(round(l_extendedprice * 100.0) AS BIGINT)").as("cents"))
+
+  /** The gap-fill grid of `ev`: every hour from each user's first to last
+    * event hour as (user_id, hr), and the observed hours (user_id, hr,
+    * n_events, then `aggs`) to left-join onto it. */
+  private def hourGrid(ev: DataFrame, aggs: Column*): (DataFrame, DataFrame) = {
+    val grid = ev.groupBy("user_id")
+      .agg(date_trunc("hour", min(col("ts"))).as("h0"),
+        date_trunc("hour", max(col("ts"))).as("h1"))
+      .select(col("user_id"),
+        explode(expr("sequence(h0, h1, interval 1 hour)")).as("hr"))
+    (grid, ev.withColumn("hr", date_trunc("hour", col("ts")))
+      .groupBy("user_id", "hr").agg(count(lit(1)).as("n_events"), aggs: _*))
+  }
+
+  /** The strictly ordered signup -> view -> purchase chain per user: the
+    * first signup (s_ts), the first view after it (v_ts), the first
+    * purchase after that (p_ts) — each stage one aggregation joined to the
+    * previous stage's per-user min, every join keyed by user_id. */
+  private def funnelStages(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val ev = Tables(s, dir, "events")
+    def firstAfter(tpe: String, prev: DataFrame, prevCol: String, out: String) =
+      ev.filter(col("event_type") === tpe)
+        .join(prev, Seq("user_id"))
+        .filter(col("ts") > col(prevCol))
+        .groupBy("user_id").agg(min(col("ts")).as(out))
+    val su = ev.filter(col("event_type") === "signup")
+      .groupBy("user_id").agg(min(col("ts")).as("s_ts"))
+    val vw = firstAfter("view", su, "s_ts", "v_ts")
+    (su, vw, firstAfter("purchase", vw, "v_ts", "p_ts"))
+  }
+
+  /** Each event of `ev` (user_id, epoch second `sec`, the `order`
+    * columns, ...) with its per-user session number `sess`, events taken
+    * in `order`: a session breaks when the gap to the previous event
+    * exceeds 30 min (1800 s). */
+  private def sessionized(ev: DataFrame, order: String*): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(order.map(col): _*)
+    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev.withColumn("prev_sec", lag("sec", 1).over(w))
+      .withColumn("new_s",
+        (col("prev_sec").isNull || (col("sec") - col("prev_sec")) > 1800L).cast("long"))
+      .withColumn("sess", sum("new_s").over(cum))
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- two-feature OLS by normal equations -----------------------------
     // Multiple regression beyond q65's single-regressor aggregates:
@@ -315,16 +413,8 @@ object Stats {
     // purchase-partitioned windows; both models reported side by side per
     // touch day (the comparison a marketing team actually reads).
     "q193_decay_attribution" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id").as("puid"),
-          unix_timestamp(col("ts")).as("pt"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("vuid"), unix_timestamp(col("ts")).as("vt"),
-          date_format(col("ts"), "yyyy-MM-dd").as("touch_day"))
       val w = Window.partitionBy("pid")
-      p.join(v, col("puid") === col("vuid") &&
-          col("vt") >= col("pt") - 604800L && col("vt") < col("pt"))
+      weekTouches(s, dir)
         .withColumn("wgt",
           expr("shiftleft(CAST(1 AS BIGINT), CAST(6 - (pt - vt) DIV 86400 AS INT))"))
         .withColumn("n_touch", count(lit(1)).over(w))
@@ -366,16 +456,7 @@ object Stats {
     // partitioned by purchase id (count only, no sort) — state per
     // purchase is its in-window touch set, bounded by the 7-day horizon.
     "q183_multi_touch" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id").as("puid"),
-          unix_timestamp(col("ts")).as("pt"))
-      val v = ev.filter(col("event_type") === "view")
-        .select(col("user_id").as("vuid"), unix_timestamp(col("ts")).as("vt"),
-          date_format(col("ts"), "yyyy-MM-dd").as("touch_day"))
-      val j = p.join(v, col("puid") === col("vuid") &&
-        col("vt") >= col("pt") - 604800L && col("vt") < col("pt"))
-      j.withColumn("n_touch", count(lit(1)).over(Window.partitionBy("pid")))
+      weekTouches(s, dir).withColumn("n_touch", count(lit(1)).over(Window.partitionBy("pid")))
         .withColumn("credit_e6", expr("CAST(1000000 DIV n_touch AS BIGINT)"))
         .groupBy("touch_day")
         .agg(count(lit(1)).as("n_touches"),
@@ -498,16 +579,8 @@ object Stats {
     // so ns-vs-µs precision can't flip it. Bounded to users < 20.
     "q103_gap_fill" -> ((s: SparkSession, dir: String) => {
       val ev = Tables(s, dir, "events").filter(col("user_id") < 20)
-      val hourly = ev
-        .withColumn("hr", date_trunc("hour", col("ts")))
-        .groupBy("user_id", "hr")
-        .agg(count(lit(1)).as("n_events"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id"))).as("last_type"))
-      val grid = ev.groupBy("user_id")
-        .agg(date_trunc("hour", min(col("ts"))).as("h0"),
-          date_trunc("hour", max(col("ts"))).as("h1"))
-        .select(col("user_id"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("hr"))
+      val (grid, hourly) = hourGrid(ev,
+        max_by(col("event_type"), struct(col("ts"), col("event_id"))).as("last_type"))
       val w = Window.partitionBy("user_id").orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       grid.join(hourly, Seq("user_id", "hr"), "left")
@@ -525,17 +598,7 @@ object Stats {
     // previous stage's per-user min — no window over the event stream, no
     // self-join explosion; every join is keyed by user_id.
     "q104_funnel" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      def firstAfter(tpe: String, prev: org.apache.spark.sql.DataFrame,
-                     prevCol: String, out: String) =
-        ev.filter(col("event_type") === tpe)
-          .join(prev, Seq("user_id"))
-          .filter(col("ts") > col(prevCol))
-          .groupBy("user_id").agg(min(col("ts")).as(out))
-      val su = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(col("ts")).as("s_ts"))
-      val vw = firstAfter("view", su, "s_ts", "v_ts")
-      val pu = firstAfter("purchase", vw, "v_ts", "p_ts")
+      val (su, vw, pu) = funnelStages(s, dir)
       su.join(vw, Seq("user_id"), "left").join(pu, Seq("user_id"), "left")
         .select(col("user_id"),
           (lit(1L) + col("v_ts").isNotNull.cast("long")
@@ -927,15 +990,9 @@ object Stats {
     // every SF (the q103 check), rn disambiguates collect order via
     // array_sort on (rn, type) structs. Bounded output (|types|^<=3 paths).
     "q166_session_paths" -> ((s: SparkSession, dir: String) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val flagged = Tables(s, dir, "events")
+      val flagged = sessionized(Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .withColumn("sec", unix_timestamp(col("ts")))
-        .withColumn("prev_sec", lag("sec", 1).over(w))
-        .withColumn("new_s",
-          (col("prev_sec").isNull || (col("sec") - col("prev_sec")) > 1800L).cast("long"))
-        .withColumn("sess", sum("new_s").over(cum))
+        .withColumn("sec", unix_timestamp(col("ts"))), "ts", "event_id")
       val sw = Window.partitionBy("user_id", "sess").orderBy("ts", "event_id")
       flagged
         .withColumn("rn", row_number().over(sw))
@@ -1204,15 +1261,7 @@ object Stats {
     // doubles also break the driver's row sorter).
     "q133_interp" -> ((s: SparkSession, dir: String) => {
       val ev = Tables(s, dir, "events").filter(col("user_id") < 5)
-      val hourly = ev
-        .withColumn("hr", date_trunc("hour", col("ts")))
-        .groupBy("user_id", "hr")
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("hv"))
-      val grid = ev.groupBy("user_id")
-        .agg(date_trunc("hour", min(col("ts"))).as("h0"),
-          date_trunc("hour", max(col("ts"))).as("h1"))
-        .select(col("user_id"),
-          explode(expr("sequence(h0, h1, interval 1 hour)")).as("hr"))
+      val (grid, hourly) = hourGrid(ev, round(sum("value"), 4).as("hv"))
       val base = grid.join(hourly, Seq("user_id", "hr"), "left")
         .withColumn("hrn", expr("unix_timestamp(hr) div 3600"))
         .withColumn("hv_e4", expr("CAST(round(hv * 10000.0) AS BIGINT)"))
@@ -1313,17 +1362,7 @@ object Stats {
     // so interpolated quartiles land on exact dyadic rationals (q44/q118's
     // argument) — bit-equal across engines, tie-free under round(,2).
     "q125_conversion_lag" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      def firstAfter(tpe: String, prev: org.apache.spark.sql.DataFrame,
-                     prevCol: String, out: String) =
-        ev.filter(col("event_type") === tpe)
-          .join(prev, Seq("user_id"))
-          .filter(col("ts") > col(prevCol))
-          .groupBy("user_id").agg(min(col("ts")).as(out))
-      val su = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(col("ts")).as("s_ts"))
-      val vw = firstAfter("view", su, "s_ts", "v_ts")
-      val pu = firstAfter("purchase", vw, "v_ts", "p_ts")
+      val (su, _, pu) = funnelStages(s, dir)
       su.join(pu, Seq("user_id"), "left")
         .select(date_format(date_trunc("week", col("s_ts")), "yyyy-MM-dd").as("cohort_week"),
           (unix_timestamp(col("p_ts")) - unix_timestamp(col("s_ts"))).as("lag_sec"))
@@ -1343,15 +1382,9 @@ object Stats {
     // flags. Both windows ride ONE user-keyed sort; time math uses
     // floor-to-second longs so both engines compare identical integers.
     "q121_sessions" -> ((s: SparkSession, dir: String) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val flagged = Tables(s, dir, "events")
+      val flagged = sessionized(Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("sec", unix_timestamp(col("ts")))
-        .withColumn("prev_sec", lag("sec", 1).over(w))
-        .withColumn("new_s",
-          (col("prev_sec").isNull || (col("sec") - col("prev_sec")) > 1800L).cast("long"))
-        .withColumn("sess", sum("new_s").over(cum))
+        .withColumn("sec", unix_timestamp(col("ts"))), "ts", "event_id")
       flagged.groupBy("user_id", "sess")
         .agg(count(lit(1)).as("n_ev"), (max("sec") - min("sec")).as("dur_sec"))
         .groupBy("user_id")
@@ -1366,11 +1399,7 @@ object Stats {
     // operator, in a business query) when it happened within 7 days.
     // Per-day attribution rate in integer basis points.
     "q122_attribution" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id", "ts")
+      val (purchases, views) = purchasesAndViews(s, dir, Seq("event_id", "user_id", "ts"))
       org.apache.spark.sql.graft.AsOfJoin.asofPrior(
           purchases, views, "user_id" -> "user_id", "ts" -> "ts")
         .withColumn("attributed",
@@ -1396,8 +1425,7 @@ object Stats {
       val perUser = Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(max((col("event_type") === "purchase").cast("long")).as("purchased"))
-        .withColumn("bucket", expr(
-          "CAST(conv(substring(md5(CAST(CAST(user_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 2"))
+        .withColumn("bucket", abArm)
       perUser.agg(
           sum(when(col("bucket") === 0, 1L).otherwise(0L)).as("n_a"),
           sum(when(col("bucket") === 0, col("purchased")).otherwise(0L)).as("c_a"),
@@ -1464,19 +1492,7 @@ object Stats {
     // nanosecond parquet (DuckDB keeps ns, Spark µs-truncates), so a raw
     // timestamp inequality could flip at sub-µs boundaries between engines.
     "q62_range_join" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .selectExpr("event_id AS p_id", "user_id AS u", "unix_timestamp(ts) AS p_s")
-        .withColumn("bkt", expr("p_s div 3600"))
-      val v = ev.filter(col("event_type") === "view")
-        .selectExpr("user_id AS vu", "unix_timestamp(ts) AS v_s")
-        .withColumn("vbkt0", expr("v_s div 3600"))
-        // a view in bucket b can precede purchases in buckets b and b+1
-        // only — each candidate pair shares exactly ONE expanded key, so
-        // the fan-out can't double-count
-        .withColumn("bkt", explode(array(col("vbkt0"), col("vbkt0") + 1)))
-      p.join(v, col("u") === col("vu") && p("bkt") === v("bkt") &&
-          col("v_s") >= col("p_s") - 3600 && col("v_s") < col("p_s"), "left")
+      hourBeforeJoin(s, dir, Seq("user_id AS vu", "unix_timestamp(ts) AS v_s"), "left")
         .groupBy("p_id")
         .agg(count(col("v_s")).as("n_prior_views"))
         .orderBy("p_id")
@@ -1489,16 +1505,8 @@ object Stats {
     // asserts the foreachBatch output equals exactly this query's rows.
     // Same bucket trick as q62; inner join, so the pair set is the output.
     "q71_interval_pairs" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val p = ev.filter(col("event_type") === "purchase")
-        .selectExpr("event_id AS p_id", "user_id AS u", "unix_timestamp(ts) AS p_s")
-        .withColumn("bkt", expr("p_s div 3600"))
-      val v = ev.filter(col("event_type") === "view")
-        .selectExpr("event_id AS v_id", "user_id AS vu", "unix_timestamp(ts) AS v_s")
-        .withColumn("vbkt0", expr("v_s div 3600"))
-        .withColumn("bkt", explode(array(col("vbkt0"), col("vbkt0") + 1)))
-      p.join(v, col("u") === col("vu") && p("bkt") === v("bkt") &&
-          col("v_s") >= col("p_s") - 3600 && col("v_s") < col("p_s"))
+      hourBeforeJoin(s, dir,
+          Seq("event_id AS v_id", "user_id AS vu", "unix_timestamp(ts) AS v_s"), "inner")
         .select(col("p_id"), col("v_id"))
         .orderBy("p_id", "v_id")
     }),
@@ -1555,11 +1563,7 @@ object Stats {
     // the union + window-frame formulation. The strategy is injected via
     // GraftExtensions; EnsureRequirements plans the exchanges/sorts.
     "q58_native_asof" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id")
+      val (purchases, views) = purchasesAndViews(s, dir, Seq("event_id", "user_id"))
       org.apache.spark.sql.graft.AsOfJoin.asofPrior(
           purchases, views, "user_id" -> "user_id", "event_id" -> "event_id")
         .select(col("event_id"), col("user_id"), col("r_event_id").as("prior_view"))
@@ -1573,11 +1577,7 @@ object Stats {
     // fact as-of a small dimension history. AsOfJoinSpec asserts the
     // zero-left-exchange plan shape.
     "q75_bcast_asof" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id")
+      val (purchases, views) = purchasesAndViews(s, dir, Seq("event_id", "user_id"))
       org.apache.spark.sql.graft.AsOfJoin.asofPriorBroadcast(
           purchases, views, "user_id" -> "user_id", "event_id" -> "event_id")
         .select(col("event_id"), col("user_id"), col("r_event_id").as("prior_view"))
@@ -1597,11 +1597,7 @@ object Stats {
     // AsOfJoinExec (one co-partitioned merge), not a post-filter over an
     // unbounded attach.
     "q197_asof_tolerance" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id", "ts")
+      val (purchases, views) = purchasesAndViews(s, dir, Seq("event_id", "user_id", "ts"))
       org.apache.spark.sql.graft.AsOfJoin.asofPriorWithin(
           purchases, views, "user_id" -> "user_id", "ts" -> "ts",
           tolerance = 3600L * 1000000L) // 1 hour in ord units (µs)
@@ -1611,11 +1607,7 @@ object Stats {
     }),
 
     "q69_asof_ts" -> ((s: SparkSession, dir: String) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id", "ts")
+      val (purchases, views) = purchasesAndViews(s, dir, Seq("event_id", "user_id", "ts"))
       org.apache.spark.sql.graft.AsOfJoin.asofPrior(
           purchases, views, "user_id" -> "user_id", "ts" -> "ts")
         .select(col("event_id"), col("user_id"), col("r_event_id").as("prior_view"))
@@ -1699,15 +1691,9 @@ object Stats {
     // event_id) in BOTH engines — DuckDB ordering by raw nanos while Spark
     // orders truncated micros would diverge on same-second ties.
     "q207_seq_pattern" -> ((s: SparkSession, dir: String) => {
-      val w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-      val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val flagged = Tables(s, dir, "events")
+      val flagged = sessionized(Tables(s, dir, "events")
         .select(col("user_id"), unix_timestamp(col("ts")).as("sec"),
-          col("event_id"), substring(col("event_type"), 1, 1).as("i"))
-        .withColumn("prev_sec", lag("sec", 1).over(w))
-        .withColumn("new_s",
-          (col("prev_sec").isNull || (col("sec") - col("prev_sec")) > 1800L).cast("long"))
-        .withColumn("sess", sum("new_s").over(cum))
+          col("event_id"), substring(col("event_type"), 1, 1).as("i")), "sec", "event_id")
       val paths = flagged.groupBy("user_id", "sess")
         .agg(array_join(transform(
           array_sort(collect_list(struct(col("sec"), col("event_id"), col("i")))),
@@ -1797,9 +1783,7 @@ object Stats {
     // verbatim, so incremental ≡ rebuild is the correctness gate itself.
     "q269_agg_state_quantiles" -> ((s: SparkSession, dir: String) => withStateDir("graft-agg-hist-") { stateDir =>
       import graft.operators.AggState
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_orderkey"),
-          expr("CAST(round(l_extendedprice * 100.0) AS BIGINT)").as("cents"))
+      val li = lineCents(s, dir)
       def slice(r: Int) = li.filter(col("l_orderkey") % 3 === r)
       AggState.buildHist(slice(0), Seq("l_returnflag"), "cents", stateDir)
       AggState.appendHist(slice(1), Seq("l_returnflag"), "cents", stateDir)
@@ -1818,9 +1802,7 @@ object Stats {
     // equivalence discipline).
     "q272_hist_retract" -> ((s: SparkSession, dir: String) => withStateDir("graft-agg-hist-retract-") { stateDir =>
       import graft.operators.AggState
-      val li = Tables(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_orderkey"),
-          expr("CAST(round(l_extendedprice * 100.0) AS BIGINT)").as("cents"))
+      val li = lineCents(s, dir)
       AggState.buildHist(li.filter(col("l_orderkey") % 3 === 0),
         Seq("l_returnflag"), "cents", stateDir)
       AggState.appendHist(li.filter(col("l_orderkey") % 3 =!= 0),
@@ -1847,8 +1829,7 @@ object Stats {
         .groupBy("user_id")
         .agg(sum(when(pre, cents).otherwise(0L)).as("x"),
           sum(when(!pre, cents).otherwise(0L)).as("y"))
-        .withColumn("bucket", expr(
-          "CAST(conv(substring(md5(CAST(CAST(user_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 2"))
+        .withColumn("bucket", abArm)
       perUser.agg(
           sum(when(col("bucket") === 0, 1L).otherwise(0L)).as("n_a"),
           sum(when(col("bucket") === 1, 1L).otherwise(0L)).as("n_b"),

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextHashes
 import graft.Tables
+import graft.operators.AggState
 import TrainPrep.{Stop, rawToks, repetitionGate, tokenGate, wordPairs}
 
 /** Text-analysis operators over the `documents` table — the training-data
@@ -43,6 +44,51 @@ object Text {
       |                     / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))
       |  * 1000000.0) AS BIGINT)""".stripMargin
 
+  /** The token postings of `docs`: tf (doc_id, term, tf) and dl
+    * (doc_id, dl), both from one exploded-token pass. */
+  private def tokenPostings(docs: DataFrame): (DataFrame, DataFrame) = {
+    val ex = docs.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
+    (ex.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")),
+      ex.groupBy("doc_id").agg(count(lit(1)).as("dl")))
+  }
+
+  /** tf and dl over the merged standing postings at `stateDir` (keyed
+    * (doc_id, term), the count in `n`): dl folds the state rows. */
+  private def statePostings(s: SparkSession, stateDir: String): (DataFrame, DataFrame) = {
+    val tf = AggState.merged(s, stateDir, PostingKeys)
+      .select(col("doc_id"), col("term"), col("n").as("tf"))
+    (tf, tf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl")))
+  }
+
+  /** The standing postings' keys and the rows `d` adds to them: one
+    * (doc_id, term, one = 1) per token. */
+  private val PostingKeys = Seq("doc_id", "term")
+  private def postingRows(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
+      .withColumn("one", lit(1L))
+
+  /** BM25 of every (doc, query term) pair: the query is the corpus's
+    * top-3 terms by document frequency, the 3-term set and the 1-row
+    * totals broadcast, and each pair carries `score_e6`
+    * ([[Bm25ScoreE6Sql]]) beside its tf. */
+  private def bm25Scored(tf: DataFrame, dl: DataFrame): DataFrame = {
+    val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
+    val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val qterms = dfx.orderBy(col("df").desc, col("term")).limit(3)
+    tf.join(broadcast(qterms), Seq("term"))
+      .join(dl, Seq("doc_id"))
+      .crossJoin(broadcast(totals))
+      .withColumn("score_e6", expr(Bm25ScoreE6Sql))
+  }
+
+  /** q109's answer over any tf/dl: per doc, the query terms it hits and
+    * its exact BM25 sum. */
+  private def bm25PerDoc(tf: DataFrame, dl: DataFrame): DataFrame =
+    bm25Scored(tf, dl)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_hit_terms"), sum("score_e6").as("bm25_e6"))
+      .orderBy("doc_id")
+
   /** q126's HLL estimate, shared VERBATIM with the oracle. Inputs s_e
     * (integer-ized harmonic sum ×2^51) and n_regs are exact BIGINTs;
     * α₆₄·m² = 0.709·4096. E ≤ 2.5m with empty registers switches to
@@ -53,6 +99,35 @@ object Text {
       |     THEN CAST(floor(64.0 * ln(64.0 / CAST(64 - n_regs AS DOUBLE))) AS BIGINT)
       |     ELSE CAST(floor((0.709 * 4096.0)
       |            / (CAST(s_e AS DOUBLE) / 2251799813685248.0)) AS BIGINT) END""".stripMargin
+
+  /** Every token of the corpus as (lang, term): the sketch queries' input. */
+  private def langTerms(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents").select(col("lang"), explode(rawToks(col("text"))).as("term"))
+
+  /** The sketches' 56-bit term hash (first 14 md5 hex digits): (k−1)·2^56
+    * stays inside BIGINT for KMV, and the oracles compute the same. */
+  private def termHash56: Column =
+    expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)")
+
+  /** The distinct word-3-gram hashes `h` of each doc with >= 3 tokens, as
+    * (doc_id, h) rows: one native pass builds each doc's list, deduped on
+    * the gram strings (hash-level dedupe would miscount on a collision). */
+  private def docGrams(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), rawToks(col("text")).as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
+
+  /** The HLL estimate of each language's (lang, n_regs, s_e) register
+    * sketch beside the exact distinct-term count of its (lang, term)
+    * rows `ex`, and the estimate's error in basis points. */
+  private def hllAccuracy(sketch: DataFrame, ex: DataFrame): DataFrame = {
+    val exact = ex.distinct().groupBy("lang").agg(count(lit(1)).as("n_exact"))
+    sketch.withColumn("est_hll", expr(HllEstSql))
+      .join(exact, Seq("lang"))
+      .select(col("lang"), col("n_exact"), col("est_hll"),
+        expr("CAST((abs(est_hll - n_exact) * 10000) DIV n_exact AS BIGINT)").as("err_bp"))
+      .orderBy("lang")
+  }
 
   /** q127's Efraimidis–Spirakis priority key ×1e9, shared VERBATIM with
     * the oracle: u = (h + 0.5)/2^32 ∈ (0,1) from an exact 32-bit md5
@@ -265,10 +340,7 @@ object Text {
     }),
 
     "q80_repetition" -> ((s: SparkSession, dir: String) => {
-      def frac(total: Column, distinct: Column): Column =
-        when(total === 0, lit(0.0))
-          .otherwise(round(
-            lit(1.0) - distinct.cast("double") / total.cast("double"), 4))
+      def frac(total: Column, distinct: Column) = round(TrainPrep.dupFrac(total, distinct), 4)
       Tables(s, dir, "documents")
         .withColumn("w", rawToks(col("text")))
         .withColumn("n", size(col("w")).cast("long"))
@@ -521,20 +593,8 @@ object Text {
     // BIGINT inputs (tf, df, dl, sum_dl, n_docs), floor-integerized per
     // (doc, term), then exactly summed per doc.
     "q109_bm25" -> ((s: SparkSession, dir: String) => {
-      val ex = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
-      val tf = ex.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dl = ex.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val qterms = dfx.orderBy(col("df").desc, col("term")).limit(3)
-      tf.join(broadcast(qterms), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(totals))
-        .withColumn("score_e6", expr(Bm25ScoreE6Sql))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_hit_terms"), sum("score_e6").as("bm25_e6"))
-        .orderBy("doc_id")
+      val (tf, dl) = tokenPostings(Tables(s, dir, "documents"))
+      bm25PerDoc(tf, dl)
     }),
 
     // ---- incremental retrieval-index maintenance (standing postings) -----
@@ -548,28 +608,12 @@ object Text {
     // state-derived tf/df/dl, and the oracle IS q109's from-scratch SQL:
     // the incremental-index ≡ full-rescan equivalence is hash-checked.
     "q280_incr_bm25" -> ((s: SparkSession, dir: String) => withStateDir("graft-bm25-state-") { stateDir =>
-      import graft.operators.AggState
       val docs = Tables(s, dir, "documents")
-      val keys = Seq("doc_id", "term")
-      def postings(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
-          .withColumn("one", lit(1L))
-      AggState.build(postings(docs.filter(col("doc_id") % 3 === 0)), keys, "one", stateDir)
-      AggState.append(postings(docs.filter(col("doc_id") % 3 === 1)), keys, "one", stateDir)
-      AggState.append(postings(docs.filter(col("doc_id") % 3 === 2)), keys, "one", stateDir)
-      val tf = AggState.merged(s, stateDir, keys)
-        .select(col("doc_id"), col("term"), col("n").as("tf"))
-      val dl = tf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl"))
-      val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val qterms = dfx.orderBy(col("df").desc, col("term")).limit(3)
-      tf.join(broadcast(qterms), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(totals))
-        .withColumn("score_e6", expr(Bm25ScoreE6Sql))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_hit_terms"), sum("score_e6").as("bm25_e6"))
-        .orderBy("doc_id")
+      AggState.build(postingRows(docs.filter(col("doc_id") % 3 === 0)), PostingKeys, "one", stateDir)
+      AggState.append(postingRows(docs.filter(col("doc_id") % 3 === 1)), PostingKeys, "one", stateDir)
+      AggState.append(postingRows(docs.filter(col("doc_id") % 3 === 2)), PostingKeys, "one", stateDir)
+      val (tf, dl) = statePostings(s, stateDir)
+      bm25PerDoc(tf, dl)
     }),
 
     // ---- retrieval-index takedown (retraction on standing postings) ------
@@ -583,28 +627,12 @@ object Text {
     // survivor index from scratch, so grown-minus-retracted ≡
     // survivors-only is hash-checked end to end.
     "q281_bm25_takedown" -> ((s: SparkSession, dir: String) => withStateDir("graft-bm25-takedown-") { stateDir =>
-      import graft.operators.AggState
       val docs = Tables(s, dir, "documents")
-      val keys = Seq("doc_id", "term")
-      def postings(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
-          .withColumn("one", lit(1L))
-      AggState.build(postings(docs.filter(col("doc_id") % 3 === 0)), keys, "one", stateDir)
-      AggState.append(postings(docs.filter(col("doc_id") % 3 =!= 0)), keys, "one", stateDir)
-      AggState.retract(postings(docs.filter(col("doc_id") % 3 === 2)), keys, "one", stateDir)
-      val tf = AggState.merged(s, stateDir, keys)
-        .select(col("doc_id"), col("term"), col("n").as("tf"))
-      val dl = tf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl"))
-      val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val qterms = dfx.orderBy(col("df").desc, col("term")).limit(3)
-      tf.join(broadcast(qterms), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(totals))
-        .withColumn("score_e6", expr(Bm25ScoreE6Sql))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_hit_terms"), sum("score_e6").as("bm25_e6"))
-        .orderBy("doc_id")
+      AggState.build(postingRows(docs.filter(col("doc_id") % 3 === 0)), PostingKeys, "one", stateDir)
+      AggState.append(postingRows(docs.filter(col("doc_id") % 3 =!= 0)), PostingKeys, "one", stateDir)
+      AggState.retract(postingRows(docs.filter(col("doc_id") % 3 === 2)), PostingKeys, "one", stateDir)
+      val (tf, dl) = statePostings(s, stateDir)
+      bm25PerDoc(tf, dl)
     }),
 
     // ---- conjunctive keyword search (posting-list intersection) ----------
@@ -639,11 +667,7 @@ object Text {
     // identical in both engines, with the exact count alongside for the
     // error report.
     "q111_kmv_distinct" -> ((s: SparkSession, dir: String) => {
-      val exd = Tables(s, dir, "documents")
-        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
-        .distinct()
-      val hashed = exd.select(col("lang"),
-        expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
+      val hashed = langTerms(s, dir).distinct().select(col("lang"), termHash56.as("h"))
       hashed.groupBy("lang")
         .agg(count(lit(1)).as("n_exact"),
           graft.functions.TopKByScore.top_k(16)(col("h"), negate(col("h").cast("double"))).as("mins"))
@@ -667,16 +691,14 @@ object Text {
     "q117_cms" -> ((s: SparkSession, dir: String) => {
       val ex = Tables(s, dir, "documents")
         .select(explode(rawToks(col("text"))).as("term"))
-      val rows = ex
-        .withColumn("i", explode(array((0 to 3).map(lit): _*)))
+      // each term's cell (i, b) in every one of the 4 salted hash rows —
+      // the build and the probe must hash alike
+      def cells(d: DataFrame) = d.withColumn("i", explode(array((0 to 3).map(lit): _*)))
         .withColumn("b", expr(
           "CAST(conv(substring(md5(CAST(concat(CAST(i AS STRING), ':', term) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 256"))
-      val cms = rows.groupBy("i", "b").agg(count(lit(1)).as("c"))
+      val cms = cells(ex).groupBy("i", "b").agg(count(lit(1)).as("c"))
       val tf = ex.groupBy("term").agg(count(lit(1)).as("n_exact"))
-      val probes = tf.orderBy(col("n_exact").desc, col("term")).limit(5)
-        .withColumn("i", explode(array((0 to 3).map(lit): _*)))
-        .withColumn("b", expr(
-          "CAST(conv(substring(md5(CAST(concat(CAST(i AS STRING), ':', term) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 256"))
+      val probes = cells(tf.orderBy(col("n_exact").desc, col("term")).limit(5))
       probes.join(cms, Seq("i", "b"))
         .groupBy("term", "n_exact")
         .agg(min("c").as("est_cms"))
@@ -726,10 +748,8 @@ object Text {
     // the one float trap in HLL), deferred to one shared-verbatim double
     // expression with the standard small-range linear-counting branch.
     "q126_hll" -> ((s: SparkSession, dir: String) => {
-      val ex = Tables(s, dir, "documents")
-        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
-      val h = ex.select(col("lang"),
-        expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
+      val ex = langTerms(s, dir)
+      val h = ex.select(col("lang"), termHash56.as("h"))
       val regs = h
         .select(col("lang"), (col("h") % 64).as("j"), expr("h div 64").as("w"))
         .withColumn("rank",
@@ -740,12 +760,7 @@ object Text {
         .agg(count(lit(1)).as("n_regs"),
           sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(51 - m AS INT))")).as("s_hit"))
         .withColumn("s_e", col("s_hit") + (lit(64L) - col("n_regs")) * lit(2251799813685248L))
-        .withColumn("est_hll", expr(HllEstSql))
-      val exact = ex.distinct().groupBy("lang").agg(count(lit(1)).as("n_exact"))
-      sketch.join(exact, Seq("lang"))
-        .select(col("lang"), col("n_exact"), col("est_hll"),
-          expr("CAST((abs(est_hll - n_exact) * 10000) DIV n_exact AS BIGINT)").as("err_bp"))
-        .orderBy("lang")
+      hllAccuracy(sketch, ex)
     }),
 
     // ---- weighted sampling without replacement (Efraimidis–Spirakis) -----
@@ -945,18 +960,11 @@ object Text {
     // one ObjectHashAggregate (plan pinned in ScaleOpsSpec).
     "q190_hll_native" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.graft.Sketches.hll_regs
-      val ex = Tables(s, dir, "documents")
-        .select(col("lang"), explode(rawToks(col("text"))).as("term"))
-      val sketch = ex.select(col("lang"),
-          expr("CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 14), 16, 10) AS BIGINT)").as("h"))
+      val ex = langTerms(s, dir)
+      val sketch = ex.select(col("lang"), termHash56.as("h"))
         .groupBy("lang").agg(hll_regs(col("h")).as("r"))
         .select(col("lang"), col("r.n_regs").as("n_regs"), col("r.s_e").as("s_e"))
-        .withColumn("est_hll", expr(HllEstSql))
-      val exact = ex.distinct().groupBy("lang").agg(count(lit(1)).as("n_exact"))
-      sketch.join(exact, Seq("lang"))
-        .select(col("lang"), col("n_exact"), col("est_hll"),
-          expr("CAST((abs(est_hll - n_exact) * 10000) DIV n_exact AS BIGINT)").as("err_bp"))
-        .orderBy("lang")
+      hllAccuracy(sketch, ex)
     }),
 
     // ---- multinomial naive Bayes language classifier ---------------------
@@ -1120,12 +1128,7 @@ object Text {
     "q231_novelty" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.count() // decile width: one scalar, computed once
-      val grams = docs
-        .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
-        .filter(size(col("t")) >= 3)
-        // one native pass builds the distinct-gram hash list (string-level
-        // dedupe — hash-level would miscount on a collision)
-        .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
+      val grams = docGrams(docs)
       val firstCarrier = grams.groupBy("h").agg(min("doc_id").as("first_doc"))
       grams.join(firstCarrier, Seq("h"))
         .withColumn("decile", expr(s"least(doc_id * 10 div $nDocs, 9)"))
@@ -1147,11 +1150,7 @@ object Text {
     "q232_heaps_curve" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.count()
-      val grams = docs
-        .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("t"))
-        .filter(size(col("t")) >= 3)
-        // r18 (optimization): same native distinct-gram pass as q231
-        .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
+      val grams = docGrams(docs)
       val perDecile = grams.groupBy("h").agg(min("doc_id").as("first_doc"))
         .withColumn("decile", expr(s"least(first_doc * 10 div $nDocs, 9)"))
         .groupBy("decile").agg(count(lit(1)).as("new_vocab"))
@@ -1202,17 +1201,8 @@ object Text {
     // WindowGroupLimit (per-partition bounded heap, no full sort of the
     // posting list), and the judgment aggregate is one keyed pass.
     "q261_retrieval_eval" -> ((s: SparkSession, dir: String) => {
-      val ex = Tables(s, dir, "documents")
-        .select(col("doc_id"), explode(rawToks(col("text"))).as("term"))
-      val tf = ex.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val dl = ex.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      val dfx = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val qterms = dfx.orderBy(col("df").desc, col("term")).limit(3)
-      val scored = tf.join(broadcast(qterms), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(totals))
-        .withColumn("score_e6", expr(Bm25ScoreE6Sql))
+      val (tf, dl) = tokenPostings(Tables(s, dir, "documents"))
+      val scored = bm25Scored(tf, dl)
         .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L))
       val w = Window.partitionBy("term").orderBy(col("score_e6").desc, col("doc_id").asc)
       val ranked = scored.withColumn("rank", row_number().over(w).cast("long"))

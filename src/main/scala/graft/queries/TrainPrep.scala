@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -100,13 +100,16 @@ object TrainPrep {
     * exceeds 0.3. `d` is `TextHashes.ngram_distincts(w)`, projected once
     * by the caller because both fractions read it. */
   private[graft] def repetitionGate(w: Column, d: Column): Column = {
-    def frac(total: Column, distinct: Column): Column =
-      when(total === 0, lit(0.0))
-        .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
     val n = size(w).cast("long")
-    !(frac(n, d.getField("d_tok")) > 0.8 ||
-      frac(greatest(n - 2, lit(0L)), d.getField("d_3g")) > 0.3)
+    !(dupFrac(n, d.getField("d_tok")) > 0.8 ||
+      dupFrac(greatest(n - 2, lit(0L)), d.getField("d_3g")) > 0.3)
   }
+
+  /** The duplicate fraction of `total` units with `distinct` distinct
+    * ones (0 for none). */
+  private[graft] def dupFrac(total: Column, distinct: Column): Column =
+    when(total === 0, lit(0.0))
+      .otherwise(lit(1.0) - distinct.cast("double") / total.cast("double"))
 
   /** q73's content-independent split bucket (first 4 md5 hex digits of the
     * doc id, mod 100) — the train/val/test contract every decontamination
@@ -191,57 +194,86 @@ object TrainPrep {
        |  min(w0) AS w0, min(w1) AS w1, min(w2) AS w2
        | FROM e$i GROUP BY source)""".stripMargin
 
-  /** One full-batch GD pass over `feat` (x1i, x2i, yi) at weights `w`:
-    * the 1-row stats (n, g0..g2, n_ok, carried w0..w2), eagerly
+  /** The decontamination base of q85/q277/q282: every doc with its split
+    * bucket and its hashed word 8-grams `ng`. It feeds BOTH the train and
+    * the probe branches, so it is persisted — the corpus is scanned and
+    * hashed once, not twice (the q37 lesson); the caller unpersists it
+    * once its result is pinned. */
+  private def decontamBase(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "documents")
+      .withColumn("bucket", splitBucket(col("doc_id")))
+      .withColumn("ng", hashedNgrams8(col("text")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The distinct 8-gram hashes `h` of the base's train split. */
+  private def trainGrams(base: DataFrame, bucketBelow: Int): DataFrame =
+    base.filter(col("bucket") < bucketBelow)
+      .select(explode(col("ng")).as("h")).distinct()
+
+  /** Per-doc (doc_id, n_ngrams, n_hit) counts as the overlap report: the
+    * hit share in integer basis points and the >= 10% flag, by doc,
+    * eagerly pinned. */
+  private def overlapReport(counts: DataFrame): DataFrame =
+    counts
+      .select(col("doc_id"), col("n_ngrams"), col("n_hit"),
+        expr("(n_hit * 10000) div n_ngrams").as("overlap_bp"),
+        (col("n_hit") * 10 >= col("n_ngrams")).cast("long").as("flagged"))
+      .orderBy("doc_id")
+      .localCheckpoint(eager = true)
+
+  /** One full-batch GD pass over `feat` (keys, x1i, x2i, yi) at the
+    * weights `w` (keys, w0..w2), one model per `keys` group (Nil: one
+    * global model over a 1-row `w`): per group the stats (n, g0..g2, n_ok,
+    * carried w0..w2, then `extra` over the pass's p/err/yi), eagerly
     * checkpointed so downstream consumers never re-run the corpus pass. */
-  private[graft] def gdStep(feat: org.apache.spark.sql.DataFrame,
-      w: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    feat.crossJoin(broadcast(w))
+  private[graft] def gdPass(feat: DataFrame, w: DataFrame, keys: Seq[String],
+      extra: Column*): DataFrame =
+    feat.join(broadcast(w), keys)
       .withColumn("p", expr(TrainSigmoidExpr))
       .withColumn("err", expr("p - CAST(yi AS DOUBLE)"))
-      .agg(count(lit(1)).as("n"),
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), Seq(
         sum(expr("CAST(floor(err * 1000000000.0) AS BIGINT)")).as("g0"),
         sum(expr("CAST(floor(err * (CAST(x1i AS DOUBLE) / 100.0) * 1000000000.0) AS BIGINT)")).as("g1"),
         sum(expr("CAST(floor(err * (CAST(x2i AS DOUBLE) / 10000.0) * 1000000000.0) AS BIGINT)")).as("g2"),
         sum(expr("CASE WHEN (p >= 0.5 AND yi = 1) OR (p < 0.5 AND yi = 0) THEN 1 ELSE 0 END")).as("n_ok"),
-        min("w0").as("w0"), min("w1").as("w1"), min("w2").as("w2"))
+        min("w0").as("w0"), min("w1").as("w1"), min("w2").as("w2")) ++ extra: _*)
       .localCheckpoint(eager = true)
 
+  /** One global model's starting weights: all zero. */
+  private def gdZero(s: SparkSession): DataFrame =
+    s.range(1).select(lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
+
   /** The q284-family feature frame — (x1i tokens, x2i stopword bp, yi
-    * lang='en') over non-empty docs. Single-sourced for q290 and its
-    * spec; q284/q285/q286 keep their inline copies (their oracles mirror
-    * the text verbatim). */
-  private[graft] def trainFeatures(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * lang='en') over non-empty docs, the `keys` columns of `docs` carried
+    * in front (q286's source, q285's split bucket). */
+  private[graft] def trainFeatures(docs: DataFrame, keys: Seq[String] = Nil): DataFrame = {
     docs
       .withColumn("w", rawToks(col("text")))
       .withColumn("x1i", size(col("w")).cast("long"))
       .filter(col("x1i") > 0)
       .withColumn("hits", size(filter(col("w"),
         t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
-      .select(col("x1i"), expr("(hits * 10000) div x1i").as("x2i"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
+      .select(keys.map(col) ++ Seq(col("x1i"), expr("(hits * 10000) div x1i").as("x2i"),
+        when(col("lang") === "en", 1L).otherwise(0L).as("yi")): _*)
   }
 
-  /** [[gdStep]] with the floor-e9 logistic-loss sum `l` added — q290's
-    * per-round readout (one extra aggregate over the same pass, nothing
-    * else changes). */
-  private[graft] def gdStepLoss(feat: org.apache.spark.sql.DataFrame,
-      w: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    feat.crossJoin(broadcast(w))
-      .withColumn("p", expr(TrainSigmoidExpr))
-      .withColumn("err", expr("p - CAST(yi AS DOUBLE)"))
-      .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(floor(err * 1000000000.0) AS BIGINT)")).as("g0"),
-        sum(expr("CAST(floor(err * (CAST(x1i AS DOUBLE) / 100.0) * 1000000000.0) AS BIGINT)")).as("g1"),
-        sum(expr("CAST(floor(err * (CAST(x2i AS DOUBLE) / 10000.0) * 1000000000.0) AS BIGINT)")).as("g2"),
-        sum(expr(s"CAST(floor(($TrainLossExpr) * 1000000000.0) AS BIGINT)")).as("l"),
-        sum(expr("CASE WHEN (p >= 0.5 AND yi = 1) OR (p < 0.5 AND yi = 0) THEN 1 ELSE 0 END")).as("n_ok"),
-        min("w0").as("w0"), min("w1").as("w1"), min("w2").as("w2"))
-      .localCheckpoint(eager = true)
+  /** [[gdPass]] of one global model with the floor-e9 logistic-loss sum
+    * `l` added — q290's per-round readout (one extra aggregate over the
+    * same pass, nothing else changes). */
+  private[graft] def gdStepLoss(feat: DataFrame, w: DataFrame): DataFrame =
+    gdPass(feat, w, Nil,
+      sum(expr(s"CAST(floor(($TrainLossExpr) * 1000000000.0) AS BIGINT)")).as("l"))
 
-  private[graft] def gdNextW(st: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    st.selectExpr(s"${TrainUpdExpr(0)} AS w0", s"${TrainUpdExpr(1)} AS w1",
-      s"${TrainUpdExpr(2)} AS w2")
+  /** The next weights (keys, w0..w2) from a [[gdPass]]'s stats. */
+  private[graft] def gdNextW(st: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    st.selectExpr(keys ++ (0 to 2).map(j => s"${TrainUpdExpr(j)} AS w$j"): _*)
+
+  /** A [[gdPass]]'s reported columns: the pass's accuracy in basis points
+    * and the weights it updates to, ×1e6 floored. */
+  private def gdReadout: Seq[String] =
+    "CAST((n_ok * 10000) div n AS BIGINT) AS acc_bp" +:
+      (0 to 2).map(j => s"CAST(floor((${TrainUpdExpr(j)}) * 1000000.0) AS BIGINT) AS w${j}_e6")
 
   private def trainRowSql(i: Int): String =
     s"""SELECT CAST($i AS BIGINT) AS iter,
@@ -379,28 +411,17 @@ object TrainPrep {
     }),
 
     "q85_decontaminate" -> ((s: SparkSession, dir: String) => {
-      val bucket = splitBucket(col("doc_id"))
-      // the tokenize→8-gram→md5 base feeds BOTH the train and test
-      // branches — persist it so the corpus is scanned/hashed once, not
-      // twice (the q37 lesson); the small result is checkpointed eagerly
-      // so the cache can be released before returning
-      val base = Tables(s, dir, "documents")
-        .withColumn("bucket", bucket)
-        .withColumn("ng", hashedNgrams8(col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val train = base.filter(col("bucket") < 90)
-        .select(explode(col("ng")).as("h")).distinct()
+      // the small result is checkpointed eagerly so the base's cache can
+      // be released before returning
+      val base = decontamBase(s, dir)
+      val train = trainGrams(base, 90)
       val testEx = base.filter(col("bucket") >= 95).filter(size(col("ng")) > 0)
         .select(col("doc_id"), size(col("ng")).cast("long").as("n_ngrams"),
           explode(col("ng")).as("h"))
-      val out = testEx.join(train.withColumn("hit", lit(1L)), Seq("h"), "left")
-        .groupBy("doc_id", "n_ngrams")
-        .agg(count(col("hit")).as("n_hit"))
-        .select(col("doc_id"), col("n_ngrams"), col("n_hit"),
-          expr("(n_hit * 10000) div n_ngrams").as("overlap_bp"),
-          (col("n_hit") * 10 >= col("n_ngrams")).cast("long").as("flagged"))
-        .orderBy("doc_id")
-        .localCheckpoint(eager = true)
+      val out = overlapReport(
+        testEx.join(train.withColumn("hit", lit(1L)), Seq("h"), "left")
+          .groupBy("doc_id", "n_ngrams")
+          .agg(count(col("hit")).as("n_hit")))
       base.unpersist()
       out
     }),
@@ -419,14 +440,9 @@ object TrainPrep {
     // This is the runtime-bloom-filter pattern as an explicit, bounded,
     // engine-independent broadcast (ScaleOpsSpec proves the implicit one).
     "q277_screened_decontam" -> ((s: SparkSession, dir: String) => {
-      val bucket = splitBucket(col("doc_id"))
-      val base = Tables(s, dir, "documents")
-        .withColumn("bucket", bucket)
-        .withColumn("ng", hashedNgrams8(col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val base = decontamBase(s, dir)
       // train feeds the fingerprint projection AND the verify join
-      val train = base.filter(col("bucket") < 85)
-        .select(explode(col("ng")).as("h")).distinct()
+      val train = trainGrams(base, 85)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val fp = train.select(pmod(col("h"), lit(65536L)).as("fp")).distinct()
       val probe = base.filter(col("bucket") >= 90).filter(size(col("ng")) > 0)
@@ -435,15 +451,10 @@ object TrainPrep {
         pmod(col("h"), lit(65536L)) === col("fp"), "left_semi")
       val hits = cand.join(train, Seq("h"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_hit0"))
-      val out = probe
+      val out = overlapReport(probe
         .select(col("doc_id"), size(col("ng")).cast("long").as("n_ngrams"))
         .join(hits, Seq("doc_id"), "left")
-        .withColumn("n_hit", coalesce(col("n_hit0"), lit(0L)).cast("long"))
-        .select(col("doc_id"), col("n_ngrams"), col("n_hit"),
-          expr("(n_hit * 10000) div n_ngrams").as("overlap_bp"),
-          (col("n_hit") * 10 >= col("n_ngrams")).cast("long").as("flagged"))
-        .orderBy("doc_id")
-        .localCheckpoint(eager = true)
+        .withColumn("n_hit", coalesce(col("n_hit0"), lit(0L)).cast("long")))
       train.unpersist()
       base.unpersist()
       out
@@ -467,13 +478,8 @@ object TrainPrep {
       import graft.operators.AggState
       val m = AggState.BloomDefaultBits
       val k = AggState.BloomDefaultK
-      val bucket = splitBucket(col("doc_id"))
-      val base = Tables(s, dir, "documents")
-        .withColumn("bucket", bucket)
-        .withColumn("ng", hashedNgrams8(col("text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val train = base.filter(col("bucket") < 85)
-        .select(explode(col("ng")).as("h")).distinct()
+      val base = decontamBase(s, dir)
+      val train = trainGrams(base, 85)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val bloom = AggState.bloomMap(
         AggState.bloomPartials(train, Nil, "h", m, k), Nil)
@@ -520,24 +526,12 @@ object TrainPrep {
     // corpus passes total, not a re-executed pyramid. Features: token
     // count (x/100) and stopword basis points (x/10000); label lang='en'.
     "q284_train_classifier" -> ((s: SparkSession, dir: String) => {
-      val base = Tables(s, dir, "documents")
-        .withColumn("w", rawToks(col("text")))
-        .withColumn("x1i", size(col("w")).cast("long"))
-        .filter(col("x1i") > 0)
-        .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
-        .select(col("x1i"), expr("(hits * 10000) div x1i").as("x2i"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
+      val base = trainFeatures(Tables(s, dir, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val w0 = s.range(1).select(lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
-      val (rows, _) = (1 to 3).foldLeft((Seq.empty[org.apache.spark.sql.DataFrame], w0)) {
+      val (rows, _) = (1 to 3).foldLeft((Seq.empty[DataFrame], gdZero(s))) {
         case ((acc, w), t) =>
-          val st = gdStep(base, w) // 1 row; pins this pass's sums
-          val row = st.selectExpr(s"CAST($t AS BIGINT) AS iter",
-            "CAST((n_ok * 10000) div n AS BIGINT) AS acc_bp",
-            s"CAST(floor((${TrainUpdExpr(0)}) * 1000000.0) AS BIGINT) AS w0_e6",
-            s"CAST(floor((${TrainUpdExpr(1)}) * 1000000.0) AS BIGINT) AS w1_e6",
-            s"CAST(floor((${TrainUpdExpr(2)}) * 1000000.0) AS BIGINT) AS w2_e6")
+          val st = gdPass(base, w, Nil) // 1 row; pins this pass's sums
+          val row = st.selectExpr(s"CAST($t AS BIGINT) AS iter" +: gdReadout: _*)
           (acc :+ row, gdNextW(st))
       }
       base.unpersist()
@@ -560,8 +554,7 @@ object TrainPrep {
     "q290_converged_training" -> ((s: SparkSession, dir: String) => {
       val base = trainFeatures(Tables(s, dir, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val w0 = s.range(1).select(lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
-      var w = w0
+      var w = gdZero(s)
       var prevMl: Option[Long] = None
       var t = 0
       var done = false
@@ -576,12 +569,8 @@ object TrainPrep {
         w = gdNextW(st)
       }
       base.unpersist()
-      lastSt.selectExpr(s"CAST($t AS BIGINT) AS iters_run",
-        "CAST(l div n AS BIGINT) AS loss_e9",
-        "CAST((n_ok * 10000) div n AS BIGINT) AS acc_bp",
-        s"CAST(floor((${TrainUpdExpr(0)}) * 1000000.0) AS BIGINT) AS w0_e6",
-        s"CAST(floor((${TrainUpdExpr(1)}) * 1000000.0) AS BIGINT) AS w1_e6",
-        s"CAST(floor((${TrainUpdExpr(2)}) * 1000000.0) AS BIGINT) AS w2_e6")
+      lastSt.selectExpr(Seq(s"CAST($t AS BIGINT) AS iters_run",
+        "CAST(l div n AS BIGINT) AS loss_e9") ++ gdReadout: _*)
     }),
 
     // ---- grouped training: one model per source, one job -----------------
@@ -596,42 +585,17 @@ object TrainPrep {
     // model's trajectory, and the output (final weights + third-pass
     // accuracy per source) is hash-checked per key.
     "q286_grouped_training" -> ((s: SparkSession, dir: String) => {
-      val base = Tables(s, dir, "documents")
-        .withColumn("w", rawToks(col("text")))
-        .withColumn("x1i", size(col("w")).cast("long"))
-        .filter(col("x1i") > 0)
-        .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
-        .select(col("source"), col("x1i"),
-          expr("(hits * 10000) div x1i").as("x2i"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
+      val base = trainFeatures(Tables(s, dir, "documents"), Seq("source"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val w0 = base.select("source").distinct()
         .select(col("source"), lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
         .localCheckpoint(eager = true)
       val s3 = (1 to 3).foldLeft(w0)((w, i) => {
-        val st = base.join(broadcast(w), Seq("source"))
-          .withColumn("p", expr(TrainSigmoidExpr))
-          .withColumn("err", expr("p - CAST(yi AS DOUBLE)"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n"),
-            sum(expr("CAST(floor(err * 1000000000.0) AS BIGINT)")).as("g0"),
-            sum(expr("CAST(floor(err * (CAST(x1i AS DOUBLE) / 100.0) * 1000000000.0) AS BIGINT)")).as("g1"),
-            sum(expr("CAST(floor(err * (CAST(x2i AS DOUBLE) / 10000.0) * 1000000000.0) AS BIGINT)")).as("g2"),
-            sum(expr("CASE WHEN (p >= 0.5 AND yi = 1) OR (p < 0.5 AND yi = 0) THEN 1 ELSE 0 END")).as("n_ok"),
-            min("w0").as("w0"), min("w1").as("w1"), min("w2").as("w2"))
-          .localCheckpoint(eager = true) // |keys| rows; pins the pass
-        if (i < 3)
-          st.selectExpr("source", s"${TrainUpdExpr(0)} AS w0",
-            s"${TrainUpdExpr(1)} AS w1", s"${TrainUpdExpr(2)} AS w2")
-        else st
+        val st = gdPass(base, w, Seq("source")) // |keys| rows; pins the pass
+        if (i < 3) gdNextW(st, Seq("source")) else st
       })
       base.unpersist()
-      s3.selectExpr("source", "CAST(n AS BIGINT) AS n_docs",
-        "CAST((n_ok * 10000) div n AS BIGINT) AS acc_bp",
-        s"CAST(floor((${TrainUpdExpr(0)}) * 1000000.0) AS BIGINT) AS w0_e6",
-        s"CAST(floor((${TrainUpdExpr(1)}) * 1000000.0) AS BIGINT) AS w1_e6",
-        s"CAST(floor((${TrainUpdExpr(2)}) * 1000000.0) AS BIGINT) AS w2_e6")
+      s3.selectExpr(Seq("source", "CAST(n AS BIGINT) AS n_docs") ++ gdReadout: _*)
         .orderBy("source")
     }),
 
@@ -645,21 +609,11 @@ object TrainPrep {
     // by the oracle's unrolled CTEs. One extra corpus pass over q284 (the
     // eval); the broadcast weight vector is the only cross-step state.
     "q285_train_eval" -> ((s: SparkSession, dir: String) => {
-      val bucket = splitBucket(col("doc_id"))
-      val base = Tables(s, dir, "documents")
-        .withColumn("bucket", bucket)
-        .withColumn("w", rawToks(col("text")))
-        .withColumn("x1i", size(col("w")).cast("long"))
-        .filter(col("x1i") > 0)
-        .withColumn("hits", size(filter(col("w"),
-          t => array_contains(array(Stop.map(lit): _*), t))).cast("long"))
-        .select(col("bucket"), col("x1i"),
-          expr("(hits * 10000) div x1i").as("x2i"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("yi"))
+      val base = trainFeatures(Tables(s, dir, "documents")
+          .withColumn("bucket", splitBucket(col("doc_id"))), Seq("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val train = base.filter(col("bucket") < 90)
-      val w0 = s.range(1).select(lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
-      val w3 = (1 to 3).foldLeft(w0)((w, _) => gdNextW(gdStep(train, w)))
+      val w3 = (1 to 3).foldLeft(gdZero(s))((w, _) => gdNextW(gdPass(train, w, Nil)))
       val out = base.filter(col("bucket") >= 95)
         .crossJoin(broadcast(w3))
         .withColumn("p", expr(TrainSigmoidExpr))
@@ -957,42 +911,8 @@ object TrainPrep {
     // trajectory is unchanged and stays hash-checked by the unrolled
     // oracle (the q290 pattern); the chosen pairs ride every row (p1-p3).
     "q299_bpe_merges" -> ((s: SparkSession, dir: String) => {
-      // Loop intermediates are DISK_ONLY persists, released as soon as the
-      // next round's sequences exist (the r14 loop-shared-persist lesson).
-      // Each persisted frame is consumed by exactly two jobs (pair-count
-      // top-1, then the merge pass), so the disk re-read is paid twice
-      // and execution memory stays whole.
-      val DISK = org.apache.spark.storage.StorageLevel.DISK_ONLY
-      var cur = Tables(s, dir, "documents")
-        .select(col("doc_id"), rawToks(col("text")).as("w"))
-        .filter(size(col("w")) > 0)
-        .persist(DISK)
-      // tiny per-round size ledgers (s0..s3): pinned eagerly — the pin
-      // also materializes the round's DISK_ONLY blocks before release
-      val sizes = scala.collection.mutable.ArrayBuffer(
-        cur.select(col("doc_id"), size(col("w")).cast("long").as("s0"))
-          .localCheckpoint(eager = true))
-      val pairs = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (k <- 1 to 3) {
-        val (pa, pb) = bpeTopPair(cur)
-        pairs += pa + " " + pb
-        if (k < 3) {
-          val nxt = bpeApplyPairs(cur, Seq((pa, pb))).persist(DISK)
-          sizes += nxt
-            .select(col("doc_id"), size(col("w")).cast("long").as(s"s$k"))
-            .localCheckpoint(eager = true)
-          cur.unpersist(blocking = true)
-          cur = nxt
-        } else {
-          // the last round's SEQUENCES have no reader — only the size
-          // ledger does; one unpersisted map pass, no round persist
-          sizes += bpeApplyPairs(cur, Seq((pa, pb)))
-            .select(col("doc_id"), size(col("w")).cast("long").as(s"s$k"))
-            .localCheckpoint(eager = true)
-          cur.unpersist(blocking = true)
-        }
-      }
-      sizes.reduce((a, b) => a.join(b, Seq("doc_id")))
+      val (sizes, pairs) = bpeLedger(s, dir, 3)((cur, _) => Seq(bpeTopPair(cur)))
+      sizes
         .select(col("doc_id"), col("s0").as("n0"),
           (col("s0") - col("s1")).as("m1"),
           (col("s1") - col("s2")).as("m2"),
@@ -1073,35 +993,12 @@ object TrainPrep {
     // before/between/after (each applied merge shortens a doc by exactly
     // 1) plus the chosen batches on every row.
     "q306_bpe_batch" -> ((s: SparkSession, dir: String) => {
-      val DISK = org.apache.spark.storage.StorageLevel.DISK_ONLY
-      var cur = Tables(s, dir, "documents")
-        .select(col("doc_id"), rawToks(col("text")).as("w"))
-        .filter(size(col("w")) > 0)
-        .persist(DISK)
-      val sizes = scala.collection.mutable.ArrayBuffer(
-        cur.select(col("doc_id"), size(col("w")).cast("long").as("s0"))
-          .localCheckpoint(eager = true))
-      val batches = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (k <- 1 to BpeBatchPasses) {
+      val (sizes, batches) = bpeLedger(s, dir, BpeBatchPasses) { (cur, k) =>
         val taken = bpeSelectBatch(bpeTopPairs(cur, BpeBatchCandCap), BpeBatchB)
         require(taken.nonEmpty, s"q306: no applicable pair in pass $k")
-        batches += taken.map { case (a, b) => s"$a $b" }.mkString("|")
-        if (k < BpeBatchPasses) {
-          val nxt = bpeApplyPairs(cur, taken).persist(DISK)
-          sizes += nxt
-            .select(col("doc_id"), size(col("w")).cast("long").as(s"s$k"))
-            .localCheckpoint(eager = true)
-          cur.unpersist(blocking = true)
-          cur = nxt
-        } else {
-          // the last pass's sequences have no reader beyond the ledger
-          sizes += bpeApplyPairs(cur, taken)
-            .select(col("doc_id"), size(col("w")).cast("long").as(s"s$k"))
-            .localCheckpoint(eager = true)
-          cur.unpersist(blocking = true)
-        }
+        taken
       }
-      sizes.reduce((a, b) => a.join(b, Seq("doc_id")))
+      sizes
         .select(col("doc_id"), col("s0").as("n0"),
           (col("s0") - col("s1")).as("m1"),
           (col("s1") - col("s2")).as("m2"),
@@ -1110,6 +1007,47 @@ object TrainPrep {
         .orderBy("doc_id")
     })
   )
+
+  /** The per-doc size ledger of a merge loop over the non-empty token
+    * sequences: `rounds` rounds, each choosing its pairs from the current
+    * sequences (`choose(cur, round)`) and applying them in one map pass.
+    * Returns the sizes s0..s<rounds> joined on doc_id, and each round's
+    * pairs as "a b" joined by "|". Loop intermediates are DISK_ONLY persists, released as soon as
+    * the next round's sequences exist (the r14 loop-shared-persist
+    * lesson): each is consumed by exactly two jobs (the choice, then the
+    * merge pass), so the disk re-read is paid twice and execution memory
+    * stays whole. */
+  private def bpeLedger(s: SparkSession, dir: String, rounds: Int)(
+      choose: (DataFrame, Int) => Seq[(String, String)]): (DataFrame, Seq[String]) = {
+    val DISK = org.apache.spark.storage.StorageLevel.DISK_ONLY
+    var cur = Tables(s, dir, "documents")
+      .select(col("doc_id"), rawToks(col("text")).as("w"))
+      .filter(size(col("w")) > 0)
+      .persist(DISK)
+    // tiny per-round size ledgers: pinned eagerly — the pin also
+    // materializes the round's DISK_ONLY blocks before release
+    def ledger(seqs: DataFrame, k: Int) =
+      seqs.select(col("doc_id"), size(col("w")).cast("long").as(s"s$k"))
+        .localCheckpoint(eager = true)
+    val sizes = scala.collection.mutable.ArrayBuffer(ledger(cur, 0))
+    val chosen = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (k <- 1 to rounds) {
+      val taken = choose(cur, k)
+      chosen += taken.map { case (a, b) => s"$a $b" }.mkString("|")
+      if (k < rounds) {
+        val nxt = bpeApplyPairs(cur, taken).persist(DISK)
+        sizes += ledger(nxt, k)
+        cur.unpersist(blocking = true)
+        cur = nxt
+      } else {
+        // the last round's SEQUENCES have no reader — only the size
+        // ledger does; one unpersisted map pass, no round persist
+        sizes += ledger(bpeApplyPairs(cur, taken), k)
+        cur.unpersist(blocking = true)
+      }
+    }
+    (sizes.reduce((a, b) => a.join(b, Seq("doc_id"))), chosen.toSeq)
+  }
 
   /** q306's fixed shape: 2 passes of up to B = 4 merges selected from the
     * top 16 ranked candidates — small enough to unroll in the oracle,
@@ -1160,15 +1098,10 @@ object TrainPrep {
     * residual spill (2 GB in-memory sorter per counting pass) to exactly
     * that window sort, which this removes (the one remaining windowed
     * pass per round is the mark/rebuild, which genuinely needs order). */
-  private[graft] def bpeTopPair(cur: org.apache.spark.sql.DataFrame): (String, String) = {
-    val top = cur.select(explode(wordPairs(col("w"))).as("p"))
-      .groupBy(col("p.prev").as("tok"), col("p.nxt").as("nxt"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("tok"), asc("nxt")).limit(1)
-      .collect().headOption
-      .getOrElse(sys.error(
-        "bpeTopPair: no adjacent pairs in corpus/split (every doc < 2 tokens?)"))
-    (top.getString(0), top.getString(1))
+  private[graft] def bpeTopPair(cur: DataFrame): (String, String) = {
+    val (a, b, _) = bpeTopPairs(cur, 1).headOption.getOrElse(sys.error(
+      "bpeTopPair: no adjacent pairs in corpus/split (every doc < 2 tokens?)"))
+    (a, b)
   }
 
   /** Greedy batch selection over a rank-ordered candidate list (count

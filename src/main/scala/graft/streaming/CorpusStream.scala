@@ -179,37 +179,33 @@ object CorpusStream {
     }
   }
 
-  /** Index half of the recovery for the documented crash window (index
-    * appended, sink write lost): index entries whose doc never landed in
-    * the corpus store are GHOSTS — they suppress every future copy of
-    * their content while the content itself was never admitted. The
-    * repair finds and tombstones them ([[DedupIndex.remove]]; pass the
-    * resolved index generation). On a [[pipelineBatch]] pipe dir that
-    * alone does NOT re-admit the content: the batch's bloom and para
-    * windows ran before the lost write, so the novelty filter and the
-    * paragraph state still hold it and a re-crawl dies at those gates
-    * (CorpusStreamSpec runs the case). There the recovery that works is
-    * [[graft.operators.Takedown]] with `rebloom` over the ghost ids (the
-    * index's live ids missing from the corpus, the set this repair
-    * counts): it tombstones them, retracts their paragraph keepers and
-    * rebuilds the filter from the corpus. Assumes ingest assigns fresh surrogate
-    * doc_ids per crawl (re-crawled content returns under a NEW id, so
-    * tombstoned ghost ids never resurface) — the standard ingest-id
-    * discipline. Returns the ghost count; both sides of the anti join are
-    * id projections (delta-sized driver cost: none). */
-  def repairIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, outDir: String): Long = {
-    if (!DedupIndex.exists(indexDir)) return 0L
-    val landed =
-      if (new java.io.File(outDir).exists())
-        spark.read.parquet(outDir).select("doc_id").distinct()
-      else spark.range(0).select(col("id").as("doc_id"))
-    val ghosts = DedupIndex.liveIds(spark, indexDir)
-      .join(landed, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true)
-    val n = ghosts.count()
-    if (n > 0) DedupIndex.remove(ghosts, indexDir)
-    n
+  /** The GHOSTS of the documented crash window (index appended, sink
+    * write lost): the ids live in the index at `indexDir` (pass the
+    * resolved generation) that never landed in the corpus store at
+    * `corpusDir` — each suppresses every future copy of content that was
+    * never admitted. Reads only, eagerly pinned so the caller may mutate
+    * the index it was read from; both sides of the anti join are id
+    * projections. The recovery that re-admits the content: on a bare
+    * index, [[DedupIndex.remove]] of these ids; on a [[pipelineBatch]]
+    * pipe dir, [[graft.operators.Takedown]] of them with `rebloom`, since
+    * the batch's bloom and para windows ran before the lost write and a
+    * re-crawl would otherwise die at those gates (CorpusStreamSpec runs
+    * both cases). Assumes ingest assigns fresh surrogate doc_ids per
+    * crawl (re-crawled content returns under a NEW id, so removed ghost
+    * ids never resurface) — the standard ingest-id discipline. */
+  def ghostIds(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, corpusDir: String): DataFrame = {
+    val none = spark.range(0).select(col("id").as("doc_id"))
+    if (!DedupIndex.exists(indexDir)) none
+    else {
+      val landed =
+        if (new java.io.File(corpusDir).exists())
+          spark.read.parquet(corpusDir).select("doc_id").distinct()
+        else none
+      DedupIndex.liveIds(spark, indexDir)
+        .join(landed, Seq("doc_id"), "left_anti")
+        .localCheckpoint(eager = true)
+    }
   }
 
   /** The COMPLETE curation loop as ONE foreachBatch sink (VERDICT r12 #8)
@@ -256,8 +252,8 @@ object CorpusStream {
     * semantics, their exact duplicates owned by [[curated]]'s digest
     * dedup), the index append precedes the corpus write (a lost write
     * leaves a GHOST in the bloom, index and para states; a Takedown of
-    * the ghost ids with `rebloom` re-admits its content, where
-    * [[repairIndex]] clears only the index), and the cluster fold
+    * the [[ghostIds]] with `rebloom` re-admits its content, where removing
+    * them from the index alone clears only the index), and the cluster fold
     * precedes the drop from inside the index window (edges derive from
     * that window's validated probe). A replayed cadence batch skips its
     * optimize (see [[maintainGeneration]]).

@@ -9,7 +9,10 @@ case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                     event_type: String, value: Double)
 
 /** Accumulated per-user state (flatMapGroupsWithState buffer). */
-case class UserState(n_events: Long, total_value: Double)
+case class UserState(n_events: Long, total_value: Double) {
+  /** This state with one more event counted and its value added. */
+  def plus(e: EventRow): UserState = UserState(n_events + 1, total_value + e.value)
+}
 
 /** Per-batch emission of the running per-user totals. */
 case class UserUpdate(user_id: Long, n_events: Long, total_value: Double)
@@ -116,11 +119,7 @@ object EventsPipeline {
       .flatMapGroupsWithState[UserState, UserUpdate](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (userId: Long, batch: Iterator[EventRow], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-          var n = prev.n_events
-          var total = prev.total_value
-          batch.foreach { e => n += 1; total += e.value }
-          val next = UserState(n, total)
+          val next = batch.foldLeft(state.getOption.getOrElse(UserState(0L, 0.0)))(_ plus _)
           state.update(next)
           Iterator(UserUpdate(userId, next.n_events, next.total_value))
       }
@@ -140,12 +139,9 @@ object EventsPipeline {
         "totals", Encoders.product[UserState], TTLConfig.NONE)
     override def handleInputRows(key: Long, rows: Iterator[EventRow],
                                  timerValues: TimerValues): Iterator[UserUpdate] = {
-      val prev = if (state.exists()) state.get() else UserState(0L, 0.0)
-      var n = prev.n_events
-      var total = prev.total_value
-      rows.foreach { e => n += 1; total += e.value }
-      state.update(UserState(n, total))
-      Iterator(UserUpdate(key, n, total))
+      val next = rows.foldLeft(if (state.exists()) state.get() else UserState(0L, 0.0))(_ plus _)
+      state.update(next)
+      Iterator(UserUpdate(key, next.n_events, next.total_value))
     }
   }
 
@@ -182,12 +178,10 @@ object EventsPipeline {
     }
     override def handleInputRows(key: Long, rows: Iterator[EventRow],
                                  timerValues: TimerValues): Iterator[ClosedSession] = {
-      val prev = if (agg.exists()) agg.get() else UserState(0L, 0.0)
-      var n = prev.n_events
-      var total = prev.total_value
+      var st = if (agg.exists()) agg.get() else UserState(0L, 0.0)
       var lastTs = Long.MinValue
-      rows.foreach { e => n += 1; total += e.value; lastTs = math.max(lastTs, e.ts.getTime) }
-      agg.update(UserState(n, total))
+      rows.foreach { e => st = st.plus(e); lastTs = math.max(lastTs, e.ts.getTime) }
+      agg.update(st)
       // `armed` is the high-water expiry (high-water ts + gap). A later
       // micro-batch can deliver an OLDER but still-within-watermark event;
       // re-arming at that event's ts would pull the deadline backwards and
@@ -431,18 +425,8 @@ object EventsPipeline {
     * stream-stream joins viable unbounded (state ≈ one hour of views).
     * The batch analog is the as-of/interval-join family (q48/q58). */
   def purchasesWithRecentViews(purchases: DataFrame, views: DataFrame,
-                               watermark: String = "2 hours"): DataFrame = {
-    val p = purchases.withWatermark("ts", watermark)
-      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-    val v = views.withWatermark("ts", watermark)
-      .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"))
-    p.join(v,
-      col("p_user") === col("v_user") &&
-        col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("v_ts") < col("p_ts"))
-  }
+                               watermark: String = "2 hours"): DataFrame =
+    recentViewJoin(purchases, views, watermark, "inner")
 
   /** LEFT OUTER stream-stream join: every purchase emits — matched rows as
     * they pair up, UNMATCHED purchases only once the watermark passes the
@@ -452,7 +436,16 @@ object EventsPipeline {
     * unattributed rows); the inner form above silently drops them. Same
     * event-time bounds, so view state still expires. */
   def purchasesWithViewOrOrganic(purchases: DataFrame, views: DataFrame,
-                                 watermark: String = "2 hours"): DataFrame = {
+                                 watermark: String = "2 hours"): DataFrame =
+    recentViewJoin(purchases, views, watermark, "left_outer")
+      .select(col("p_id"), col("p_user"), col("p_ts"), col("v_id"),
+        col("v_id").isNull.as("organic"))
+
+  /** Each purchase (p_id, p_user, p_ts) `joinType`-joined with the views
+    * (v_id, v_user, v_ts) of its user in the hour before it, both sides
+    * under `watermark`. */
+  private def recentViewJoin(purchases: DataFrame, views: DataFrame,
+      watermark: String, joinType: String): DataFrame = {
     val p = purchases.withWatermark("ts", watermark)
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
@@ -463,9 +456,7 @@ object EventsPipeline {
       col("p_user") === col("v_user") &&
         col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("v_ts") < col("p_ts"),
-      "left_outer")
-      .select(col("p_id"), col("p_user"), col("p_ts"), col("v_id"),
-        col("v_id").isNull.as("organic"))
+      joinType)
   }
 
   /** Stream-static enrichment: the event stream left-joined to a static

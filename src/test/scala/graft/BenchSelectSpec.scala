@@ -22,12 +22,16 @@ class BenchSelectSpec extends AnyFunSuite {
   }
 
   test("host calibration measures positive wall seconds at any thread count") {
-    val t1 = Bench.calibrate(1)
-    val t2 = Bench.calibrate(2)
-    assert(t1 > 0 && t2 > 0)
-    // 2 threads of the same per-thread workload can't run faster than one
-    // thread of it (equal only on >= 2 truly free cores)
-    assert(t2 >= t1 * 0.8)
+    // every thread runs the full per-thread burn: burn is deterministic,
+    // so the sink moves by exactly the warm-up plus n full burns (a
+    // wall-time ratio between thread counts would measure the host)
+    val full = Bench.burn(Bench.calibIters)
+    val warm = Bench.burn(Bench.calibIters / 8)
+    for (n <- Seq(1, 2)) {
+      val before = Bench.calibSink.get()
+      assert(Bench.calibrate(n) > 0)
+      assert(Bench.calibSink.get() - before == warm + n * full, s"$n threads")
+    }
   }
 
   // ---- vs_prev_normalized (VERDICT r11 #4) -------------------------------

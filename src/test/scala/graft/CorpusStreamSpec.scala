@@ -407,18 +407,20 @@ class CorpusStreamSpec extends SparkSpec {
       assert(probeIds(11L, fresh) == Seq(11L), "ghost did not suppress the re-crawl")
       // REPAIR: reconcile index vs corpus — doc 10 is a ghost (indexed,
       // never landed); it gets tombstoned so its content is admittable again
-      assert(CorpusStream.repairIndex(spark, idxDir, outDir) === 1L)
+      val ghosts = CorpusStream.ghostIds(spark, idxDir, outDir)
+      assert(ghosts.collect().map(_.getLong(0)).toSeq == Seq(10L))
+      assert(probeIds(11L, fresh) == Seq(11L), "ghostIds changed the index")
+      DedupIndex.remove(ghosts, idxDir)
       // the re-crawl returns under a fresh ingest id and now passes the
       // probe; the landed doc still suppresses its own near-dups
       assert(probeIds(11L, fresh).isEmpty, "repair did not re-admit the content")
       assert(probeIds(12L, good) == Seq(12L), "repair tombstoned a landed doc")
-      // idempotent: a second repair finds nothing (10 is tombstoned)
-      assert(CorpusStream.repairIndex(spark, idxDir, outDir) === 0L)
+      // idempotent: a second look finds nothing (10 is tombstoned)
+      assert(CorpusStream.ghostIds(spark, idxDir, outDir).isEmpty)
     } finally clearCaches()
   }
 
-  test("crash repair on a pipe dir: repairIndex leaves a ghost's content " +
-      "suppressed, takedown with rebloom re-admits it") {
+  test("crash repair on a pipe dir: ghostIds + takedown with rebloom") {
     import graft.operators.{Generations, Takedown}
     val p = pipe("graft_ghost")
     def corpusFiles(): Set[java.io.File] =
@@ -433,23 +435,22 @@ class CorpusStreamSpec extends SparkSpec {
       crawl(1L, 10L, fresh)
       (corpusFiles() -- before).foreach(f => assert(f.delete(), s"cannot delete $f"))
       assert(landed(p) == Seq(1L))
-      // repairIndex tombstones the ghost's index entry...
-      assert(CorpusStream.repairIndex(spark, Generations.resolve(p.index), p.corpus) === 1L)
-      // ...but the bloom and para states still hold its content, so a
-      // re-crawl under a new id dies before the index
-      crawl(2L, 11L, fresh)
-      assert(landed(p) == Seq(1L), "repairIndex alone re-admitted the ghost's content")
+      val ghosts = CorpusStream.ghostIds(spark, Generations.resolve(p.index), p.corpus)
+      assert(ghosts.collect().map(_.getLong(0)).toSeq == Seq(10L))
       // a takedown of the ghost id retracts its paragraph keepers, but
-      // without rebloom the novelty filter still holds its n-grams
-      val r0 = Takedown.apply(spark, p.pipeDir, Seq(10L).toDF("doc_id"))
+      // without rebloom the novelty filter still holds its n-grams, so a
+      // re-crawl under a new id dies before the index
+      val r0 = Takedown.apply(spark, p.pipeDir, ghosts)
       assert(r0.corpusRemoved == 0L && r0.paraDigestsRetracted > 0L, s"takedown: $r0")
-      crawl(3L, 12L, fresh)
+      crawl(2L, 11L, fresh)
       assert(landed(p) == Seq(1L), "the novelty filter forgot the ghost's n-grams")
       // the recovery that works: the takedown with rebloom
-      val r = Takedown.apply(spark, p.pipeDir, Seq(10L).toDF("doc_id"), rebloom = true)
+      val r = Takedown.apply(spark, p.pipeDir, ghosts, rebloom = true)
       assert(r.bloomRebuilt, s"takedown: $r")
-      crawl(4L, 13L, fresh)
-      assert(landed(p) == Seq(1L, 13L), "takedown + rebloom did not re-admit the content")
+      crawl(3L, 12L, fresh)
+      assert(landed(p) == Seq(1L, 12L), "takedown + rebloom did not re-admit the content")
+      // the ghost is tombstoned now; the re-admitted copy is no ghost
+      assert(CorpusStream.ghostIds(spark, Generations.resolve(p.index), p.corpus).isEmpty)
     } finally clearCaches()
   }
 

@@ -57,12 +57,12 @@ class PlanLintSpec extends SparkSpec {
 
   // Standing regression net: EVERY query's physical plan is audited. A
   // finding is only tolerated when its (query, rule) pair is recorded
-  // here with the reason a reviewer accepted it — anything new fails.
+  // here with the reason it was accepted — anything new fails.
   // (a) nested-loop joins whose build side is a deliberately broadcast
   // tiny frame — k query vectors, K centroids/codebooks, a 1-row global
   // aggregate, or a bounded eval sample. The |big|·|tiny| scan is the
-  // intended plan (VERDICT r6 plan audit); the lint can't see size, the
-  // reviewer can.
+  // intended plan (VERDICT r6 plan audit); the lint can't see size, a
+  // plan audit can.
   // The vector assignment kernels (nearest centroid, PQ encode, L2
   // assignment) and the top-nprobe centroid selection run per row with
   // no join, so their callers q40/q51/q59/q76/q78/q169/q237/q253/q315

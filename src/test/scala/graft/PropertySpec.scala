@@ -243,7 +243,7 @@ class PropertySpec extends SparkSpec {
         val w0 = spark.range(1)
           .select(lit(0.0).as("w0"), lit(0.0).as("w1"), lit(0.0).as("w2"))
         val w3 = (1 to 3).foldLeft(w0)((w, _) =>
-          TrainPrep.gdNextW(TrainPrep.gdStep(feat, w)))
+          TrainPrep.gdNextW(TrainPrep.gdPass(feat, w, Nil)))
         w3.collect().toSeq
       }
       rows.isEmpty || train(1) == train(13)
