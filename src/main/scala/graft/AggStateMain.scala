@@ -64,9 +64,7 @@ object AggStateMain {
           AggState.optimize(spark, args(1), args(2), keysOf(args(3)), target)
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case c @ ("publish" | "resolve" | "history" | "retire") =>
-        Generations.cliLineage(c, args)
-      case other => sys.error(s"unknown command: $other")
+      case lineage => Generations.cliLineage(lineage, args)
     }
     spark.stop()
   }

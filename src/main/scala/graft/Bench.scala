@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import RunLedger.jnum
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR (default sf0.1). A single warmup action initializes
   * the parquet reader + codegen paths so per-query numbers reflect steady
@@ -40,12 +41,6 @@ import org.apache.spark.sql.SparkSession
   * sweep, so a truncated run still leaves the primary number on disk.
   */
 object Bench {
-  /** SPARK_GRAFT_ONLY parsing, extracted for the spec: a blank or
-    * whitespace-only value means "unset" (run everything), never "select
-    * zero queries silently". */
-  def parseOnly(raw: Option[String]): Option[Set[String]] =
-    raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
-
   /** One steady-state sweep over `selected` against `dir`. `warmupEach`
     * pays the untimed codegen/JIT run per query — required for the first
     * sweep of a JVM; the second sweep over identical plans skips it (same
@@ -148,11 +143,16 @@ object Bench {
     * memory bandwidth at the sweep's parallelism. */
   def calibrateShuffle(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions._
-    def job(): Unit = spark.range(0L, 20000000L, 1L, 32)
+    warmMinOf2(() => spark.range(0L, 20000000L, 1L, 32)
       .select(pmod(xxhash64(col("id")), lit(1000000L)).as("k"),
         (col("id") % 97).as("v"))
       .groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("c"), avg("v").as("a"))
-      .write.format("noop").mode("overwrite").save()
+      .write.format("noop").mode("overwrite").save())
+  }
+
+  /** A probe's figure: the min wall seconds of two timed runs of `job`
+    * after one untimed warm run. */
+  private def warmMinOf2(job: () => Unit): Double = {
     job()
     (1 to 2).map { _ =>
       val t0 = System.nanoTime(); job(); (System.nanoTime() - t0) / 1e9
@@ -173,14 +173,10 @@ object Bench {
       .write.mode("overwrite").parquet(path)
     // h is full-range xxhash64 — a raw sum overflows under ANSI; reduce
     // each value mod a prime first (the decode still reads every page)
-    def job(): Unit = spark.read.parquet(path)
+    warmMinOf2(() => spark.read.parquet(path)
       .select(sum(expr("h % 1000003")).as("sh"), avg("d").as("ad"),
         sum("id").as("si"), count(lit(1)).as("c"))
-      .write.format("noop").mode("overwrite").save()
-    job()
-    (1 to 2).map { _ =>
-      val t0 = System.nanoTime(); job(); (System.nanoTime() - t0) / 1e9
-    }.min
+      .write.format("noop").mode("overwrite").save())
   }
 
   /** Crude dominant-resource classifier from a query's timed-run task
@@ -277,19 +273,6 @@ object Bench {
       }.toMap
     }.getOrElse(Map.empty)
 
-  /** Locale-safe compact double rendering for machine-parsed JSON: fixed
-    * scale, trailing zeros stripped, never scientific notation. The
-    * trailer and vs_prev blocks use 4 decimals (ratios and seconds need no
-    * more) — full-precision doubles cost ~10 extra chars per field inside
-    * the driver's ~2000-char tail budget. */
-  private[graft] def jnum(d: Double, scale: Int = 4): String =
-    if (d.isNaN || d.isInfinite) "0"
-    else {
-      val b = java.math.BigDecimal.valueOf(d)
-        .setScale(scale, java.math.RoundingMode.HALF_UP).stripTrailingZeros
-      if (b.scale < 0) b.setScale(0).toPlainString else b.toPlainString
-    }
-
   /** query -> class, captured during the first (compacted) sweep that ran
     * the query; later sweeps don't overwrite. */
   private[graft] val queryClasses =
@@ -302,15 +285,9 @@ object Bench {
     * r12 block-pileup signature). */
   private[graft] final case class QueryDiag(cls: String, inMb: Double,
       shMb: Double, spillMb: Double, gcMs: Long, leftoverPersisted: Int) {
-    def json: String = {
-      // machine-parsed JSON: the f interpolator uses the JVM default
-      // locale (comma decimals under de_DE corrupt the whole bench line),
-      // so pin Locale.ROOT explicitly (r14 ADVICE)
-      def d1(x: Double) =
-        String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
-      s""""cls":"$cls","in_mb":${d1(inMb)},"sh_mb":${d1(shMb)},""" +
-        s""""spill_mb":${d1(spillMb)},"gc_ms":$gcMs,"pers":$leftoverPersisted"""
-    }
+    def json: String =
+      s""""cls":"$cls","in_mb":${jnum(inMb, 1)},"sh_mb":${jnum(shMb, 1)},""" +
+        s""""spill_mb":${jnum(spillMb, 1)},"gc_ms":$gcMs,"pers":$leftoverPersisted"""
   }
   private[graft] val queryDiag =
     scala.collection.concurrent.TrieMap.empty[String, QueryDiag]
@@ -758,7 +735,7 @@ object Bench {
     // SPARK_GRAFT_ONLY=q101_pagerank,q102_triangles reruns a subset in the
     // same sweep harness — for isolating cross-query interactions that
     // single-query ExplainMain runs can't reproduce.
-    val only = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+    val only = SparkEntry.parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
@@ -789,7 +766,6 @@ object Bench {
     def emit(raw: Option[Seq[(String, Option[Double])]],
         rawIsSubset: Boolean, streamLine: Option[String],
         vsPrev: Option[String],
-        post: Option[(Double, Double, Double)] = None,
         ctl: Option[(Map[String, Double], Map[String, Double])] = None): String = {
       // headline value = compacted total when available (layout-immune);
       // raw total rides along for continuity with pre-r9 BENCH files.
@@ -833,10 +809,7 @@ object Bench {
           .map { case (qs, es, _, _, _) => s""""queries_raw":$qs,"errors_raw":$es""" },
         Some(s""""layout":"${if (comp.nonEmpty) "compacted" else "raw"}""""),
         Some(s""""calib_1t_sec":$calib1,"calib_mt_sec":$calibN,"calib_threads":$calibThreads,""" +
-          s""""calib_shuffle_sec":$calibShuffle,"calib_scan_sec":$calibScan""" +
-          post.map { case (m, sh, sc) =>
-            s""","calib_mt_post_sec":$m,"calib_shuffle_post_sec":$sh,"calib_scan_post_sec":$sc"""
-          }.getOrElse(""))
+          s""""calib_shuffle_sec":$calibShuffle,"calib_scan_sec":$calibScan""")
       ).flatten.mkString(",")
       s"""{"metric":"total","value":$hTotal,"unit":"sec","queries":$hQs,"errors":$hErrs,"sf":"$sfDir",$extras}"""
     }
@@ -873,18 +846,6 @@ object Bench {
       else Map.empty[String, Double]
     val (ctlMed, ctlSpr) = ctlStats(Seq(ctl1, ctl2, ctl3))
 
-    // post-sweep probe resample (r14): the pre-sweep probes sample host
-    // speed at ONE instant while the sweep spans ~25 min — an A/B showed
-    // all three probes swinging 1.6x between runs whose common control
-    // query was flat. The post values are DIAGNOSTIC ONLY (normalization
-    // keeps the pre-sweep values for cross-round continuity; a post-sweep
-    // probe also reads a heated heap, so averaging them in would bias the
-    // host factor): a large pre/post spread flags that this round's
-    // normalized ratios carry temporal error of that magnitude.
-    val calibNPost = calibrate(calibThreads)
-    val calibShufflePost = calibrateShuffle(spark)
-    val calibScanPost = calibrateScan(spark)
-
     // cross-round self-report (VERDICT r11 #4): compare against the
     // previous round's checked-in BENCH file with the host calibration
     // divided out. The current side uses the query map a driver
@@ -904,7 +865,6 @@ object Bench {
     }
 
     val line = emit(raw, rawIsSubset, streamLine, vsPrev,
-      post = Some((calibNPost, calibShufflePost, calibScanPost)),
       ctl = Some((ctlMed, ctlSpr)))
     println(line)
     persist(line)
@@ -952,10 +912,6 @@ object Bench {
         s""","ctl_${cls}_sec":${jnum(m)},"ctl_${cls}_spread":${
           jnum(ctlSpr.getOrElse(cls, 0.0))}""")
     }.mkString
-    // calib_*_post_sec fields live in the FULL line only since r15: the
-    // ctl_<cls>_spread fields are the better temporal error bar (in-run
-    // control samples, not instant probes) and the tail budget is shared
-    // with the queries_core line
     println(s"""{"metric":"total_trailer","value":${jnum(hTotal)},"unit":"sec","n_queries":$hN,"n_errors":$hE$tc$tr,"total_lifecycle":${jnum(lcT)},"total_pure":${jnum(hTotal - lcT)},"calib_mt_sec":${jnum(calibN)},"calib_shuffle_sec":${jnum(calibShuffle)},"calib_scan_sec":${jnum(calibScan)}$ctlFlat$vp,"sf":"$sfDir","full":"/tmp/bench.json"}""")
     spark.stop()
   }

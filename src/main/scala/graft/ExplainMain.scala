@@ -2,8 +2,9 @@ package graft
 
 /** Dev helper: print formatted plans (and optionally time) for named
   * queries — `runMain graft.ExplainMain q04_order_priority [sfDir]`.
-  * Timing drives a noop-format write (same methodology as Bench) so
-  * computed columns aren't pruned out of the measurement. */
+  * Timing is [[RunLedger.query]] (Bench's methodology: caches reset, a
+  * noop-format write so computed columns aren't pruned out of the
+  * measurement). */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -18,18 +19,15 @@ object ExplainMain {
           println(s"plan lint (${findings.size} finding(s) — advisory):")
           findings.foreach(f => println(s"  $f"))
         } else println("plan lint: clean")
-        // construction goes INSIDE the timing (Bench does the same):
-        // queries that materialize eagerly during construction (iterative
-        // operators, localCheckpoint barriers) would otherwise report only
-        // the cost of re-reading their own checkpoint
-        def run(): Double = {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(s"cold=${run()}s warm=${run()}s")
+        // RunLedger.query builds the frame INSIDE the timing (Bench does
+        // the same): queries that materialize eagerly during construction
+        // (iterative operators, localCheckpoint barriers) would otherwise
+        // report only the cost of re-reading their own checkpoint
+        def run() = RunLedger.query(spark)(SparkEntry.queries(name)(spark, dir))
+        val cold = run()
+        val warm = run()
+        println(s"cold=${cold.totals.wallSec}s warm=${warm.totals.wallSec}s" +
+          (if (cold.ok && warm.ok) "" else " (failed)"))
         // Per-scan task counts from an EXECUTED plan: parquet parallelism
         // is decided by file/row-group layout (Spark splits at row-group
         // granularity), so a fixture regeneration that collapses a table
@@ -38,13 +36,10 @@ object ExplainMain {
         locally {
           import org.apache.spark.sql.execution.FileSourceScanExec
           // metrics live only on plan instances that actually RAN (the
-          // writer executes its own QueryExecution) — walk the captured
-          // executed plans, which also cover executions during query
-          // CONSTRUCTION
-          val (_, plans) = RunLedger.executedPlans(spark)(
-            SparkEntry.queries(name)(spark, dir)
-              .write.format("noop").mode("overwrite").save())
-          val nodes = plans.flatMap(graft.operators.PlanLint.nodes)
+          // writer executes its own QueryExecution) — walk the warm run's
+          // captured executed plans, which also cover executions during
+          // query CONSTRUCTION
+          val nodes = warm.plans.flatMap(graft.operators.PlanLint.nodes)
           nodes.collect {
             case f: FileSourceScanExec =>
               val table = f.relation.location.rootPaths.headOption

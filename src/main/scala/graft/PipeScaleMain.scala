@@ -37,9 +37,10 @@ import org.apache.spark.sql.functions._
   * runMain graft.PipeScaleMain <sfDir> <workDir> [waves] [optimizeEvery]
   * ```
   *
-  * One JSON line per wave on stdout AND `workDir/pipescale.jsonl`; a
-  * final `{"metric":"pipescale_total",...}` line carries the tier totals
-  * (the cross-tier comparison row for SCALE.md).
+  * A [[RunLedger]] ledger at `workDir/pipescale.jsonl` (each row also on
+  * stdout): the header, a `pipescale_setup` row, one `pipescale_wave` row
+  * per wave and a final `pipescale_total` row with the tier totals (the
+  * cross-tier comparison row for SCALE.md).
   */
 object PipeScaleMain {
 
@@ -64,13 +65,8 @@ object PipeScaleMain {
     new java.io.File(workDir).mkdirs()
     val feedDir = s"$workDir/feed"
     val t = streaming.CorpusStream.Layout(workDir)
-    val ledgerPath = java.nio.file.Paths.get(s"$workDir/pipescale.jsonl")
-    def emit(line: String): Unit = {
-      println(line)
-      java.nio.file.Files.write(ledgerPath, (line + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    val ledger = RunLedger.open(s"$workDir/pipescale.jsonl", "PipeScaleMain", sfDir)
+    import RunLedger.{Row, mb}
 
     val docs = Tables(spark, sfDir, "documents")
       .select("doc_id", "text", "lang", "source")
@@ -84,11 +80,9 @@ object PipeScaleMain {
     val bloomBits = java.math.BigInteger.valueOf(
       math.max(graft.operators.AggState.BloomDefaultBits, totalDocs * 33L * 8L))
       .nextProbablePrime().longValueExact()
-    val sf = RunLedger.jsonString(sfDir)
-    println(s"""{"metric":"pipescale_setup","sf":$sf,"docs":$totalDocs,""" +
-      s""""bloom_bits":$bloomBits}""")
+    ledger.write(Row("metric" -> "pipescale_setup", "sf" -> sfDir,
+      "docs" -> totalDocs, "bloom_bits" -> bloomBits))
 
-    def mb(b: Long): String = Bench.jnum(b / 1048576.0, 1)
     var wallTotal = 0.0; var spillTotal = 0L
     // exact-paragraph trim ledger is cumulative (1 row/batch); per-wave
     // deltas come from differencing the running totals
@@ -123,11 +117,12 @@ object PipeScaleMain {
       val locks = graft.operators.Generations.drainLockHoldMs()
       // key by the last TWO path segments: both standing tables' live
       // generations are named gen-N, table-qualifying disambiguates
-      val lockJson = locks.toSeq.sortBy(_._1).map { case (p, ms) =>
+      val lockHold = Row(locks.toSeq.sortBy(_._1).map { case (p, ms) =>
         val f = new java.io.File(p)
         val key = Option(f.getParentFile).map(_.getName + "/").getOrElse("") +
           f.getName
-        s"""${RunLedger.jsonString(key)}:$ms""" }.mkString("{", ",", "}")
+        key -> ms
+      }: _*)
       val counts = new PipelineMain.Counts(spark, workDir)
       // standing-filter occupancy (AggState.bloomFill): the saturation
       // early-warning the r15 tiers showed the pipeline needs — fill_bp
@@ -143,27 +138,24 @@ object PipeScaleMain {
       val (paraInCum, paraDropCum) = counts.paraTotals
       val (paraIn, paraDrop) = (paraInCum - paraInPrev, paraDropCum - paraDropPrev)
       paraInPrev = paraInCum; paraDropPrev = paraDropCum
-      emit(s"""{"metric":"pipescale_wave","sf":$sf,"wave":$w,""" +
-        s""""docs_in":$nIn,"wall_sec":${Bench.jnum(m.wallSec, 2)},""" +
-        s""""spill_mb":${mb(m.spillBytes)},"shuffle_mb":${mb(m.shuffleBytes)},""" +
-        s""""lock_hold_ms":$lockJson,"corpus_rows":${counts.corpusDocs},""" +
-        s""""corpus_mb":${mb(dirBytes(t.corpus))},""" +
-        s""""index_mb":${mb(dirBytes(t.index))},""" +
-        s""""bloom_mb":${mb(dirBytes(t.bloom))},""" +
-        s""""bloom_fill_bp":$fillBp,""" +
-        s""""para_in":$paraIn,"para_trimmed":$paraDrop,""" +
-        s""""para_mb":${mb(dirBytes(t.para))},""" +
-        s""""clusters_mb":${mb(dirBytes(t.clusters))}}""")
+      ledger.write(Row("metric" -> "pipescale_wave", "sf" -> sfDir, "wave" -> w,
+        "docs_in" -> nIn, "wall_sec" -> m.wallSec,
+        "spill_mb" -> mb(m.spillBytes), "shuffle_mb" -> mb(m.shuffleBytes),
+        "lock_hold_ms" -> lockHold, "corpus_rows" -> counts.corpusDocs,
+        "corpus_mb" -> mb(dirBytes(t.corpus)), "index_mb" -> mb(dirBytes(t.index)),
+        "bloom_mb" -> mb(dirBytes(t.bloom)), "bloom_fill_bp" -> fillBp,
+        "para_in" -> paraIn, "para_trimmed" -> paraDrop,
+        "para_mb" -> mb(dirBytes(t.para)),
+        "clusters_mb" -> mb(dirBytes(t.clusters))))
     }
     val end = new PipelineMain.Counts(spark, workDir)
-    emit(s"""{"metric":"pipescale_total","sf":$sf,"waves":$waves,""" +
-      s""""docs_in":$totalDocs,"corpus_docs":${end.corpusDocs},""" +
-      s""""paras_in":$paraInPrev,"paras_trimmed":$paraDropPrev,""" +
-      s""""dup_clusters":${end.dupClusters},""" +
-      s""""wall_sec":${Bench.jnum(wallTotal, 2)},""" +
-      s""""wall_with_setup_sec":${Bench.jnum((System.nanoTime() - t0All) / 1e9, 2)},""" +
-      s""""spill_mb":${mb(spillTotal)},""" +
-      s""""calib_mt_sec":${Bench.jnum(Bench.calibrate(GraftSession.cpus))}}""")
+    ledger.write(Row("metric" -> "pipescale_total", "sf" -> sfDir, "waves" -> waves,
+      "docs_in" -> totalDocs, "corpus_docs" -> end.corpusDocs,
+      "paras_in" -> paraInPrev, "paras_trimmed" -> paraDropPrev,
+      "dup_clusters" -> end.dupClusters, "wall_sec" -> wallTotal,
+      "wall_with_setup_sec" -> (System.nanoTime() - t0All) / 1e9,
+      "spill_mb" -> mb(spillTotal),
+      "calib_mt_sec" -> Bench.calibrate(GraftSession.cpus)))
     docs.unpersist()
     spark.stop()
   }

@@ -115,10 +115,10 @@ object PipelineMain {
     val (paraIn, paraDropped) = c.paraTotals
     val t = Layout(pipeDir)
     def gen(table: String) = Generations.current(table).getOrElse("(unpublished)")
-    println(s"""{"corpus_docs":${c.corpusDocs},"dup_clusters":${c.dupClusters},""" +
-      s""""paras_in":$paraIn,"paras_trimmed":$paraDropped,""" +
-      s""""bloom_generation":"${gen(t.bloom)}","index_generation":"${gen(t.index)}",""" +
-      s""""para_generation":"${gen(t.para)}"}""")
+    println(RunLedger.Row("corpus_docs" -> c.corpusDocs,
+      "dup_clusters" -> c.dupClusters, "paras_in" -> paraIn,
+      "paras_trimmed" -> paraDropped, "bloom_generation" -> gen(t.bloom),
+      "index_generation" -> gen(t.index), "para_generation" -> gen(t.para)).render)
     spark.stop()
   }
 }

@@ -1,26 +1,34 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The one metrics and plan capture every harness measures through
-  * (Bench, ScaleMain, PipeScaleMain, StageLedgerMain, ExplainMain). Each capture registers its listener for the duration of
-  * one `body` only, and drains the listener bus with
+  * (Bench, ScaleMain, PipeScaleMain, ExplainMain), and the one ledger
+  * format every harness writes. Each capture registers its listener for
+  * the duration of one `body` only, and drains the listener bus with
   * [[org.apache.spark.graft.ListenerBridge.drain]] both before it zeroes
   * and before it reads: late events of an earlier window can never land
   * in this one, and this window's terminal events are never missed.
   *
+  * A ledger is a JSONL file of [[Row]]s behind one header row (see
+  * [[open]]); a one-line summary prints a single `Row`.
+  *
   * {{{
-  * val (out, m) = RunLedger.measure(spark)(df.write.format("noop").save())
-  * val (_, plans) = RunLedger.executedPlans(spark)(SparkEntry.queries(q)(spark, dir))
+  * val r = RunLedger.query(spark)(SparkEntry.queries(q)(spark, dir))
+  * val ledger = RunLedger.open(out, "ScaleMain", dir)
+  * ledger.write(RunLedger.Row("query" -> q, "ok" -> r.ok, "wall_sec" -> r.totals.wallSec))
   * }}}
   */
 object RunLedger {
@@ -31,7 +39,16 @@ object RunLedger {
   final case class StageRow(stageId: Int, attempt: Int, name: String,
       tasks: Int, runMs: Long, inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, memSpillBytes: Long, diskSpillBytes: Long,
-      peakMemSumBytes: Long)
+      peakMemSumBytes: Long) {
+    /** The stage's ledger row, seconds and MiB; `name` is the call site
+      * of the action that ran the stage, cut to 120 characters. */
+    def row(query: String): Row = Row("query" -> query, "stage" -> stageId,
+      "attempt" -> attempt, "name" -> name.take(120), "tasks" -> tasks,
+      "run_sec" -> runMs / 1000.0, "input_mb" -> mb(inputBytes),
+      "sh_read_mb" -> mb(shuffleReadBytes), "sh_write_mb" -> mb(shuffleWriteBytes),
+      "spill_mem_mb" -> mb(memSpillBytes), "spill_disk_mb" -> mb(diskSpillBytes),
+      "peak_mem_sum_mb" -> mb(peakMemSumBytes))
+  }
 
   /** Task-metric totals of one measured window, plus its stage rows in
     * stage-id order. `peakTaskMemBytes` is the max over tasks. */
@@ -120,6 +137,85 @@ object RunLedger {
     System.gc()
     leftovers.size
   }
+
+  /** One query run the way every harness measures it: caches reset, the
+    * frame built and written to the noop sink inside the timed window (a
+    * query that materialises while it is built pays for it; the noop sink
+    * keeps computed columns from being pruned), with the window's totals
+    * and every plan executed in it. A failing query reports `ok = false`
+    * and prints its error. */
+  final case class QueryRun(ok: Boolean, totals: Totals, plans: Seq[SparkPlan])
+
+  def query(spark: SparkSession)(df: => DataFrame): QueryRun = {
+    resetCaches(spark)
+    val ((ok, m), plans) = executedPlans(spark) {
+      measure(spark)(Try(df.write.format("noop").mode("overwrite").save()) match {
+        case Success(_) => true
+        case Failure(e) =>
+          System.err.println(s"[ledger] query failed: ${e.getMessage}"); false
+      })
+    }
+    QueryRun(ok, m, plans)
+  }
+
+  /** One ledger row: named fields rendered, in order, as one JSON object.
+    * Strings go through [[jsonString]] and doubles through [[jnum]]; longs,
+    * ints and booleans are literals; a field may also hold a nested `Row`
+    * or a `Seq[String]` (a JSON string array). */
+  final case class Row(fields: (String, Any)*) {
+    def render: String =
+      fields.map { case (k, v) => jsonString(k) + ":" + value(v) }.mkString("{", ",", "}")
+  }
+
+  private def value(v: Any): String = v match {
+    case s: String => jsonString(s)
+    case d: Double => jnum(d)
+    case _: Long | _: Int | _: Boolean => v.toString
+    case r: Row => r.render
+    case xs: Seq[_] => xs.map { case s: String => jsonString(s) }.mkString("[", ",", "]")
+    case other => throw new IllegalArgumentException(
+      s"no ledger rendering for ${other.getClass.getName}")
+  }
+
+  /** `bytes` in MiB, the unit of every `_mb` ledger field. */
+  def mb(bytes: Long): Double = bytes / 1048576.0
+
+  /** A JSONL ledger file; see [[open]]. */
+  final class Ledger private[RunLedger] (path: Path) {
+    /** Print `row` and append it to the file at once, so a run that dies
+      * partway keeps every row it finished. */
+    def write(row: Row): Unit = {
+      val line = row.render
+      println(line)
+      Files.write(path, (line + "\n").getBytes(StandardCharsets.UTF_8),
+        StandardOpenOption.APPEND)
+    }
+  }
+
+  /** Open the ledger at `path`: truncate it and write the header row — the
+    * writing `main`, the fixture dir, the harness core count and the
+    * `SPARK_GRAFT_CONF` pairs in effect, recorded next to the numbers. */
+  def open(path: String, main: String, sfDir: String): Ledger = {
+    val p = Paths.get(path)
+    Files.write(p, Array.emptyByteArray)
+    val ledger = new Ledger(p)
+    ledger.write(Row("main" -> main, "sf_dir" -> sfDir,
+      "cpus" -> GraftSession.cpus, "conf" -> Row(GraftSession.confPairs: _*)))
+    ledger
+  }
+
+  /** Locale-safe compact double rendering for machine-parsed JSON: fixed
+    * scale, trailing zeros stripped, never scientific notation; NaN and
+    * infinities render as `0` so the line still parses. Four decimals by
+    * default — full-precision doubles cost ~10 extra chars per field inside
+    * the bench trailer's ~2000-char tail budget. */
+  def jnum(d: Double, scale: Int = 4): String =
+    if (d.isNaN || d.isInfinite) "0"
+    else {
+      val b = java.math.BigDecimal.valueOf(d)
+        .setScale(scale, java.math.RoundingMode.HALF_UP).stripTrailingZeros
+      if (b.scale < 0) b.setScale(0).toPlainString else b.toPlainString
+    }
 
   /** `s` as a quoted JSON string: backslash, quote and every control
     * character (< 0x20) escaped, so any value round-trips through a JSON

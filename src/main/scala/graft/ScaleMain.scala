@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * ```
   * runMain graft.ScaleMain gen <srcSfDir> <outDir> [factor]   # replicate
-  * runMain graft.ScaleMain run <sfDir> <outJsonl>             # smoke
+  * runMain graft.ScaleMain run <sfDir> <outJsonl> [q1,q2,...] # smoke + stage rows
   * ```
   *
   * `gen` writes `factor` (default 10) id-shifted copies of each table:
@@ -28,10 +28,11 @@ import org.apache.spark.sql.functions._
   *  - `embeddings` shift ids only (identical vectors across copies change
   *    ANN answers, not ANN cost — this is a performance fixture).
   *
-  * `run` executes the heaviest pipelines (the VERDICT r9 list) with the
-  * Bench methodology (noop sink, cache-cleared timed run), recording wall
-  * seconds, shuffle spill (memory + disk, from task metrics), and
-  * PlanLint findings on the EXECUTED plans. Compare against the same
+  * `run` executes the heaviest pipelines (the VERDICT r9 list), or any
+  * listed SparkEntry queries, with the Bench methodology (noop sink,
+  * cache-cleared timed run), recording wall seconds, shuffle spill (memory
+  * + disk, from task metrics), PlanLint findings on the EXECUTED plans and
+  * one row per physical stage. Compare against the same
   * queries at sf0.1: ~10× data should cost ≲15× time with zero new lint
   * findings — that table lands in SCALE.md.
   */
@@ -191,41 +192,39 @@ object ScaleMain {
     "q312_incr_para_exact", "q313_para_boundary_exact",
     "q314_para_takedown", "q315_ann_reindex")
 
+  /** Run each query of `only` (comma-separated SparkEntry names; default
+    * [[SmokeQueries]]) through [[RunLedger.query]] and write the ledger
+    * to `outPath`: per query one row — `ok`, `wall_sec`, spill, the max
+    * per-task peak execution memory (`peak_task_mem_bytes`: how big one
+    * task's unified-memory footprint got, where spill only says pressure
+    * happened) and PlanLint findings on the EXECUTED plans
+    * (localCheckpoint-ing queries return a LogicalRDD; the captured plans
+    * see the real work) — then its stage rows ([[RunLedger.StageRow]]),
+    * which name the physical stage a query's spill or shuffle lives in
+    * (e.g. `q220_prefix_join` puts the exact prefix join's spill in its
+    * verify join). `peak_mem_sum_mb` is the SUM of a stage's task peaks,
+    * an upper bound on any one task's footprint; stages of jobs run while
+    * a query is built (localCheckpoint) are included. A host-calibration
+    * row closes the file. */
   def run(spark: SparkSession, dir: String, outPath: String,
-      only: Option[Set[String]] = None): Unit = {
-    // a typo'd subset name must fail loudly — silently dropping it yields
-    // an empty smoke output that reads as a clean run
-    only.foreach { names =>
-      val unknown = names.filterNot(SmokeQueries.contains)
-      require(unknown.isEmpty,
-        s"unknown smoke queries: ${unknown.mkString(",")} " +
-          s"(available: ${SmokeQueries.mkString(",")})")
+      only: Option[String] = None): Unit = {
+    // smoke members keep their SmokeQueries order, any others follow sorted
+    val names = SparkEntry.parseOnly(only).fold(SmokeQueries)(sel =>
+      SmokeQueries.filter(sel) ++ (sel -- SmokeQueries).toSeq.sorted)
+    val ledger = RunLedger.open(outPath, "ScaleMain", dir)
+    names.foreach { name =>
+      val r = RunLedger.query(spark)(SparkEntry.queries(name)(spark, dir))
+      val m = r.totals
+      val findings = r.plans.flatMap(operators.PlanLint.audit).map(_.toString).distinct
+      ledger.write(RunLedger.Row("query" -> name, "ok" -> r.ok,
+        "wall_sec" -> m.wallSec, "spill_mem_bytes" -> m.memSpillBytes,
+        "spill_disk_bytes" -> m.diskSpillBytes,
+        "peak_task_mem_bytes" -> m.peakTaskMemBytes,
+        "n_stages" -> m.stages.size, "lint" -> findings))
+      m.stages.foreach(st => ledger.write(st.row(name)))
     }
-    val lines = SmokeQueries.filter(q => only.forall(_.contains(q))).map { name =>
-      RunLedger.resetCaches(spark)
-      // lint the EXECUTED plans (localCheckpoint-ing queries return a
-      // LogicalRDD — the captured plans see the real work)
-      val ((ok, m), plans) = RunLedger.executedPlans(spark) {
-        RunLedger.measure(spark)(scala.util.Try(
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()).isSuccess)
-      }
-      val findings = plans.flatMap(operators.PlanLint.audit).map(_.toString).distinct
-      // peak_task_mem_bytes is the max per-task peak execution memory: the
-      // per-shard memory-bound evidence the q289 matrix exists for (spill
-      // says pressure happened; this says how big one task's
-      // unified-memory footprint actually got)
-      val l = s"""{"query":"$name","ok":$ok,"wall_sec":${m.wallSec},""" +
-        s""""spill_mem_bytes":${m.memSpillBytes},"spill_disk_bytes":${m.diskSpillBytes},""" +
-        s""""peak_task_mem_bytes":${m.peakTaskMemBytes},""" +
-        s""""lint":[${findings.map(RunLedger.jsonString).mkString(",")}]}"""
-      println(l)
-      l
-    }
-    val calib = Bench.calibrate(GraftSession.cpus)
-    val all = lines :+ s"""{"calib_mt_sec":$calib,"sf_dir":${RunLedger.jsonString(dir)}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      all.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    ledger.write(RunLedger.Row(
+      "calib_mt_sec" -> Bench.calibrate(GraftSession.cpus), "sf_dir" -> dir))
     println(s"wrote $outPath")
   }
 
@@ -238,7 +237,7 @@ object ScaleMain {
       case "gen" => gen(spark, args(1), args(2),
         if (args.length >= 4) args(3).toInt else 10,
         fixedVocab = args.lift(4).contains("fixed-vocab"))
-      case "run" => run(spark, args(1), args(2), Bench.parseOnly(args.lift(3)))
+      case "run" => run(spark, args(1), args(2), args.lift(3))
       case other => sys.error(s"unknown command: $other")
     }
     spark.stop()

@@ -22,6 +22,19 @@ object SparkEntry {
       Similarity.queries ++ Multimodal.queries ++ Stats.queries ++
       TrainPrep.queries ++ Lifecycle.queries
 
+  /** The one query selector (`SPARK_GRAFT_ONLY`, `ScaleMain run`'s list):
+    * comma-separated exact names, trimmed, blanks dropped. A blank value
+    * means unset (`None`: the caller's default set), never "select zero
+    * queries silently", and a name that is not a query fails naming it —
+    * a typo must not read as a clean run of fewer queries. */
+  def parseOnly(raw: Option[String]): Option[Set[String]] = {
+    val names = raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+    val known = queries.keySet
+    val unknown = names.toSeq.flatten.filterNot(known).sorted
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

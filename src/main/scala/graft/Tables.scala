@@ -101,14 +101,19 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // ad-hoc experiment overrides without a rebuild, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.foo=bar" —
-    // applied LAST so they win over the defaults above
+    // the SPARK_GRAFT_CONF overrides are applied LAST so they win over
+    // the defaults above
+    confPairs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+  }
+
+  /** Ad-hoc experiment overrides without a rebuild, in order, e.g.
+    * `SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.foo=bar"`;
+    * every ledger header records them. */
+  def confPairs: Seq[(String, String)] =
     sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(b) { (acc, kv) =>
+      .map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        acc.config(k.trim, v.trim)
+        k.trim -> v.trim
       }
-  }
 }

@@ -30,13 +30,12 @@ object TakedownMain {
     val r =
       if (doApply) Takedown.apply(spark, pipeDir, ids, rebloom)
       else Takedown.plan(spark, pipeDir, ids)
-    println(s"""{"mode":"${if (doApply) "apply" else "dry-run"}",""" +
-      s""""requested":${r.requested},"corpus_removed":${r.corpusRemoved},""" +
-      s""""corpus_left":${r.corpusLeft},""" +
-      s""""index_tombstoned":${r.indexTombstoned},""" +
-      s""""clusters_updated":${r.clustersUpdated},""" +
-      s""""para_digests_retracted":${r.paraDigestsRetracted},""" +
-      s""""bloom_rebuilt":${r.bloomRebuilt}}""")
+    println(RunLedger.Row("mode" -> (if (doApply) "apply" else "dry-run"),
+      "requested" -> r.requested, "corpus_removed" -> r.corpusRemoved,
+      "corpus_left" -> r.corpusLeft, "index_tombstoned" -> r.indexTombstoned,
+      "clusters_updated" -> r.clustersUpdated,
+      "para_digests_retracted" -> r.paraDigestsRetracted,
+      "bloom_rebuilt" -> r.bloomRebuilt).render)
     spark.stop()
   }
 }

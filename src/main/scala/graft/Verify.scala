@@ -7,14 +7,11 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.cli()
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q105,q106 dumps just those queries
-    // (prefix match). Unset (the driver's mode) → every query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None     => SparkEntry.queries
-    }
+    // Dev loop: SPARK_GRAFT_ONLY=q105_x,q106_y dumps just those queries
+    // (exact names; an unknown name fails). Unset or blank (the driver's
+    // mode) → every query.
+    val only = SparkEntry.parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -22,12 +19,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // fully escaped: a tab or CR in one oracle SQL text would otherwise
-    // make oracle_sql.json unparseable and fail every oracle comparison
-    import RunLedger.jsonString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // fully escaped (RunLedger.Row): a tab or CR in one oracle SQL text
+    // would otherwise make oracle_sql.json unparseable and fail every
+    // oracle comparison
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      RunLedger.Row(SparkEntry.oracleSql.toSeq: _*).render)
     spark.stop()
   }
 }

@@ -67,9 +67,7 @@ object ViewStateMain {
           ViewState.optimize(spark, args(1), args(2))
         }
         println(s"optimized ${args(1)} -> ${args(2)}")
-      case c @ ("publish" | "resolve" | "history" | "retire") =>
-        Generations.cliLineage(c, args)
-      case other => sys.error(s"unknown command: $other")
+      case lineage => Generations.cliLineage(lineage, args)
     }
     spark.stop()
   }

@@ -390,7 +390,9 @@ object Generations {
     * <generationDir>`, `resolve <tableDir> [seq]`, `history <tableDir>`,
     * `retire <tableDir> [keepLast] [retentionHours]` — so every
     * standing-table Main exposes the same surface, under the same locks,
-    * without duplicating it. `args` is the full argv (verb first). */
+    * without duplicating it. `args` is the full argv (verb first); any
+    * other verb fails as an unknown command, so a Main's match can end
+    * in this call. */
   def cliLineage(cmd: String, args: Array[String]): Unit = cmd match {
     case "publish" =>
       require(args.length >= 3, "publish needs <tableDir> <generationDir>")
@@ -412,7 +414,7 @@ object Generations {
       val gone = withWriterLock(args(1)) { retire(args(1), keep, hours) }
       gone.foreach(p => println(s"retired\t$p"))
       println(s"${gone.size} generation(s) retired under ${args(1)}")
-    case other => sys.error(s"not a lineage verb: $other")
+    case other => sys.error(s"unknown command: $other")
   }
 
   /** The active generation path, if a CURRENT pointer exists. */

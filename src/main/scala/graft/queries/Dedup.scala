@@ -713,9 +713,6 @@ object Dedup {
   private[queries] def lshEdges(base: DataFrame): DataFrame =
     lshPairs(base, LshBucketCap).select(col("d1").as("src"), col("d2").as("dst"))
 
-  /** The pre-verification candidate pair set (banding output, scored but
-    * unfiltered) — what [[lshPairs]] gates at jacc ≥ 0.7. Exposed so the
-    * banding's false-positive rate is itself measurable (q194). */
   /** One (doc_id, bi, bh) row per band of each signature — the LSH index
     * key layout, shared by the self-join candidates (below) and the
     * incremental probe (q244). Deliberately does NOT carry the secondary
@@ -773,6 +770,9 @@ object Dedup {
       .select(col("x"),
         explode(slice(col("ds"), col("i") + lit(2), size(col("ds")) - col("i") - 1)).as("y"))
 
+  /** The pre-verification candidate pair set (banding output, scored but
+    * unfiltered) — what [[lshPairs]] gates at jacc ≥ 0.7. Exposed so the
+    * banding's false-positive rate is itself measurable (q194). */
   def lshCandidates(base: DataFrame, cap: Int): DataFrame = {
     // Mega-bucket screen: member arrays are collected ONLY for keys whose
     // group size is proven within the cap. Collecting first and filtering

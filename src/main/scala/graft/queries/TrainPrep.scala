@@ -902,7 +902,7 @@ object TrainPrep {
     // posexplode exchange + window sort + collect_list rebuild per round
     // are gone (the fixed-vocab tier falsified r15's pair-count-state
     // attribution of the 100x residual spill: with 961 distinct pairs the
-    // spill was unchanged, StageLedgerMain placed it in the lazily-
+    // spill was unchanged, the stage ledger placed it in the lazily-
     // materialized mark/rebuild sort — so the sort was removed, not
     // resized). The driver collects ONE row per iteration
     // (TakeOrderedAndProject, the distributed top-1 — never the pair
@@ -1094,7 +1094,7 @@ object TrainPrep {
     * TakeOrderedAndProject — ONE row reaches the driver. Takes the
     * SEQUENCES, not the exploded view: adjacent-pair counting needs no
     * positions, so q87's [[wordPairs]] replaces the explode+lead
-    * window — StageLedgerMain attributed the q299/q301 100×-tier
+    * window — the stage ledger attributed the q299/q301 100×-tier
     * residual spill (2 GB in-memory sorter per counting pass) to exactly
     * that window sort, which this removes (the one remaining windowed
     * pass per round is the mark/rebuild, which genuinely needs order). */

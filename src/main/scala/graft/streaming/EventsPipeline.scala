@@ -2,13 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Typed event row for the stateful operators. */
 case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                     event_type: String, value: Double)
 
-/** Accumulated per-user state (flatMapGroupsWithState buffer). */
+/** Accumulated per-user state (the `UserTotalsProcessor` value). */
 case class UserState(n_events: Long, total_value: Double) {
   /** This state with one more event counted and its value added. */
   def plus(e: EventRow): UserState = UserState(n_events + 1, total_value + e.value)
@@ -108,30 +108,13 @@ object EventsPipeline {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Custom keyed state via flatMapGroupsWithState: running per-user
-    * totals that survive across micro-batches (the arbitrary-state API —
-    * what windows/dedup can't express). State is per-key and bounded by the
-    * key cardinality; production variants add a timeout to expire idle
-    * users. */
-  def userRunningStats(events: Dataset[EventRow]): Dataset[UserUpdate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[EventRow], state: GroupState[UserState]) =>
-          val next = batch.foldLeft(state.getOption.getOrElse(UserState(0L, 0.0)))(_ plus _)
-          state.update(next)
-          Iterator(UserUpdate(userId, next.n_events, next.total_value))
-      }
-  }
-
-  /** The Spark 4 arbitrary-state API (`transformWithState`): same running
-    * per-user totals as [[userRunningStats]], but through a
-    * `StatefulProcessor` with named `ValueState` — the successor to
-    * flatMapGroupsWithState, adding typed state handles, per-state TTL and
-    * timers, and requiring the RocksDB state store (state larger than
-    * executor memory spills to disk — the 100 TB-stream requirement).
-    * Spec runs both APIs and asserts identical results. */
+  /** Custom keyed state on the Spark 4 arbitrary-state API
+    * (`transformWithState`): running per-user totals that survive across
+    * micro-batches, through a `StatefulProcessor` with a named
+    * `ValueState` — typed state handles, per-state TTL and timers, on the
+    * RocksDB state store (state larger than executor memory spills to
+    * disk — the 100 TB-stream requirement). State is per-key and bounded
+    * by the key cardinality. */
   class UserTotalsProcessor extends StatefulProcessor[Long, EventRow, UserUpdate] {
     @transient private var state: ValueState[UserState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -145,7 +128,7 @@ object EventsPipeline {
     }
   }
 
-  def userRunningStatsTws(events: Dataset[EventRow]): Dataset[UserUpdate] = {
+  def userRunningStats(events: Dataset[EventRow]): Dataset[UserUpdate] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .transformWithState(new UserTotalsProcessor,

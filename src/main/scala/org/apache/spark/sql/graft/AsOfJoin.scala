@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Clus
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native as-of join — the §7.3(c) extension path exercised end-to-end:
@@ -67,15 +68,37 @@ object AsOfJoinStrategy extends SparkStrategy {
   }
 }
 
+/** The key/order expressions of an as-of join bound to their child's
+  * output, plus what the per-partition closures read off the plan. */
+case class AsOfBound(lk: Expression, lo: Expression, rk: Expression,
+    ro: Expression, rightWidth: Int, outAttrs: Seq[Attribute],
+    keyType: DataType, ordType: DataType)
+
+/** What both physical as-of joins share: the output (every right column
+  * nullable — an unmatched left row gets nulls) and the bound expressions. */
+trait AsOfJoinExecBase extends BinaryExecNode {
+  def leftKey: Expression
+  def rightKey: Expression
+  def leftOrd: Expression
+  def rightOrd: Expression
+
+  override def output: Seq[Attribute] =
+    left.output ++ right.output.map(_.withNullability(true))
+
+  protected def bound: AsOfBound = AsOfBound(
+    BindReferences.bindReference(leftKey, left.output),
+    BindReferences.bindReference(leftOrd, left.output),
+    BindReferences.bindReference(rightKey, right.output),
+    BindReferences.bindReference(rightOrd, right.output),
+    right.output.length, output, leftKey.dataType, leftOrd.dataType)
+}
+
 case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
                         leftKey: Expression, rightKey: Expression,
                         leftOrd: Expression, rightOrd: Expression,
                         inclusive: Boolean = false,
                         tolerance: Option[Long] = None)
-    extends BinaryExecNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+    extends AsOfJoinExecBase {
 
   // co-partition on the key, sort within partitions by (key, ord):
   // EnsureRequirements inserts the exchanges and sorts
@@ -89,16 +112,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftOrd, Ascending))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lk = BindReferences.bindReference(leftKey, left.output)
-    val lo = BindReferences.bindReference(leftOrd, left.output)
-    val rk = BindReferences.bindReference(rightKey, right.output)
-    val ro = BindReferences.bindReference(rightOrd, right.output)
-    val rightWidth = right.output.length
-    val outAttrs = output
-    // the same total order the required child sorts use (Ascending,
-    // NULLS FIRST), over the expressions' declared type
-    val keyType = leftKey.dataType
-    val ordType = leftOrd.dataType
+    // keyType/ordType: the same total order the required child sorts use
+    // (Ascending, NULLS FIRST), over the expressions' declared type
+    val AsOfBound(lk, lo, rk, ro, rightWidth, outAttrs, keyType, ordType) = bound
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val keyOrd = TypeUtils.getInterpretedOrdering(keyType)
       val ordOrd = TypeUtils.getInterpretedOrdering(ordType)
@@ -180,10 +196,7 @@ case class AsOfJoinBroadcastExec(left: SparkPlan, right: SparkPlan,
                                  leftOrd: Expression, rightOrd: Expression,
                                  inclusive: Boolean = false,
                                  tolerance: Option[Long] = None)
-    extends BinaryExecNode {
-
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+    extends AsOfJoinExecBase {
 
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
@@ -191,14 +204,7 @@ case class AsOfJoinBroadcastExec(left: SparkPlan, right: SparkPlan,
   override def outputOrdering: Seq[SortOrder] = left.outputOrdering
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lk = BindReferences.bindReference(leftKey, left.output)
-    val lo = BindReferences.bindReference(leftOrd, left.output)
-    val rk = BindReferences.bindReference(rightKey, right.output)
-    val ro = BindReferences.bindReference(rightOrd, right.output)
-    val rightWidth = right.output.length
-    val outAttrs = output
-    val keyType = leftKey.dataType
-    val ordType = leftOrd.dataType
+    val AsOfBound(lk, lo, rk, ro, rightWidth, outAttrs, keyType, ordType) = bound
     val broadcastRows = right.executeBroadcast[Array[InternalRow]]()
 
     // HashMap grouping compares boxed eval values, so keys must have

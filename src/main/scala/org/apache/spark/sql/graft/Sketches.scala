@@ -10,6 +10,25 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
+/** What both register sketches share: one LONG input, a non-null struct
+  * result, and a fixed-width `Array[Long]` buffer serialised as its longs. */
+trait LongRegsAggregate extends TypedImperativeAggregate[Array[Long]]
+    with ExpectsInputTypes with UnaryLike[Expression] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
+  override def nullable: Boolean = false
+
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(buf.length * 8)
+    buf.foreach(bb.putLong)
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val bb = ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(bb.getLong)
+  }
+}
+
 /** Native mergeable HyperLogLog register aggregate — the custom Catalyst
   * AGGREGATE counterpart to the scalar expressions in [[TextHashes]].
   *
@@ -32,11 +51,8 @@ import org.apache.spark.sql.types._
   */
 case class HllRegs(child: Expression,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]]
-    with ExpectsInputTypes with UnaryLike[Expression] {
+    extends LongRegsAggregate {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("n_regs", LongType, nullable = false),
     StructField("s_e", LongType, nullable = false)))
@@ -74,17 +90,6 @@ case class HllRegs(child: Expression,
     new GenericInternalRow(Array[Any](nRegs, sE))
   }
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(64 * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(64)(bb.getLong)
-  }
-
   override def withNewMutableAggBufferOffset(newOffset: Int): HllRegs =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): HllRegs =
@@ -116,13 +121,10 @@ case class HllRegs(child: Expression,
   */
 case class HistRegs(child: Expression,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]]
-    with ExpectsInputTypes with UnaryLike[Expression] {
+    extends LongRegsAggregate {
 
   import HistRegs.Buckets
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("p50_est", LongType, nullable = false),
@@ -147,17 +149,6 @@ case class HistRegs(child: Expression,
   override def eval(buf: Array[Long]): Any = {
     val (n, p50, p90, p99) = HistRegs.quantiles(buf)
     new GenericInternalRow(Array[Any](n, p50, p90, p99))
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(Buckets * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(Buckets)(bb.getLong)
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HistRegs =

@@ -2,23 +2,34 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's SPARK_GRAFT_ONLY guard: a wrapper script exporting an empty
-  * value must not silently select zero queries (the r6 VERDICT carry-over). */
+/** The SPARK_GRAFT_ONLY guard (`SparkEntry.parseOnly`, shared by Bench,
+  * Verify and `ScaleMain run`): a wrapper script exporting an empty value
+  * must not silently select zero queries (the r6 VERDICT carry-over), and
+  * a typo'd name must not silently select fewer. */
 class BenchSelectSpec extends AnyFunSuite {
 
   test("unset runs everything") {
-    assert(Bench.parseOnly(None).isEmpty)
+    assert(SparkEntry.parseOnly(None).isEmpty)
   }
 
   test("blank and whitespace-only values mean unset, not empty selection") {
-    assert(Bench.parseOnly(Some("")).isEmpty)
-    assert(Bench.parseOnly(Some("   ")).isEmpty)
-    assert(Bench.parseOnly(Some(" , ,")).isEmpty)
+    assert(SparkEntry.parseOnly(Some("")).isEmpty)
+    assert(SparkEntry.parseOnly(Some("   ")).isEmpty)
+    assert(SparkEntry.parseOnly(Some(" , ,")).isEmpty)
   }
 
   test("a real list selects exactly the named queries, trimmed") {
-    assert(Bench.parseOnly(Some("q101_pagerank, q102_triangles")) ===
+    assert(SparkEntry.parseOnly(Some("q101_pagerank, q102_triangles")) ===
       Some(Set("q101_pagerank", "q102_triangles")))
+  }
+
+  test("an unknown name fails naming it, not with a smaller selection") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.parseOnly(Some("q101_pagerank, q999_nope,q998_typo"))
+    }
+    assert(e.getMessage.contains("unknown query: q998_typo, q999_nope"), e.getMessage)
+    // exact names only: a prefix of a real query is unknown
+    intercept[IllegalArgumentException](SparkEntry.parseOnly(Some("q101")))
   }
 
   test("host calibration measures positive wall seconds at any thread count") {
@@ -244,15 +255,6 @@ class BenchSelectSpec extends AnyFunSuite {
     assert(Bench.loadPrevCtl("/nonexistent/x.json").isEmpty)
     java.nio.file.Files.deleteIfExists(tmp)
     ()
-  }
-
-  test("jnum renders locale-independent compact decimals") {
-    assert(Bench.jnum(239.77181634299984) === "239.7718")
-    assert(Bench.jnum(1.0) === "1")
-    assert(Bench.jnum(0.05) === "0.05")
-    assert(Bench.jnum(1234.5, 3) === "1234.5")
-    assert(Bench.jnum(Double.NaN) === "0")
-    assert(Bench.jnum(120.0) === "120") // stripTrailingZeros must not go sci
   }
 
   test("CoreQueries superset rule: every member is a real query and the " +

@@ -69,245 +69,209 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState keeps running totals across micro-batches") {
-    implicit val sc = spark.sqlContext
-    import graft.streaming.{EventRow, UserUpdate}
-    val in = MemoryStream[EventRow]
-    val q = EventsPipeline.userRunningStats(in.toDS())
-      .writeStream.format("memory").queryName("running").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(
-        EventRow(1, t("2024-01-01 10:00:00"), 1, "click", 1.0),
-        EventRow(2, t("2024-01-01 10:01:00"), 1, "click", 2.0))
-      q.processAllAvailable()
-      in.addData(EventRow(3, t("2024-01-01 10:02:00"), 1, "click", 4.0))
-      q.processAllAvailable()
-      val updates = spark.table("running").as[UserUpdate].collect()
-        .map(u => (u.n_events, u.total_value)).toSet
-      // batch 1 emits (2, 3.0); batch 2 emits the carried-forward (3, 7.0)
-      assert(updates == Set((2L, 3.0), (3L, 7.0)))
-    } finally q.stop()
+  /** Run `body` on the RocksDB state store, which transformWithState
+    * needs, restoring the session's provider afterwards. */
+  private def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("transformWithState (RocksDB store) matches flatMapGroupsWithState totals") {
+  test("transformWithState (RocksDB store) keeps running totals across micro-batches") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.EventRow]
-    val q = EventsPipeline.userRunningStatsTws(in.toDS())
-      .writeStream.format("memory").queryName("running_tws").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(
-        graft.streaming.EventRow(1, t("2024-01-01 10:00:00"), 1, "click", 1.0),
-        graft.streaming.EventRow(2, t("2024-01-01 10:01:00"), 1, "click", 2.0))
-      q.processAllAvailable()
-      in.addData(graft.streaming.EventRow(3, t("2024-01-01 10:02:00"), 1, "click", 4.0))
-      q.processAllAvailable()
-      val updates = spark.table("running_tws").as[graft.streaming.UserUpdate]
-        .collect().map(u => (u.n_events, u.total_value)).toSet
-      // identical to the flatMapGroupsWithState test: (2, 3.0) then (3, 7.0)
-      assert(updates == Set((2L, 3.0), (3L, 7.0)))
-    } finally {
-      q.stop()
-      prev.fold(spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        v => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+    withRocksDb {
+      val in = MemoryStream[graft.streaming.EventRow]
+      val q = EventsPipeline.userRunningStats(in.toDS())
+        .writeStream.format("memory").queryName("running_tws").outputMode("update")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        in.addData(
+          graft.streaming.EventRow(1, t("2024-01-01 10:00:00"), 1, "click", 1.0),
+          graft.streaming.EventRow(2, t("2024-01-01 10:01:00"), 1, "click", 2.0))
+        q.processAllAvailable()
+        in.addData(graft.streaming.EventRow(3, t("2024-01-01 10:02:00"), 1, "click", 4.0))
+        q.processAllAvailable()
+        val updates = spark.table("running_tws").as[graft.streaming.UserUpdate]
+          .collect().map(u => (u.n_events, u.total_value)).toSet
+        // batch 1 emits (2, 3.0); batch 2 emits the carried-forward (3, 7.0)
+        assert(updates == Set((2L, 3.0), (3L, 7.0)))
+      } finally q.stop()
     }
   }
 
   test("running quantiles: stream state matches the batch sketch after every batch") {
     import org.apache.spark.sql.graft.HistRegs
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.EventRow]
-    val q = EventsPipeline.runningQuantiles(in.toDS())
-      .writeStream.format("memory").queryName("rq").outputMode("update")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      val vals1 = Seq(1.0, 2.5, 7.0, 31.23, 99.99, 4.0)
-      val vals2 = Seq(1000.0, 0.02, 55.5, 7.0)
-      var id = 0L
-      def rows(vs: Seq[Double]) = vs.map { v =>
-        id += 1
-        graft.streaming.EventRow(id, t("2024-01-01 00:00:00"), 1, "view", v)
-      }
-      in.addData(rows(vals1)); q.processAllAvailable()
-      in.addData(rows(vals2)); q.processAllAvailable()
-      // the last update must equal a from-scratch batch fold of ALL values
-      val expectBuf = new Array[Long](HistRegs.Buckets)
-      (vals1 ++ vals2).foreach(v => expectBuf(HistRegs.bucketOf(math.round(v * 100.0))) += 1)
-      val (n, p50, p90, p99) = HistRegs.quantiles(expectBuf)
-      val last = spark.table("rq")
-        .as[graft.streaming.EventsPipeline.QuantileUpdate]
-        .collect().filter(_.event_type == "view").maxBy(_.n)
-      assert(last.n == n && n == (vals1.size + vals2.size).toLong)
-      assert((last.p50_est, last.p90_est, last.p99_est) == ((p50, p90, p99)),
-        s"stream $last != batch ($p50, $p90, $p99)")
-      // and the intermediate emission covered exactly batch 1
-      val mid = spark.table("rq")
-        .as[graft.streaming.EventsPipeline.QuantileUpdate]
-        .collect().filter(_.event_type == "view").minBy(_.n)
-      assert(mid.n == vals1.size.toLong)
-    } finally {
-      q.stop()
-      prev.fold(spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        v => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+    withRocksDb {
+      val in = MemoryStream[graft.streaming.EventRow]
+      val q = EventsPipeline.runningQuantiles(in.toDS())
+        .writeStream.format("memory").queryName("rq").outputMode("update")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        val vals1 = Seq(1.0, 2.5, 7.0, 31.23, 99.99, 4.0)
+        val vals2 = Seq(1000.0, 0.02, 55.5, 7.0)
+        var id = 0L
+        def rows(vs: Seq[Double]) = vs.map { v =>
+          id += 1
+          graft.streaming.EventRow(id, t("2024-01-01 00:00:00"), 1, "view", v)
+        }
+        in.addData(rows(vals1)); q.processAllAvailable()
+        in.addData(rows(vals2)); q.processAllAvailable()
+        // the last update must equal a from-scratch batch fold of ALL values
+        val expectBuf = new Array[Long](HistRegs.Buckets)
+        (vals1 ++ vals2).foreach(v => expectBuf(HistRegs.bucketOf(math.round(v * 100.0))) += 1)
+        val (n, p50, p90, p99) = HistRegs.quantiles(expectBuf)
+        val last = spark.table("rq")
+          .as[graft.streaming.EventsPipeline.QuantileUpdate]
+          .collect().filter(_.event_type == "view").maxBy(_.n)
+        assert(last.n == n && n == (vals1.size + vals2.size).toLong)
+        assert((last.p50_est, last.p90_est, last.p99_est) == ((p50, p90, p99)),
+          s"stream $last != batch ($p50, $p90, $p99)")
+        // and the intermediate emission covered exactly batch 1
+        val mid = spark.table("rq")
+          .as[graft.streaming.EventsPipeline.QuantileUpdate]
+          .collect().filter(_.event_type == "view").minBy(_.n)
+        assert(mid.n == vals1.size.toLong)
+      } finally q.stop()
     }
   }
 
   test("drift monitor: spike bucket alerts against the running per-type stats") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.EventRow]
-    val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
-        zThresh = 2.0)
-      .writeStream.format("memory").queryName("drift").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      var id = 0L
-      def add(hour: Int, nView: Int, nClick: Int): Unit = {
-        val rows = (0 until nView).map { i =>
-          id += 1
-          graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:00:${i % 60}%02d"),
-            1, "view", 1.0)
-        } ++ (0 until nClick).map { i =>
-          id += 1
-          graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:30:${i % 60}%02d"),
-            2, "click", 1.0)
+    withRocksDb {
+      val in = MemoryStream[graft.streaming.EventRow]
+      val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
+          zThresh = 2.0)
+        .writeStream.format("memory").queryName("drift").outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        var id = 0L
+        def add(hour: Int, nView: Int, nClick: Int): Unit = {
+          val rows = (0 until nView).map { i =>
+            id += 1
+            graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:00:${i % 60}%02d"),
+              1, "view", 1.0)
+          } ++ (0 until nClick).map { i =>
+            id += 1
+            graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:30:${i % 60}%02d"),
+              2, "click", 1.0)
+          }
+          in.addData(rows)
+          q.processAllAvailable()
         }
-        in.addData(rows)
-        q.processAllAvailable()
-      }
-      // five steady view-hours (4,5,6,5,6), clicks flat at 3
-      add(0, 4, 3); add(1, 5, 3); add(2, 6, 3); add(3, 5, 3); add(4, 6, 3)
-      // the spike hour, then one more hour so the spike bucket CLOSES
-      add(5, 40, 3); add(6, 5, 3)
-      val alerts = spark.table("drift").as[graft.streaming.EventsPipeline.DriftAlert]
-        .collect()
-      val views = alerts.filter(_.event_type == "view").sortBy(_.bucket_start)
-      // hours 0..5 closed (6 is still open); scoring starts once 3+
-      // reference buckets exist (warm-up)
-      assert(views.length == 6)
-      assert(views.map(_.n).toSeq == Seq(4L, 5L, 6L, 5L, 6L, 40L))
-      val spike = views.last
-      assert(spike.alert && spike.z > 2.0, s"spike not flagged: $spike")
-      assert(views.init.forall(!_.alert), "steady buckets must not alert")
-      // reference stats exclude the bucket being scored
-      assert(spike.ref_windows == 5L && math.abs(spike.ref_mean - 5.2) < 1e-9)
-      // clicks are flat: zero variance → never alerts
-      val clicks = alerts.filter(_.event_type == "click")
-      assert(clicks.nonEmpty && clicks.forall(a => !a.alert && a.z == 0.0))
-    } finally {
-      q.stop()
-      prev.fold(spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        v => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+        // five steady view-hours (4,5,6,5,6), clicks flat at 3
+        add(0, 4, 3); add(1, 5, 3); add(2, 6, 3); add(3, 5, 3); add(4, 6, 3)
+        // the spike hour, then one more hour so the spike bucket CLOSES
+        add(5, 40, 3); add(6, 5, 3)
+        val alerts = spark.table("drift").as[graft.streaming.EventsPipeline.DriftAlert]
+          .collect()
+        val views = alerts.filter(_.event_type == "view").sortBy(_.bucket_start)
+        // hours 0..5 closed (6 is still open); scoring starts once 3+
+        // reference buckets exist (warm-up)
+        assert(views.length == 6)
+        assert(views.map(_.n).toSeq == Seq(4L, 5L, 6L, 5L, 6L, 40L))
+        val spike = views.last
+        assert(spike.alert && spike.z > 2.0, s"spike not flagged: $spike")
+        assert(views.init.forall(!_.alert), "steady buckets must not alert")
+        // reference stats exclude the bucket being scored
+        assert(spike.ref_windows == 5L && math.abs(spike.ref_mean - 5.2) < 1e-9)
+        // clicks are flat: zero variance → never alerts
+        val clicks = alerts.filter(_.event_type == "click")
+        assert(clicks.nonEmpty && clicks.forall(a => !a.alert && a.z == 0.0))
+      } finally q.stop()
     }
   }
 
   test("drift monitor: quiet-period buckets are scored as zero and alert") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.EventRow]
-    val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
-        zThresh = 2.0)
-      .writeStream.format("memory").queryName("driftgap").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      var id = 0L
-      def add(hour: Int, n: Int): Unit = {
-        in.addData((0 until n).map { i =>
-          id += 1
-          graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:00:${i % 60}%02d"),
-            1, "view", 1.0)
-        })
-        q.processAllAvailable()
-      }
-      // five steady hours, then SILENCE for hours 5-7, then hour 8 resumes
-      add(0, 5); add(1, 6); add(2, 5); add(3, 6); add(4, 5)
-      add(8, 5)
-      val views = spark.table("driftgap")
-        .as[graft.streaming.EventsPipeline.DriftAlert]
-        .collect().filter(_.event_type == "view").sortBy(_.bucket_start)
-      // hours 0..7 closed when hour 8's first row arrived (8 still open):
-      // three synthesized zero-count buckets fill the gap
-      assert(views.map(_.n).toSeq == Seq(5L, 6L, 5L, 6L, 5L, 0L, 0L, 0L),
-        views.mkString("; "))
-      // the first silent hour scores 0 against mean≈5.4 → alert fires
-      val firstGap = views(5)
-      assert(firstGap.alert && firstGap.z < -2.0, s"gap not flagged: $firstGap")
-      assert(math.abs(firstGap.ref_mean - 5.4) < 1e-9 && firstGap.ref_windows == 5L)
-      // each zero bucket FOLDS into the reference stats: the next gap
-      // bucket sees a lower mean and one more reference window
-      val secondGap = views(6)
-      assert(secondGap.ref_windows == 6L && secondGap.ref_mean < firstGap.ref_mean)
-    } finally {
-      q.stop()
-      prev.fold(spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        v => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+    withRocksDb {
+      val in = MemoryStream[graft.streaming.EventRow]
+      val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
+          zThresh = 2.0)
+        .writeStream.format("memory").queryName("driftgap").outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        var id = 0L
+        def add(hour: Int, n: Int): Unit = {
+          in.addData((0 until n).map { i =>
+            id += 1
+            graft.streaming.EventRow(id, t(f"2024-01-01 $hour%02d:00:${i % 60}%02d"),
+              1, "view", 1.0)
+          })
+          q.processAllAvailable()
+        }
+        // five steady hours, then SILENCE for hours 5-7, then hour 8 resumes
+        add(0, 5); add(1, 6); add(2, 5); add(3, 6); add(4, 5)
+        add(8, 5)
+        val views = spark.table("driftgap")
+          .as[graft.streaming.EventsPipeline.DriftAlert]
+          .collect().filter(_.event_type == "view").sortBy(_.bucket_start)
+        // hours 0..7 closed when hour 8's first row arrived (8 still open):
+        // three synthesized zero-count buckets fill the gap
+        assert(views.map(_.n).toSeq == Seq(5L, 6L, 5L, 6L, 5L, 0L, 0L, 0L),
+          views.mkString("; "))
+        // the first silent hour scores 0 against mean≈5.4 → alert fires
+        val firstGap = views(5)
+        assert(firstGap.alert && firstGap.z < -2.0, s"gap not flagged: $firstGap")
+        assert(math.abs(firstGap.ref_mean - 5.4) < 1e-9 && firstGap.ref_windows == 5L)
+        // each zero bucket FOLDS into the reference stats: the next gap
+        // bucket sees a lower mean and one more reference window
+        val secondGap = views(6)
+        assert(secondGap.ref_windows == 6L && secondGap.ref_mean < firstGap.ref_mean)
+      } finally q.stop()
     }
   }
 
   test("drift monitor: an extreme gap folds the skipped zero buckets in closed form") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.EventRow]
-    val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
-        zThresh = 2.0)
-      .writeStream.format("memory").queryName("driftbiggap").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-      var id = 0L
-      def add(hour: Long, n: Int): Unit = {
-        in.addData((0 until n).map { i =>
-          id += 1
-          graft.streaming.EventRow(id,
-            new java.sql.Timestamp(base + hour * 3600000L + i * 1000L),
-            1, "view", 1.0)
-        })
-        q.processAllAvailable()
-      }
-      // five steady hours, then a gap 50 buckets WIDER than the emission
-      // cap (MaxGapBuckets = 10000): the first 10000 quiet buckets are
-      // scored and emitted, the 50 beyond the cap are skipped from the
-      // alert stream but must still fold into the reference stats
-      Seq(5, 6, 5, 6, 5).zipWithIndex.foreach { case (n, h) => add(h.toLong, n) }
-      val resume = 4L + 1L + 10000L + 50L
-      add(resume, 5)
-      add(resume + 1, 1) // closes the resume bucket
-      val views = spark.table("driftbiggap")
-        .as[graft.streaming.EventsPipeline.DriftAlert]
-        .collect().filter(_.event_type == "view").sortBy(_.bucket_start)
-      // 5 steady + exactly 10000 gap buckets + the resume bucket; the 50
-      // skipped buckets appear only as the bucket_start jump
-      assert(views.length == 5 + 10000 + 1, s"got ${views.length}")
-      val last = views.last
-      assert(last.n == 5L &&
-        last.bucket_start == ((base + resume * 3600000L) / 3600000L) * 3600000L)
-      // recount equivalence: the resume bucket's reference stats must
-      // equal a batch recount over ALL closed buckets including the 50
-      // skipped zeros (ref_windows counts them, mean/z fold them)
-      assert(last.ref_windows == 5L + 10000L + 50L, s"ref_windows=${last.ref_windows}")
-      val seq = Seq(5.0, 6.0, 5.0, 6.0, 5.0) ++ Seq.fill(10050)(0.0)
-      val mean = seq.sum / seq.size
-      assert(math.abs(last.ref_mean - mean) < 1e-9, s"ref_mean=${last.ref_mean}")
-      val m2 = seq.map(v => (v - mean) * (v - mean)).sum
-      val zExp = (5.0 - mean) / math.sqrt(m2 / (seq.size - 1))
-      assert(math.abs(last.z - zExp) < 1e-6, s"z=${last.z} expected=$zExp")
-    } finally {
-      q.stop()
-      prev.fold(spark.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-        v => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v))
+    withRocksDb {
+      val in = MemoryStream[graft.streaming.EventRow]
+      val q = EventsPipeline.driftAlerts(in.toDS(), bucketMs = 3600L * 1000,
+          zThresh = 2.0)
+        .writeStream.format("memory").queryName("driftbiggap").outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+        var id = 0L
+        def add(hour: Long, n: Int): Unit = {
+          in.addData((0 until n).map { i =>
+            id += 1
+            graft.streaming.EventRow(id,
+              new java.sql.Timestamp(base + hour * 3600000L + i * 1000L),
+              1, "view", 1.0)
+          })
+          q.processAllAvailable()
+        }
+        // five steady hours, then a gap 50 buckets WIDER than the emission
+        // cap (MaxGapBuckets = 10000): the first 10000 quiet buckets are
+        // scored and emitted, the 50 beyond the cap are skipped from the
+        // alert stream but must still fold into the reference stats
+        Seq(5, 6, 5, 6, 5).zipWithIndex.foreach { case (n, h) => add(h.toLong, n) }
+        val resume = 4L + 1L + 10000L + 50L
+        add(resume, 5)
+        add(resume + 1, 1) // closes the resume bucket
+        val views = spark.table("driftbiggap")
+          .as[graft.streaming.EventsPipeline.DriftAlert]
+          .collect().filter(_.event_type == "view").sortBy(_.bucket_start)
+        // 5 steady + exactly 10000 gap buckets + the resume bucket; the 50
+        // skipped buckets appear only as the bucket_start jump
+        assert(views.length == 5 + 10000 + 1, s"got ${views.length}")
+        val last = views.last
+        assert(last.n == 5L &&
+          last.bucket_start == ((base + resume * 3600000L) / 3600000L) * 3600000L)
+        // recount equivalence: the resume bucket's reference stats must
+        // equal a batch recount over ALL closed buckets including the 50
+        // skipped zeros (ref_windows counts them, mean/z fold them)
+        assert(last.ref_windows == 5L + 10000L + 50L, s"ref_windows=${last.ref_windows}")
+        val seq = Seq(5.0, 6.0, 5.0, 6.0, 5.0) ++ Seq.fill(10050)(0.0)
+        val mean = seq.sum / seq.size
+        assert(math.abs(last.ref_mean - mean) < 1e-9, s"ref_mean=${last.ref_mean}")
+        val m2 = seq.map(v => (v - mean) * (v - mean)).sum
+        val zExp = (5.0 - mean) / math.sqrt(m2 / (seq.size - 1))
+        assert(math.abs(last.z - zExp) < 1e-6, s"z=${last.z} expected=$zExp")
+      } finally q.stop()
     }
   }
 
@@ -346,22 +310,24 @@ class StreamingSpec extends SparkSpec {
       }
       .trigger(Trigger.ProcessingTime(0)).start()
 
-    val q1 = start()
-    try {
-      in.addData(graft.streaming.EventRow(1, t("2024-01-01 10:00:00"), 7, "click", 5.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
+    withRocksDb {
+      val q1 = start()
+      try {
+        in.addData(graft.streaming.EventRow(1, t("2024-01-01 10:00:00"), 7, "click", 5.0))
+        q1.processAllAvailable()
+      } finally q1.stop()
 
-    // restart from the same checkpoint: per-user state must carry over
-    val q2 = start()
-    try {
-      in.addData(graft.streaming.EventRow(2, t("2024-01-01 10:05:00"), 7, "click", 3.0))
-      q2.processAllAvailable()
-      // the post-restart batch emits the CARRIED-FORWARD total (2, 8.0),
-      // not a fresh (1, 3.0)
-      assert(seen.contains((2L, 8.0)), s"state lost across restart: $seen")
-      assert(!seen.contains((1L, 3.0)), s"state reset across restart: $seen")
-    } finally q2.stop()
+      // restart from the same checkpoint: per-user state must carry over
+      val q2 = start()
+      try {
+        in.addData(graft.streaming.EventRow(2, t("2024-01-01 10:05:00"), 7, "click", 3.0))
+        q2.processAllAvailable()
+        // the post-restart batch emits the CARRIED-FORWARD total (2, 8.0),
+        // not a fresh (1, 3.0)
+        assert(seen.contains((2L, 8.0)), s"state lost across restart: $seen")
+        assert(!seen.contains((1L, 3.0)), s"state reset across restart: $seen")
+      } finally q2.stop()
+    }
   }
 
   test("dropDuplicatesWithinWatermark suppresses duplicate event ids") {
@@ -493,44 +459,37 @@ class StreamingSpec extends SparkSpec {
 
   test("event-time timers close sessions when the watermark passes the gap") {
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Ev]
-    val q = EventsPipeline.timedOutSessions(
-        in.toDF().as[graft.streaming.EventRow],
-        gapMs = 30L * 60 * 1000, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("timedout").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // user 1's session: two events; user 2 keeps the stream alive later
-      in.addData(
-        Ev(1, t("2024-01-01 10:00:00"), 1, "view", 1.0),
-        Ev(2, t("2024-01-01 10:05:00"), 1, "view", 2.0))
-      q.processAllAvailable()
-      // nothing closed yet — watermark hasn't passed 10:05 + 30min
-      assert(spark.table("timedout").count() == 0)
-      // advance the watermark beyond user 1's gap; user 2's session stays open
-      in.addData(Ev(3, t("2024-01-01 11:00:00"), 2, "view", 5.0))
-      q.processAllAvailable()
-      in.addData(Ev(4, t("2024-01-01 11:30:00"), 2, "view", 7.0))
-      q.processAllAvailable()
-      val closed = spark.table("timedout")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(closed == Set((1L, 2L, 3.0)), s"got $closed")
-      // re-arming: user 2's last event was 11:30; push watermark past 12:00
-      in.addData(Ev(5, t("2024-01-01 13:00:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      in.addData(Ev(6, t("2024-01-01 13:30:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      val all = spark.table("timedout").as[(Long, Long, Double)].collect().toSet
-      assert(all.contains((2L, 2L, 12.0)), s"user 2 session not closed: $all")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val in = MemoryStream[Ev]
+      val q = EventsPipeline.timedOutSessions(
+          in.toDF().as[graft.streaming.EventRow],
+          gapMs = 30L * 60 * 1000, watermark = "0 seconds")
+        .writeStream.format("memory").queryName("timedout").outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // user 1's session: two events; user 2 keeps the stream alive later
+        in.addData(
+          Ev(1, t("2024-01-01 10:00:00"), 1, "view", 1.0),
+          Ev(2, t("2024-01-01 10:05:00"), 1, "view", 2.0))
+        q.processAllAvailable()
+        // nothing closed yet — watermark hasn't passed 10:05 + 30min
+        assert(spark.table("timedout").count() == 0)
+        // advance the watermark beyond user 1's gap; user 2's session stays open
+        in.addData(Ev(3, t("2024-01-01 11:00:00"), 2, "view", 5.0))
+        q.processAllAvailable()
+        in.addData(Ev(4, t("2024-01-01 11:30:00"), 2, "view", 7.0))
+        q.processAllAvailable()
+        val closed = spark.table("timedout")
+          .as[(Long, Long, Double)].collect().toSet
+        assert(closed == Set((1L, 2L, 3.0)), s"got $closed")
+        // re-arming: user 2's last event was 11:30; push watermark past 12:00
+        in.addData(Ev(5, t("2024-01-01 13:00:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        in.addData(Ev(6, t("2024-01-01 13:30:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        val all = spark.table("timedout").as[(Long, Long, Double)].collect().toSet
+        assert(all.contains((2L, 2L, 12.0)), s"user 2 session not closed: $all")
+      } finally q.stop()
     }
   }
 
@@ -539,45 +498,38 @@ class StreamingSpec extends SparkSpec {
     // event re-armed the timer at old-ts + gap, closing the session before
     // last-event + gap. The timer is a high-water mark: it never regresses.
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Ev]
-    val q = EventsPipeline.timedOutSessions(
-        in.toDF().as[graft.streaming.EventRow],
-        gapMs = 30L * 60 * 1000, watermark = "2 hours")
-      .writeStream.format("memory").queryName("noregress").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // batch 1: user 1 @ 12:00 -> deadline 12:30
-      in.addData(Ev(1, t("2024-01-01 12:00:00"), 1, "view", 1.0))
-      q.processAllAvailable()
-      // batch 2: OLDER user-1 event @ 11:00 (watermark is 10:00, so it is
-      // on time). Regressing code would re-arm at 11:30.
-      in.addData(Ev(2, t("2024-01-01 11:00:00"), 1, "view", 2.0))
-      q.processAllAvailable()
-      // advance the watermark to 11:35-11:36: past the WRONG deadline
-      // (11:30), before the right one (12:30) — nothing may close
-      in.addData(Ev(3, t("2024-01-01 13:35:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      in.addData(Ev(4, t("2024-01-01 13:36:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      val early = spark.table("noregress").as[(Long, Long, Double)].collect().toSet
-      assert(!early.exists(_._1 == 1L),
-        s"session closed before last-event + gap (timer regressed): $early")
-      // advance past 12:30 -> the session closes with BOTH events
-      in.addData(Ev(5, t("2024-01-01 14:40:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      in.addData(Ev(6, t("2024-01-01 14:41:00"), 9, "view", 0.0))
-      q.processAllAvailable()
-      val closed = spark.table("noregress").as[(Long, Long, Double)].collect().toSet
-      assert(closed.contains((1L, 2L, 3.0)), s"user 1 session missing: $closed")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val in = MemoryStream[Ev]
+      val q = EventsPipeline.timedOutSessions(
+          in.toDF().as[graft.streaming.EventRow],
+          gapMs = 30L * 60 * 1000, watermark = "2 hours")
+        .writeStream.format("memory").queryName("noregress").outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // batch 1: user 1 @ 12:00 -> deadline 12:30
+        in.addData(Ev(1, t("2024-01-01 12:00:00"), 1, "view", 1.0))
+        q.processAllAvailable()
+        // batch 2: OLDER user-1 event @ 11:00 (watermark is 10:00, so it is
+        // on time). Regressing code would re-arm at 11:30.
+        in.addData(Ev(2, t("2024-01-01 11:00:00"), 1, "view", 2.0))
+        q.processAllAvailable()
+        // advance the watermark to 11:35-11:36: past the WRONG deadline
+        // (11:30), before the right one (12:30) — nothing may close
+        in.addData(Ev(3, t("2024-01-01 13:35:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        in.addData(Ev(4, t("2024-01-01 13:36:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        val early = spark.table("noregress").as[(Long, Long, Double)].collect().toSet
+        assert(!early.exists(_._1 == 1L),
+          s"session closed before last-event + gap (timer regressed): $early")
+        // advance past 12:30 -> the session closes with BOTH events
+        in.addData(Ev(5, t("2024-01-01 14:40:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        in.addData(Ev(6, t("2024-01-01 14:41:00"), 9, "view", 0.0))
+        q.processAllAvailable()
+        val closed = spark.table("noregress").as[(Long, Long, Double)].collect().toSet
+        assert(closed.contains((1L, 2L, 3.0)), s"user 1 session missing: $closed")
+      } finally q.stop()
     }
   }
 

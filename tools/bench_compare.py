@@ -132,15 +132,6 @@ def main():
           f"B-only {len(set(qb)-set(qa))})")
     if host:
         print(f"host factor (calib_mt B/A): {host:.3f} — normalized = raw / host")
-        # temporal error bar (r14): pre- vs post-sweep probe spread per
-        # side — the probes sample one instant while a sweep spans ~25
-        # min, and a large spread means normalized ratios carry error of
-        # that magnitude
-        for side, name in ((a, "A"), (b, "B")):
-            pre, post = side.get("calib_mt_sec"), side.get("calib_mt_post_sec")
-            if pre and post:
-                print(f"  {name} pre/post cpu-probe spread: "
-                      f"{pre:.3f} -> {post:.3f} ({post / pre:.2f}x)")
     else:
         print("NOTE: calibration missing on one side — raw ratios only; "
               "host drift is NOT separable from engine change")
