@@ -514,13 +514,15 @@ object AggState {
     * scalar `state/`, the KMV `distinct_state/` (re-take the bottom-k per
     * key), and the histogram `hist_state/` (sum counts per key/bucket).
     * Each rewrite is valid iff its merged view is unchanged — checked by
-    * fingerprint per subtable, failing loudly on mismatch. A stateDir that
+    * fingerprint per subtable, all of them in one `Reconcile.requireMatch`
+    * after the last rewrite, failing loudly on mismatch. A stateDir that
     * carries only a subset of the layouts rewrites exactly that subset, so
     * a Generations publish over the output never drops a sketch a reader
     * depends on. */
   def optimize(spark: SparkSession, stateDir: String, outStateDir: String,
       keys: Seq[String], targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(stateDir, outStateDir, "optimize")
+    val checks = scala.collection.mutable.ListBuffer[(String, DataFrame, DataFrame)]()
     def rewrite(sub: String, path: String => String,
         collapse: DataFrame => DataFrame,
         view: String => DataFrame): Unit =
@@ -528,8 +530,7 @@ object AggState {
         val state = StandingTables.read(spark, path(stateDir))
         collapse(state).repartition(Compaction.filesFor(state, targetFileBytes))
           .write.mode("overwrite").parquet(path(outStateDir))
-        Reconcile.requireMatch("optimize",
-          Seq((sub, view(stateDir), view(outStateDir))))
+        checks += ((sub, view(stateDir), view(outStateDir)))
       }
     require(Seq(statePath _, distinctStatePath _, histStatePath _, bloomStatePath _)
         .exists(p => new File(p(stateDir)).isDirectory),
@@ -556,5 +557,6 @@ object AggState {
           .agg(bit_or(col("__bits")).as("__bits")),
         d => mergedBloom(spark, d, keys))
     }
+    Reconcile.requireMatch("optimize", checks.toSeq)
   }
 }

@@ -496,14 +496,17 @@ object AnnIndex {
 
   /** Compact the index's accumulated append files into `outIndexDir`
     * (size-targeted; vectors keep their `centroid_id` partitioning — it
-    * is what prunes a probe to the probed centroids' files), physically
-    * dropping tombstoned vectors — the output generation is the survivor
-    * set with NO tombstone table. The quantizer and, when present, the PQ
+    * is what prunes a probe to the probed centroids' files — and, under
+    * the size target, get exactly one file per `centroid_id=` directory,
+    * the directories written in parallel by `Compaction.partitionedFor`),
+    * physically dropping tombstoned vectors — the output generation is
+    * the survivor set with NO tombstone table. The quantizer and, when present, the PQ
     * `codebooks/` and the `fitstats/` ledger are carried over verbatim —
     * standing state the probePq and fitLedger readers depend on, which a
     * generation must not silently miss or mangle across a publish switch.
     * Every rewritten table is fingerprint-validated against its source
-    * (the vectors against the live view) in one check that fails loudly. */
+    * (the vectors against the live view) in one `Reconcile.requireMatch`:
+    * one job for all tables, failing loudly. */
   def optimize(spark: SparkSession, indexDir: String, outIndexDir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
@@ -515,9 +518,8 @@ object AnnIndex {
         .write.mode("overwrite").parquet(s"$outIndexDir/$t")
     }
     val vecs = liveVectors(spark, indexDir)
-    val nOut = Compaction.filesFor(StandingTables.read(spark, vectorsPath(indexDir)),
-      targetFileBytes)
-    vecs.repartition(nOut, col("centroid_id"))
+    Compaction.partitionedFor(vecs, StandingTables.read(spark, vectorsPath(indexDir)),
+        "centroid_id", Seq("centroid_id"), targetFileBytes)
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(vectorsPath(outIndexDir))
     Reconcile.requireMatch("optimize",

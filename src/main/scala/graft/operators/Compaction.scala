@@ -46,7 +46,9 @@ object Compaction {
     * streaming-sink directories, so orphaned/uncommitted batch files never
     * inflate the stats (a raw directory listing would count them). */
   private def inputFileSizes(df: DataFrame): Seq[Long] =
-    df.inputFiles.toSeq.map(p => new java.io.File(new java.net.URI(p)).length())
+    df.inputFiles.toSeq.map(fileBytes)
+
+  private def fileBytes(uri: String): Long = new java.io.File(new java.net.URI(uri)).length()
 
   /** The one output-file-count rule for a size-targeted rewrite:
     * ceil(bytes in / target), at least one file. */
@@ -56,6 +58,24 @@ object Compaction {
   /** [[filesFor]] over the bytes `df` reads ([[inputFileSizes]]). */
   def filesFor(df: DataFrame, targetFileBytes: Long): Int =
     filesFor(inputFileSizes(df).sum, targetFileBytes)
+
+  /** The one shuffle rule for a size-targeted rewrite written with
+    * `partitionBy(partCol)`, sized from `source`'s files. While the table
+    * is under its size target, `df` shuffles on `partCol` alone into one
+    * task per `partCol=` directory of the source: every directory still
+    * gets exactly one file, but parallel tasks write them instead of one.
+    * Above the target, [[filesFor]] tasks hash on `keys`, which spread a
+    * big directory over several files. */
+  def partitionedFor(df: DataFrame, source: DataFrame, partCol: String,
+      keys: Seq[String], targetFileBytes: Long): DataFrame = {
+    val files = source.inputFiles.toSeq
+    val nOut = filesFor(files.map(fileBytes).sum, targetFileBytes)
+    if (nOut > 1) df.repartition(nOut, keys.map(col): _*)
+    else {
+      val dirs = files.flatMap(_.split('/').find(_.startsWith(s"$partCol="))).distinct.size
+      df.repartition(math.max(1, dirs), col(partCol))
+    }
+  }
 
   /** Quantile-bucketed Z-value over `keys` — the multi-column clustering
     * coordinate. Each key is bucketed into 2^`bits` quantile ranks (the

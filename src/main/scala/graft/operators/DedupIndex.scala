@@ -278,23 +278,26 @@ object DedupIndex {
   }
 
   /** Compact the index's accumulated append files into `outIndexDir`
-    * (size-targeted; bands keep their `bi` partitioning), physically
-    * dropping tombstoned rows — the output generation is the survivor set
-    * and carries NO tombstone table. Both rewrites are fingerprint-
-    * validated against the LIVE view — a silent content change fails
+    * (size-targeted; bands keep their `bi` partitioning and, under the
+    * size target, get exactly one file per `bi=` directory, the
+    * directories written in parallel by `Compaction.partitionedFor`),
+    * physically dropping tombstoned rows — the output generation is the
+    * survivor set and carries NO tombstone table. Both rewrites are
+    * fingerprint-validated against the LIVE view in one
+    * `Reconcile.requireMatch` job — a silent content change fails
     * loudly. */
   def optimize(spark: SparkSession, indexDir: String, outIndexDir: String,
       targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
-    def nOutFor(path: String): Int =
-      Compaction.filesFor(StandingTables.read(spark, path), targetFileBytes)
     val sigs = live(spark, indexDir, sigsPath)
-    sigs.repartition(nOutFor(sigsPath(indexDir)))
+    sigs.repartition(Compaction.filesFor(StandingTables.read(spark, sigsPath(indexDir)),
+        targetFileBytes))
       .write.mode("overwrite").parquet(sigsPath(outIndexDir))
     // bands: size-targeted, but the bi partitioning must survive the
     // rewrite (it is what prunes a probe to one band's files)
     val bands = live(spark, indexDir, bandsPath)
-    bands.repartition(nOutFor(bandsPath(indexDir)), col("bi"), col("bh"))
+    Compaction.partitionedFor(bands, StandingTables.read(spark, bandsPath(indexDir)),
+        "bi", Seq("bi", "bh"), targetFileBytes)
       .write.mode("overwrite").partitionBy("bi").parquet(bandsPath(outIndexDir))
     Reconcile.requireMatch("optimize", Seq(
       ("sigs", sigs, StandingTables.read(spark, sigsPath(outIndexDir))),

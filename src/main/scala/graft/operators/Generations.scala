@@ -179,13 +179,21 @@ object Generations {
       lockHold.computeIfAbsent(stateDir,
         _ => new java.util.concurrent.atomic.AtomicLong())
         .addAndGet(System.nanoTime() - tAcq)
-      val stillMine = scala.util.Try(new String(
-        Files.readAllBytes(lock.toPath), StandardCharsets.UTF_8).trim == token)
-        .getOrElse(false)
-      if (stillMine) Files.deleteIfExists(lock.toPath)
-      else System.err.println(s"withWriterLock: $lock is no longer this " +
-        "writer's at release (body exceeded staleMs and the lock was " +
-        "broken?) — leaving it to its current holder")
+      // three ways to find the lock not ours at release: the directory is
+      // gone (the body retired its own generation — nothing to release),
+      // another writer's token (broken as stale and re-acquired — leave
+      // it), or no lock file in a live directory (deleted behind the lock)
+      val holder = scala.util.Try(new String(
+        Files.readAllBytes(lock.toPath), StandardCharsets.UTF_8).trim).toOption
+      if (holder.contains(token)) Files.deleteIfExists(lock.toPath)
+      else if (holder.isDefined || lock.exists)
+        System.err.println(s"withWriterLock: $lock is no longer this " +
+          "writer's at release (body exceeded staleMs and the lock was " +
+          "broken?) — leaving it to its current holder")
+      else if (dir.isDirectory)
+        System.err.println(s"withWriterLock: $lock is missing at release " +
+          s"while $dir still exists — something deleted the lock file " +
+          "behind this writer")
       ()
     }
   }

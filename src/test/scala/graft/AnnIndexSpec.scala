@@ -72,14 +72,14 @@ class AnnIndexSpec extends SparkSpec with BeforeAndAfterEach {
     AnnIndex.optimize(spark, idxDir, optDir)
     assert(probeRows(optDir) == before)
 
-    def leafParquet(d: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(d)).count(_.getName.endsWith(".parquet"))
-    }
-    assert(leafParquet(optDir) < leafParquet(idxDir),
-      s"optimize did not reduce file count: ${leafParquet(idxDir)} -> ${leafParquet(optDir)}")
+    val (in, out) = (ParquetLayout.filesPerDir(idxDir), ParquetLayout.filesPerDir(optDir))
+    assert(out.values.sum < in.values.sum,
+      s"optimize did not reduce file count: ${in.values.sum} -> ${out.values.sum}")
+    // exactly one file per centroid_id= directory (a parallel write must
+    // not split a partition) and one centroids file
+    val vectors = out.filter(_._1.startsWith("vectors/centroid_id="))
+    assert(vectors.size == 8, s"vectors dirs: $out")
+    assert(out == vectors.map(_._1 -> 1) + ("centroids" -> 1), s"optimized layout: $out")
   }
 
   test("vectors table is centroid-partitioned and a centroid filter prunes") {

@@ -65,14 +65,14 @@ class DedupIndexSpec extends SparkSpec with BeforeAndAfterEach {
     val after = probeRows(optDir)
     assert(after.toSeq == before.toSeq)
 
-    def leafParquet(d: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(d)).count(_.getName.endsWith(".parquet"))
-    }
-    assert(leafParquet(optDir) < leafParquet(idxDir),
-      s"optimize did not reduce file count: ${leafParquet(idxDir)} -> ${leafParquet(optDir)}")
+    val (in, out) = (ParquetLayout.filesPerDir(idxDir), ParquetLayout.filesPerDir(optDir))
+    assert(out.values.sum < in.values.sum,
+      s"optimize did not reduce file count: ${in.values.sum} -> ${out.values.sum}")
+    // exactly one file per bi= directory (a parallel write must not split
+    // a band) and one sigs file
+    val bands = out.filter(_._1.startsWith("bands/bi="))
+    assert(bands.size == in.keySet.count(_.startsWith("bands/bi=")), s"bands dirs: $out")
+    assert(out == bands.map(_._1 -> 1) + ("sigs" -> 1), s"optimized layout: $out")
   }
 
   test("remove: tombstoned docs stop matching; grown-with-deletes == scratch-on-survivors") {

@@ -239,6 +239,42 @@ class GenerationsSpec extends SparkSpec {
     assert(!lock.exists())
   }
 
+  /** What `body` prints to stderr. */
+  private def stderrOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(saved)
+    buf.toString("UTF-8")
+  }
+
+  test("writer lock release: a generation retired inside its own scope releases silently") {
+    val table = Files.createTempDirectory("graft_lock_retired").toString
+    val gen = s"$table/gen-0"
+    val err = stderrOf(Generations.withWriterLock(gen) { Generations.deleteTree(gen) })
+    assert(!err.contains("withWriterLock"), err)
+    assert(!new java.io.File(gen).exists())
+  }
+
+  test("writer lock release: another writer's token keeps the broken-lock warning") {
+    val state = Files.createTempDirectory("graft_lock_foreign").toString
+    val lock = new java.io.File(state, ".WRITER_LOCK")
+    val err = stderrOf(Generations.withWriterLock(state) {
+      Files.write(lock.toPath, "pid=9999 ts=0 nonce=foreign".getBytes("UTF-8"))
+    })
+    assert(err.contains("is no longer this writer's at release"), err)
+    assert(lock.exists())
+  }
+
+  test("writer lock release: a lock file missing from a live directory is reported") {
+    val state = Files.createTempDirectory("graft_lock_missing").toString
+    val lock = new java.io.File(state, ".WRITER_LOCK")
+    val err = stderrOf(Generations.withWriterLock(state) { assert(lock.delete()) })
+    assert(err.contains(s"$lock is missing at release"), err)
+    assert(!err.contains("no longer this writer's"), err)
+    assert(new java.io.File(state).isDirectory && !lock.exists())
+  }
+
   test("stale-lock break moves the lock aside atomically, never delete-then-create") {
     // of two breakers, exactly one can win the ATOMIC_MOVE; this pins the
     // mechanism (no bare delete) by verifying a successful break leaves

@@ -166,4 +166,37 @@ class IndexProbePlanSpec extends SparkSpec with BeforeAndAfterEach {
       assertJobs(s"probePq $kind", pq, 10 + tombs)
     }
   }
+
+  // ---- the optimize budget ----------------------------------------------------
+
+  /** Every verification job of an optimize runs at one `collect` call
+    * site in Reconcile (all rewritten tables fold in one aggregate): its
+    * exchange's map stage and its result, plus the tombstone broadcast of
+    * the live view. */
+  private def assertOneCheck(what: String, b: Budget, tombs: Int): Unit = {
+    val checks = b.jobs.filter(_.contains("Reconcile"))
+    val sites = checks.flatMap(_.split('+')).distinct
+    assert(sites.size == 1 && sites.head.startsWith("collect at Reconcile.scala:"),
+      s"$what: verification call sites ${sites.mkString("; ")}")
+    assert(checks.size == 2 + tombs, s"$what: ${checks.size} verification jobs")
+  }
+
+  test("DedupIndex.optimize and AnnIndex.optimize: one verification site, pinned jobs") {
+    for ((kind, idx) <- dedupIndexes().take(2)) {
+      val tombs = if (kind == "tombstoned") 1 else 0
+      val b = budget(DedupIndex.optimize(spark, idx, tmp()))
+      assertOneCheck(s"dedup optimize $kind", b, tombs)
+      // the counts measured: sigs and bands each a shuffle and a write
+      // (one more tombstone broadcast each), then the verification
+      assertJobs(s"dedup optimize $kind", b, 6 + 3 * tombs)
+    }
+    for ((kind, idx) <- annIndexes().take(2)) {
+      val tombs = if (kind == "tombstoned") 1 else 0
+      val b = budget(AnnIndex.optimize(spark, idx, tmp()))
+      assertOneCheck(s"ann optimize $kind", b, tombs)
+      // centroids, codebooks and vectors each a shuffle and a write (one
+      // more tombstone broadcast for vectors), then the verification
+      assertJobs(s"ann optimize $kind", b, 8 + 2 * tombs)
+    }
+  }
 }
