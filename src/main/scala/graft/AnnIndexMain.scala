@@ -47,8 +47,8 @@ object AnnIndexMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2 &&
-        (Set("resolve", "history", "retire")(args(0)) || args.length >= 3),
-      "usage: AnnIndexMain build|append|probe|remove|optimize|reindex|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB|k]")
+        (Set("fitledger", "resolve", "history", "retire")(args(0)) || args.length >= 3),
+      "usage: AnnIndexMain build|append|probe|remove|optimize|reindex|fitstats|fitledger|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB|k|batchId]")
     val spark = GraftSession.cli()
     def emb(path: String) =
       spark.read.parquet(path).select(col("vec_id"), col("embedding"))

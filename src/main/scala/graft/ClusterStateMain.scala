@@ -29,7 +29,7 @@ object ClusterStateMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: ClusterStateMain build|append|clusters ...")
+      "usage: ClusterStateMain build|append|remove|clusters ...")
     val spark = GraftSession.cli()
     // retention knobs trail each label-writing verb's positional args
     def retentionFrom(from: Int): ClusterState.Retention = {

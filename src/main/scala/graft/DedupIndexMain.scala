@@ -34,7 +34,7 @@ object DedupIndexMain {
     require(args.length >= 2 &&
         (args(0) == "resolve" || args(0) == "history" ||
           args(0) == "retire" || args.length >= 3),
-      "usage: DedupIndexMain build|append|probe|optimize|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB]")
+      "usage: DedupIndexMain build|append|probe|remove|optimize|publish|resolve|history|retire <in> [<indexDir>] [out|targetMB]")
     val spark = GraftSession.cli()
     def docs(path: String) =
       spark.read.parquet(path).select(col("doc_id"), col("text"))

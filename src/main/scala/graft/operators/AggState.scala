@@ -67,13 +67,19 @@ object AggState {
     * previously added — the caller owns that discipline, same as every
     * CDC feed. */
   def retract(deleted: DataFrame, keys: Seq[String], valueCol: String,
-      stateDir: String): Unit = {
+      stateDir: String): Unit =
+    negatedPartials(deleted, keys, valueCol).write.mode("append").parquet(statePath(stateDir))
+
+  /** The retraction slice of `deleted`: its [[partials]] with `__n` and
+    * `__sum` negated and NULL `__min`/`__max` (not invertible; the fold
+    * ignores NULL). */
+  private def negatedPartials(deleted: DataFrame, keys: Seq[String],
+      valueCol: String): DataFrame = {
     val p = partials(deleted, keys, valueCol)
     p.select(keys.map(col) ++ Seq(
-        negate(col("__n")).as("__n"), negate(col("__sum")).as("__sum"),
-        lit(null).cast(p.schema("__min").dataType).as("__min"),
-        lit(null).cast(p.schema("__max").dataType).as("__max")): _*)
-      .write.mode("append").parquet(statePath(stateDir))
+      negate(col("__n")).as("__n"), negate(col("__sum")).as("__sum"),
+      lit(null).cast(p.schema("__min").dataType).as("__min"),
+      lit(null).cast(p.schema("__max").dataType).as("__max")): _*)
   }
 
   /** One-write signed fold (r19 optimization): exactly [[append]] of the
@@ -85,13 +91,9 @@ object AggState {
     * `merged` and `optimize` see exactly what they saw before. */
   def foldSigned(delta: DataFrame, keys: Seq[String], valueCol: String,
       multCol: String, stateDir: String): Unit = {
-    val pos = partials(delta.filter(col(multCol) > 0), keys, valueCol)
-    val negP = partials(delta.filter(col(multCol) < 0), keys, valueCol)
-    val neg = negP.select(keys.map(col) ++ Seq(
-      negate(col("__n")).as("__n"), negate(col("__sum")).as("__sum"),
-      lit(null).cast(negP.schema("__min").dataType).as("__min"),
-      lit(null).cast(negP.schema("__max").dataType).as("__max")): _*)
-    pos.unionByName(neg).write.mode("append").parquet(statePath(stateDir))
+    partials(delta.filter(col(multCol) > 0), keys, valueCol)
+      .unionByName(negatedPartials(delta.filter(col(multCol) < 0), keys, valueCol))
+      .write.mode("append").parquet(statePath(stateDir))
   }
 
   /** Takedown with EXACT min/max (r18 — closes the [[retract]] caveat):
@@ -528,8 +530,7 @@ object AggState {
         view: String => DataFrame): Unit =
       if (new File(path(stateDir)).isDirectory) {
         val state = StandingTables.read(spark, path(stateDir))
-        collapse(state).repartition(Compaction.filesFor(state, targetFileBytes))
-          .write.mode("overwrite").parquet(path(outStateDir))
+        Compaction.write(collapse(state), state, path(outStateDir), targetFileBytes)
         checks += ((sub, view(stateDir), view(outStateDir)))
       }
     require(Seq(statePath _, distinctStatePath _, histStatePath _, bloomStatePath _)

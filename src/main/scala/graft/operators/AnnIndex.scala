@@ -498,7 +498,7 @@ object AnnIndex {
     * (size-targeted; vectors keep their `centroid_id` partitioning — it
     * is what prunes a probe to the probed centroids' files — and, under
     * the size target, get exactly one file per `centroid_id=` directory,
-    * the directories written in parallel by `Compaction.partitionedFor`),
+    * the directories written in parallel by `Compaction.write`),
     * physically dropping tombstoned vectors — the output generation is
     * the survivor set with NO tombstone table. The quantizer and, when present, the PQ
     * `codebooks/` and the `fitstats/` ledger are carried over verbatim —
@@ -514,14 +514,11 @@ object AnnIndex {
       .filter(t => new File(s"$indexDir/$t").isDirectory)
     carried.foreach { t =>
       val df = StandingTables.read(spark, s"$indexDir/$t")
-      df.repartition(Compaction.filesFor(df, targetFileBytes))
-        .write.mode("overwrite").parquet(s"$outIndexDir/$t")
+      Compaction.write(df, df, s"$outIndexDir/$t", targetFileBytes)
     }
     val vecs = liveVectors(spark, indexDir)
-    Compaction.partitionedFor(vecs, StandingTables.read(spark, vectorsPath(indexDir)),
-        "centroid_id", Seq("centroid_id"), targetFileBytes)
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(vectorsPath(outIndexDir))
+    Compaction.write(vecs, StandingTables.read(spark, vectorsPath(indexDir)),
+      vectorsPath(outIndexDir), targetFileBytes, Some("centroid_id" -> Seq("centroid_id")))
     Reconcile.requireMatch("optimize",
       carried.map(t => (t, StandingTables.read(spark, s"$indexDir/$t"),
         StandingTables.read(spark, s"$outIndexDir/$t"))) :+

@@ -18,29 +18,21 @@ import org.apache.spark.sql.graft.StandingTables
   *    (observed on the round-8 fixtures: a 600 k-row single-row-group
   *    scan-agg ran 1.5× slower than the same rows in 8 files).
   *
-  * `compact` sizes the output from the actual input bytes (not file
-  * count), optionally range-clusters on a sort key so min/max row-group
-  * statistics become selective (the Z-order-lite layout q159 models), and
-  * bounds row-group size via `parquet.block.size` so even one output file
-  * still splits across tasks. One shuffle, streaming write — nothing
-  * driver-sized except the file listing.
-  *
-  * Validation is delegated to [[Reconcile.report]]: the rewrite must
-  * fingerprint-equal its input (content equality independent of row
-  * order/partitioning) — returned in the stats so callers can refuse to
-  * swap in a bad rewrite.
+  * [[write]] is the one layout rule of every standing-table rewrite: the
+  * output is sized from the bytes the source reads (not its file count),
+  * and a partitioned rewrite keeps its partition directories. `compact`
+  * adds range clustering on one key (selective min/max row-group stats,
+  * the Z-order-lite layout q159 models) or Z-order over more, and bounds
+  * row-group size via `parquet.block.size` so even one output file still
+  * splits across tasks. One shuffle, streaming write — nothing
+  * driver-sized except the file listing. Like every optimize, `compact`
+  * verifies with [[Reconcile.requireMatch]] and fails loudly.
   */
 object Compaction {
 
   final case class CompactStats(
-      n_files_in: Long, bytes_in: Long, n_files_out: Long, bytes_out: Long,
-      n_rows: Long, content_match: Boolean)
+      n_files_in: Long, bytes_in: Long, n_files_out: Long, bytes_out: Long, n_rows: Long)
 
-  /** Rewrite `inDir`'s parquet into `outDir` targeting `targetFileBytes`
-    * per file (and `rowGroupBytes` per row group within each file).
-    * `sortKey` range-clusters rows so each output file owns a contiguous
-    * key span — scan filters on that key then prune whole files/row
-    * groups via min/max stats. */
   /** Sizes of the files a materialized DataFrame actually reads —
     * `df.inputFiles` honors the `_spark_metadata` commit log for
     * streaming-sink directories, so orphaned/uncommitted batch files never
@@ -51,30 +43,43 @@ object Compaction {
   private def fileBytes(uri: String): Long = new java.io.File(new java.net.URI(uri)).length()
 
   /** The one output-file-count rule for a size-targeted rewrite:
-    * ceil(bytes in / target), at least one file. */
-  private def filesFor(bytesIn: Long, targetFileBytes: Long): Int =
-    math.max(1L, (bytesIn + targetFileBytes - 1) / targetFileBytes).toInt
+    * ceil(bytes `df` reads / target), at least one file. */
+  private def filesFor(df: DataFrame, targetFileBytes: Long): Int =
+    math.max(1L, (inputFileSizes(df).sum + targetFileBytes - 1) / targetFileBytes).toInt
 
-  /** [[filesFor]] over the bytes `df` reads ([[inputFileSizes]]). */
-  def filesFor(df: DataFrame, targetFileBytes: Long): Int =
-    filesFor(inputFileSizes(df).sum, targetFileBytes)
-
-  /** The one shuffle rule for a size-targeted rewrite written with
-    * `partitionBy(partCol)`, sized from `source`'s files. While the table
-    * is under its size target, `df` shuffles on `partCol` alone into one
-    * task per `partCol=` directory of the source: every directory still
-    * gets exactly one file, but parallel tasks write them instead of one.
-    * Above the target, [[filesFor]] tasks hash on `keys`, which spread a
-    * big directory over several files. */
-  def partitionedFor(df: DataFrame, source: DataFrame, partCol: String,
+  /** The shuffle of a rewrite written with `partitionBy(partCol)`, sized
+    * from `source`'s files. While the table is under its size target,
+    * `df` shuffles on `partCol` alone into one task per `partCol=`
+    * directory of the source: every directory still gets exactly one
+    * file, but parallel tasks write them instead of one. Above the
+    * target, [[filesFor]] tasks hash on `keys`, which spread a big
+    * directory over several files. */
+  private def partitionedFor(df: DataFrame, source: DataFrame, partCol: String,
       keys: Seq[String], targetFileBytes: Long): DataFrame = {
-    val files = source.inputFiles.toSeq
-    val nOut = filesFor(files.map(fileBytes).sum, targetFileBytes)
+    val nOut = filesFor(source, targetFileBytes)
     if (nOut > 1) df.repartition(nOut, keys.map(col): _*)
     else {
-      val dirs = files.flatMap(_.split('/').find(_.startsWith(s"$partCol="))).distinct.size
+      val dirs = source.inputFiles.flatMap(_.split('/').find(_.startsWith(s"$partCol=")))
+        .distinct.length
       df.repartition(math.max(1, dirs), col(partCol))
     }
+  }
+
+  /** The one layout rule of a table rewrite: write `df` over `outDir`,
+    * sized from the files `source` reads. With `partitionBy` = (column,
+    * keys) the rewrite keeps that column's directories and shuffles
+    * through [[partitionedFor]]; without, it is a plain write of
+    * [[filesFor]] files. `rowGroupBytes` bounds the parquet row groups. */
+  def write(df: DataFrame, source: DataFrame, outDir: String, targetFileBytes: Long,
+      partitionBy: Option[(String, Seq[String])] = None,
+      rowGroupBytes: Option[Long] = None): Unit = {
+    val writer = partitionBy match {
+      case Some((partCol, keys)) =>
+        partitionedFor(df, source, partCol, keys, targetFileBytes).write.partitionBy(partCol)
+      case None => df.repartition(filesFor(source, targetFileBytes)).write
+    }
+    rowGroupBytes.fold(writer)(b => writer.option("parquet.block.size", b.toString))
+      .mode("overwrite").parquet(outDir)
   }
 
   /** Quantile-bucketed Z-value over `keys` — the multi-column clustering
@@ -91,7 +96,7 @@ object Compaction {
     * boundary array — interpreted, but this is an IO-bound OPTIMIZE job,
     * not a query hot path. */
   def zvalue(df: DataFrame, keys: Seq[String], bits: Int = 8): org.apache.spark.sql.Column = {
-    require(keys.size >= 2, "zvalue: needs at least 2 keys (use sortKey for 1)")
+    require(keys.size >= 2, "zvalue: needs at least 2 keys (one key range-clusters)")
     require(keys.size * bits <= 62, s"zvalue: ${keys.size} keys x $bits bits overflows a long")
     // approxQuantile throws IllegalArgumentException mid-job on a string
     // column; fail the precondition HERE with the actionable message (the
@@ -101,7 +106,7 @@ object Compaction {
       val dt = df.schema(k).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
         s"zvalue: key '$k' is $dt — quantile bucketing needs numeric keys " +
-          "(use sortKey range clustering for a string key)")
+          "(cluster by that key alone for range clustering)")
     }
     val n = 1 << bits
     val bucketCols = keys.map { k =>
@@ -116,36 +121,45 @@ object Compaction {
     }.reduce(_ + _)
   }
 
+  /** Rewrite `inDir`'s parquet into `outDir` targeting `targetFileBytes`
+    * per file and `rowGroupBytes` per row group within each file, and
+    * verify the rewrite against its input. `clusterBy` with one key
+    * range-clusters rows, so each output file owns a contiguous key span
+    * and scan filters on that key prune whole files/row groups via min/max
+    * stats; two or more keys cluster by their [[zvalue]]. */
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long = 128L << 20, rowGroupBytes: Long = 16L << 20,
-      sortKey: Option[String] = None, zorderKeys: Seq[String] = Nil): CompactStats = {
-    Generations.refuseInPlace(inDir, outDir, "compact")
-    val df = StandingTables.read(spark, inDir)
-    val inSizes = inputFileSizes(df)
-    val bytesIn = inSizes.sum
-    val nOut = filesFor(bytesIn, targetFileBytes)
-    require(sortKey.isEmpty || zorderKeys.isEmpty,
-      "compact: sortKey and zorderKeys are mutually exclusive")
-    val shaped = (sortKey, zorderKeys) match {
-      case (Some(k), _) => df.repartitionByRange(nOut, col(k))
-      case (None, ks) if ks.nonEmpty =>
-        // range-partition AND sort within partitions by the z-value, then
-        // project it away: each file owns a contiguous z-range, i.e. a
-        // bounded block in EVERY clustered dimension
-        df.withColumn("__z", zvalue(df, ks))
-          .repartitionByRange(nOut, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-      case _ => df.repartition(nOut)
+      clusterBy: Seq[String] = Nil): CompactStats =
+    compact(spark, Seq((inDir, outDir, clusterBy)), targetFileBytes, rowGroupBytes).head
+
+  /** [[compact]] of each (inDir, outDir, clusterBy): every table is
+    * written first, then all are verified in one [[Reconcile.requireMatch]]
+    * call, which throws `IllegalArgumentException` naming a table whose
+    * rewrite differs from its input. */
+  def compact(spark: SparkSession, tables: Seq[(String, String, Seq[String])],
+      targetFileBytes: Long, rowGroupBytes: Long): Seq[CompactStats] = {
+    val written = tables.map { case (inDir, outDir, clusterBy) =>
+      Generations.refuseInPlace(inDir, outDir, "compact")
+      val df = StandingTables.read(spark, inDir)
+      clusterBy match {
+        case Seq() => write(df, df, outDir, targetFileBytes, rowGroupBytes = Some(rowGroupBytes))
+        case keys =>
+          val nOut = filesFor(df, targetFileBytes)
+          // range-partition AND sort within partitions by the z-value, then
+          // project it away: each file owns a contiguous z-range, i.e. a
+          // bounded block in EVERY clustered dimension
+          (if (keys.size == 1) df.repartitionByRange(nOut, col(keys.head))
+           else df.withColumn("__z", zvalue(df, keys)).repartitionByRange(nOut, col("__z"))
+             .sortWithinPartitions("__z").drop("__z"))
+            .write.mode("overwrite")
+            .option("parquet.block.size", rowGroupBytes.toString).parquet(outDir)
+      }
+      (inDir, df, StandingTables.read(spark, outDir))
     }
-    shaped.write.mode("overwrite")
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(outDir)
-    val out = StandingTables.read(spark, outDir)
-    val outSizes = inputFileSizes(out)
-    val Seq(rep) = Reconcile.report(Seq(("compact", df, out)))
-    CompactStats(inSizes.size.toLong, bytesIn,
-      outSizes.size.toLong, outSizes.sum,
-      rep.n_rows_b, rep.matches)
+    Reconcile.requireMatch("compact", written).zip(written).map { case (rep, (_, in, out)) =>
+      val (inSizes, outSizes) = (inputFileSizes(in), inputFileSizes(out))
+      CompactStats(inSizes.size.toLong, inSizes.sum, outSizes.size.toLong, outSizes.sum,
+        rep.n_rows_b)
+    }
   }
 }

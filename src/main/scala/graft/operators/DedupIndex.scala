@@ -280,7 +280,7 @@ object DedupIndex {
   /** Compact the index's accumulated append files into `outIndexDir`
     * (size-targeted; bands keep their `bi` partitioning and, under the
     * size target, get exactly one file per `bi=` directory, the
-    * directories written in parallel by `Compaction.partitionedFor`),
+    * directories written in parallel by `Compaction.write`),
     * physically dropping tombstoned rows — the output generation is the
     * survivor set and carries NO tombstone table. Both rewrites are
     * fingerprint-validated against the LIVE view in one
@@ -290,15 +290,13 @@ object DedupIndex {
       targetFileBytes: Long = 128L << 20): Unit = {
     Generations.refuseInPlace(indexDir, outIndexDir, "optimize")
     val sigs = live(spark, indexDir, sigsPath)
-    sigs.repartition(Compaction.filesFor(StandingTables.read(spark, sigsPath(indexDir)),
-        targetFileBytes))
-      .write.mode("overwrite").parquet(sigsPath(outIndexDir))
+    Compaction.write(sigs, StandingTables.read(spark, sigsPath(indexDir)),
+      sigsPath(outIndexDir), targetFileBytes)
     // bands: size-targeted, but the bi partitioning must survive the
     // rewrite (it is what prunes a probe to one band's files)
     val bands = live(spark, indexDir, bandsPath)
-    Compaction.partitionedFor(bands, StandingTables.read(spark, bandsPath(indexDir)),
-        "bi", Seq("bi", "bh"), targetFileBytes)
-      .write.mode("overwrite").partitionBy("bi").parquet(bandsPath(outIndexDir))
+    Compaction.write(bands, StandingTables.read(spark, bandsPath(indexDir)),
+      bandsPath(outIndexDir), targetFileBytes, Some("bi" -> Seq("bi", "bh")))
     Reconcile.requireMatch("optimize", Seq(
       ("sigs", sigs, StandingTables.read(spark, sigsPath(outIndexDir))),
       ("bands", bands, StandingTables.read(spark, bandsPath(outIndexDir)))))

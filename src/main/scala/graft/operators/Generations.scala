@@ -228,16 +228,18 @@ object Generations {
     require(!sameDir(sourceDir, outDir),
       s"$what: output dir $outDir must differ from the source $sourceDir")
 
-  /** The rewrite step: refuse in place, run the rewrite, then record the
-    * source fingerprint into the new generation if `valid` accepts the
-    * result — at validation time, because a publish-time recording would
-    * fold a late mutation INTO the fingerprint and make [[publishChecked]]
-    * near-vacuous (r14 ADVICE). The caller holds the source's lock. */
-  def rewrite[T](sourceDir: String, outDir: String,
-      valid: T => Boolean = (_: T) => true)(body: => T): T = {
+  /** The rewrite step: refuse in place, mark the new generation pending,
+    * run the rewrite (which verifies itself, throwing on a mismatch), then
+    * replace the mark with the source fingerprint — at validation time,
+    * because a publish-time recording would fold a late mutation INTO the
+    * fingerprint and make [[publishChecked]] near-vacuous (r14 ADVICE).
+    * The caller holds the source's lock. */
+  def rewrite[T](sourceDir: String, outDir: String)(body: => T): T = {
     refuseInPlace(sourceDir, outDir, "rewrite")
+    new File(outDir).mkdirs()
+    Files.write(fingerprintFile(outDir).toPath, s"$Pending\n".getBytes(StandardCharsets.UTF_8))
     val result = body
-    if (valid(result)) recordSourceFingerprint(outDir, sourceDir)
+    recordSourceFingerprint(outDir, sourceDir)
     result
   }
 
@@ -251,9 +253,8 @@ object Generations {
 
   /** The CLI `optimize`/`reindex` path: [[rewrite]] under the SOURCE's
     * lock, so no append lands behind the rewrite's listing. */
-  def cliRewrite[T](sourceDir: String, outDir: String,
-      valid: T => Boolean = (_: T) => true)(body: => T): T =
-    withWriterLock(sourceDir)(rewrite(sourceDir, outDir, valid)(body))
+  def cliRewrite[T](sourceDir: String, outDir: String)(body: => T): T =
+    withWriterLock(sourceDir)(rewrite(sourceDir, outDir)(body))
 
   /** The CLI `publish` path: [[publishChecked]] under the table's lock. */
   def cliPublish(tableDir: String, generationPath: String): Unit =
@@ -307,6 +308,9 @@ object Generations {
 
   private def fingerprintFile(genDir: String) = new File(genDir, ".SOURCE_FINGERPRINT")
 
+  /** [[rewrite]]'s mark, in the fingerprint file, of a rewrite not done. */
+  private val Pending = "pending"
+
   /** Record, inside a freshly rewritten generation, which source it was
     * derived from and the source's listing fingerprint at
     * post-rewrite-validation time. [[publishChecked]] consults it to
@@ -325,14 +329,18 @@ object Generations {
     * generation carries a recorded source fingerprint and the source's
     * listing has CHANGED since the rewrite (an append/tombstone landed
     * behind it), the pointer switch is refused — publishing would
-    * silently drop that mutation from the visible table. A retired
-    * (absent) source skips the check: nothing can have appended into a
-    * directory that no longer exists. Generations without a recorded
-    * fingerprint publish as before. */
+    * silently drop that mutation from the visible table. A generation
+    * still marked pending by [[rewrite]] (its rewrite threw) is refused
+    * too. A retired (absent) source skips the check: nothing can have
+    * appended into a directory that no longer exists. Generations without
+    * a recorded fingerprint (built, not rewritten) publish as before. */
   def publishChecked(tableDir: String, generationPath: String): Unit = {
     val f = fingerprintFile(generationPath)
     if (f.isFile) {
       val content = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8).trim
+      if (content == Pending)
+        throw new IllegalStateException(s"publish refused: the rewrite into " +
+          s"$generationPath did not finish (it failed or is still running) — re-run it")
       val Array(src, expected) = content.split("\n", 2)
       if (new File(src).isDirectory) {
         val now = listingFingerprint(src)

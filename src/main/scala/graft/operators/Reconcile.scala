@@ -17,14 +17,16 @@ import org.apache.spark.sql.graft.RowFingerprint
   * partitioning-independent (one aggregation, no sort).
   *
   * Two row hashes, one per question:
-  *  - [[report]] (ReconcileMain, `Compaction.compact`) compares tables
-  *    across systems, so it is type-lenient: md5 of the row's `to_json`
-  *    text, which reads an INT and a BIGINT of equal value alike;
-  *  - [[requireMatch]] is the self-check every optimize runs against its
-  *    own source, so it is bit-exact and cheap: xxhash64 of the row's
-  *    UnsafeRow bytes (`RowFingerprint.row_fp`), where a NULL moved inside
-  *    an array or a `-0.0` counts. Those bytes depend on the column types,
-  *    so a column whose type differs between the two sides fails by name.
+  *  - [[report]] serves only ReconcileMain's cross-system compare (and
+  *    [[keyedDiff]] shares its text hash), so it is type-lenient: md5 of
+  *    the row's `to_json` text, which reads an INT and a BIGINT of equal
+  *    value alike — treating them alike is the point of that compare;
+  *  - [[requireMatch]] is the self-check every table rewrite runs against
+  *    its own source (each optimize and `Compaction.compact`), so it is
+  *    bit-exact and cheap: xxhash64 of the row's UnsafeRow bytes
+  *    (`RowFingerprint.row_fp`), where a NULL moved inside an array or a
+  *    `-0.0` counts. Those bytes depend on the column types, so a column
+  *    whose type differs between the two sides fails by name.
   *
   * One job: every side of every table checked in one call is folded by
   * one aggregate — a union of per-side (side, fp) rows grouped by side —
@@ -86,11 +88,13 @@ object Reconcile {
   /** Validate-or-fail-loudly: every rewrite must equal its source under
     * the binary row hash, or `what` fails naming the table (or, before
     * any job, the column whose type differs). All tables fold in one job
-    * before the first check. */
-  def requireMatch(what: String, tables: Seq[(String, DataFrame, DataFrame)]): Unit = {
+    * before the first check; the reports of a match are returned. */
+  def requireMatch(what: String,
+      tables: Seq[(String, DataFrame, DataFrame)]): Seq[TableReport] = {
     tables.foreach { case (name, a, b) => RowFingerprint.requireSameTypes(s"$what: $name", a, b) }
-    fold(tables, RowFingerprint.row_fp).foreach(rep => require(rep.matches,
-      s"$what: ${rep.tbl} content mismatch after rewrite: $rep"))
+    fold(tables, RowFingerprint.row_fp).map { rep =>
+      require(rep.matches, s"$what: ${rep.tbl} content mismatch after rewrite: $rep"); rep
+    }
   }
 
   final case class TableReport(tbl: String, n_rows_a: Long, n_rows_b: Long,

@@ -228,10 +228,11 @@ object ViewState {
   /** Collapse accumulated delta rows in all three tables (cancelled pairs
     * and retracted store rows drop physically), validated by fingerprint
     * equality of the MERGED view — the only invariant compaction must
-    * preserve. The output is a fresh generation for `Generations.publish`. */
+    * preserve. Each table is size-targeted by `Compaction.write`, the
+    * stores keeping their `__bucket` directories. The output is a fresh
+    * generation for `Generations.publish`. */
   def optimize(spark: SparkSession, stateDir: String, outStateDir: String): Unit = {
     Generations.refuseInPlace(stateDir, outStateDir, "optimize")
-    Generations.deleteTree(outStateDir)
     val meta = readMeta(stateDir)
     val keys = meta.keys
     writeMeta(outStateDir, meta)
@@ -242,11 +243,10 @@ object ViewState {
       val folded = t.groupBy(cols.map(col): _*)
         .agg(sum("__mult").as("__mult"))
         .filter(col("__mult") =!= 0)
-      if (bucketed)
-        folded.withColumn("__bucket", bucketOf(keys, meta.numBuckets))
-          .repartition(col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket").parquet(path(outStateDir))
-      else folded.write.mode("overwrite").parquet(path(outStateDir))
+      Compaction.write(
+        if (bucketed) folded.withColumn("__bucket", bucketOf(keys, meta.numBuckets)) else folded,
+        t, path(outStateDir), 128L << 20,
+        Option.when(bucketed)("__bucket" -> ("__bucket" +: keys)))
     }
     collapse(leftPath, meta.left, bucketed = true)
     collapse(rightPath, meta.right, bucketed = true)

@@ -212,6 +212,34 @@ private[sources] object HttpFetch {
     if (arr == null || !arr.isArray) Seq.empty
     else arr.elements().asScala.map(mapper.writeValueAsString).toSeq
   }
+
+  /** One endpoint's pages as the driver probes them: each body fetched is
+    * kept in `bodies`, so its page's partition never fetches it again. */
+  final class Pages(props: Map[String, String], pageSize: Int, key: Option[String]) {
+    val bodies = scala.collection.mutable.Map.empty[Int, String]
+    def rows(p: Int): Int =
+      elements(props, bodies.getOrElseUpdate(p, fetchBody(props, pageSize, p, key))).size
+
+    /** The one page search. Pages are monotone (full ones, at most one
+      * partial, then empty ones): gallop forward from page `from` (the
+      * pages below it are known full) with a doubling step, then
+      * binary-search the first page that is not full. The gallop stops at
+      * page `stop` without fetching it, so the result is `stop` when every
+      * page before it is full. O(log n) GETs. */
+    def firstNotFull(from: Int, stop: Int = Int.MaxValue): Int = {
+      var lo = from - 1 // pages <= lo are full
+      var hi = from
+      var step = 1
+      while (hi < stop && rows(hi) == pageSize) {
+        lo = hi; hi = math.min(from + step, stop); step *= 2
+      }
+      while (hi - lo > 1) {
+        val mid = lo + (hi - lo) / 2
+        if (rows(mid) == pageSize) lo = mid else hi = mid
+      }
+      hi
+    }
+  }
 }
 
 final class HttpScan(props: Map[String, String], limit: Option[Int],
@@ -236,42 +264,26 @@ final class HttpScan(props: Map[String, String], limit: Option[Int],
     * galloping + binary search over page indices (O(log n) GETs, bodies
     * cached into their partitions so executors don't re-fetch), and if
     * data still exists at page `max_pages` the scan FAILS loudly rather
-    * than returning a silently short DataFrame. `probe=false` restores
-    * the fixed-window planning for endpoints where a full page beyond the
-    * window is expected and acceptable.
+    * than returning a silently short DataFrame.
     */
   // Spark calls planInputPartitions more than once per query (planning and
   // execution); memoize so the probe GETs are paid exactly once
   override def planInputPartitions(): Array[InputPartition] = planned
 
-  /** Gallop + binary search for one endpoint (one key, or the plain url):
-    * O(log n) probe GETs, bodies cached into their partitions. */
+  /** The pages of one endpoint (one key, or the plain url): page 0 is
+    * left to its executor, the search starts at page 1, and data at page
+    * `maxPages` (one past the allowed window) is the truncation sentinel. */
   private def probedPages(key: Option[String]): Array[InputPartition] = {
-    val cache = scala.collection.mutable.Map.empty[Int, String]
-    def countAt(p: Int): Int = {
-      val body = cache.getOrElseUpdate(p, HttpFetch.fetchBody(props, pageSize, p, key))
-      HttpFetch.elements(props, body).size
-    }
-    // pages are monotone (full*, one optional partial, empty*); find the
-    // first non-full page in (lo, hi] — probing index maxPages (one past
-    // the allowed window) is the truncation sentinel
-    var lo = 0 // pages 1..lo known full; page 0 is left to its executor
-    var hi = 1
-    while (hi < maxPages && countAt(hi) == pageSize) {
-      lo = hi; hi = math.min(hi * 2, maxPages)
-    }
-    if (hi == maxPages && countAt(maxPages) > 0)
+    val pages = new HttpFetch.Pages(props, pageSize, key)
+    val hi = pages.firstNotFull(1, maxPages)
+    if (hi == maxPages && pages.rows(maxPages) > 0)
       throw new IllegalStateException(
         s"graft-http: endpoint has rows beyond max_pages=$maxPages × page_size=$pageSize; " +
           s"increase max_pages or push a limit (url=${props("url")}" +
           key.fold("")(k => s", key=$k") + ")")
-    while (hi - lo > 1) {
-      val mid = (lo + hi) / 2
-      if (countAt(mid) == pageSize) lo = mid else hi = mid
-    }
-    val n = if (countAt(hi) > 0) hi + 1 else hi
+    val n = if (pages.rows(hi) > 0) hi + 1 else hi
     (0 until math.max(n, 1))
-      .map(p => HttpPage(p, cache.get(p), key = key): InputPartition).toArray
+      .map(p => HttpPage(p, pages.bodies.get(p), key = key): InputPartition).toArray
   }
 
   private lazy val planned: Array[InputPartition] = {
@@ -286,8 +298,6 @@ final class HttpScan(props: Map[String, String], limit: Option[Int],
         case Some(n) =>
           val pages = math.min(maxPages, (n + pageSize - 1) / pageSize)
           (0 until pages).map(p => HttpPage(p): InputPartition).toArray
-        case None if !props.getOrElse("probe", "true").toBoolean =>
-          (0 until maxPages).map(p => HttpPage(p): InputPartition).toArray
         case None => probedPages(None)
       }
     }
@@ -342,22 +352,11 @@ final class HttpMicroBatchStream(props: Map[String, String],
     * below the committed offset are known-full and skipped). O(log growth)
     * GETs per cycle. */
   private def totalRowsFrom(startRows: Long): Long = {
-    val cache = scala.collection.mutable.Map.empty[Int, String]
-    def countAt(p: Int): Int = {
-      val body = cache.getOrElseUpdate(p, HttpFetch.fetchBody(props, pageSize, p))
-      HttpFetch.elements(props, body).size
-    }
-    val basePage = (startRows / pageSize).toInt
-    var lo = basePage - 1 // pages <= lo are full
-    var hi = basePage
-    var step = 1
-    while (countAt(hi) == pageSize) { lo = hi; hi = basePage + step; step *= 2 }
-    while (hi - lo > 1) {
-      val mid = lo + (hi - lo) / 2
-      if (countAt(mid) == pageSize) lo = mid else hi = mid
-    }
-    lastProbe = cache.toMap
-    hi.toLong * pageSize + countAt(hi)
+    val pages = new HttpFetch.Pages(props, pageSize, None)
+    val hi = pages.firstNotFull((startRows / pageSize).toInt)
+    val total = hi.toLong * pageSize + pages.rows(hi)
+    lastProbe = pages.bodies.toMap
+    total
   }
 
   override def initialOffset(): StreamOffset = HttpStreamOffset(0L)

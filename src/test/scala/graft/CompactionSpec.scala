@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Compaction
+import graft.operators.{Compaction, Reconcile}
 
 /** The OPTIMIZE executor: content-preserving by fingerprint, layout
   * actually improved (file sizing, row-group splitting, key clustering). */
@@ -16,7 +16,6 @@ class CompactionSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/in")
     val stats = Compaction.compact(spark, s"$tmp/in", s"$tmp/out",
       targetFileBytes = 1L << 20, rowGroupBytes = 256L << 10)
-    assert(stats.content_match, s"content drifted: $stats")
     assert(stats.n_files_in == 37L)
     assert(stats.n_files_out < stats.n_files_in, s"no consolidation: $stats")
     // sizing comes from bytes, not file count: ceil(bytes/target)
@@ -34,7 +33,7 @@ class CompactionSpec extends SparkSpec {
       .parquet(s"$tmp/in")
     val stats = Compaction.compact(spark, s"$tmp/in", s"$tmp/out",
       targetFileBytes = 4L << 20, rowGroupBytes = 16L << 10)
-    assert(stats.content_match)
+    assert(stats.n_rows == Tables(spark, dirA, "lineitem").count())
     // Spark parallelizes parquet at ROW-GROUP granularity: with the same
     // split sizing, count splits that actually carry rows. The input's
     // single row group rides ONE split however the byte ranges fall; the
@@ -79,7 +78,7 @@ class CompactionSpec extends SparkSpec {
     val nIn = Compaction.compact(spark, s"$tmp/in", s"$tmp/out",
       targetFileBytes = 64L << 20)
     assert(nIn.n_files_in >= 5, s"expected one-plus files per micro-batch: $nIn")
-    assert(nIn.n_files_out == 1L && nIn.n_rows == 1000L && nIn.content_match, s"$nIn")
+    assert(nIn.n_files_out == 1L && nIn.n_rows == 1000L, s"$nIn")
   }
 
   test("hive-partitioned input is sized from its leaf files, not the top level") {
@@ -93,8 +92,7 @@ class CompactionSpec extends SparkSpec {
     // more than one output bin results (a flat listFiles saw 0 bytes here)
     assert(stats.bytes_in > 0 && stats.n_files_in > 0, s"leaf files unseen: $stats")
     assert(stats.n_files_out > 1, s"whole table crammed into one file: $stats")
-    assert(stats.content_match && stats.n_rows ==
-      Tables(spark, dirA, "orders").count())
+    assert(stats.n_rows == Tables(spark, dirA, "orders").count())
   }
 
   test("sort-key clustering gives each output file a near-disjoint key span") {
@@ -103,8 +101,8 @@ class CompactionSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/in")
     val stats = Compaction.compact(spark, s"$tmp/in", s"$tmp/out",
       targetFileBytes = 8L << 10, rowGroupBytes = 4L << 10,
-      sortKey = Some("o_orderkey"))
-    assert(stats.content_match && stats.n_files_out > 1)
+      clusterBy = Seq("o_orderkey"))
+    assert(stats.n_files_out > 1)
     // per-file [min,max] key ranges must not overlap (range clustering):
     // that is what makes min/max stats selective for key-range scans
     val spans = spark.read.parquet(s"$tmp/out")
@@ -135,8 +133,8 @@ class CompactionSpec extends SparkSpec {
     // z-order on (x, y): every file's span is a bounded block in BOTH dims
     val statsZ = Compaction.compact(spark, s"$tmp/in", s"$tmp/z",
       targetFileBytes = 16L << 10, rowGroupBytes = 8L << 10,
-      zorderKeys = Seq("x", "y"))
-    assert(statsZ.content_match && statsZ.n_files_out >= 16)
+      clusterBy = Seq("x", "y"))
+    assert(statsZ.n_files_out >= 16)
     val zSpans = fileSpans(s"$tmp/z")
     // a contiguous range of a 2^16 z-curve over 2 x 8-bit keys is a block
     // of bounded extent in each dim. Individual files CAN go full-span
@@ -149,15 +147,10 @@ class CompactionSpec extends SparkSpec {
     // single-key clustering on x: y stays full-span in (nearly) every file
     Compaction.compact(spark, s"$tmp/in", s"$tmp/x",
       targetFileBytes = 16L << 10, rowGroupBytes = 8L << 10,
-      sortKey = Some("x"))
+      clusterBy = Seq("x"))
     val xSpans = fileSpans(s"$tmp/x")
     assert(avg(xSpans.map(_._2)) >= 220,
       s"expected full y-spans under x-only clustering: $xSpans")
-    // guard: the two clustering modes are mutually exclusive
-    intercept[IllegalArgumentException] {
-      Compaction.compact(spark, s"$tmp/in", s"$tmp/bad",
-        sortKey = Some("x"), zorderKeys = Seq("x", "y"))
-    }
   }
 
   test("z-order refuses non-numeric keys up front; OptimizeMain skips them") {
@@ -174,7 +167,71 @@ class CompactionSpec extends SparkSpec {
     // the multi-table CLI path: a non-numeric z-key must not abort the
     // job — the table compacts unclustered (the missing-column fallback)
     val results = OptimizeMain.run(spark, s"$tmp/in", s"$tmp/out",
-      targetFileBytes = 1L << 20, sortKey = Some("id,tag"))
-    assert(results.size === 1 && results.head._2.content_match)
+      targetFileBytes = 1L << 20, clusterBy = Seq("id", "tag"))
+    assert(results.map { case (t, st) => (t, st.n_rows) } === Seq(("t", 1000L)))
+  }
+
+  test("compaction verifies through the binary row hash: -0.0 and NULL array elements") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val tmp = java.nio.file.Files.createTempDirectory("compactbits").toString
+    val schema = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    val rows = (0 until 200).map { i =>
+      Row(i.toLong, if (i % 2 == 0) -0.0 else 0.0,
+        if (i % 3 == 0) Seq(0.0, null) else if (i % 3 == 1) Seq(null, 0.0) else Seq(-0.0))
+    }
+    def frame(rs: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 9), schema)
+    frame(rows).write.mode("overwrite").parquet(s"$tmp/in")
+    val stats = Compaction.compact(spark, s"$tmp/in", s"$tmp/out", targetFileBytes = 1L << 20)
+    assert(stats.n_files_in == 9L && stats.n_files_out == 1L && stats.n_rows == 200L, s"$stats")
+    // the rewrite kept every sign bit and every NULL position
+    def bits(dir: String) = spark.read.parquet(dir).collect().map { r =>
+      (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+        r.getSeq[Any](2).map(Option(_).map(d => java.lang.Double.doubleToRawLongBits(
+          d.asInstanceOf[Double]))))
+    }.sortBy(_._1).toSeq
+    assert(bits(s"$tmp/out") === bits(s"$tmp/in"))
+    // the check compact runs tells those bits apart: a copy with one
+    // -0.0 written as 0.0, or one array's NULL moved, is a mismatch
+    def flipped(i: Int) = rows.updated(i, rows(i) match {
+      case Row(id: Long, x: Double, v: Seq[_]) => if (i == 0) Row(id, 0.0, v) else Row(id, x, v.reverse)
+    })
+    for (i <- Seq(0, 3)) {
+      frame(flipped(i)).write.mode("overwrite").parquet(s"$tmp/bad$i")
+      val e = intercept[IllegalArgumentException] {
+        Reconcile.requireMatch("compact", Seq(("t", spark.read.parquet(s"$tmp/in"),
+          spark.read.parquet(s"$tmp/bad$i"))))
+      }
+      assert(e.getMessage.contains("t content mismatch"), e.getMessage)
+    }
+  }
+
+  test("OptimizeMain writes every table, then verifies all in one job") {
+    val tmp = java.nio.file.Files.createTempDirectory("compactbudget").toString
+    for (t <- Seq("a", "b", "c"))
+      spark.range(300).selectExpr("id", s"'$t' AS tag").repartition(4)
+        .write.parquet(s"$tmp/in/$t.parquet")
+    val group = s"optimize-budget-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, group)
+    val (results, jobs) = try {
+      val ((rs, _), _) = RunLedger.measure(spark)(RunLedger.executedPlans(spark)(
+        OptimizeMain.run(spark, s"$tmp/in", s"$tmp/out", 1L << 20)))
+      val st = spark.sparkContext.statusTracker
+      (rs, st.getJobIdsForGroup(group).sorted.toSeq.map { j =>
+        st.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq)
+          .flatMap(s => st.getStageInfo(s).map(_.name)).mkString("+")
+      })
+    } finally spark.sparkContext.clearJobGroup()
+    assert(results.map { case (t, st) => (t, st.n_rows) } ===
+      Seq(("a", 300L), ("b", 300L), ("c", 300L)))
+    // the three tables fold in one aggregate at one call site: its
+    // exchange's map stage and its result
+    val checks = jobs.filter(_.contains("Reconcile"))
+    val sites = checks.flatMap(_.split('+')).distinct
+    assert(sites.size == 1 && sites.head.startsWith("collect at Reconcile.scala:"),
+      s"verification call sites ${sites.mkString("; ")}")
+    assert(checks.size == 2, s"${checks.size} verification jobs: ${jobs.mkString("; ")}")
   }
 }

@@ -354,7 +354,7 @@ class GenerationsSpec extends SparkSpec {
     // writer A: rewrite + validate (fingerprint recorded inside run())
     val out1 = s"$table/gen1"
     val r1 = OptimizeMain.run(spark, src, out1, 1L << 20)
-    assert(r1.nonEmpty && r1.forall(_._2.content_match))
+    assert(r1.map { case (t, s) => (t, s.n_rows) } === Seq(("docs", 100L)))
     // writer B's append lands in the validate-to-publish window — the
     // exact mutation a working lock serializes away
     spark.range(100, 110).selectExpr("id", "id * 2 AS v")
@@ -368,7 +368,7 @@ class GenerationsSpec extends SparkSpec {
     // the pointer switch goes through with nothing lost
     val out2 = s"$table/gen2"
     val r2 = OptimizeMain.run(spark, src, out2, 1L << 20)
-    assert(r2.forall(_._2.content_match))
+    assert(r2.map { case (t, s) => (t, s.n_rows) } === Seq(("docs", 110L)))
     Generations.publishChecked(table, out2)
     assert(Generations.resolve(table) === new java.io.File(out2).getCanonicalPath)
     assert(spark.read.parquet(s"${Generations.resolve(table)}/docs").count() === 110L)
@@ -386,16 +386,46 @@ class GenerationsSpec extends SparkSpec {
     }
     assert(!new java.io.File(out).exists(), "a refused rewrite must write nothing")
     val results = OptimizeMain.run(spark, src, out, 1L << 20)
-    assert(results.nonEmpty && results.forall(_._2.content_match))
-    // a live writer on the table: the publish path throws, CURRENT unchanged
+    assert(results.map { case (t, s) => (t, s.n_rows) } === Seq(("t", 50L)))
+    // a live writer on the table: the publish step throws, CURRENT unchanged
     Generations.withWriterLock(table) {
-      intercept[IllegalStateException] {
-        OptimizeMain.publishValidated(results, out, Some(table))
-      }
+      intercept[IllegalStateException] { Generations.cliPublish(table, out) }
     }
     assert(Generations.current(table).isEmpty, "a refused publish must not switch CURRENT")
-    assert(OptimizeMain.publishValidated(results, out, Some(table)).isEmpty)
+    Generations.cliPublish(table, out)
     assert(Generations.resolve(table) === new java.io.File(out).getCanonicalPath)
+  }
+
+  test("a rewrite whose body threw stays pending: publishChecked refuses it") {
+    val src = Files.createTempDirectory("graft_pending_src").toString
+    val table = Files.createTempDirectory("graft_pending_table").toString
+    spark.range(20).selectExpr("id").write.parquet(s"$src/t.parquet")
+    val out = s"$table/gen1"
+    intercept[IllegalArgumentException] {
+      Generations.cliRewrite(src, out) {
+        spark.range(20).selectExpr("id").write.parquet(s"$out/t")
+        require(false, "verification failed")
+      }
+    }
+    // the tables are on disk, but the generation never finished its rewrite
+    assert(new java.io.File(s"$out/t").isDirectory)
+    val e = intercept[IllegalStateException] { Generations.cliPublish(table, out) }
+    assert(e.getMessage.contains("publish refused") && e.getMessage.contains("did not finish"),
+      e.getMessage)
+    assert(Generations.current(table).isEmpty, "a refused publish must not switch CURRENT")
+    // a re-run that returns replaces the mark with the source fingerprint
+    Generations.cliRewrite(src, out)(())
+    Generations.cliPublish(table, out)
+    assert(Generations.resolve(table) === new java.io.File(out).getCanonicalPath)
+  }
+
+  test("a built generation that carries no rewrite marker still publishes") {
+    val table = Files.createTempDirectory("graft_built_table").toString
+    val gen = s"$table/gen-0"
+    spark.range(5).selectExpr("id").write.parquet(s"$gen/t")
+    assert(!new java.io.File(gen, ".SOURCE_FINGERPRINT").exists())
+    Generations.publishChecked(table, gen)
+    assert(Generations.resolve(table) === new java.io.File(gen).getCanonicalPath)
   }
 
   test("withTableWriter resolves CURRENT under the table lock, gen-0 before " +

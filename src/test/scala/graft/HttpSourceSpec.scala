@@ -97,17 +97,6 @@ class HttpSourceSpec extends SparkSpec {
     }
   }
 
-  test("probe=false restores fixed-window planning (documented opt-out)") {
-    withServerOf(9) { (url, requests) =>
-      val df = spark.read.format("graft-http")
-        .option("url", url).option("page_size", "4").option("max_pages", "2")
-        .option("probe", "false")
-        .option("data_field", "data").load()
-      assert(df.count() == 8) // truncated by design when probing is off
-      assert(requests.get() == 2)
-    }
-  }
-
   test("column pruning reaches the scan: seq-only projection drops the payload") {
     withServer { (url, _) =>
       val df = spark.read.format("graft-http")
